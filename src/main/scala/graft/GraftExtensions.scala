@@ -14,10 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * SQL-only clients that never touch the Scala API — has
   * `simhash60` / `text_stats` / `bigram_stats` / `winnow_minima` /
   * `vec_dot` / `shingle_set` / `term_counts` / `shingle_list` /
-  * `remove_spans` / `nfc` / `char_pairs` available in SQL without any
-  * per-operator `register()` call. The operator objects keep their own idempotent `register`
-  * methods (used internally) — both paths share one builder per
-  * function, so the SQL surface cannot diverge.
+  * `remove_spans` / `nfc` / `char_pairs` available in SQL. This is
+  * the only SQL surface: the operators build the same expressions as
+  * typed Columns ([[graft.functions]]) and never touch a session's
+  * function registry.
   *
   * The warehouse UDFs (`kimball_*`, [[graft.ops.Udfs]]) stay on the
   * runtime `spark.udf` path: they are Scala-closure UDFs needing a

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -56,18 +55,12 @@ case class BigramStatsExpr(child: Expression) extends UnaryExpression {
 
 object BigramStats {
 
-  /** SQL builder — shared by [[register]] and [[graft.GraftExtensions]]. */
+  /** SQL builder for [[graft.GraftExtensions]]. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c) => BigramStatsExpr(c)
     case _ => throw new IllegalArgumentException("bigram_stats(text) takes 1 argument")
   }
 
-  /** Register `bigram_stats(text)` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_stats", builder, "built-in")
-    ()
-  }
 
   private val Space = UTF8String.fromString(" ")
 

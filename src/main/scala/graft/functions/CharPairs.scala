@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -50,18 +49,12 @@ case class CharPairsExpr(child: Expression) extends UnaryExpression {
 
 object CharPairs {
 
-  /** SQL builder — shared by [[register]] and [[graft.GraftExtensions]]. */
+  /** SQL builder for [[graft.GraftExtensions]]. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c) => CharPairsExpr(c)
     case _ => throw new IllegalArgumentException("char_pairs(text) takes 1 argument")
   }
 
-  /** Register `char_pairs(text)` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_pairs", builder, "built-in")
-    ()
-  }
 
   /** Called from generated code — one byte scan per row. Walks each
     * word's UTF-8 code-point boundaries and slices [prevCharStart,

@@ -1,16 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, SparkSession}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 
 /** The SURVEY §2.9 typed UDAF: a real `Aggregator[IN, BUF, OUT]`
   * computing a k-seed MinHash signature over a group's shingles —
   * bit-identical to the declarative 16×`min()` formulation
   * [[graft.ops.LlmOps.minhashSignatures]] builds (same pinned
-  * md5("seed:shingle") 60-bit hashes, spec-pinned parity), registered
-  * for SQL as `minhash_sig(shingle)`.
+  * md5("seed:shingle") 60-bit hashes, spec-pinned parity), applied
+  * as `udaf(new MinHashAgg(k))`.
   *
   * The DECLARATIVE form stays the production path: its 16 `min()`
   * columns ride whole-stage codegen and fold map-side as ordinary
@@ -66,11 +65,5 @@ object MinHashAgg {
     var i = 0
     while (i < 7) { v = (v << 8) | (md5(i) & 0xffL); i += 1 }
     (v << 4) | ((md5(7) & 0xf0L) >> 4)
-  }
-
-  /** Register `minhash_sig(shingle)` as a SQL aggregate. Idempotent. */
-  def register(spark: SparkSession, k: Int = graft.ops.LlmOps.MinhashK): Unit = {
-    spark.udf.register("minhash_sig", udaf(new MinHashAgg(k)))
-    ()
   }
 }

@@ -190,23 +190,6 @@ final class CellTable(val dim: Int,
     cellJ.indices.drop(1).forall(i => cellJ(i - 1) < cellJ(i)),
     "flat CellTable layouts must arrive strictly id-sorted (tie-break order)")
 
-  /** Content-derived registration key: SHA-256 (not MD5 — MD5 throws
-    * on FIPS-restricted JVMs, ADVICE r9) truncated to 64 bits over
-    * every array, so two tables built from the same centroid matrix
-    * (e.g. one per micro-batch in a serving loop) register under ONE
-    * session function name instead of leaking an entry per call — the
-    * registry grows with DISTINCT quantizers, not with invocations. */
-  lazy val contentKey: String = {
-    val h = java.security.MessageDigest.getInstance("SHA-256")
-    val bb = java.nio.ByteBuffer.allocate(8)
-    def addL(a: Array[Long]): Unit = a.foreach { v =>
-      bb.clear(); bb.putLong(v); h.update(bb.array())
-    }
-    bb.putLong(dim.toLong); h.update(bb.array()); bb.clear()
-    addL(cellJ); addL(cellN); addL(cellS); addL(cellSumS2)
-    addL(superS); addL(superSumS2); addL(groupStart.map(_.toLong))
-    h.digest().take(8).map("%02x".format(_)).mkString
-  }
 
   private def dot(qv: ArrayData, flat: Array[Long], base: Int): Long = {
     var s = 0L

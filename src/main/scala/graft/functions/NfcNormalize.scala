@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -52,18 +51,12 @@ case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
 
 object NfcNormalize {
 
-  /** SQL builder — shared by [[register]] and [[graft.GraftExtensions]]. */
+  /** SQL builder for [[graft.GraftExtensions]]. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c) => NfcNormalizeExpr(c)
     case _ => throw new IllegalArgumentException("nfc(text) takes 1 argument")
   }
 
-  /** Register `nfc(text)` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc", builder, "built-in")
-    ()
-  }
 
   /** Called from generated code. ASCII fast path: 0x20-0x7F bytes
     * cannot participate in any canonical (de)composition, so a pure

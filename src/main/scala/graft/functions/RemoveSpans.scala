@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
@@ -59,8 +58,8 @@ case class RemoveSpansExpr(left: Expression, right: Expression, k: Int)
 
 object RemoveSpans {
 
-  /** SQL builder — shared by [[register]] and
-    * [[graft.GraftExtensions]]. k must be a foldable integer literal. */
+  /** SQL builder for [[graft.GraftExtensions]]. k must be a
+    * foldable integer literal. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(t, s, kExpr) if kExpr.foldable =>
       kExpr.eval() match {
@@ -73,13 +72,6 @@ object RemoveSpans {
       "remove_spans(text, span_starts, k) takes a string, an array<int>, and an integer literal")
   }
 
-  /** Register `remove_spans(text, span_starts, k)` as a session
-    * function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "remove_spans", builder, "built-in")
-    ()
-  }
 
   /** Called from generated code — one byte scan per row. Walks tokens
     * left to right against the sorted span starts; a token is dropped

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -48,9 +47,9 @@ case class ShingleListExpr(child: Expression, n: Int) extends UnaryExpression {
 
 object ShingleList {
 
-  /** SQL builder — shared by [[register]] and
-    * [[graft.GraftExtensions]]. Second argument optional (default 3,
-    * matching shingle_set), must be a foldable integer literal. */
+  /** SQL builder for [[graft.GraftExtensions]]. Second argument
+    * optional (default 3, matching shingle_set), must be a foldable
+    * integer literal. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c) => ShingleListExpr(c, 3)
     case Seq(c, nExpr) if nExpr.foldable =>
@@ -64,12 +63,6 @@ object ShingleList {
       "shingle_list(text[, n]) takes a string and an optional integer literal")
   }
 
-  /** Register `shingle_list(text[, n])` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_list", builder, "built-in")
-    ()
-  }
 
   /** Called from generated code — one byte scan per row. */
   def compute(text: UTF8String, n: Int): ArrayData = {

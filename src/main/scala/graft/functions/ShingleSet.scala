@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -61,9 +60,9 @@ case class ShingleSetExpr(child: Expression, n: Int) extends UnaryExpression {
 
 object ShingleSet {
 
-  /** SQL builder — shared by [[register]] and
-    * [[graft.GraftExtensions]]. Second argument optional (default 3),
-    * must be a foldable non-negative integer literal. */
+  /** SQL builder for [[graft.GraftExtensions]]. Second argument
+    * optional (default 3), must be a foldable non-negative integer
+    * literal. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c) => ShingleSetExpr(c, 3)
     case Seq(c, nExpr) if nExpr.foldable =>
@@ -77,12 +76,6 @@ object ShingleSet {
       "shingle_set(text[, n]) takes a string and an optional integer literal")
   }
 
-  /** Register `shingle_set(text[, n])` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_set", builder, "built-in")
-    ()
-  }
 
   /** Word-start byte offsets under split-on-single-space-keeping-
     * empties: a word starts at 0 and right after every space byte;

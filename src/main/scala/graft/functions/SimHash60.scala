@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -40,18 +39,12 @@ object SimHash60 {
 
   val Bits = 60
 
-  /** SQL builder — shared by [[register]] and [[graft.GraftExtensions]]. */
+  /** SQL builder for [[graft.GraftExtensions]]. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c) => SimHash60(c)
     case _ => throw new IllegalArgumentException("simhash60(tokens) takes 1 argument")
   }
 
-  /** Register `simhash60(tokens)` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", builder, "built-in")
-    ()
-  }
 
   /** Called from generated code — one digest, one primitive counter
     * array per row. Null array elements are skipped (the callers

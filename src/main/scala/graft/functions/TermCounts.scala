@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -78,12 +77,6 @@ object TermCounts {
       "term_counts(text) takes exactly one string argument")
   }
 
-  /** Register `term_counts(text)` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "term_counts", builder, "built-in")
-    ()
-  }
 
   /** Java regex `\s` (ASCII-only default) — the exact class
     * `split(text, "\\s+")` splits on. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -67,18 +66,12 @@ object TextStats {
     s
   }
 
-  /** SQL builder — shared by [[register]] and [[graft.GraftExtensions]]. */
+  /** SQL builder for [[graft.GraftExtensions]]. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c) => TextStatsExpr(c)
     case _ => throw new IllegalArgumentException("text_stats(text) takes 1 argument")
   }
 
-  /** Register `text_stats(text)` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_stats", builder, "built-in")
-    ()
-  }
 
   /** Called from generated code — one byte scan per row. */
   def compute(text: UTF8String): InternalRow = {

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -21,9 +20,9 @@ import org.apache.spark.sql.types._
   *
   * Null semantics match the zip_with/aggregate formulation it
   * replaces: a null ELEMENT in either array makes the result null
-  * (the function is registered session-wide, so arbitrary user arrays
-  * reach it — reading the raw slot instead would silently return
-  * garbage). When both element types are non-nullable the codegen
+  * (SQL callers reach it through [[graft.GraftExtensions]] with
+  * arbitrary arrays — reading the raw slot instead would silently
+  * return garbage). When both element types are non-nullable the codegen
   * path skips the per-element checks entirely. */
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -71,18 +70,12 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 
 object VecDot {
 
-  /** SQL builder — shared by [[register]] and [[graft.GraftExtensions]]. */
+  /** SQL builder for [[graft.GraftExtensions]]. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(a, b) => VecDot(a, b)
     case _ => throw new IllegalArgumentException("vec_dot(a, b) takes 2 arguments")
   }
 
-  /** Register `vec_dot(a, b)` as a session function. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", builder, "built-in")
-    ()
-  }
 
   /** Called from generated code — one primitive loop per row. Mirrors
     * the zip_with semantics: the product runs over the SHORTER length

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -49,7 +48,7 @@ case class WinnowMinima(child: Expression, k: Int, w: Int)
 
 object WinnowMinima {
 
-  /** SQL builder — shared by [[register]] and [[graft.GraftExtensions]]. */
+  /** SQL builder for [[graft.GraftExtensions]]. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c)       => WinnowMinima(c, 8, 4)
     case Seq(c, k, w) => WinnowMinima(c,
@@ -59,14 +58,6 @@ object WinnowMinima {
       "winnow_minima(text[, k, w]) takes 1 or 3 arguments")
   }
 
-  /** Register `winnow_minima(text[, k, w])` as a session function —
-    * the public seam for using a catalyst expression from the Column
-    * API (`expr("winnow_minima(text)")`). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_minima", builder, "built-in")
-    ()
-  }
 
   /** One pass over the row: k-gram 60-bit md5 hashes, then forward
     * sliding-window minima (O(n·w); w is small by construction).

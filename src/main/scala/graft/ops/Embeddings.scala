@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.{nearestCells, probeCells, vecDot}
+
 /** Similarity search over the `embeddings` table (north-star extension;
   * the reference has no vector surface — BASELINE.json lists this as a
   * required LLM-pipeline capability).
@@ -122,16 +124,11 @@ object Embeddings {
     * `private[graft]`: [[Pq]] (and the graft-package specs) start
     * from the same quantized view so the PQ codes and the IVF cells
     * share one integer-grid contract. */
-  private[graft] def quantized(spark: SparkSession, dir: String): DataFrame = {
-    // every embedding query path starts here, so the session function
-    // behind the codegen dot products is registered before any plan
-    // that uses it is analyzed
-    graft.functions.VecDot.register(spark)
+  private[graft] def quantized(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => floor(x.cast("double") * 1000)).as("qv"))
-      .withColumn("nrm", expr("vec_dot(qv, qv)"))
-  }
+      .withColumn("nrm", vecDot(col("qv"), col("qv")))
 
   /** LSH bucket from `planes` hyperplanes starting at seed
     * `seedOffset`: bit s of the code = sign of the projection onto
@@ -140,8 +137,8 @@ object Embeddings {
     * multi-band trick). */
   private def bucketColSeeded(planes: Int, seedOffset: Int): Column =
     (0 until planes).map { s =>
-      val plane = (0 until Dim).map(d => s"${rademacher(seedOffset + s, d)}L").mkString(",")
-      val proj = expr(s"vec_dot(qv, array($plane))")
+      val plane = array((0 until Dim).map(d => lit(rademacher(seedOffset + s, d))): _*)
+      val proj = vecDot(col("qv"), plane)
       when(proj >= 0, lit(1L << s)).otherwise(lit(0L))
     }.reduce(_ + _)
 
@@ -217,7 +214,7 @@ object Embeddings {
     * (d1, v1, n1, d2, v2, n2): dot, cosine, threshold. */
   private def scorePairs(cand: DataFrame, threshold: Double): DataFrame =
     cand
-      .withColumn("dot", expr("vec_dot(v1, v2)"))
+      .withColumn("dot", vecDot(col("v1"), col("v2")))
       .withColumn("cosine",
         col("dot").cast("double") / sqrt(col("n1").cast("double") * col("n2").cast("double")))
       .filter(col("cosine") >= threshold)
@@ -272,10 +269,9 @@ object Embeddings {
     require(c.n <= MaxCellMembers,
       s"cell ${c.j} has ${c.n} members — past the exact-integer bound " +
         s"($MaxCellMembers); raise nCells or switch the quantizer to double means")
-    val sLits = c.s.map(v => s"${v}L").mkString(",")
     val sumS2 = c.s.map(v => v * v).sum
     (lit(c.n) * lit(c.n) * col("nrm")
-      - lit(2L * c.n) * expr(s"vec_dot(qv, array($sLits))")
+      - lit(2L * c.n) * vecDot(col("qv"), array(c.s.map(lit(_)): _*))
       + lit(sumS2))
       .cast("double") / lit(c.n.toDouble * c.n.toDouble)
   }
@@ -302,22 +298,6 @@ object Embeddings {
       else groups.scanLeft(0)(_ + _.size).toArray)
   }
 
-  /** Wrap a centroid-table expression as a Column over the frame's
-    * (qv, nrm) — [[graft.functions.CellFns]] (the registration bridge,
-    * factored out in round 10 so the PQ family can bind its own
-    * slice/norm column names) with this family's column names. */
-  private def cellFnCol(spark: SparkSession, prefix: String,
-                        table: graft.functions.CellTable)
-                       (mk: (org.apache.spark.sql.catalyst.expressions.Expression,
-                             org.apache.spark.sql.catalyst.expressions.Expression) =>
-                            org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    graft.functions.CellFns.fnCol(spark, prefix, table, "qv", "nrm")(mk)
-
-  private def nearestCellsCol(spark: SparkSession,
-                              table: graft.functions.CellTable): Column =
-    cellFnCol(spark, "nearest_cells", table)(
-      graft.functions.NearestCells(_, _, table))
-
   /** Nearest-centroid id: argmin of the scaled distances; ties break
     * to the smallest centroid id (centroids arrive sorted by id and
     * the fused loop keeps the FIRST minimum). Since round 9 this is
@@ -327,8 +307,8 @@ object Embeddings {
     * O(1) plan size — the 625-literal-cell plans that dominated
     * q70/q76 at sf1 (~25-36 s of analysis/codegen/interpretation)
     * collapse to one compiled loop. */
-  private def nearestCell(spark: SparkSession, cents: Seq[Centroid]): Column =
-    nearestCellsCol(spark, cellTable(cents))
+  private def nearestCell(cents: Seq[Centroid]): Column =
+    nearestCells(col("qv"), col("nrm"), cellTable(cents))
 
   /** Grouping rounds of the two-level router's driver-side centroid
     * clustering — structurally unrolled in the q76 replay SQL, so
@@ -430,18 +410,17 @@ object Embeddings {
     * (training + final assignment) at [[superFor]] sizing, while
     * q68/q70 keep replaying EXACT assignment — the q27-LSH-vs-q45-
     * brute relationship, for assignment. */
-  private[ops] def nearestCellTwoLevel(spark: SparkSession, rawCents: Seq[Centroid],
-                                       nSuper: Int): Column = {
+  private[ops] def nearestCellTwoLevel(rawCents: Seq[Centroid], nSuper: Int): Column = {
     require(rawCents.nonEmpty, "quantizer has no centroids")
     require(nSuper >= 1, "nSuper must be positive")
     val cents = rawCents.sortBy(_.j)
-    if (nSuper == 1 || nSuper >= cents.size) nearestCell(spark, cents)
+    if (nSuper == 1 || nSuper >= cents.size) nearestCell(cents)
     else
       // one fused expression: super routing (exact-Long n=1 distances,
       // first-min ties = smallest live group) then only the chosen
       // group's members — same trajectory the q76 oracle replays,
       // O(1) plan size (see nearestCell)
-      nearestCellsCol(spark, twoLevelTable(cents, nSuper))
+      nearestCells(col("qv"), col("nrm"), twoLevelTable(cents, nSuper))
   }
 
   /** The grouped [[graft.functions.CellTable]] behind BOTH two-level
@@ -468,7 +447,7 @@ object Embeddings {
   def assignCells(spark: SparkSession, dir: String, rawCents: Seq[Centroid],
                   nSuper: Int = 1): DataFrame =
     quantized(spark, dir)
-      .select(col("vec_id"), nearestCellTwoLevel(spark, rawCents, nSuper).as("cell"))
+      .select(col("vec_id"), nearestCellTwoLevel(rawCents, nSuper).as("cell"))
 
   /** q31 — IVF ANN top-k with a TRAINED coarse quantizer: Forgy
     * seeding (the `nCells` smallest vec_ids), `iters` Lloyd's rounds,
@@ -540,7 +519,7 @@ object Embeddings {
       // every routed round is non-degenerate
       require(nSuper == 1 || cents.size > nSuper,
         s"two-level training round needs more live cells (${cents.size}) than nSuper ($nSuper)")
-      val rows = vecs.withColumn("cell", nearestCellTwoLevel(vecs.sparkSession, cents, nSuper))
+      val rows = vecs.withColumn("cell", nearestCellTwoLevel(cents, nSuper))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n"), sumCols: _*)
         .collect()
@@ -588,7 +567,7 @@ object Embeddings {
     val sorted = cents.sortBy(_.j)
     val ns = if (nSuper > 0) nSuper else superFor(sorted.size)
     ivfTopKServeWith(vecs, sorted, k, queryMod,
-      probeCellsColTwoLevel(vecs.sparkSession, sorted, nprobe, ns, nSuperProbe))
+      probeCellsColTwoLevel(sorted, nprobe, ns, nSuperProbe))
   }
 
   private def ivfTopKServeOn(vecs: DataFrame, rawCents: Seq[Centroid],
@@ -599,7 +578,7 @@ object Embeddings {
     require(rawCents.nonEmpty, "quantizer has no centroids")
     val cents = rawCents.sortBy(_.j)
     ivfTopKServeWith(vecs, cents, k, queryMod,
-      probeCellsCol(vecs.sparkSession, cents, nprobe))
+      probeCellsCol(cents, nprobe))
   }
 
   /** Shared body of the exact and routed serves: every vector's home
@@ -622,18 +601,14 @@ object Embeddings {
     * ([[serveIndex]]) so the two cannot drift. */
   private def indexOf(vecs: DataFrame, cents: Seq[Centroid]): DataFrame =
     vecs.select(col("vec_id").as("neighbor_id"), col("qv").as("c_v"),
-      col("nrm").as("c_n"), nearestCell(vecs.sparkSession, cents).as("cell"))
+      col("nrm").as("c_n"), nearestCell(cents).as("cell"))
 
   /** ONE definition of the nprobe-nearest-cells expression over a row
     * carrying (qv, nrm): sort struct(dist, id) — lexicographic, so
     * ties break to the smallest cell id — and keep the first nprobe
     * ids. Shared by both serving paths. */
-  private[ops] def probeCellsCol(spark: SparkSession, cents: Seq[Centroid],
-                                 nprobe: Int): Column = {
-    val table = cellTable(cents)
-    cellFnCol(spark, "probe_cells", table)(
-      graft.functions.ProbeCells(_, _, table, nprobe))
-  }
+  private[ops] def probeCellsCol(cents: Seq[Centroid], nprobe: Int): Column =
+    probeCells(col("qv"), col("nrm"), cellTable(cents), nprobe)
 
   /** Two-level [[probeCellsCol]] — the SERVING counterpart of
     * [[nearestCellTwoLevel]] (VERDICT r9 #3): exact probing costs
@@ -647,19 +622,13 @@ object Embeddings {
     * bench/SCALING_r10.md); degenerate forms (nSuper ≤ 1 or ≥ nCells,
     * or nSuperProbe ≥ live groups) reproduce the exact probe
     * bit-for-bit (EmbeddingsSpec + NearestCellsProperties pin it). */
-  private[ops] def probeCellsColTwoLevel(spark: SparkSession, rawCents: Seq[Centroid],
-                                         nprobe: Int, nSuper: Int,
+  private[ops] def probeCellsColTwoLevel(rawCents: Seq[Centroid], nprobe: Int, nSuper: Int,
                                          nSuperProbe: Int): Column = {
     require(rawCents.nonEmpty, "quantizer has no centroids")
     require(nSuperProbe >= 1, "nSuperProbe must be positive")
     val cents = rawCents.sortBy(_.j)
-    if (nSuper <= 1 || nSuper >= cents.size) probeCellsCol(spark, cents, nprobe)
-    else {
-      val table = twoLevelTable(cents, nSuper)
-      graft.functions.CellFns.fnCol(
-        spark, "probe_cells_g", table, "qv", "nrm")(
-        graft.functions.ProbeCells(_, _, table, nprobe, nSuperProbe))
-    }
+    if (nSuper <= 1 || nSuper >= cents.size) probeCellsCol(cents, nprobe)
+    else probeCells(col("qv"), col("nrm"), twoLevelTable(cents, nSuper), nprobe, nSuperProbe)
   }
 
   /** The serving-side INDEX for [[serveQueryBatch]]: every corpus
@@ -719,16 +688,15 @@ object Embeddings {
                       nSuper: Int = 0, nSuperProbe: Int = 0): DataFrame = {
     require(rawCents.nonEmpty, "quantizer has no centroids")
     val cents = rawCents.sortBy(_.j)
-    graft.functions.VecDot.register(queries.sparkSession)
     val q = queries
       .select(col("q_id"),
         transform(col("embedding"), x => floor(x.cast("double") * 1000)).as("qv"))
-      .withColumn("nrm", expr("vec_dot(qv, qv)"))
+      .withColumn("nrm", vecDot(col("qv"), col("qv")))
     val probeCol =
       if (nSuperProbe >= 1)
-        probeCellsColTwoLevel(queries.sparkSession, cents, nprobe,
+        probeCellsColTwoLevel(cents, nprobe,
           if (nSuper > 0) nSuper else superFor(cents.size), nSuperProbe)
-      else probeCellsCol(queries.sparkSession, cents, nprobe)
+      else probeCellsCol(cents, nprobe)
     val qsPlan = q.select(col("q_id"), col("qv").as("q_v"),
       col("nrm").as("q_n"),
       explode(probeCol).as("cell"))
@@ -773,7 +741,7 @@ object Embeddings {
                         excludeSelf: Boolean = true): DataFrame = {
     val scored = (if (excludeSelf) joined.filter(col("neighbor_id") =!= col("q_id"))
                   else joined)
-      .withColumn("dot", expr("vec_dot(q_v, c_v)"))
+      .withColumn("dot", vecDot(col("q_v"), col("c_v")))
       .withColumn("cosine",
         col("dot").cast("double") / sqrt(col("q_n").cast("double") * col("c_n").cast("double")))
       .select(col("q_id"), col("neighbor_id"), col("dot"), col("cosine"))
@@ -967,7 +935,7 @@ object Embeddings {
     // knob for quantizers past O(10²-10³) literal cells) feeds BOTH
     // sides of the within-cell self-join
     val cells = Caches.persist(
-      vecs.withColumn("cell", nearestCellTwoLevel(vecs.sparkSession, cents, nSuper)))
+      vecs.withColumn("cell", nearestCellTwoLevel(cents, nSuper)))
     // probe-side fan-out (round 16): the within-cell pair expansion
     // — the q20-family single-task finding, same rationale as
     // cosineNearDupPairsRaw; cache layout untouched

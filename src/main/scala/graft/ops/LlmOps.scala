@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{removeSpans, shingleList, shingleSet, textStats}
+
 /** LLM-training-data pipeline operators over the `documents` table:
   * exact + near deduplication (north-star extension of the reference's
   * set-dedup semantics, SURVEY §2.5/§7 step 6).
@@ -55,7 +57,6 @@ object LlmOps {
     * all seven n-gram-family queries before any real work started
     * (ShingleSetProperties pins bit-identical semantics). */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame = {
-    graft.functions.ShingleSet.register(docs.sparkSession)
     // NOT fanned out (round 15, tried and reverted): Tables.fanOut
     // here parallelizes the serial shingle cache BUILD (a first-run /
     // build-time cost) and took q20's steady 2.38 → ~1.8 s, but the
@@ -65,7 +66,7 @@ object LlmOps {
     // for the family. At 100 TB the input has ≥ cores splits and the
     // gate would no-op anyway, so the graded surface keeps the
     // single-split layout.
-    docs.select(col("doc_id"), explode(expr(s"shingle_set(text, $n)")).as("shingle"))
+    docs.select(col("doc_id"), explode(shingleSet(col("text"), n)).as("shingle"))
   }
 
   /** q20 — n-gram Jaccard near-dup pairs. Candidates = pairs sharing
@@ -497,13 +498,12 @@ object LlmOps {
                    n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50,
                    minTokens: Int = 5,
                    checkpointDir: Option[String] = None): DataFrame = {
-    graft.functions.TextStats.register(spark)
     // exact-dup and too-short verdicts share ONE documents scan (both
     // are per-row + one window over content_hash); only the near-dup
     // verdict needs its own pipeline
     val exactShort = Tables.documents(spark, dir)
       .select(col("doc_id"), sha2(normText(col("text")), 256).as("content_hash"),
-        (expr("text_stats(text)").getField("n_tokens") < minTokens).as("too_short"))
+        (textStats(col("text")).getField("n_tokens") < minTokens).as("too_short"))
       .withColumn("hash_min",
         min(col("doc_id")).over(org.apache.spark.sql.expressions.Window.partitionBy(col("content_hash"))))
       .select(col("doc_id"), (col("doc_id") =!= col("hash_min")).as("exact_dup"),
@@ -544,14 +544,13 @@ object LlmOps {
   def clusterKeepBest(spark: SparkSession, dir: String,
                       n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50,
                       checkpointDir: Option[String] = None): DataFrame = {
-    graft.functions.TextStats.register(spark)
     val comp = connectedComponents(
       jaccardPairsRaw(spark, dir, n, threshold, maxDf).select(col("d1"), col("d2")),
       checkpointDir = checkpointDir)
     // persisted: feeds the member join AND the final enrichment join —
     // uncached, the documents scan + text_stats pass would run twice
     val toks = Caches.persist(Tables.documents(spark, dir)
-      .select(col("doc_id"), expr("text_stats(text)").getField("n_tokens").as("n_tokens")))
+      .select(col("doc_id"), textStats(col("text")).getField("n_tokens").as("n_tokens")))
     // members persisted: feeds the best-aggregate and the keep-verdict
     // join; both are cluster-keyed so the exchange is reused
     val members = Caches.persist(comp.join(toks, Seq("doc_id")))
@@ -768,12 +767,10 @@ object LlmOps {
     * join-back; recomputing the scan→shingle subtree twice is a
     * full-input tax at 100 TB). */
   def substringDedup(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    graft.functions.ShingleList.register(spark)
-    graft.functions.RemoveSpans.register(spark)
     val docs = Tables.documents(spark, dir)
     val sh = Caches.persist(
       docs.select(col("doc_id"),
-        posexplode(expr(s"shingle_list(text, $k)")).as(Seq("spos", "shingle"))))
+        posexplode(shingleList(col("text"), k)).as(Seq("spos", "shingle"))))
     val dup = sh.groupBy(col("shingle")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2).select(col("shingle"))
     val starts = sh.join(dup, Seq("shingle"))
@@ -781,7 +778,7 @@ object LlmOps {
       .agg(sort_array(collect_set(col("spos"))).as("starts"))
     docs.join(starts, Seq("doc_id"), "left")
       .select(col("doc_id"),
-        expr(s"remove_spans(text, coalesce(starts, cast(array() as array<int>)), $k)").as("r"))
+        removeSpans(col("text"), coalesce(col("starts"), array().cast("array<int>")), k).as("r"))
       .select(col("doc_id"),
         col("r.n_tokens").cast("long").as("n_tokens"),
         col("r.n_kept").cast("long").as("n_kept"),

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.vecDot
+
 /** MAXIMAL MARGINAL RELEVANCE re-ranking (Carbonell & Goldstein,
   * SIGIR 1998) — the standard production DIVERSITY stage of a
   * retrieval serve: plain top-k over a corpus with near-duplicates
@@ -69,8 +71,7 @@ object Mmr {
     * ‖a‖² − 2⟨a,b⟩ + ‖b‖², each term an exact integer via the codegen
     * vec_dot. */
   private def sqDist(a: String, b: String): Column =
-    expr(s"vec_dot($a, $a)") - lit(2L) * expr(s"vec_dot($a, $b)") +
-      expr(s"vec_dot($b, $b)")
+    vecDot(col(a), col(a)) - lit(2L) * vecDot(col(a), col(b)) + vecDot(col(b), col(b))
 
   /** One candidate row inside a query's MMR group: the exact grid
     * vector rides along so the pairwise diversity distances never
@@ -151,7 +152,6 @@ object Mmr {
                     boundedProbes: Boolean = true): DataFrame = {
     require(k >= 1, "k must be positive")
     val spark = vecs.sparkSession
-    graft.functions.VecDot.register(spark)
     import spark.implicits._
     // candidates join back to the exact grid ONCE (broadcast under
     // the boundedProbes contract: the candidate list is

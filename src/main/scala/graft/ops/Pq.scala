@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{adcSubDists, nearestCells, vecDot}
 import graft.ops.Embeddings.Centroid
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
@@ -144,22 +145,16 @@ object Pq {
     * any K. Bit-identical arithmetic (PqSpec pins equality against
     * [[nearestSubCodeLiteral]]; the q77/q79/q80 oracles replay the
     * same trajectories). */
-  private def nearestSubCode(spark: SparkSession, cents: Seq[Centroid]): Column = {
-    val t = subTable(cents)
-    graft.functions.CellFns.fnCol(spark, "nearest_subcode", t, "__pq_sl", "__pq_nrm")(
-      graft.functions.NearestCells(_, _, t)).cast("int")
-  }
+  private def nearestSubCode(cents: Seq[Centroid]): Column =
+    nearestCells(col("__pq_sl"), col("__pq_nrm"), subTable(cents)).cast("int")
 
   /** The per-(query, subspace) ADC table: the K-element array of
     * floor(dist×10⁶) Longs — exact in both engines (integer
     * numerator, one IEEE division, one double multiply, floor).
     * Fused ([[graft.functions.AdcSubDists]]) for the same O(1)
     * plan-size reason as [[nearestSubCode]]. */
-  private def quantizedSubDist(spark: SparkSession, cents: Seq[Centroid]): Column = {
-    val t = subTable(cents)
-    graft.functions.CellFns.fnCol(spark, "adc_subdists", t, "__pq_sl", "__pq_nrm")(
-      graft.functions.AdcSubDists(_, _, t, DistScale))
-  }
+  private def quantizedSubDist(cents: Seq[Centroid]): Column =
+    adcSubDists(col("__pq_sl"), col("__pq_nrm"), subTable(cents), DistScale)
 
   /** The r9 K-literal-subtree form of [[nearestSubCode]] — retained
     * (test-only) as the independent formulation PqSpec pins the fused
@@ -169,10 +164,9 @@ object Pq {
       require(c.n <= MaxSubCellMembers,
         s"sub-cell ${c.j} has ${c.n} members — past the 16-dim exact-integer bound")
       require(c.s.length == SubDim, s"sub-centroid ${c.j} is not $SubDim-dim")
-      val sLits = c.s.map(v => s"${v}L").mkString(",")
       val sumS2 = c.s.map(v => v * v).sum
       (lit(c.n) * lit(c.n) * col("__pq_nrm")
-        - lit(2L * c.n) * expr(s"vec_dot(__pq_sl, array($sLits))")
+        - lit(2L * c.n) * vecDot(col("__pq_sl"), array(c.s.map(lit(_)): _*))
         + lit(sumS2)).cast("double") / lit(c.n.toDouble * c.n.toDouble)
     }: _*)
     array_position(distArr, array_min(distArr)).cast("int") - 1
@@ -184,10 +178,9 @@ object Pq {
     array(cents.map { c =>
       require(c.n <= MaxSubCellMembers,
         s"sub-cell ${c.j} has ${c.n} members — past the 16-dim exact-integer bound")
-      val sLits = c.s.map(v => s"${v}L").mkString(",")
       val sumS2 = c.s.map(v => v * v).sum
       floor(((lit(c.n) * lit(c.n) * col("__pq_nrm")
-        - lit(2L * c.n) * expr(s"vec_dot(__pq_sl, array($sLits))")
+        - lit(2L * c.n) * vecDot(col("__pq_sl"), array(c.s.map(lit(_)): _*))
         + lit(sumS2)).cast("double") / lit(c.n.toDouble * c.n.toDouble))
         * lit(DistScale.toDouble)).cast("long")
     }: _*)
@@ -196,7 +189,7 @@ object Pq {
     * to `df`, evaluates `f`, drops the helpers. */
   private def withSlice(df: DataFrame, m: Int)(f: DataFrame => DataFrame): DataFrame =
     f(df.withColumn("__pq_sl", subSlice(col("qv"), m))
-        .withColumn("__pq_nrm", expr("vec_dot(__pq_sl, __pq_sl)")))
+        .withColumn("__pq_nrm", vecDot(col("__pq_sl"), col("__pq_sl"))))
       .drop("__pq_sl", "__pq_nrm")
 
   /** Train all M codebooks on the quantized corpus `vecs`: Forgy seed
@@ -216,7 +209,6 @@ object Pq {
   private[graft] def trainCodebooks(vecs: DataFrame,
                                     iters: Int = Embeddings.OracleIters,
                                     nCodes: Int = K): Seq[Seq[Centroid]] = {
-    val spark = vecs.sparkSession
     val seedRows = vecs.orderBy(col("vec_id")).limit(nCodes)
       .select(col("vec_id"), col("qv")).collect()
     val seeds: Seq[Seq[Centroid]] = (0 until M).map(m =>
@@ -225,7 +217,7 @@ object Pq {
         .toSeq.sortBy(_.j))
     (1 to iters).foldLeft(seeds) { (books, _) =>
       val withCodes = (0 until M).foldLeft(vecs) { (df, m) =>
-        withSlice(df, m)(d => d.withColumn(s"c$m", nearestSubCode(spark, books(m))))
+        withSlice(df, m)(d => d.withColumn(s"c$m", nearestSubCode(books(m))))
       }
       val agg = withCodes
         .select((0 until M).map(m => col(s"c$m")) :+
@@ -263,7 +255,7 @@ object Pq {
   private[graft] def encode(vecs: DataFrame, books: Seq[Seq[Centroid]],
                             keep: Seq[String] = Nil): DataFrame =
     (0 until M).foldLeft(vecs) { (df, m) =>
-      withSlice(df, m)(d => d.withColumn(s"c$m", nearestSubCode(vecs.sparkSession, books(m))))
+      withSlice(df, m)(d => d.withColumn(s"c$m", nearestSubCode(books(m))))
     }.select(col("vec_id") +: ((0 until M).map(m => col(s"c$m")) ++ keep.map(col)): _*)
 
   /** The ONE ranking tail of both ADC serves: `joined` carries
@@ -306,7 +298,7 @@ object Pq {
     // probe side: exact query vectors -> M lookup arrays of K
     // quantized subdistances each (the ADC table, one row per probe)
     val pt = (0 until M).foldLeft(probes) { (df, m) =>
-        withSlice(df, m)(d => d.withColumn(s"t$m", quantizedSubDist(probes.sparkSession, books(m))))
+        withSlice(df, m)(d => d.withColumn(s"t$m", quantizedSubDist(books(m))))
       }
       .select(col("q_id") +: (0 until M).map(m => col(s"t$m")): _*)
     adcTail(codes.crossJoin(broadcast(pt)), k, excludeSelf)
@@ -334,9 +326,6 @@ object Pq {
                               k: Int = 5, queryMod: Int = 50,
                               iters: Int = Embeddings.OracleIters,
                               nCodes: Int = K): DataFrame = {
-    // callers arriving through quantized() already registered the
-    // codegen dot product; an explicit (vec_id, qv) relation has not
-    graft.functions.VecDot.register(vecs.sparkSession)
     val books = trainCodebooks(vecs, iters, nCodes)
     // Production-K encode fan-out (round 16, guide §2.5): the serve's
     // encode rides the codes scan, and per-row cost is M fused argmin
@@ -557,22 +546,20 @@ object Pq {
                   probes: DataFrame, k: Int = 5, r: Int = RefineR,
                   excludeSelf: Boolean = false): DataFrame = {
     require(r >= k, s"refine candidate budget r=$r must cover k=$k")
-    val spark = probes.sparkSession
-    graft.functions.VecDot.register(spark)
     val cands = adcServe(codes, books, probes, r, excludeSelf)
       .select(col("q_id"), col("neighbor_id"))
     val qs = probes
       .select(col("q_id"), col("qv").as("q_v"))
-      .withColumn("q_n", expr("vec_dot(q_v, q_v)"))
+      .withColumn("q_n", vecDot(col("q_v"), col("q_v")))
     val nb = raw.select(col("vec_id").as("neighbor_id"), col("qv").as("n_v"),
-      expr("vec_dot(qv, qv)").as("n_n"))
+      vecDot(col("qv"), col("qv")).as("n_n"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("est"), col("neighbor_id"))
     // candidate ids broadcast INTO the raw scan (candidate-sized
     // equi-join — the full corpus is never crossed with the probes
     // again), then the probe batch broadcasts onto the result
     nb.join(broadcast(cands), Seq("neighbor_id"))
       .join(broadcast(qs), Seq("q_id"))
-      .withColumn("est", col("q_n") - lit(2L) * expr("vec_dot(q_v, n_v)") + col("n_n"))
+      .withColumn("est", col("q_n") - lit(2L) * vecDot(col("q_v"), col("n_v")) + col("n_n"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank").cast("long").as("rank"),
@@ -610,11 +597,9 @@ object Pq {
     * onto the corpus grid — same floor(x·10³) contract as
     * [[Embeddings.quantized]], so an external query and a corpus
     * vector with equal embeddings get equal ADC tables. */
-  def quantizeQueries(queries: DataFrame): DataFrame = {
-    graft.functions.VecDot.register(queries.sparkSession)
+  def quantizeQueries(queries: DataFrame): DataFrame =
     queries.select(col("q_id"),
       transform(col("embedding"), x => floor(x.cast("double") * 1000)).as("qv"))
-  }
 
   /** The serving-path codes relation for a corpus dir (built from a
     * loaded artifact; persisted by the caller if reused). */
@@ -736,12 +721,10 @@ object Pq {
     * the test's notion of "probed" cannot drift from the serve's. */
   private[graft] def probeCellsRelation(queries: DataFrame, cents: Seq[Centroid],
                                         nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    graft.functions.VecDot.register(spark)
     queries
-      .withColumn("nrm", expr("vec_dot(qv, qv)"))
+      .withColumn("nrm", vecDot(col("qv"), col("qv")))
       .select(col("q_id"), col("qv"), col("nrm"),
-        explode(Embeddings.probeCellsCol(spark, cents.sortBy(_.j), nprobe)).as("cell"))
+        explode(Embeddings.probeCellsCol(cents.sortBy(_.j), nprobe)).as("cell"))
   }
 
   def ivfPqServe(codes: DataFrame, cents: Seq[Centroid], books: Seq[Seq[Centroid]],
@@ -785,7 +768,7 @@ object Pq {
       probes.join(broadcast(gridDfOf(spark, sorted)), "cell")
         .select(col("q_id"), col("cell"),
           zip_with(col("qv"), col("grid"), (a, b) => a - b).as("qv"))) { (df, m) =>
-        withSlice(df, m)(d => d.withColumn(s"t$m", quantizedSubDist(spark, books(m))))
+        withSlice(df, m)(d => d.withColumn(s"t$m", quantizedSubDist(books(m))))
       }
       .select(col("q_id") +: col("cell") +: (0 until M).map(m => col(s"t$m")): _*)
     adcTail(codes.filter(col("cell").isin(probedCells: _*))

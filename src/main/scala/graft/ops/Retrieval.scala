@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.termCounts
+
 /** BM25 keyword retrieval over the documents relation (Robertson &
   * Zaragoza 2009, the Okapi BM25 ranking function; idf in the
   * always-positive Lucene form ln(1 + (N−df+0.5)/(df+0.5))) — the
@@ -51,9 +53,8 @@ object Retrieval {
     * one row (scalar corpus stats, the quantizer-collect contract). */
   def bm25Build(docs: DataFrame, k1: Double = 1.2, b: Double = 0.75): Bm25Index = {
     require(k1 >= 0 && b >= 0 && b <= 1, "k1 must be >= 0 and b in [0,1]")
-    graft.functions.TermCounts.register(docs.sparkSession)
     val tf = Caches.persist(docs
-      .select(col("doc_id"), expr("term_counts(text)").as("tc"))
+      .select(col("doc_id"), termCounts(col("text")).as("tc"))
       .select(col("doc_id"), col("tc.dl").as("dl"), explode(col("tc.pairs")).as("p"))
       .select(col("p.term").as("term"), col("doc_id"), col("dl"),
         col("p.tf").cast("long").as("tf")))
@@ -119,9 +120,8 @@ object Retrieval {
   def bm25BuildFrozen(docs: DataFrame, isBase: org.apache.spark.sql.Column,
                       k1: Double = 1.2, b: Double = 0.75): Bm25Index = {
     require(k1 >= 0 && b >= 0 && b <= 1, "k1 must be >= 0 and b in [0,1]")
-    graft.functions.TermCounts.register(docs.sparkSession)
     val tf = Caches.persist(docs
-      .select(col("doc_id"), isBase.as("is_base"), expr("term_counts(text)").as("tc"))
+      .select(col("doc_id"), isBase.as("is_base"), termCounts(col("text")).as("tc"))
       .select(col("doc_id"), col("is_base"), col("tc.dl").as("dl"),
         explode(col("tc.pairs")).as("p"))
       .select(col("p.term").as("term"), col("doc_id"), col("is_base"), col("dl"),

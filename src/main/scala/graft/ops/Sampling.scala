@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.textStats
+
 /** Deterministic sampling/splitting for training-data pipelines.
   *
   * Both operators key on [[LlmOps.portableHash64]] of the document id
@@ -363,7 +365,6 @@ object Sampling {
   def slidingChunks(spark: SparkSession, dir: String,
                     size: Int = 64, stride: Int = 48): DataFrame = {
     require(size > 0 && stride > 0, "size and stride must be positive")
-    graft.functions.TextStats.register(spark)
     Tables.documents(spark, dir)
       // the n_tokens ≥ 1 gate as an INDEPENDENT cheap predicate (some
       // non-space byte ⟺ at least one token): filtering on the
@@ -371,7 +372,7 @@ object Sampling {
       // SUBSTITUTED by the optimizer — the byte scan would run twice
       // per row (the q41 pathology, same fix)
       .filter(col("text").rlike("[^ ]"))
-      .select(col("doc_id"), expr("text_stats(text)").getField("n_tokens").as("n"))
+      .select(col("doc_id"), textStats(col("text")).getField("n_tokens").as("n"))
       .select(col("doc_id"), col("n"),
         explode(expr(s"sequence(0L, (n - 1) div $stride)")).as("chunk_id"))
       .select(col("doc_id"), col("chunk_id"),
@@ -395,13 +396,12 @@ object Sampling {
                         contextLen: Int = DefaultContextLen,
                         nShards: Int = DefaultShards): DataFrame = {
     require(contextLen > 0 && nShards > 0, "contextLen and nShards must be positive")
-    graft.functions.TextStats.register(docs.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     docs
       .select(col("doc_id"), pmod(col("doc_id"), lit(nShards.toLong)).as("shard"),
-        expr("text_stats(text)").getField("n_tokens").as("n_tokens"))
+        textStats(col("text")).getField("n_tokens").as("n_tokens"))
       .withColumn("start_tok", sum(col("n_tokens")).over(w) - col("n_tokens"))
       .withColumn("pack_id", expr(s"start_tok div $contextLen"))
       .select(col("doc_id"), col("shard"), col("n_tokens"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.vecDot
+
 /** Scalar quantization (SQ8) — the MIDDLE point of the ANN memory
   * axis, between raw vectors (q45: 256 B/vec at Dim = 64 float) and
   * product quantization (q77/q80: 4 code bytes): one byte PER
@@ -104,7 +106,7 @@ object Sq {
     probes.join(broadcast(Pq.gridDfOf(probes.sparkSession, sorted)), "cell")
       .select(col("q_id"), col("cell"),
         zip_with(col("qv"), col("grid"), (a, b) => a - b).as("q_v"))
-      .withColumn("q_n", expr("vec_dot(q_v, q_v)"))
+      .withColumn("q_n", vecDot(col("q_v"), col("q_v")))
 
   /** The corpus side of every SQ8 serve: the reconstruction rides the
     * codes scan (row-local) with its exact norm precomputed; `keep`
@@ -114,7 +116,7 @@ object Sq {
                       keep: Seq[String] = Nil): DataFrame =
     codes.withColumn("rv", decodeCol(mins, maxs))
       .select(Seq(col("vec_id").as("neighbor_id")) ++ keep.map(col) ++
-        Seq(col("rv"), expr("vec_dot(rv, rv)").as("r_n")): _*)
+        Seq(col("rv"), vecDot(col("rv"), col("rv")).as("r_n")): _*)
 
   /** The ONE ranking tail of every SQ8 serve ([[Pq.adcTail]]'s
     * counterpart): `pairs` carries (q_id, neighbor_id, q_v, q_n, rv,
@@ -132,7 +134,7 @@ object Sq {
     * serve ([[ivfSq8RangeServe]]), so the estimate can never drift
     * between the top-k and range contracts. */
   private def withEst(pairs: DataFrame): DataFrame =
-    pairs.withColumn("est", col("q_n") - lit(2L) * expr("vec_dot(q_v, rv)") + col("r_n"))
+    pairs.withColumn("est", col("q_n") - lit(2L) * vecDot(col("q_v"), col("rv")) + col("r_n"))
 
   private def sqTail(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("est"), col("neighbor_id"))
@@ -169,12 +171,10 @@ object Sq {
   def sq8Serve(codes: DataFrame, mins: Seq[Long], maxs: Seq[Long],
                probes: DataFrame, k: Int = 5,
                excludeSelf: Boolean = false): DataFrame = {
-    val spark = probes.sparkSession
-    graft.functions.VecDot.register(spark)
     val corpus = decoded(codes, mins, maxs)
     val qs = probes
       .select(col("q_id"), col("qv").as("q_v"))
-      .withColumn("q_n", expr("vec_dot(q_v, q_v)"))
+      .withColumn("q_n", vecDot(col("q_v"), col("q_v")))
     val pairs = corpus.crossJoin(broadcast(qs))
     sqTail(if (excludeSelf) pairs.filter(col("neighbor_id") =!= col("q_id")) else pairs, k)
   }
@@ -359,7 +359,6 @@ object Sq {
                           queries: DataFrame, nprobe: Int,
                           excludeSelf: Boolean): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.VecDot.register(spark)
     val sorted = cents.sortBy(_.j)
     val probesPlan = Pq.probeCellsRelation(queries, sorted, nprobe)
     val probeRows = probesPlan.collect()
@@ -606,10 +605,9 @@ object Sq {
     * bit-identical to re-encoding the grown corpus in one pass. */
   def ivfSq8EncodeBatch(batch: DataFrame, cents: Seq[Embeddings.Centroid],
                         mins: Seq[Long], maxs: Seq[Long]): DataFrame = {
-    graft.functions.VecDot.register(batch.sparkSession)
     val q = batch.select(col("vec_id"),
         transform(col("embedding"), x => floor(x.cast("double") * 1000)).as("qv"))
-      .withColumn("nrm", expr("vec_dot(qv, qv)"))
+      .withColumn("nrm", vecDot(col("qv"), col("qv")))
     encode(Pq.residualsOfIndex(Embeddings.indexBatch(q, cents), cents.sortBy(_.j)),
       mins, maxs, keep = Seq("cell"))
   }
@@ -704,7 +702,6 @@ object Sq {
                           excludeSelf: Boolean = false): DataFrame = {
     require(r >= k, s"refine candidate budget r=$r must cover k=$k")
     val spark = queries.sparkSession
-    graft.functions.VecDot.register(spark)
     val sorted = cents.sortBy(_.j)
     val probesPlan = Pq.probeCellsRelation(queries, sorted, nprobe)
     val probeRows = probesPlan.collect()

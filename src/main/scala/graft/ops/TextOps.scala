@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.{bigramStats, charPairs, nfc, simhash60, winnowMinima}
+
 /** Text-analysis operators for training-data curation over `documents`:
   * SimHash fingerprints, quality stats, heuristic language ID, token
   * counting, and winnowing document fingerprints.
@@ -33,11 +35,10 @@ object TextOps {
     * (docs with no tokens drop out, matching the exploded
     * semantics). */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SimHash60.register(spark)
     val ws = filter(split(col("text"), " "), x => length(x) > 0)
     Tables.documents(spark, dir)
       .withColumn("ws", ws).filter(size(col("ws")) > 0)
-      .select(col("doc_id"), expr("simhash60(ws)").as("simhash"))
+      .select(col("doc_id"), simhash60(col("ws")).as("simhash"))
       .orderBy(col("doc_id"))
   }
 
@@ -57,12 +58,11 @@ object TextOps {
     * four struct fields are one shared subexpression (Catalyst CSE
     * evaluates text_stats once per row). */
   def textStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextStats.register(spark)
     // fanned out (round 16, the r15 q26/q99 pattern at the remaining
     // single-split text kernels — VERDICT r15 #7): the per-row byte
     // scan serialized on one task; size-aware width, no-op at scale
     Tables.fanOut(Tables.documents(spark, dir))
-      .withColumn("st", expr("text_stats(text)"))
+      .withColumn("st", graft.functions.textStats(col("text")))
       .select(
         col("doc_id"),
         col("st.n_tokens").as("n_tokens"),
@@ -139,14 +139,13 @@ object TextOps {
     * (two combining marks compose away). Per-row projection, no
     * shuffle; linear in the scan at any scale. */
   def nfcNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfcNormalize.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         concat(lit("Cafe\u0301 nai\u0308ve "), substring(col("text"), 1, 40)).as("raw"))
       .select(col("doc_id"),
         length(col("raw")).cast("long").as("len_raw"),
-        length(expr("nfc(raw)")).cast("long").as("len_nfc"),
-        expr("nfc(raw)").as("text_nfc"))
+        length(nfc(col("raw"))).cast("long").as("len_nfc"),
+        nfc(col("raw")).as("text_nfc"))
       .orderBy(col("doc_id"))
   }
 
@@ -233,7 +232,6 @@ object TextOps {
     * the amplification IS the cost; per-row state that fits in memory
     * (a doc's own bigram set) should never cross a shuffle. */
   def repetitionStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BigramStats.register(spark)
     Tables.documents(spark, dir)
       // the ≥2-tokens gate as an INDEPENDENT cheap predicate (some
       // non-space, ≥1 space, some non-space ⟺ n_bigrams ≥ 1): filtering
@@ -241,7 +239,7 @@ object TextOps {
       // SUBSTITUTED by the optimizer — the count map would build twice
       // per row; this regex prunes before the expression runs at all
       .filter(col("text").rlike("[^ ] +[^ ]"))
-      .withColumn("bs", expr("bigram_stats(text)"))
+      .withColumn("bs", bigramStats(col("text")))
       .select(
         col("doc_id"),
         col("bs.n_bigrams").as("n_bigrams"),
@@ -268,14 +266,13 @@ object TextOps {
     * but paid ~1.7× interpreted-lambda CPU. This keeps both wins. */
   def winnowFingerprint(spark: SparkSession, dir: String,
                         k: Int = 8, w: Int = 4): DataFrame = {
-    graft.functions.WinnowMinima.register(spark)
     // fanned out (round 15): the per-char winnowing pass is the whole
     // cost and ran serialized on the one-row-group scan — measured
     // 1.41 → 0.58 s at sf0.1
     Tables.fanOut(Tables.documents(spark, dir))
       .filter(length(col("text")) >= k)
       .select(col("doc_id"),
-        array_join(array_sort(array_distinct(expr(s"winnow_minima(text, $k, $w)")))
+        array_join(array_sort(array_distinct(winnowMinima(col("text"), k, w)))
           .cast("array<string>"), "|").as("fingerprint"),
         (length(col("text")) - (k - 1)).cast("long").as("n_grams"))
       .orderBy(col("doc_id"))
@@ -298,9 +295,8 @@ object TextOps {
     * the ONE shuffle keyed by pair, and top-k is TakeOrdered — never a
     * global sort. */
   def bpePairCounts(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
-    graft.functions.CharPairs.register(spark)
     val pairs = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(expr("char_pairs(text)")).as("pair"))
+      .select(col("doc_id"), explode(charPairs(col("text"))).as("pair"))
     val counts = pairs.groupBy(col("pair"), col("doc_id")).agg(count(lit(1)).as("c"))
       .groupBy(col("pair"))
       .agg(sum(col("c")).as("n"), count(lit(1)).as("df"))

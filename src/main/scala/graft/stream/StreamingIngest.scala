@@ -1,5 +1,6 @@
 package graft.stream
 
+import graft.functions.textStats
 import graft.ops.TextOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -32,13 +33,12 @@ object StreamingIngest {
   /** `docs` needs (ts: timestamp, doc_id, text). */
   def ingestStream(docs: DataFrame, minTokens: Int = 5,
                    horizon: String = "1 hour"): DataFrame = {
-    graft.functions.TextStats.register(docs.sparkSession)
     val (cleaned, counts) = TextOps.redactColumns
     // one stateless projection carries gate + redaction — NOT a join
     // of two derivations of the stream (that would plan a
     // stream-stream join and demand its time-interval machinery)
     val clean = docs
-      .filter(expr("text_stats(text)").getField("n_tokens") >= minTokens)
+      .filter(textStats(col("text")).getField("n_tokens") >= minTokens)
       .select(col("ts"), col("doc_id"),
         cleaned.as("text"), counts.as("n_redacted"))
     StreamingDedup.dedupStream(clean, horizon)

@@ -3,6 +3,8 @@ package graft.stream
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.simhash60
+
 /** Streaming NEAR-deduplication — the firehose twin of q22/q29's
   * sketch dedup (LLM-pipeline north star: a training-data intake must
   * reject near-copies of the existing corpus at ingest time, not in a
@@ -54,11 +56,10 @@ object StreamingNearDedup {
     * q22 exactly (whitespace split, empty tokens dropped, tokenless
     * docs out of the near-dup surface). */
   def simhashIndex(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.SimHash60.register(spark)
     docs
       .withColumn("ws", filter(split(col("text"), " "), x => length(x) > 0))
       .filter(size(col("ws")) > 0)
-      .select(col("doc_id").as("idx_doc_id"), expr("simhash60(ws)").as("idx_simhash"))
+      .select(col("doc_id").as("idx_doc_id"), simhash60(col("ws")).as("idx_simhash"))
       .select(col("idx_doc_id"), col("idx_simhash"), explodeBands(col("idx_simhash")).as("bk"))
       .select(col("bk.band").as("band"), col("bk.band_val").as("band_val"),
         col("idx_doc_id"), col("idx_simhash"))
@@ -77,11 +78,10 @@ object StreamingNearDedup {
     require(maxHamming < Bands,
       s"maxHamming must be ≤ ${Bands - 1}: the $Bands-band index only guarantees " +
         "recall for pairs within Bands−1 differing bits")
-    graft.functions.SimHash60.register(docs.sparkSession)
     docs
       .withColumn("ws", filter(split(col("text"), " "), x => length(x) > 0))
       .filter(size(col("ws")) > 0)
-      .withColumn("simhash", expr("simhash60(ws)"))
+      .withColumn("simhash", simhash60(col("ws")))
       .withColumn("bk", explodeBands(col("simhash")))
       .select(col("ts"), col("doc_id"), col("simhash"),
         col("bk.band").as("band"), col("bk.band_val").as("band_val"))
@@ -189,11 +189,10 @@ object StreamingNearDedup {
       s"maxHamming must be ≤ ${Bands - 1}: the $Bands-band index only guarantees " +
         "recall for pairs within Bands−1 differing bits")
     val spark = docs.sparkSession
-    graft.functions.SimHash60.register(spark)
     val sketched = docs
       .withColumn("ws", filter(split(col("text"), " "), x => length(x) > 0))
       .filter(size(col("ws")) > 0)
-      .withColumn("simhash", expr("simhash60(ws)"))
+      .withColumn("simhash", simhash60(col("ws")))
       .withColumn("bk", explodeBands(col("simhash")))
       .select(col("ts"), col("doc_id"), col("simhash"),
         col("bk.band").as("band"), col("bk.band_val").as("band_val"))

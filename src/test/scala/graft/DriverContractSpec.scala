@@ -90,6 +90,32 @@ class DriverContractSpec extends SparkSpec {
     }
   }
 
+  test("no session-function registration outside GraftExtensions and ops/Udfs") {
+    // operators build their custom expressions as typed Columns
+    // (graft.functions); GraftExtensions is the one SQL surface, and
+    // the reference's verbatim warehouse SQL needs ops/Udfs' kimball_*
+    // names. A registration anywhere else, or an expr string that only
+    // resolves after one, brings the per-call registry bridge back.
+    import scala.jdk.CollectionConverters._
+    val allowed = Set("graft/GraftExtensions.scala", "graft/ops/Udfs.scala")
+    val names = GraftExtensions.All.map(_._1) ++
+      Seq("nearest_cells", "probe_cells", "adc_subdists", "minhash_sig")
+    val byName = ("(expr|selectExpr)\\(\\s*s?\"[^\"]*\\b(" + names.mkString("|") + ")\\s*\\(").r
+    val registration = "createOrReplaceTempFunction|registerFunction|\\.udf\\.register".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.exists(p => allowed(root.relativize(p).toString)), s"scanned the wrong tree: $root")
+    val offenders = files.filterNot(p => allowed(root.relativize(p).toString)).flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if registration.findFirstIn(line).isDefined ||
+                          byName.findFirstIn(line).isDefined =>
+          s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("session-function registration bridge:\n", "\n", ""))
+  }
+
   test("every oracle ends with a deterministic ORDER BY") {
     // the driver hashes rows in order after a column-name sort; an
     // oracle without a total ORDER BY can flake with DuckDB's

@@ -13,16 +13,15 @@ class EmbeddingsSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("vec_dot codegen expression matches the interpreted HOF formulation") {
-    import org.apache.spark.sql.functions.{aggregate, expr, lit, zip_with, col}
+    import org.apache.spark.sql.functions.{aggregate, lit, zip_with, col}
     val s = spark
     import s.implicits._
-    graft.functions.VecDot.register(spark)
     val rnd = new scala.util.Random(7)
     val df = (0 until 100)
       .map(_ => (Seq.fill(64)(rnd.nextLong() % 1000), Seq.fill(64)(rnd.nextLong() % 1000)))
       .toDF("a", "b")
     val got = df.select(
-      expr("vec_dot(a, b)").as("d"),
+      graft.functions.vecDot(col("a"), col("b")).as("d"),
       aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
         lit(0L), (acc, v) => acc + v).as("h")).collect()
     got.foreach(r => assert(r.getLong(0) == r.getLong(1)))

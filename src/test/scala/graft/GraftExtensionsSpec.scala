@@ -4,27 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** The `spark.sql.extensions=graft.GraftExtensions` opt-in: a FRESH
   * session built with the extension must expose the whole custom
-  * expression family in SQL with no register() calls. */
+  * expression family in SQL, and no session without it may see it. */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("a session built with GraftExtensions has the full function family in SQL") {
-    val base = spark // materialize the shared session/context first
-    // a new SparkSession over the SAME SparkContext: clearing the
-    // active/default handles makes getOrCreate construct a session
-    // instead of returning `base`. The injection goes through
-    // builder.withExtensions — the same seam the
-    // `spark.sql.extensions=graft.GraftExtensions` config drives, but
-    // config-based extensions are a STATIC conf pinned at
-    // SparkContext creation, so only the builder API is testable
-    // in-JVM against the suite's shared context.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions())
-      .getOrCreate()
-    try {
-      assert(ext ne base, "getOrCreate returned the existing session — extensions never applied")
+    withExtensionSession { ext =>
       val r = ext.sql(
         """SELECT
              simhash60(array('alpha', 'beta')) AS sh,
@@ -42,22 +26,22 @@ class GraftExtensionsSpec extends SparkSpec {
       assert(r.getLong(4) == 11L)   // 1·3 + 2·4
       assert(r.getSeq[String](5).toSet == Set("a b c", "b c d"))
       assert(r.getSeq[String](6) == Seq("ab", "bc", "de"))
-      // the injection is per-session opt-in: a fresh session built
-      // WITHOUT the extension must not see the family. (Not asserted
-      // on `base` — earlier suites may have legitimately register()ed
-      // these functions there.)
+      // the injection is per-session opt-in: neither a fresh session
+      // built WITHOUT the extension nor the shared test session (whose
+      // operators build their expressions as typed Columns) sees the
+      // family
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       val plain = SparkSession.builder().master("local[4]").getOrCreate()
-      assert((plain ne ext) && (plain ne base))
-      intercept[org.apache.spark.sql.AnalysisException] {
-        plain.sql("SELECT bigram_stats('x')").collect()
+      assert((plain ne ext) && (plain ne spark))
+      for (s <- Seq(plain, spark)) {
+        intercept[org.apache.spark.sql.AnalysisException] {
+          s.sql("SELECT bigram_stats('x')").collect()
+        }
+        GraftExtensions.All.foreach { case (name, _, _) =>
+          assert(!s.catalog.functionExists(name), s"$name is visible without the extension")
+        }
       }
-    } finally {
-      // do NOT stop `ext`: it shares base's SparkContext. Just restore
-      // the session handles for every later suite.
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
     }
   }
 }

@@ -29,11 +29,11 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("MinHashAgg typed UDAF: bit-parity with the declarative 16-min signatures") {
-    graft.functions.MinHashAgg.register(spark)
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(dir).isDirectory, "testdata not present")
+    val minhashSig = udaf(new graft.functions.MinHashAgg(LlmOps.MinhashK))
     val viaUdaf = LlmOps.shingles(graft.ops.Tables.documents(spark, dir))
-      .groupBy(col("doc_id")).agg(expr("minhash_sig(shingle)").as("sig"))
+      .groupBy(col("doc_id")).agg(minhashSig(col("shingle")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val declarative = LlmOps.minhashSignatures(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CellTable, NearestCells}
+import graft.functions.{CellTable, nearestCells, probeCells, vecDot}
 import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -70,17 +70,14 @@ class NearestCellsProperties extends SparkSpec {
   private def run(vecs: Seq[IndexedSeq[Long]], table: CellTable): Seq[Long] = {
     val s = spark
     import s.implicits._
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nc_test", { case Seq(a, b) => NearestCells(a, b, table) }, "built-in")
     vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("id", "qv")
-      .withColumn("nrm", expr("vec_dot(qv, qv)"))
-      .select(col("id"), expr("nc_test(qv, nrm)").as("cell"))
+      .withColumn("nrm", vecDot(col("qv"), col("qv")))
+      .select(col("id"), nearestCells(col("qv"), col("nrm"), table).as("cell"))
       .collect().sortBy(_.getLong(0)).map(_.getLong(1)).toSeq
   }
 
   test("exact form matches the model on random corpora (varying n, 200 rounds of rows)") {
-    graft.functions.VecDot.register(spark)
     val cents = (0 until 40).map(i =>
       C(i * 7L, randVec(1000), 1L + rnd.nextInt(100))).sortBy(_.j)
     val vecs = Seq.fill(200)(randVec(1000))
@@ -90,7 +87,6 @@ class NearestCellsProperties extends SparkSpec {
   }
 
   test("exact ties break to the first (smallest-id) centroid") {
-    graft.functions.VecDot.register(spark)
     // duplicated centroid vectors => exactly equal distances
     val shared = randVec(50)
     val cents = Seq(C(3L, shared, 5L), C(9L, shared, 5L), C(11L, randVec(50), 2L))
@@ -102,7 +98,6 @@ class NearestCellsProperties extends SparkSpec {
   }
 
   test("ProbeCells returns the nprobe (dist, id)-lexicographic head, incl. ties") {
-    graft.functions.VecDot.register(spark)
     val s = spark
     import s.implicits._
     val shared = randVec(200)
@@ -113,13 +108,10 @@ class NearestCellsProperties extends SparkSpec {
     val vecs = Seq.fill(120)(randVec(200))
     for (nprobe <- Seq(1, 2, 4, 30)) {
       val table = tableOf(cents, Nil, Nil)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pc_test", { case Seq(a, b) => graft.functions.ProbeCells(a, b, table, nprobe) },
-        "built-in")
       val got = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("id", "qv")
-        .withColumn("nrm", expr("vec_dot(qv, qv)"))
-        .select(col("id"), expr("pc_test(qv, nrm)").as("cells"))
+        .withColumn("nrm", vecDot(col("qv"), col("qv")))
+        .select(col("id"), probeCells(col("qv"), col("nrm"), table, nprobe).as("cells"))
         .collect().sortBy(_.getLong(0))
         .map(_.getSeq[Long](1).toList)
       val want = vecs.map { v =>
@@ -131,7 +123,6 @@ class NearestCellsProperties extends SparkSpec {
   }
 
   test("two-level form matches the model (supers route, members resolve, ties first)") {
-    graft.functions.VecDot.register(spark)
     val groups = (0 until 5).map { g =>
       val base = randVec(800)
       (0 until 8).map(i => C(g * 100L + i, base.map(_ + rnd.nextInt(21) - 10), 1L + rnd.nextInt(50)))
@@ -240,14 +231,10 @@ class NearestCellsProperties extends SparkSpec {
     intercept[IllegalArgumentException] { tableOf(dup, Nil, Nil) }
   }
 
-  test("CellFns key covers expression parameters: same prefix+table, different params never collide") {
-    // ADVICE r10: registration used to key on prefix + table content
-    // only; two columns over the same table whose wrapped expressions
-    // differ only in a closed-over parameter (here ProbeCells' nprobe)
-    // would both lazily resolve to the LAST-registered builder. The
-    // key now folds every non-child constructor parameter in, so one
-    // frame can carry both columns — with the SAME prefix — and each
-    // must evaluate under its own parameter.
+  test("same-table ProbeCells columns with different nprobe never collide") {
+    // two columns over the same table whose expressions differ only in
+    // a closed-over parameter: one frame carries both, and each must
+    // evaluate under its own parameter.
     val s = spark
     import s.implicits._
     val cents = (0L until 6L).map(j => C(j, randVec(10), 1L))
@@ -255,10 +242,8 @@ class NearestCellsProperties extends SparkSpec {
     val rows = (0 until 20).map(i => (i.toLong, randVec(10)))
     val df = rows.toDF("id", "qv")
       .withColumn("nrm", expr("aggregate(qv, 0L, (a, x) -> a + x * x)"))
-    val c1 = graft.functions.CellFns.fnCol(spark, "collide_probe", t, "qv", "nrm")(
-      graft.functions.ProbeCells(_, _, t, 1))
-    val c3 = graft.functions.CellFns.fnCol(spark, "collide_probe", t, "qv", "nrm")(
-      graft.functions.ProbeCells(_, _, t, 3))
+    val c1 = probeCells(col("qv"), col("nrm"), t, 1)
+    val c3 = probeCells(col("qv"), col("nrm"), t, 3)
     val got = df.select(col("id"), c1.as("p1"), c3.as("p3")).collect()
     rows.foreach { case (id, v) =>
       val nrm = v.map(x => x * x).sum

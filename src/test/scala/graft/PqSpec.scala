@@ -241,7 +241,7 @@ class PqSpec extends SparkSpec {
         val o = m * Pq.SubDim
         val df = vecs
           .withColumn("__pq_sl", expr(s"slice(qv, ${o + 1}, ${Pq.SubDim})"))
-          .withColumn("__pq_nrm", expr("vec_dot(__pq_sl, __pq_sl)"))
+          .withColumn("__pq_nrm", graft.functions.vecDot(col("__pq_sl"), col("__pq_sl")))
           .withColumn("lit_code", Pq.nearestSubCodeLiteral(books(m)))
           .withColumn("lit_adc", Pq.quantizedSubDistLiteral(books(m)))
         val rows = Pq.encode(vecs, books)
@@ -256,14 +256,13 @@ class PqSpec extends SparkSpec {
         // ADC arrays: fused expression vs literal, row by row
         val adc = df
           .withColumn("fus_adc", {
-            // same registration path the production quantizedSubDist uses
+            // same Column constructor the production quantizedSubDist uses
             val t = new graft.functions.CellTable(Pq.SubDim,
               books(m).indices.map(_.toLong).toArray, books(m).map(_.n).toArray,
               books(m).flatMap(_.s).toArray,
               books(m).map(c => c.s.map(v => v * v).sum).toArray,
               Array.emptyLongArray, Array.emptyLongArray, Array.emptyIntArray)
-            graft.functions.CellFns.fnCol(spark, "adc_test", t, "__pq_sl", "__pq_nrm")(
-              graft.functions.AdcSubDists(_, _, t, Pq.DistScale))
+            graft.functions.adcSubDists(col("__pq_sl"), col("__pq_nrm"), t, Pq.DistScale)
           })
           .select(col("vec_id"), col("lit_adc"), col("fus_adc"))
           .collect()

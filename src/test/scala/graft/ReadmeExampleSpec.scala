@@ -32,18 +32,16 @@ class ReadmeExampleSpec extends SparkSpec {
 
   test("the README's SQL example (simhash60 via the extension) runs as written") {
     assume(new java.io.File(SfDir).isDirectory, "testdata not present")
-    // the README injects via spark.sql.extensions; the programmatic
-    // equivalent on an existing session is the registry call the
-    // extension delegates to
-    graft.functions.SimHash60.register(spark)
-    Tables.documents(spark, SfDir).createOrReplaceTempView("documents")
-    try {
-      val rows = spark.sql(
+    // the README injects via spark.sql.extensions; this is its
+    // programmatic equivalent on the suite's live context
+    withExtensionSession { ext =>
+      Tables.documents(ext, SfDir).createOrReplaceTempView("documents")
+      val rows = ext.sql(
         """SELECT doc_id,
            simhash60(filter(split(text, ' '), x -> length(x) > 0)) AS simhash
            FROM documents
            WHERE size(filter(split(text, ' '), x -> length(x) > 0)) > 0""").count()
       assert(rows > 0, "the README SQL returned no rows")
-    } finally spark.catalog.dropTempView("documents")
+    }
   }
 }

@@ -410,9 +410,8 @@ class RetrievalSpec extends SparkSpec {
     assume(new java.io.File(dir).isDirectory, "testdata not present")
     import org.apache.spark.sql.functions._
     val docs = graft.ops.Tables.documents(spark, dir)
-    graft.functions.TermCounts.register(spark)
     val neu = docs
-      .select(col("doc_id"), expr("term_counts(text)").as("tc"))
+      .select(col("doc_id"), graft.functions.termCounts(col("text")).as("tc"))
       .select(col("doc_id"), col("tc.dl").as("dl"), explode(col("tc.pairs")).as("p"))
       .select(col("p.term").as("term"), col("doc_id"), col("dl"),
         col("p.tf").cast("long").as("tf"))

@@ -23,6 +23,33 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
 
+  /** Run `f` on a fresh session built with [[GraftExtensions]] over
+    * the shared SparkContext. The injection goes through
+    * `builder.withExtensions`, the seam the
+    * `spark.sql.extensions=graft.GraftExtensions` config drives; that
+    * config is a STATIC conf pinned at SparkContext creation, so only
+    * the builder API is testable in-JVM. The shared session stays the
+    * active/default one for every later suite; the context is not
+    * stopped (it is shared). */
+  def withExtensionSession[T](f: SparkSession => T): T = {
+    val base = spark
+    // clearing the handles makes getOrCreate construct a session
+    // instead of returning `base`
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = SparkSession.builder()
+      .master("local[4]")
+      .withExtensions(new GraftExtensions())
+      .getOrCreate()
+    try {
+      assert(ext ne base, "getOrCreate returned the existing session — extensions never applied")
+      f(ext)
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   /** Gate for suites pinned against the EXTERNAL read-only reference
     * tree (golden E2E, verbatim SQL, owners glue): skipped when the
     * tree is absent, or explicitly via GRAFT_SKIP_REF_GOLDEN=1 — the

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.{bigramStats, nfc, winnowMinima}
 import graft.ops.{LlmOps, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -88,8 +89,7 @@ class TextOpsSpec extends SparkSpec {
       .selectExpr("doc_id", "transform(sequence(1, size(hs)), i -> array_min(slice(hs, i, 4))) AS wm")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val viaExpr = {
-      graft.functions.WinnowMinima.register(spark)
-      df.select(col("doc_id"), expr("winnow_minima(text, 8, 4)").as("wm"))
+      df.select(col("doc_id"), winnowMinima(col("text"), 8, 4).as("wm"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     }
     assert(viaExpr == viaSql)
@@ -131,8 +131,7 @@ class TextOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> ((r.getInt(1).toLong,
         r.getInt(2).toLong, Option(r.get(3)).fold(0L)(_.asInstanceOf[Int].toLong)))).toMap
     val viaExpr = {
-      graft.functions.BigramStats.register(spark)
-      df.select(col("doc_id"), expr("bigram_stats(text)").as("bs"))
+      df.select(col("doc_id"), bigramStats(col("text")).as("bs"))
         .select(col("doc_id"), col("bs.n_bigrams"), col("bs.n_distinct_bigrams"), col("bs.max_count"))
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     }
@@ -174,12 +173,10 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("nfc expression: composes decomposed sequences, ASCII passes through untouched") {
-    graft.functions.NfcNormalize.register(spark)
     val decomposed = "Cafe\u0301 nai\u0308ve"     // e + U+0301, i + U+0308
     val composed = "Caf\u00e9 na\u00efve"          // é, ï precomposed
-    val r = spark.sql(
-      s"SELECT nfc('$decomposed') AS a, nfc('$composed') AS b, " +
-        "nfc('plain ascii') AS c, nfc(CAST(NULL AS STRING)) AS d").collect()(0)
+    val r = spark.range(1).select(nfc(lit(decomposed)).as("a"), nfc(lit(composed)).as("b"),
+      nfc(lit("plain ascii")).as("c"), nfc(lit(null).cast("string")).as("d")).collect()(0)
     assert(r.getString(0) === composed)            // NFC composes
     assert(r.getString(1) === composed)            // already-NFC unchanged
     assert(r.getString(2) === "plain ascii")       // ASCII fast path
