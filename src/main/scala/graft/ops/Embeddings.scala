@@ -247,41 +247,27 @@ object Embeddings {
     * [[loadQuantizer]]) hands these to serving jobs. */
   case class Centroid(j: Long, s: Seq[Long], n: Long)
 
-  /** Per-cell member bound for [[scaledDist]]'s exact-integer
-    * arithmetic: the distance sum ≤ Dim·(2n·10³)² = 2.56e8·n²
+  /** Per-cell member bound for the exact-integer distance of
+    * [[cellTable]]: the distance sum ≤ Dim·(2n·10³)² = 2.56e8·n²
     * overflows Long once n exceeds ~1.9·10⁵. */
   val MaxCellMembers: Long = 190000L
-
-  /** Scaled distance² to a centroid: Σ_d (n·q_d − s_d)² is exact
-    * integer arithmetic (distance² × n²); ONE double division by n²
-    * then makes centroids with different member counts comparable.
-    * Evaluated in the EXPANDED form n²·‖q‖² − 2n·(q·s) + ‖s‖² so the
-    * per-row work is one codegen [[graft.functions.VecDot]] call plus
-    * constants (‖q‖² is the precomputed `nrm` column; ‖s‖² folds on
-    * the driver) — the Σ(n·q−s)² zip_with form pays two interpreted
-    * lambdas per (row, cell) and dominated q31's training passes.
-    * Every term (and the total, which equals the direct form exactly)
-    * stays inside Long for n ≤ [[MaxCellMembers]] (enforced below: a
-    * silent wrap would corrupt every assignment; past the bound, shard
-    * cells or switch to double means), and the final IEEE division is
-    * identical to the oracle's direct-form expression. */
-  private def scaledDist(c: Centroid): Column = {
-    require(c.n <= MaxCellMembers,
-      s"cell ${c.j} has ${c.n} members — past the exact-integer bound " +
-        s"($MaxCellMembers); raise nCells or switch the quantizer to double means")
-    val sumS2 = c.s.map(v => v * v).sum
-    (lit(c.n) * lit(c.n) * col("nrm")
-      - lit(2L * c.n) * vecDot(col("qv"), array(c.s.map(lit(_)): _*))
-      + lit(sumS2))
-      .cast("double") / lit(c.n.toDouble * c.n.toDouble)
-  }
 
   /** Build the [[graft.functions.CellTable]] reference object for a
     * [[graft.functions.NearestCells]] expression: member cells in
     * evaluation/tie-break order (the caller's order — j-sorted for
-    * the exact form, group-concatenated for the two-level form), with
-    * the [[MaxCellMembers]] wrap guard applied per cell exactly as
-    * [[scaledDist]] does. */
+    * the exact form, group-concatenated for the two-level form).
+    *
+    * The distance every cell assignment uses: the scaled distance² to
+    * a centroid, Σ_d (n·q_d − s_d)², is exact integer arithmetic
+    * (distance² × n²); ONE double division by n² then makes centroids
+    * with different member counts comparable. It is evaluated in the
+    * EXPANDED form n²·‖q‖² − 2n·(q·s) + ‖s‖² (‖q‖² is the precomputed
+    * `nrm` column, ‖s‖² folds here per cell), which equals the direct
+    * form exactly. Every term stays inside Long for n ≤
+    * [[MaxCellMembers]], enforced here per cell: a silent wrap would
+    * corrupt every assignment; past the bound, shard cells or switch
+    * to double means. The final IEEE division is identical to the
+    * oracle's direct-form expression. */
   private def cellTable(ordered: Seq[Centroid],
                         supers: Seq[Centroid] = Nil,
                         groups: Seq[Seq[Centroid]] = Nil): graft.functions.CellTable = {
@@ -394,7 +380,7 @@ object Embeddings {
     * Each super-centroid is the member-count-weighted mean of its
     * group, ROUNDED to the integer grid ([[meanGrid]]) and carried as
     * a 1-member [[Centroid]], so the routing distance is the same
-    * exact-integer [[scaledDist]] kernel (no new arithmetic, no
+    * exact-integer [[cellTable]] distance (no new arithmetic, no
     * overflow exposure — n = 1 is always under [[MaxCellMembers]]).
     * The row evaluates `nSuper` super distances, then ONLY the chosen
     * group's members (CASE branches are lazy in codegen). Super ties
@@ -462,7 +448,7 @@ object Embeddings {
     * on a cluster. Serving is ONE equi-join on cell id; raising
     * `nprobe` multiplies candidates linearly (recall/cost dial).
     * All arithmetic is exact-integer + one pinned double division
-    * ([[scaledDist]]), so the DuckDB oracle replays the same training
+    * ([[cellTable]]), so the DuckDB oracle replays the same training
     * trajectory bit-for-bit; ties break to the smallest cell id on
     * both sides. Empty cells (possible after a reassignment round)
     * drop out identically in both engines. */
@@ -635,18 +621,19 @@ object Embeddings {
     * vector with its home cell under `cents` — built (and typically
     * persisted) ONCE per quantizer artifact, then joined against every
     * incoming query batch. This is the static side of the stream-
-    * static serving deployment ([[graft.stream.StreamingAnnServe]]):
-    * at 100 TB the index is the big relation and never moves — each
-    * batch's probe rows broadcast to it. */
+    * static serving deployment ([[graft.stream.ServeLoop]] over
+    * [[serveQueryBatch]], StreamingAnnServeSpec): at 100 TB the index
+    * is the big relation and never moves — each batch's probe rows
+    * broadcast to it. */
   def serveIndex(spark: SparkSession, dir: String, rawCents: Seq[Centroid]): DataFrame =
     indexBatch(quantized(spark, dir), rawCents)
 
   /** [[serveIndex]] over an arbitrary ALREADY-QUANTIZED vector batch —
     * (vec_id, qv, nrm) rows on the corpus integer grid. The
     * rolling-ingest assignment entry: a delta batch lands in its
-    * nearest cell of a FROZEN quantizer it never trained
-    * ([[graft.stream.StreamingVectorIngest]]), exactly the q87
-    * contract. */
+    * nearest cell of a FROZEN quantizer it never trained (the
+    * streaming ingest loop, StreamingVectorIngestSpec), exactly the
+    * q87 contract. */
   def indexBatch(vecs: DataFrame, rawCents: Seq[Centroid]): DataFrame = {
     require(rawCents.nonEmpty, "quantizer has no centroids")
     indexOf(vecs, rawCents.sortBy(_.j))

@@ -67,6 +67,28 @@ object Mmr {
     mmrSelect(Embeddings.quantized(spark, dir), cands, k)
   }
 
+  /** The per-batch form of [[mmrRerankTopK]] for external queries:
+    * `queries` carries (q_id, embedding); `codes` is the routed
+    * IVF+SQ8 tier built from the `cents`/`mins`/`maxs` artifacts and
+    * `exact` the (vec_id, qv) grid tier, both persisted by the
+    * caller. The batch's own quantized vectors are the query relation
+    * of [[mmrSelectWith]], so external ids never need corpus rows. MMR
+    * is per-query, so how queries split into batches cannot change an
+    * answer.
+    *
+    * `excludeSelf`: pass true only when the q_ids ARE corpus vec_ids
+    * (the q92 conformance situation). */
+  def mmrServe(codes: DataFrame, exact: DataFrame, cents: Seq[Embeddings.Centroid],
+               mins: Seq[Long], maxs: Seq[Long], queries: DataFrame,
+               k: Int = 5, r: Int = Pq.RefineR, nprobe: Int = 2,
+               excludeSelf: Boolean = false): DataFrame = {
+    val probes = Pq.quantizeQueries(queries)
+    val cands = Sq.ivfSq8Serve(codes, cents, mins, maxs, probes,
+        k = r, nprobe = nprobe, excludeSelf = excludeSelf)
+      .select(col("q_id"), col("neighbor_id"))
+    mmrSelectWith(probes.select(col("q_id"), col("qv").as("q_v")), exact, cands, k)
+  }
+
   /** Exact squared L2 between two qv-grid vector COLUMNS (by name) —
     * ‖a‖² − 2⟨a,b⟩ + ‖b‖², each term an exact integer via the codegen
     * vec_dot. */
@@ -131,9 +153,9 @@ object Mmr {
       vecs, cands, k)
 
   /** [[mmrSelect]] with an EXPLICIT query relation (q_id, q_v) — the
-    * external-query seam ([[graft.stream.StreamingMmrServe]] feeds
-    * each micro-batch's own vectors here; the batch q92 derives the
-    * relation from the corpus because its probes ARE corpus rows).
+    * external-query seam ([[mmrServe]] feeds each micro-batch's own
+    * vectors here; the batch q92 derives the relation from the corpus
+    * because its probes ARE corpus rows).
     *
     * CONTRACT (`boundedProbes`, VERDICT r14 #5): the default plan
     * force-broadcasts BOTH `cands` and `queries` — correct for every

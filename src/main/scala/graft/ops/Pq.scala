@@ -286,9 +286,9 @@ object Pq {
     * × broadcast probe batch (`probes` carries q_id + exact qv),
     * est = exact-integer sum of [[M]] table lookups, per-probe top-k
     * (est ASC, ties to the smaller neighbor_id). ONE definition shared
-    * by q77 and the streaming serving seam
-    * ([[graft.stream.StreamingPqServe]]) so batch/stream agreement is
-    * an identity, the q31 serveQueryBatch pattern.
+    * by q77 and the streaming serving seam ([[graft.stream.ServeLoop]],
+    * StreamingPqServeSpec) so batch/stream agreement is an identity,
+    * the q31 serveQueryBatch pattern.
     *
     * `excludeSelf`: pass true only when probe q_ids ARE corpus
     * vec_ids (the q77 situation) — an external query whose id happens
@@ -659,7 +659,8 @@ object Pq {
     * trajectory plus the shared residual codebooks — the pair a
     * deployment persists ([[Embeddings.saveQuantizer]] +
     * [[saveCodebooks]]) so serving jobs never re-pay the training
-    * scans ([[graft.stream.StreamingIvfPqServe]]). */
+    * scans (a [[graft.stream.ServeLoop]] over [[ivfPqServe]] loads the
+    * pair). */
   def trainIvfPq(spark: SparkSession, dir: String,
                  nCells: Int = Embeddings.OracleCells,
                  iters: Int = Embeddings.OracleIters): (Seq[Centroid], Seq[Seq[Centroid]]) = {

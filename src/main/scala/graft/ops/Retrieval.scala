@@ -178,11 +178,11 @@ object Retrieval {
     * swapped in as the next `v<n>` atomically, so a REBUILD — the step
     * the q95 frozen-stats ingest defers until drift demands it — lands
     * under live serving jobs without ever exposing a half-written
-    * index: a running [[graft.stream.StreamingBm25Serve]] keeps its
-    * pinned version (the [[Storage.vacuumSnapshots]] grace contract)
-    * while every job started after the swap [[bm25Resolve]]s the
-    * rebuilt one (StreamingServeSpec proves the swap under a live
-    * stream). Returns the published version dir. */
+    * index: a running [[graft.stream.ServeLoop]] over [[bm25TopK]]
+    * keeps its pinned version (the [[Storage.vacuumSnapshots]] grace
+    * contract) while every job started after the swap
+    * [[bm25Resolve]]s the rebuilt one (StreamingServeSpec proves the
+    * swap under a live stream). Returns the published version dir. */
   def bm25Publish(ix: Bm25Index, root: String): String =
     Storage.publishArtifact(ix.postings.sparkSession, root)(dir => bm25Save(ix, dir))
 
@@ -341,8 +341,8 @@ object Retrieval {
     // TOP LISTS — ≤ nQueries·perList rows each, trivially memory-safe
     // — so the builds run once per leg instead of twice (measured:
     // q88 6.1 → ~3.4 s at sf0.1). Session-lived via the [[Caches]]
-    // contract; the streaming seam does NOT persist its per-batch
-    // legs (there the corpus-sized sides are already cached and the
+    // contract; [[hybridServe]] does NOT persist its per-batch legs
+    // (there the corpus-sized sides are already cached and the
     // per-batch leg cost is probe-sized — a per-batch registry entry
     // would leak until releaseAll instead).
     val lex = Caches.persist(bm25TopK(ix, probes, perList, excludeSelf = true)
@@ -350,6 +350,31 @@ object Retrieval {
     val sem = Caches.persist(
       Sq.ivfSq8TopK(spark, dir, k = perList, queryMod = queryMod, nprobe = nprobe)
         .select(col("q_id").as("query_id"), col("rank"), col("neighbor_id").as("doc_id")))
+    rrfFuse(lex, sem, k)
+  }
+
+  /** The per-batch form of [[hybridRrfDocs]] for external requests:
+    * `queries` carries (query_id, query, embedding); `ix` is a loaded
+    * BM25 index and `codes` the routed IVF+SQ8 tier built from the
+    * `cents`/`mins`/`maxs` artifacts, both persisted by the caller.
+    * Both legs run the kernels the q71/q82 oracles certify and fuse
+    * through the same [[rrfFuse]] the q88 oracle replays; RRF is
+    * per-query, so how requests split into batches cannot change an
+    * answer. The legs are not persisted: they are probe-sized here.
+    *
+    * `excludeSelf`: pass true only when the query_ids ARE corpus ids
+    * (the q88 conformance situation); an external id matches nothing
+    * on either leg and is unaffected. */
+  def hybridServe(ix: Bm25Index, codes: DataFrame, cents: Seq[Embeddings.Centroid],
+                  mins: Seq[Long], maxs: Seq[Long], queries: DataFrame,
+                  k: Int = 10, perList: Int = 10, nprobe: Int = 2,
+                  excludeSelf: Boolean = false): DataFrame = {
+    val lex = bm25TopK(ix, queries.select(col("query_id"), col("query")), perList, excludeSelf)
+      .select(col("query_id"), col("rank"), col("doc_id"))
+    val sem = Sq.ivfSq8Serve(codes, cents, mins, maxs,
+        Pq.quantizeQueries(queries.select(col("query_id").as("q_id"), col("embedding"))),
+        perList, nprobe, excludeSelf)
+      .select(col("q_id").as("query_id"), col("rank"), col("neighbor_id").as("doc_id"))
     rrfFuse(lex, sem, k)
   }
 

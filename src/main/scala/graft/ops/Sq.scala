@@ -166,8 +166,8 @@ object Sq {
   /** The SQ8 serve: decode rides the codes scan (row-local), the
     * probe batch broadcasts into the cross join (the q45/q77 shape),
     * per-pair work is ONE codegen `vec_dot` cross term. ONE
-    * definition shared by q81 and [[graft.stream.StreamingSqServe]]
-    * so batch/stream agreement is an identity. */
+    * definition shared by q81 and the [[graft.stream.ServeLoop]]
+    * serve (StreamingSqServeSpec pins stream ≡ batch). */
   def sq8Serve(codes: DataFrame, mins: Seq[Long], maxs: Seq[Long],
                probes: DataFrame, k: Int = 5,
                excludeSelf: Boolean = false): DataFrame = {
@@ -290,7 +290,8 @@ object Sq {
   /** The q82 BUILD stage alone: coarse quantizer + residual bounds —
     * the artifact pair a deployment persists ([[Embeddings
     * .saveQuantizer]] + [[saveBounds]]) so serving jobs never re-pay
-    * the training scans ([[graft.stream.StreamingIvfSqServe]]). */
+    * the training scans ([[graft.stream.StreamingIvfSqServe]] loads
+    * the pair). */
   def trainIvfSq8(spark: SparkSession, dir: String,
                   nCells: Int = Embeddings.OracleCells,
                   iters: Int = Embeddings.OracleIters)
@@ -599,10 +600,12 @@ object Sq {
     * grid (the ONE [[Pq.residualsOfIndex]] definition the full-corpus
     * tiers use), and [[encode]] with the frozen bounds — drifted
     * components saturate to the grid edge (the q87 clamp contract).
-    * The delta encoder behind [[graft.stream.StreamingVectorIngest]]:
-    * because every step is row-local after the broadcast mean-grid
-    * join, encoding deltas batch-by-batch and upserting is
-    * bit-identical to re-encoding the grown corpus in one pass. */
+    * The delta encoder of the streaming ingest loop (a
+    * [[graft.stream.ServeLoop]] whose sink is [[Storage.upsertSnapshot]],
+    * StreamingVectorIngestSpec): because every step is row-local
+    * after the broadcast mean-grid join, encoding deltas
+    * batch-by-batch and upserting is bit-identical to re-encoding the
+    * grown corpus in one pass. */
   def ivfSq8EncodeBatch(batch: DataFrame, cents: Seq[Embeddings.Centroid],
                         mins: Seq[Long], maxs: Seq[Long]): DataFrame = {
     val q = batch.select(col("vec_id"),
@@ -687,11 +690,11 @@ object Sq {
   }
 
   /** The two-stage serve behind [[ivfPqSq8RefineTopK]]. ONE
-    * definition shared by the batch q85 and
-    * [[graft.stream.StreamingRefineServe]], so batch/stream agreement
-    * is an identity. The probe ranking is paid ONCE and feeds all
-    * three uses: stage 1's probed-cell filter + ADC tables
-    * ([[Pq.ivfPqServeFrom]]), stage 2's per-probed-cell query
+    * definition shared by the batch q85 and the
+    * [[graft.stream.ServeLoop]] serve, so batch/stream agreement is an
+    * identity (StreamingRefineServeSpec). The probe ranking is paid
+    * ONCE and feeds all three uses: stage 1's probed-cell filter + ADC
+    * tables ([[Pq.ivfPqServeFrom]]), stage 2's per-probed-cell query
     * residuals, and stage 2's own static probed-cell filter. */
   def ivfPqSq8RefineServe(pqCodes: DataFrame, sqCodes: DataFrame,
                           cents: Seq[Embeddings.Centroid],

@@ -30,8 +30,8 @@ import graft.functions.simhash60
   * as a frozen snapshot for the stream's lifetime — the correct
   * semantics for a pinned corpus version. For the nightly-rebuild
   * intake, [[nearDupMatchesRefreshing]] re-creates the static side
-  * INSIDE foreachBatch, so every micro-batch lists the index path
-  * fresh — the vanilla-Spark refresh pattern (transaction-logged
+  * inside each [[ServeLoop]] batch, so every micro-batch lists the
+  * index path fresh — the vanilla-Spark refresh pattern (transaction-logged
   * table formats can refresh a stream-static join in place; plain
   * files cannot). Both are exercised in SkewAndStreamDedupSpec.
   * State: only the output-dedup keys, bounded by the watermark
@@ -55,7 +55,7 @@ object StreamingNearDedup {
     * (band, band_val, idx_doc_id, idx_simhash). Tokenization matches
     * q22 exactly (whitespace split, empty tokens dropped, tokenless
     * docs out of the near-dup surface). */
-  def simhashIndex(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def simhashIndex(docs: DataFrame): DataFrame = {
     docs
       .withColumn("ws", filter(split(col("text"), " "), x => length(x) > 0))
       .filter(size(col("ws")) > 0)
@@ -161,12 +161,12 @@ object StreamingNearDedup {
   /** [[nearDupMatches]] against a file-backed index that is rebuilt
     * while the stream runs (nightly-rebuild intake): the stream side
     * sketches and explodes bands as usual, but the index is re-read
-    * from `indexPath` inside foreachBatch, so each micro-batch joins
-    * against a FRESH file listing — no stream restart after a rebuild.
-    * Each batch reads the newest complete snapshot via
-    * [[resolveSnapshot]] (versioned subdirs + `_SUCCESS` marker; a
-    * flat dir still works but is exposed to the overwrite race
-    * documented there).
+    * from `indexPath` inside each [[ServeLoop]] batch, so each
+    * micro-batch joins against a FRESH file listing — no stream
+    * restart after a rebuild. Each batch reads the newest complete
+    * snapshot via [[resolveSnapshot]] (versioned subdirs + `_SUCCESS`
+    * marker; a flat dir still works but is exposed to the overwrite
+    * race documented there).
     * Trade-off vs the frozen-snapshot form: match dedup is per-batch
     * (`dropDuplicates` on the batch), not watermark-global — a doc
     * re-arriving in a later batch re-reports its matches, which is
@@ -174,16 +174,14 @@ object StreamingNearDedup {
     * receives the batch's match rows (ts, doc_id, match_id, hamming)
     * — the side-effect boundary, same role as the label sink.
     *
-    * `checkpointDir` (VERDICT r12 #3) makes the intake restartable:
-    * committed batches are not re-run after a stop (their matches are
-    * not re-reported to `onBatch`), and the first post-restart batch
-    * resolves the NEWEST complete snapshot — index rebuilds that land
-    * while the intake is down take effect on restart, not silently
-    * never (StreamRestartSpec pins both). Omitted = the pre-r13
-    * ephemeral behavior (Spark picks a temp checkpoint). */
-  def nearDupMatchesRefreshing(docs: DataFrame, indexPath: String,
-                               maxHamming: Int = 3,
-                               checkpointDir: Option[String] = None)
+    * `checkpointDir` makes the intake restartable: committed batches
+    * are not re-run after a stop (their matches are not re-reported
+    * to `onBatch`), and the first post-restart batch resolves the
+    * NEWEST complete snapshot — index rebuilds that land while the
+    * intake is down take effect on restart (StreamRestartSpec pins
+    * both). */
+  def nearDupMatchesRefreshing(docs: DataFrame, indexPath: String, checkpointDir: String,
+                               maxHamming: Int = 3)
                               (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     require(maxHamming < Bands,
       s"maxHamming must be ≤ ${Bands - 1}: the $Bands-band index only guarantees " +
@@ -196,19 +194,15 @@ object StreamingNearDedup {
       .withColumn("bk", explodeBands(col("simhash")))
       .select(col("ts"), col("doc_id"), col("simhash"),
         col("bk.band").as("band"), col("bk.band_val").as("band_val"))
-    val writer = sketched.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // fresh resolution per batch: newest complete snapshot wins
-        val index = spark.read.parquet(resolveSnapshot(spark, indexPath))
-        val matches = batch
-          .join(broadcast(index), Seq("band", "band_val"))
-          .withColumn("hamming", bit_count(col("simhash").bitwiseXOR(col("idx_simhash"))))
-          .filter(col("hamming") <= maxHamming && col("doc_id") =!= col("idx_doc_id"))
-          .dropDuplicates("doc_id", "idx_doc_id")
-          .select(col("ts"), col("doc_id"), col("idx_doc_id").as("match_id"), col("hamming"))
-        onBatch(matches)
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
+    ServeLoop.run(sketched, checkpointDir) { batch =>
+      // fresh resolution per batch: newest complete snapshot wins
+      val index = spark.read.parquet(resolveSnapshot(spark, indexPath))
+      batch
+        .join(broadcast(index), Seq("band", "band_val"))
+        .withColumn("hamming", bit_count(col("simhash").bitwiseXOR(col("idx_simhash"))))
+        .filter(col("hamming") <= maxHamming && col("doc_id") =!= col("idx_doc_id"))
+        .dropDuplicates("doc_id", "idx_doc_id")
+        .select(col("ts"), col("doc_id"), col("idx_doc_id").as("match_id"), col("hamming"))
+    }(onBatch)
   }
 }

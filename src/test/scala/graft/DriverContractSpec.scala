@@ -96,24 +96,38 @@ class DriverContractSpec extends SparkSpec {
     // the reference's verbatim warehouse SQL needs ops/Udfs' kimball_*
     // names. A registration anywhere else, or an expr string that only
     // resolves after one, brings the per-call registry bridge back.
-    import scala.jdk.CollectionConverters._
-    val allowed = Set("graft/GraftExtensions.scala", "graft/ops/Udfs.scala")
     val names = GraftExtensions.All.map(_._1) ++
       Seq("nearest_cells", "probe_cells", "adc_subdists", "minhash_sig")
     val byName = ("(expr|selectExpr)\\(\\s*s?\"[^\"]*\\b(" + names.mkString("|") + ")\\s*\\(").r
-    val registration = "createOrReplaceTempFunction|registerFunction|\\.udf\\.register".r
+    val offenders = mainSourceHits(
+      ("createOrReplaceTempFunction|registerFunction|\\.udf\\.register|" + byName.regex).r,
+      Set("graft/GraftExtensions.scala", "graft/ops/Udfs.scala"))
+    assert(offenders.isEmpty, offenders.mkString("session-function registration bridge:\n", "\n", ""))
+  }
+
+  test("no streaming loop outside ServeLoop and ReviewStateMachine") {
+    // every stateless serve runs through ServeLoop.run; ReviewStateMachine
+    // needs update mode and typed state. A per-kernel writeStream /
+    // foreachBatch skeleton anywhere else is a second serving seam.
+    val offenders = mainSourceHits("writeStream|foreachBatch".r,
+      Set("graft/stream/ServeLoop.scala", "graft/stream/ReviewStateMachine.scala"))
+    assert(offenders.isEmpty, offenders.mkString("streaming loop outside ServeLoop:\n", "\n", ""))
+  }
+
+  /** `file:line: text` of every `src/main/scala` line matching
+    * `pattern`, skipping the `allowed` files (paths relative to the
+    * tree, which must contain them all). */
+  private def mainSourceHits(pattern: scala.util.matching.Regex, allowed: Set[String]): List[String] = {
+    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = java.nio.file.Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toList
-    assert(files.exists(p => allowed(root.relativize(p).toString)), s"scanned the wrong tree: $root")
-    val offenders = files.filterNot(p => allowed(root.relativize(p).toString)).flatMap { p =>
+      .filter(_.toString.endsWith(".scala")).map(p => root.relativize(p).toString -> p).toList
+    assert(allowed.subsetOf(files.map(_._1).toSet), s"scanned the wrong tree: $root")
+    files.filterNot(f => allowed(f._1)).flatMap { case (rel, p) =>
       java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if registration.findFirstIn(line).isDefined ||
-                          byName.findFirstIn(line).isDefined =>
-          s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+        case (line, i) if pattern.findFirstIn(line).isDefined => s"$rel:${i + 1}: ${line.trim}"
       }
     }
-    assert(offenders.isEmpty, offenders.mkString("session-function registration bridge:\n", "\n", ""))
   }
 
   test("every oracle ends with a deterministic ORDER BY") {

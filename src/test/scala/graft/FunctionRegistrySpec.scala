@@ -9,7 +9,6 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** The operators build their custom expressions as typed Columns, so
   * running them — and serving a stream of queries against several
@@ -47,7 +46,6 @@ class FunctionRegistrySpec extends SparkSpec {
     assume(new java.io.File(SfDir).isDirectory, "testdata not present")
     val s = spark
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val registry = spark.sessionState.functionRegistry
     val before = registry.listFunction().size
 
@@ -63,19 +61,9 @@ class FunctionRegistrySpec extends SparkSpec {
         val root = Files.createTempDirectory("registry").toString
         Embeddings.saveQuantizer(spark, cents, s"$root/quantizer")
         Sq.saveBounds(spark, mins, maxs, s"$root/bounds")
-        val input = MemoryStream[(Long, Seq[Float])]
-        var served = 0L
-        val q = StreamingIvfSqServe.run(spark, input.toDF().toDF("q_id", "embedding"),
-          SfDir, s"$root/quantizer", s"$root/bounds", s"$root/ckpt") { scored =>
-          served += scored.count()
-        }
-        try {
-          input.addData(queryVecs)
-          q.processAllAvailable()
-          input.addData(queryVecs)
-          q.processAllAvailable()
-        } finally q.stop()
-        assert(served > 0, s"the $nCells-cell serve returned nothing")
+        val (r1, r2) = streamInHalves(queryVecs, queryVecs, "q_id", "embedding")(
+          StreamingIvfSqServe.run(spark, _, SfDir, s"$root/quantizer", s"$root/bounds", _)(_))
+        assert(r1.size + r2.size > 0, s"the $nCells-cell serve returned nothing")
         Caches.releaseAll(spark)
       }
       // one batch operator per family that used to register a session

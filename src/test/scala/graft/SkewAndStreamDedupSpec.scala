@@ -64,7 +64,7 @@ class SkewAndStreamDedupSpec extends SparkSpec {
       (10L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (20L, "one two three four five six seven eight nine ten eleven twelve")
     ).toDF("doc_id", "text")
-    val index = StreamingNearDedup.simhashIndex(spark, corpus).persist()
+    val index = StreamingNearDedup.simhashIndex(corpus).persist()
 
     val input = MemoryStream[(Timestamp, Long, String)]
     val out = StreamingNearDedup.nearDupMatches(
@@ -104,13 +104,14 @@ class SkewAndStreamDedupSpec extends SparkSpec {
 
     val dir = java.nio.file.Files.createTempDirectory("shidx").toString + "/index"
     def rebuild(corpus: org.apache.spark.sql.DataFrame): Unit =
-      StreamingNearDedup.simhashIndex(spark, corpus).write.mode("overwrite").parquet(dir)
+      StreamingNearDedup.simhashIndex(corpus).write.mode("overwrite").parquet(dir)
     rebuild(Seq((10L, alpha)).toDF("doc_id", "text"))
 
     val seen = scala.collection.concurrent.TrieMap.empty[(Long, Long), Int]
     val input = MemoryStream[(Timestamp, Long, String)]
     val q = StreamingNearDedup.nearDupMatchesRefreshing(
-      input.toDF().toDF("ts", "doc_id", "text"), dir) { matches =>
+      input.toDF().toDF("ts", "doc_id", "text"), dir,
+      java.nio.file.Files.createTempDirectory("shidx-ckpt").toString) { matches =>
       matches.collect().foreach(r => seen.put((r.getLong(1), r.getLong(2)), r.getInt(3)))
     }
     try {
@@ -190,7 +191,7 @@ class SkewAndStreamDedupSpec extends SparkSpec {
 
     val root = java.nio.file.Files.createTempDirectory("shidxv").toString + "/index"
     def publish(version: String, corpus: org.apache.spark.sql.DataFrame): Unit =
-      StreamingNearDedup.simhashIndex(spark, corpus).write.parquet(s"$root/$version")
+      StreamingNearDedup.simhashIndex(corpus).write.parquet(s"$root/$version")
     publish("v0001", Seq((10L, alpha)).toDF("doc_id", "text"))
 
     // a newer but INCOMPLETE snapshot (no _SUCCESS) must stay invisible
@@ -202,7 +203,8 @@ class SkewAndStreamDedupSpec extends SparkSpec {
     val seen = scala.collection.concurrent.TrieMap.empty[(Long, Long), Int]
     val input = MemoryStream[(Timestamp, Long, String)]
     val q = StreamingNearDedup.nearDupMatchesRefreshing(
-      input.toDF().toDF("ts", "doc_id", "text"), root) { matches =>
+      input.toDF().toDF("ts", "doc_id", "text"), root,
+      java.nio.file.Files.createTempDirectory("shidxv-ckpt").toString) { matches =>
       matches.collect().foreach(r => seen.put((r.getLong(1), r.getLong(2)), r.getInt(3)))
     }
     try {
@@ -235,9 +237,9 @@ class SkewAndStreamDedupSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val root = java.nio.file.Files.createTempDirectory("shidxnat").toString + "/index"
-    graft.stream.StreamingNearDedup.simhashIndex(spark,
+    graft.stream.StreamingNearDedup.simhashIndex(
       Seq((1L, "a b c d e f g h")).toDF("doc_id", "text")).write.parquet(s"$root/v9")
-    graft.stream.StreamingNearDedup.simhashIndex(spark,
+    graft.stream.StreamingNearDedup.simhashIndex(
       Seq((2L, "p q r s t u v w")).toDF("doc_id", "text")).write.parquet(s"$root/v10")
     assert(graft.stream.StreamingNearDedup.resolveSnapshot(spark, root).endsWith("v10"))
   }

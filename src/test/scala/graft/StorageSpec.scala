@@ -695,7 +695,7 @@ class StorageSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graftsnaprace").toString + "/index"
     val alpha = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     def versionIds(v: Int): Set[Long] = (1 to 3).map(k => v * 1000L + k).toSet
-    def indexRows(v: Int) = StreamingNearDedup.simhashIndex(spark,
+    def indexRows(v: Int) = StreamingNearDedup.simhashIndex(
       versionIds(v).toSeq.sorted.map(id => (id, alpha)).toDF("doc_id", "text"))
 
     Storage.upsertSnapshot(spark, root, indexRows(1), "idx_doc_id")
@@ -704,7 +704,8 @@ class StorageSpec extends SparkSpec {
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
     val input = MemoryStream[(java.sql.Timestamp, Long, String)]
     val q = StreamingNearDedup.nearDupMatchesRefreshing(
-      input.toDF().toDF("ts", "doc_id", "text"), root) { m =>
+      input.toDF().toDF("ts", "doc_id", "text"), root,
+      java.nio.file.Files.createTempDirectory("graftsnaprace-ckpt").toString) { m =>
       batches.add(m.collect().map(_.getAs[Long]("match_id")).toSet)
     }
     try {

@@ -291,7 +291,7 @@ class StreamRestartSpec extends SparkSpec {
     val idx = root.resolve("index").toString
     new java.io.File(srcDir).mkdirs()
     def publish(version: String, corpus: DataFrame): Unit =
-      StreamingNearDedup.simhashIndex(spark, corpus).write.parquet(s"$idx/$version")
+      StreamingNearDedup.simhashIndex(corpus).write.parquet(s"$idx/$version")
     publish("v0001", Seq((10L, alpha)).toDF("doc_id", "text"))
 
     val sch = org.apache.spark.sql.types.StructType(Seq(
@@ -304,7 +304,7 @@ class StreamRestartSpec extends SparkSpec {
         spark.readStream.schema(sch).json(srcDir)
           .withColumn("ts", timestamp_millis(col("ts_ms")))
           .select("ts", "doc_id", "text"),
-        idx, checkpointDir = Some(ckpt)) { matches =>
+        idx, checkpointDir = ckpt) { matches =>
         matches.collect().foreach(r => seen.put((r.getLong(1), r.getLong(2)), r.getInt(3)))
       }
 

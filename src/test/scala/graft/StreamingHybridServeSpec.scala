@@ -1,49 +1,43 @@
 package graft
 
-import graft.ops.{Embeddings, Retrieval, Sq, Tables}
-import graft.stream.StreamingHybridServe
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.ops.{Caches, Embeddings, Retrieval, Sq, Tables}
+import graft.stream.ServeLoop
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.file.Files
 
 /** The hybrid serving seam: all three artifacts (BM25 index, coarse
-  * quantizer, residual bounds) feed one service, and a stream of
-  * (text, vector) queries fused per micro-batch must agree
-  * bit-for-bit with the batch q88 path — across micro-batch
-  * boundaries, which is an identity because RRF is per-query. */
-class StreamingHybridServeSpec extends SparkSpec {
+  * quantizer, residual bounds) feed one [[ServeLoop]] over
+  * [[Retrieval.hybridServe]], and a stream of (text, vector) queries
+  * fused per micro-batch must agree bit-for-bit with the batch q88
+  * path — across micro-batch boundaries, which is an identity because
+  * RRF is per-query. */
+class StreamingHybridServeSpec extends SparkSpec with VectorServeFixtures {
 
-  private val SfDir = "/root/testdata/sf0.001"
+  private def view(rows: Seq[Row]) = rows.map(r =>
+    (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
+      (r.getAs[Long]("doc_id"), r.getAs[Long]("rrf_score"))).toMap
 
-  test("stream of hybrid (text, vector) queries ≡ batch hybridRrfDocs, across two micro-batches") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
+  /** Batch q88 truth (its caches released before the stream runs),
+    * the artifacts a deployment persists from the SAME trajectories
+    * the batch path trains, the q88 probe set as EXTERNAL requests
+    * (id, text prefix, vector), and the serve that
+    * loads the artifacts into a [[ServeLoop]]. */
+  private def fixture() = {
     val s = spark
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    // batch truth first (its caches released before the stream runs)
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("query_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("doc_id"), r.getAs[Long]("rrf_score"))
-    val batch = Retrieval.hybridRrfDocs(spark, SfDir)
-      .collect().map(r => key(r) -> value(r)).toMap
-    assert(batch.nonEmpty)
-    graft.ops.Caches.releaseAll(spark)
-
-    // the artifacts a deployment persists, from the SAME trajectories
-    // the batch path trains
+    val batch = view(Retrieval.hybridRrfDocs(spark, SfDir).collect().toSeq)
+    Caches.releaseAll(spark)
     val ixPath = Files.createTempDirectory("hyb-ix").toString
     Retrieval.bm25Save(Retrieval.bm25Build(Tables.documents(spark, SfDir)), ixPath)
-    graft.ops.Caches.releaseAll(spark)
+    Caches.releaseAll(spark)
     val (cents, mins, maxs) = Sq.trainIvfSq8(spark, SfDir)
     val qPath = Files.createTempDirectory("hyb-quant").toString
     val bPath = Files.createTempDirectory("hyb-bounds").toString
     Embeddings.saveQuantizer(spark, cents, qPath)
     Sq.saveBounds(spark, mins, maxs, bPath)
-    graft.ops.Caches.releaseAll(spark)
-
-    // the q88 probe set as EXTERNAL requests: id, text prefix, vector
+    Caches.releaseAll(spark)
     val reqs = Tables.documents(spark, SfDir)
       .join(Tables.embeddings(spark, SfDir),
         col("doc_id") === col("vec_id"))
@@ -52,107 +46,54 @@ class StreamingHybridServeSpec extends SparkSpec {
         concat_ws(" ", slice(filter(split(lower(col("text")), "\\s+"),
           t => length(t) > 0), 1, 8)).as("query"),
         col("embedding"))
-      .as[(Long, String, Seq[Float])].collect().sortBy(_._1)
+      .as[(Long, String, Seq[Float])].collect().sortBy(_._1).toSeq
+    def start(in: DataFrame, ckpt: String, sink: DataFrame => Unit): StreamingQuery = {
+      val ix0 = Retrieval.bm25Load(spark, ixPath)
+      val ix = ix0.copy(postings = Caches.persist(ix0.postings))
+      val cents = Embeddings.loadQuantizer(spark, qPath)
+      val (mins, maxs) = Sq.loadBounds(spark, bPath)
+      val codes = Caches.persist(Sq.ivfSq8Codes(spark, SfDir, cents, mins, maxs))
+      ServeLoop.run(in, ckpt)(
+        Retrieval.hybridServe(ix, codes, cents, mins, maxs, _, excludeSelf = true))(sink)
+    }
+    (batch, reqs, start _)
+  }
+
+  test("stream of hybrid (text, vector) queries ≡ batch hybridRrfDocs, across two micro-batches") {
+    assumeTestdata()
+    val s = spark
+    import s.implicits._
+    val (batch, reqs, start) = fixture()
+    assert(batch.nonEmpty)
     assert(reqs.length >= 2, "need at least two hybrid queries to split across batches")
     val (firstHalf, secondHalf) = reqs.splitAt(reqs.length / 2)
-
-    val input = MemoryStream[(Long, String, Seq[Float])]
-    val got = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val ckpt = Files.createTempDirectory("hyb-ckpt").toString
-    val q = StreamingHybridServe.run(spark,
-      input.toDF().toDF("query_id", "query", "embedding"),
-      SfDir, ixPath, qPath, bPath, ckpt, excludeSelf = true) { fused =>
-      fused.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(firstHalf.toSeq)
-      q.processAllAvailable()
-      assert(got.keySet.map(_._1) == firstHalf.map(_._1).toSet,
-        "first micro-batch must answer exactly its own queries")
-      input.addData(secondHalf.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap == batch,
+    val (r1, r2) = streamInHalves(firstHalf, secondHalf, "query_id", "query", "embedding")(start)
+    assert(view(r1).keySet.map(_._1) == firstHalf.map(_._1).toSet,
+      "first micro-batch must answer exactly its own queries")
+    assert(view(r1 ++ r2) == batch,
       "streamed hybrid serving diverged from the batch q88 path")
-    graft.ops.Caches.releaseAll(spark)
+    Caches.releaseAll(spark)
   }
 
   test("hybrid serving RESTARTS from checkpoint: no re-emission, batch 2 identical to uninterrupted") {
-    // VERDICT r11 #5: of the serving seams, this one holds the MOST
-    // static state (two persisted indexes — postings + routed codes);
-    // the restart contract is the same as StreamingPqServeSpec's: a
-    // FILE source (offsets a checkpoint can replay), kill after
-    // batch 1, restart from the SAME checkpoint, batch 1 never
-    // re-emitted, batch 2 bit-identical to the uninterrupted path —
-    // both legs and the fusion rebuilt from the artifacts alone.
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
+    // of the serving seams, this one holds the MOST static state (two
+    // persisted indexes — postings + routed codes): kill after batch
+    // 1, restart from the SAME checkpoint, batch 1 never re-emitted,
+    // batch 2 bit-identical to the uninterrupted path — both legs and
+    // the fusion rebuilt from the artifacts alone.
+    assumeTestdata()
     val s = spark
     import s.implicits._
-
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("query_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("doc_id"), r.getAs[Long]("rrf_score"))
-    val batch = Retrieval.hybridRrfDocs(spark, SfDir)
-      .collect().map(r => key(r) -> value(r)).toMap
-    graft.ops.Caches.releaseAll(spark)
-
-    val ixPath = Files.createTempDirectory("hyb-rst-ix").toString
-    Retrieval.bm25Save(Retrieval.bm25Build(Tables.documents(spark, SfDir)), ixPath)
-    graft.ops.Caches.releaseAll(spark)
-    val (cents, mins, maxs) = Sq.trainIvfSq8(spark, SfDir)
-    val qPath = Files.createTempDirectory("hyb-rst-quant").toString
-    val bPath = Files.createTempDirectory("hyb-rst-bounds").toString
-    Embeddings.saveQuantizer(spark, cents, qPath)
-    Sq.saveBounds(spark, mins, maxs, bPath)
-    graft.ops.Caches.releaseAll(spark)
-
-    val reqs = Tables.documents(spark, SfDir)
-      .join(Tables.embeddings(spark, SfDir),
-        col("doc_id") === col("vec_id"))
-      .filter(col("doc_id") % 100 === 0 && col("doc_id") < graft.ops.Pq.ProbeCap)
-      .select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(filter(split(lower(col("text")), "\\s+"),
-          t => length(t) > 0), 1, 8)).as("query"),
-        col("embedding"))
-      .as[(Long, String, Seq[Float])].collect().sortBy(_._1)
+    val (batch, reqs, start) = fixture()
     val (firstHalf, secondHalf) = reqs.splitAt(reqs.length / 2)
-
-    val srcDir = Files.createTempDirectory("hyb-rst-src").toString
-    val ckpt = Files.createTempDirectory("hyb-rst-ckpt").toString
-    val schema = firstHalf.toSeq.toDF("query_id", "query", "embedding").schema
-    def stream() = spark.readStream.schema(schema).parquet(srcDir)
-
-    // ---- run 1: serve batch 1, then KILL the query
-    firstHalf.toSeq.toDF("query_id", "query", "embedding")
-      .write.mode("append").parquet(srcDir)
-    val got1 = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val q1 = StreamingHybridServe.run(spark, stream(),
-      SfDir, ixPath, qPath, bPath, ckpt, excludeSelf = true) { fused =>
-      fused.collect().foreach(r => got1 += key(r) -> value(r))
-    }
-    try q1.processAllAvailable() finally q1.stop()
-    assert(got1.keySet.map(_._1) == firstHalf.map(_._1).toSet,
+    val (got1, got2) = restartInHalves(firstHalf.toDF("query_id", "query", "embedding"),
+      secondHalf.toDF("query_id", "query", "embedding"))(start)
+    assert(view(got1).keySet.map(_._1) == firstHalf.map(_._1).toSet,
       "run 1 must answer exactly batch 1's queries")
-    graft.ops.Caches.releaseAll(spark)
-
-    // ---- new queries land while the service is DOWN
-    secondHalf.toSeq.toDF("query_id", "query", "embedding")
-      .write.mode("append").parquet(srcDir)
-
-    // ---- run 2: restart from the SAME checkpoint
-    val got2 = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val q2 = StreamingHybridServe.run(spark, stream(),
-      SfDir, ixPath, qPath, bPath, ckpt, excludeSelf = true) { fused =>
-      fused.collect().foreach(r => got2 += key(r) -> value(r))
-    }
-    try q2.processAllAvailable() finally q2.stop()
-
-    assert(got2.keySet.map(_._1) == secondHalf.map(_._1).toSet,
+    assert(view(got2).keySet.map(_._1) == secondHalf.map(_._1).toSet,
       s"restart must answer exactly the queries that arrived while down — no re-emission " +
-        s"(got ${got2.keySet.map(_._1)})")
-    assert((got1 ++ got2).toMap == batch,
+        s"(got ${view(got2).keySet.map(_._1)})")
+    assert(view(got1 ++ got2) == batch,
       "restarted hybrid serving diverged from the uninterrupted batch path")
-    graft.ops.Caches.releaseAll(spark)
   }
 }

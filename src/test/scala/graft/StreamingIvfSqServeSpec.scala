@@ -1,9 +1,8 @@
 package graft
 
-import graft.ops.{Embeddings, Sq}
+import graft.ops.{Caches, Embeddings, Sq}
 import graft.stream.StreamingIvfSqServe
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import java.nio.file.Files
 
 /** The IVF+SQ8 serving seam: both artifacts (coarse quantizer +
@@ -11,170 +10,67 @@ import java.nio.file.Files
   * against them must agree bit-for-bit with the batch q82 path —
   * across micro-batch boundaries (the family's standard stream ≡
   * batch identity). */
-class StreamingIvfSqServeSpec extends SparkSpec {
+class StreamingIvfSqServeSpec extends SparkSpec with VectorServeFixtures {
 
-  private val SfDir = "/root/testdata/sf0.001"
-
-  test("artifacts round-trip; stream of query vectors ≡ batch ivfSq8TopK") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
+  /** Train the q82 artifact pair and persist it; returns the trained
+    * triple and the two artifact paths. */
+  private def artifacts(tag: String) = {
     val (cents, mins, maxs) = Sq.trainIvfSq8(spark, SfDir)
-    val qArtifact = Files.createTempDirectory("ivfsq").toString + "/quantizer"
-    val bArtifact = Files.createTempDirectory("ivfsq").toString + "/bounds"
+    val qArtifact = Files.createTempDirectory(tag).toString + "/quantizer"
+    val bArtifact = Files.createTempDirectory(tag).toString + "/bounds"
     Embeddings.saveQuantizer(spark, cents, qArtifact)
     Sq.saveBounds(spark, mins, maxs, bArtifact)
+    (cents, mins, maxs, qArtifact, bArtifact)
+  }
+
+  test("artifacts round-trip; stream of query vectors ≡ batch ivfSq8TopK") {
+    assumeTestdata()
+    val (cents, mins, maxs, qArtifact, bArtifact) = artifacts("ivfsq")
     val loaded = Embeddings.loadQuantizer(spark, qArtifact)
     assert(loaded.map(c => (c.j, c.n, c.s)) == cents.map(c => (c.j, c.n, c.s)),
       "quantizer artifact round-trip diverged")
     val (lm, lx) = Sq.loadBounds(spark, bArtifact)
     assert(lm == mins && lx == maxs, "bounds artifact round-trip diverged")
 
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
-    val batch = Sq.ivfSq8TopK(spark, SfDir, k = 5, queryMod = 50)
-      .collect().map(r => key(r) -> value(r)).toMap
-    assert(batch.nonEmpty)
-    graft.ops.Caches.releaseAll(spark)
-
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    assert(queryVecs.length >= 2, "need at least two queries to split across batches")
-    val (firstHalf, secondHalf) = queryVecs.splitAt(queryVecs.length / 2)
-
-    val input = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val ckpt = Files.createTempDirectory("ivfsqserve-ckpt").toString
-    val q = StreamingIvfSqServe.run(spark,
-      input.toDF().toDF("q_id", "embedding"),
-      SfDir, qArtifact, bArtifact, ckpt, k = 5, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(firstHalf.toSeq)
-      q.processAllAvailable()
-      assert(got.keySet.map(_._1) == firstHalf.map(_._1).toSet,
-        "first micro-batch must serve exactly its own queries")
-      input.addData(secondHalf.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap == batch,
-      "streamed IVF+SQ8 serving diverged from the batch q82 path")
-    graft.ops.Caches.releaseAll(spark)
+    val batch = byRank(Sq.ivfSq8TopK(spark, SfDir, k = 5, queryMod = 50).collect().toSeq)
+    Caches.releaseAll(spark)
+    assertStreamMatchesBatch(batch, probeVectors(),
+      "streamed IVF+SQ8 serving diverged from the batch q82 path")(
+      StreamingIvfSqServe.run(spark, _, SfDir, qArtifact, bArtifact, _, k = 5, excludeSelf = true)(_))
   }
 
   test("service-level selector: filtered stream ≡ batch ivfSq8TopKFiltered (q86)") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
+    assumeTestdata()
     val s = spark
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val (_, _, _, qArtifact, bArtifact) = artifacts("ivfsqf")
 
-    val (cents, mins, maxs) = Sq.trainIvfSq8(spark, SfDir)
-    val qArtifact = Files.createTempDirectory("ivfsqf").toString + "/quantizer"
-    val bArtifact = Files.createTempDirectory("ivfsqf").toString + "/bounds"
-    Embeddings.saveQuantizer(spark, cents, qArtifact)
-    Sq.saveBounds(spark, mins, maxs, bArtifact)
-
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
-    val batch = Sq.ivfSq8TopKFiltered(spark, SfDir, k = 5, queryMod = 50)
-      .collect().map(r => key(r) -> value(r)).toMap
+    val batch = byRank(Sq.ivfSq8TopKFiltered(spark, SfDir, k = 5, queryMod = 50).collect().toSeq)
     assert(batch.nonEmpty)
-    graft.ops.Caches.releaseAll(spark)
+    Caches.releaseAll(spark)
 
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    val input = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val ckpt = Files.createTempDirectory("ivfsqf-ckpt").toString
-    val q = StreamingIvfSqServe.run(spark,
-      input.toDF().toDF("q_id", "embedding"),
-      SfDir, qArtifact, bArtifact, ckpt, k = 5, excludeSelf = true,
-      selector = Some(org.apache.spark.sql.functions.col("label") % 2 === 0)) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(queryVecs.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap == batch,
+    val queryVecs = probeVectors()
+    val (h1, h2) = queryVecs.splitAt(queryVecs.length / 2)
+    val (r1, r2) = streamInHalves(h1, h2, "q_id", "embedding")(
+      StreamingIvfSqServe.run(spark, _, SfDir, qArtifact, bArtifact, _, k = 5, excludeSelf = true,
+        selector = Some(col("label") % 2 === 0))(_))
+    assert(byRank(r1 ++ r2) == batch,
       "selector-filtered streamed serving diverged from the batch q86 path")
-    graft.ops.Caches.releaseAll(spark)
+    Caches.releaseAll(spark)
   }
 
   test("IVF+SQ8 serving RESTARTS from checkpoint: no re-emission, batch 2 identical to uninterrupted") {
-    // The StreamingPqServeSpec restart certification (VERDICT r10 #5)
-    // applied to the OTHER routed serving seam: a file source whose
-    // offsets the checkpoint can replay, the query killed after batch
-    // 1, new queries landing while the service is down, and a restart
-    // that must serve exactly the late arrivals — bit-identical to the
-    // uninterrupted batch path, with batch 1 never re-emitted.
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
-    val s = spark
-    import s.implicits._
-
-    val (cents, mins, maxs) = Sq.trainIvfSq8(spark, SfDir)
-    val qArtifact = Files.createTempDirectory("ivfsq-rst").toString + "/quantizer"
-    val bArtifact = Files.createTempDirectory("ivfsq-rst").toString + "/bounds"
-    Embeddings.saveQuantizer(spark, cents, qArtifact)
-    Sq.saveBounds(spark, mins, maxs, bArtifact)
-
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
-    val batch = Sq.ivfSq8TopK(spark, SfDir, k = 5, queryMod = 50)
-      .collect().map(r => key(r) -> value(r)).toMap
-    graft.ops.Caches.releaseAll(spark)
-
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    val (firstHalf, secondHalf) = queryVecs.splitAt(queryVecs.length / 2)
-
-    val srcDir = Files.createTempDirectory("ivfsq-rst-src").toString
-    val ckpt = Files.createTempDirectory("ivfsq-rst-ckpt").toString
-    val schema = firstHalf.toSeq.toDF("q_id", "embedding").schema
-    def stream() = spark.readStream.schema(schema).parquet(srcDir)
-
-    // ---- run 1: serve batch 1, then KILL the query
-    firstHalf.toSeq.toDF("q_id", "embedding").write.mode("append").parquet(srcDir)
-    val got1 = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val q1 = StreamingIvfSqServe.run(spark, stream(),
-      SfDir, qArtifact, bArtifact, ckpt, k = 5, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got1 += key(r) -> value(r))
-    }
-    try q1.processAllAvailable() finally q1.stop()
-    assert(got1.keySet.map(_._1) == firstHalf.map(_._1).toSet,
-      "run 1 must serve exactly batch 1's queries")
-    graft.ops.Caches.releaseAll(spark)
-
-    // ---- new data lands while the service is DOWN
-    secondHalf.toSeq.toDF("q_id", "embedding").write.mode("append").parquet(srcDir)
-
-    // ---- run 2: restart from the SAME checkpoint
-    val got2 = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val q2 = StreamingIvfSqServe.run(spark, stream(),
-      SfDir, qArtifact, bArtifact, ckpt, k = 5, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got2 += key(r) -> value(r))
-    }
-    try q2.processAllAvailable() finally q2.stop()
-
-    assert(got2.keySet.map(_._1) == secondHalf.map(_._1).toSet,
-      s"restart must serve exactly the files that arrived while down — no re-emission of batch 1 " +
-        s"(got ${got2.keySet.map(_._1)})")
-    assert((got1 ++ got2).toMap == batch,
-      "restarted serving diverged from the uninterrupted batch path")
-    graft.ops.Caches.releaseAll(spark)
+    // The IVFADC restart certification applied to the OTHER routed
+    // serving seam: a file source whose offsets the checkpoint can
+    // replay, the query killed after batch 1, new queries landing
+    // while the service is down, and a restart that must serve
+    // exactly the late arrivals — bit-identical to the uninterrupted
+    // batch path, with batch 1 never re-emitted.
+    assumeTestdata()
+    val (_, _, _, qArtifact, bArtifact) = artifacts("ivfsq-rst")
+    val batch = byRank(Sq.ivfSq8TopK(spark, SfDir, k = 5, queryMod = 50).collect().toSeq)
+    Caches.releaseAll(spark)
+    assertRestartMatchesBatch(batch, probeVectors())(
+      StreamingIvfSqServe.run(spark, _, SfDir, qArtifact, bArtifact, _, k = 5, excludeSelf = true)(_))
   }
 }

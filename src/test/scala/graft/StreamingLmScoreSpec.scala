@@ -1,21 +1,20 @@
 package graft
 
-import graft.ops.TextOps
-import graft.stream.StreamingLmScore
+import graft.ops.{Caches, TextOps}
+import graft.stream.ServeLoop
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
 
 /** The streaming LM serving seam: a stream of documents scored
-  * against the PERSISTED model artifact must agree bit-for-bit with
-  * the batch lmScore path — across micro-batch boundaries, so the
-  * per-batch plan provably carries no cross-batch state. */
+  * through [[ServeLoop]] against the PERSISTED model artifact must
+  * agree bit-for-bit with the batch lmScore path — across micro-batch
+  * boundaries, so the per-batch plan provably carries no cross-batch
+  * state. */
 class StreamingLmScoreSpec extends SparkSpec {
 
   test("stream of documents ≡ batch lmScore, across two micro-batches") {
     val s = spark
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
 
     // train once → persist → load: the deployment trajectory (cap
     // below the token count so <unk> rows flow through the stream)
@@ -32,33 +31,23 @@ class StreamingLmScoreSpec extends SparkSpec {
       (1L, "the cat sat on the mat"), (2L, "the cat ran"),
       (4L, "the zebra sat"), (5L, "<s> the cat"), (6L, "   "))
     val loaded = TextOps.lmLoad(spark, artifact)
-    def key(r: Row): Long = r.getAs[Long]("doc_id")
-    def value(r: Row): (Long, Double, Double) =
+    def view(rows: Seq[Row]) = rows.map(r => r.getAs[Long]("doc_id") ->
       (r.getAs[Long]("n_tokens"), r.getAs[Double]("cross_entropy"),
-        r.getAs[Double]("perplexity"))
-    val batch = TextOps.lmScore(evalDocs.toDF("doc_id", "text"), loaded)
-      .collect().map(r => key(r) -> value(r)).toMap
+        r.getAs[Double]("perplexity"))).toMap
+    val batch = view(TextOps.lmScore(evalDocs.toDF("doc_id", "text"), loaded).collect().toSeq)
     assert(batch.keySet == Set(1L, 2L, 4L, 5L) && batch.nonEmpty)
 
-    // the same docs, fed as a STREAM in two micro-batches
+    // the same docs, fed as a STREAM in two micro-batches against the
+    // model tables persisted once
+    val lm = loaded.copy(vocab = Caches.persist(loaded.vocab),
+      bigrams = Caches.persist(loaded.bigrams), contexts = Caches.persist(loaded.contexts))
     val (firstHalf, secondHalf) = evalDocs.splitAt(2)
-    val input = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map.empty[Long, (Long, Double, Double)]
-    val ckpt = Files.createTempDirectory("lmserve-ckpt").toString
-    val q = StreamingLmScore.run(spark,
-      input.toDF().toDF("doc_id", "text"), artifact, ckpt) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(firstHalf)
-      q.processAllAvailable()
-      assert(got.keySet == firstHalf.map(_._1).toSet,
-        "first micro-batch must score exactly its own docs")
-      input.addData(secondHalf)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap == batch,
+    val (r1, r2) = streamInHalves(firstHalf, secondHalf, "doc_id", "text")(
+      ServeLoop.run(_, _)(TextOps.lmScore(_, lm))(_))
+    assert(view(r1).keySet == firstHalf.map(_._1).toSet,
+      "first micro-batch must score exactly its own docs")
+    assert(view(r1 ++ r2) == batch,
       "streamed scoring diverged from the batch lmScore path")
+    Caches.releaseAll(spark)
   }
 }

@@ -1,33 +1,22 @@
 package graft
 
-import graft.ops.{Embeddings, Mmr, Pq, Sq}
-import graft.stream.StreamingMmrServe
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.ops.{Caches, Embeddings, Mmr, Pq, Sq}
+import graft.stream.ServeLoop
+import org.apache.spark.sql.functions.col
 import java.nio.file.Files
 
 /** The MMR serving seam: a stream of query vectors served through
-  * the persisted q82 artifact pair + the exact tier must agree
-  * bit-for-bit with the batch q92 path — across micro-batch
-  * boundaries (MMR is per-query, so the split cannot change any
-  * answer). */
-class StreamingMmrServeSpec extends SparkSpec {
-
-  private val SfDir = "/root/testdata/sf0.001"
+  * [[ServeLoop]] over [[Mmr.mmrServe]] — the persisted q82 artifact
+  * pair + the exact tier — must agree bit-for-bit with the batch q92
+  * path, across micro-batch boundaries (MMR is per-query, so the split
+  * cannot change any answer). */
+class StreamingMmrServeSpec extends SparkSpec with VectorServeFixtures {
 
   test("stream of query vectors ≡ batch mmrRerankTopK, across micro-batch boundaries") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
-    val batch = Mmr.mmrRerankTopK(spark, SfDir)
-      .collect().map(r => key(r) -> value(r)).toMap
+    assumeTestdata()
+    val batch = byRank(Mmr.mmrRerankTopK(spark, SfDir).collect().toSeq)
     assert(batch.nonEmpty)
-    graft.ops.Caches.releaseAll(spark)
+    Caches.releaseAll(spark)
 
     // the q82 artifact pair, persisted the way a deployment would
     val (cents, mins, maxs) = Sq.trainIvfSq8(spark, SfDir)
@@ -35,33 +24,14 @@ class StreamingMmrServeSpec extends SparkSpec {
     val boundsPath = Files.createTempDirectory("mmr-bounds").toString + "/b"
     Embeddings.saveQuantizer(spark, cents, quantizerPath)
     Sq.saveBounds(spark, mins, maxs, boundsPath)
-    graft.ops.Caches.releaseAll(spark)
+    Caches.releaseAll(spark)
 
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0 && $"vec_id" < Pq.ProbeCap)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    assert(queryVecs.length >= 2, "need at least two queries to split across batches")
-    val (firstHalf, secondHalf) = queryVecs.splitAt(queryVecs.length / 2)
-
-    val input = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val ckpt = Files.createTempDirectory("mmrserve-ckpt").toString
-    val q = StreamingMmrServe.run(spark,
-      input.toDF().toDF("q_id", "embedding"),
-      SfDir, quantizerPath, boundsPath, ckpt, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(firstHalf.toSeq)
-      q.processAllAvailable()
-      assert(got.keySet.map(_._1) == firstHalf.map(_._1).toSet,
-        "first micro-batch must serve exactly its own queries")
-      input.addData(secondHalf.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    graft.ops.Caches.releaseAll(spark)
-    assert(got.toMap == batch,
-      "streamed MMR serve diverged from the batch q92 ranking")
+    val lc = Embeddings.loadQuantizer(spark, quantizerPath)
+    val (lm, lx) = Sq.loadBounds(spark, boundsPath)
+    val codes = Caches.persist(Sq.ivfSq8Codes(spark, SfDir, lc, lm, lx))
+    val exact = Caches.persist(Embeddings.quantized(spark, SfDir).select(col("vec_id"), col("qv")))
+    assertStreamMatchesBatch(batch, probeVectors(cap = Pq.ProbeCap),
+      "streamed MMR serve diverged from the batch q92 ranking")(
+      ServeLoop.run(_, _)(Mmr.mmrServe(codes, exact, lc, lm, lx, _, excludeSelf = true))(_))
   }
 }

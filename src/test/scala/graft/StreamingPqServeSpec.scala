@@ -1,20 +1,19 @@
 package graft
 
-import graft.ops.{Embeddings, Pq}
-import graft.stream.StreamingPqServe
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.ops.{Caches, Embeddings, Pq}
+import graft.stream.ServeLoop
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.file.Files
 
-/** The streaming PQ serving seam: a stream of query vectors scored
-  * against the PERSISTED codebook artifact + codes relation must
-  * agree bit-for-bit with the batch q77 path — across micro-batch
-  * boundaries, so the per-batch plan provably carries no cross-batch
-  * state. Also pins the artifact round-trip and the external-id
-  * default. */
-class StreamingPqServeSpec extends SparkSpec {
-
-  private val SfDir = "/root/testdata/sf0.001"
+/** The streaming PQ serving seams: a stream of query vectors scored
+  * through [[ServeLoop]] against the PERSISTED codebook artifact +
+  * codes relation (and its IVFADC routed twin) must agree bit-for-bit
+  * with the batch q77/q79 paths — across micro-batch boundaries, so
+  * the per-batch plan provably carries no cross-batch state. Also pins
+  * the artifact round-trip, the external-id default and the IVFADC
+  * restart. */
+class StreamingPqServeSpec extends SparkSpec with VectorServeFixtures {
 
   test("codebook artifact round-trips bit-for-bit") {
     val vecs = Embeddings.quantized(spark, SfDir)
@@ -23,55 +22,25 @@ class StreamingPqServeSpec extends SparkSpec {
     Pq.saveCodebooks(spark, books, path)
     val loaded = Pq.loadCodebooks(spark, path)
     assert(loaded == books, "loaded codebooks diverged from the trained ones")
-    graft.ops.Caches.releaseAll(spark)
+    Caches.releaseAll(spark)
   }
 
   test("stream of query vectors ≡ batch pqTopK, across two micro-batches") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
+    assumeTestdata()
     val s = spark
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
 
     // train once → persist → load: the deployment trajectory
     val artifact = Files.createTempDirectory("pqbooks").toString
     Pq.saveCodebooks(spark,
       Pq.trainCodebooks(Embeddings.quantized(spark, SfDir)), artifact)
-
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
     // the batch twin IS the q77 oracle-certified path
-    val batch = Pq.pqTopK(spark, SfDir, k = 5, queryMod = 50)
-      .collect().map(r => key(r) -> value(r)).toMap
-    assert(batch.nonEmpty)
-
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    assert(queryVecs.length >= 2, "need at least two queries to split across batches")
-    val (firstHalf, secondHalf) = queryVecs.splitAt(queryVecs.length / 2)
-
-    val input = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val ckpt = Files.createTempDirectory("pqserve-ckpt").toString
-    val q = StreamingPqServe.run(spark,
-      input.toDF().toDF("q_id", "embedding"),
-      SfDir, artifact, ckpt, k = 5, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(firstHalf.toSeq)
-      q.processAllAvailable()
-      val afterFirst = got.keySet.map(_._1)
-      assert(afterFirst == firstHalf.map(_._1).toSet,
-        "first micro-batch must serve exactly its own queries")
-      input.addData(secondHalf.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap == batch,
-      "streamed PQ serving diverged from the batch q77 path")
+    val batch = byRank(Pq.pqTopK(spark, SfDir, k = 5, queryMod = 50).collect().toSeq)
+    val books = Pq.loadCodebooks(spark, artifact)
+    val codes = Caches.persist(Pq.buildCodes(spark, SfDir, books))
+    val queryVecs = probeVectors()
+    assertStreamMatchesBatch(batch, queryVecs, "streamed PQ serving diverged from the batch q77 path")(
+      ServeLoop.run(_, _)(b => Pq.adcServe(codes, books, Pq.quantizeQueries(b), 5, excludeSelf = true))(_))
 
     // external-id default: a query whose q_id collides with a corpus
     // vec_id must still see that vector — with equal embeddings the
@@ -79,140 +48,62 @@ class StreamingPqServeSpec extends SparkSpec {
     // possible for that code combination, so the collision surfaces
     // at rank 1 where the corpus-id mode would drop it
     val (cid, cemb) = queryVecs.head
-    val books = Pq.loadCodebooks(spark, artifact)
-    val codes = Pq.buildCodes(spark, SfDir, books)
     val external = Pq.quantizeQueries(Seq((cid, cemb)).toDF("q_id", "embedding"))
     val kept = Pq.adcServe(codes, books, external, k = 5).collect()
     assert(kept.length == 5)
-    // tie-proof form (ADVICE r9): serving at corpus-covering k, the
-    // colliding vector IS returned (nothing filters it), and its
-    // own-codes estimate is the global MINIMUM — a vector's ADC
-    // estimate against its own code combination cannot be beaten.
-    // The earlier top-5-membership assert could flake if 5+ vectors
-    // shared the minimal estimate with smaller neighbor_ids.
+    // tie-proof form: serving at corpus-covering k, the colliding
+    // vector IS returned (nothing filters it), and its own-codes
+    // estimate is the global MINIMUM — a vector's ADC estimate against
+    // its own code combination cannot be beaten (a top-5-membership
+    // check could flake if 5+ vectors shared the minimal estimate with
+    // smaller neighbor_ids).
     val all = Pq.adcServe(codes, books, external, k = 100000).collect()
     val own = all.find(r => r.getAs[Long]("neighbor_id") == cid)
     assert(own.nonEmpty, "external-id serving must not drop an id-colliding vector")
     assert(own.get.getAs[Long]("est") == all.map(_.getAs[Long]("est")).min,
       "the colliding vector's own-codes estimate must be minimal")
-    graft.ops.Caches.releaseAll(spark)
+    Caches.releaseAll(spark)
   }
 
-  test("IVFADC stream ≡ batch ivfPqTopK, across two micro-batches") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    // train once → persist BOTH artifacts → load: the deployment
-    // trajectory of the routed index
+  /** Train the q79 artifact pair and persist it; returns the artifact
+    * paths and the batch ivfPqTopK truth (its caches released). */
+  private def ivfPqArtifacts(): (String, String, Map[(Long, Long), (Long, Long)]) = {
     val (cents, books) = Pq.trainIvfPq(spark, SfDir)
     val quantPath = Files.createTempDirectory("ivfpq-coarse").toString
     val bookPath = Files.createTempDirectory("ivfpq-books").toString
     Embeddings.saveQuantizer(spark, cents, quantPath)
     Pq.saveCodebooks(spark, books, bookPath)
+    val batch = byRank(Pq.ivfPqTopK(spark, SfDir, k = 5, queryMod = 50, nprobe = 2).collect().toSeq)
+    Caches.releaseAll(spark)
+    (quantPath, bookPath, batch)
+  }
 
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
-    val batch = Pq.ivfPqTopK(spark, SfDir, k = 5, queryMod = 50, nprobe = 2)
-      .collect().map(r => key(r) -> value(r)).toMap
-    assert(batch.nonEmpty)
-    graft.ops.Caches.releaseAll(spark)
+  /** The IVFADC serving deployment: load both artifacts, build and
+    * persist the routed codes, serve through [[ServeLoop]]. */
+  private def serveIvfPq(quantPath: String, bookPath: String)
+                        (in: DataFrame, ckpt: String, sink: DataFrame => Unit): StreamingQuery = {
+    val cents = Embeddings.loadQuantizer(spark, quantPath)
+    val books = Pq.loadCodebooks(spark, bookPath)
+    val codes = Caches.persist(Pq.ivfPqCodes(spark, SfDir, cents, books))
+    ServeLoop.run(in, ckpt)(b =>
+      Pq.ivfPqServe(codes, cents, books, Pq.quantizeQueries(b), 5, 2, excludeSelf = true))(sink)
+  }
 
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    val (firstHalf, secondHalf) = queryVecs.splitAt(queryVecs.length / 2)
-
-    val input = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val ckpt = Files.createTempDirectory("ivfpqserve-ckpt").toString
-    val q = graft.stream.StreamingIvfPqServe.run(spark,
-      input.toDF().toDF("q_id", "embedding"),
-      SfDir, quantPath, bookPath, ckpt, k = 5, nprobe = 2, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(firstHalf.toSeq)
-      q.processAllAvailable()
-      assert(got.keySet.map(_._1) == firstHalf.map(_._1).toSet,
-        "first micro-batch must serve exactly its own queries")
-      input.addData(secondHalf.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap == batch,
-      "streamed IVFADC serving diverged from the batch q79 path")
-    graft.ops.Caches.releaseAll(spark)
+  test("IVFADC stream ≡ batch ivfPqTopK, across two micro-batches") {
+    assumeTestdata()
+    val (quantPath, bookPath, batch) = ivfPqArtifacts()
+    assertStreamMatchesBatch(batch, probeVectors(),
+      "streamed IVFADC serving diverged from the batch q79 path")(serveIvfPq(quantPath, bookPath))
   }
 
   test("IVFADC serving RESTARTS from checkpoint: no re-emission, batch 2 identical to uninterrupted") {
-    // VERDICT r10 #5: the eight serving seams pin stream ≡ batch but
-    // never killed and resumed the query — the recovery story a
-    // production serving loop depends on. This runs the seam over a
-    // FILE source (offsets a checkpoint can replay; MemoryStream's
-    // cannot survive a restart), stops the query after batch 1,
-    // restarts from the SAME checkpoint, and asserts batch 1 is never
-    // re-emitted while batch 2's results are bit-identical to the
-    // uninterrupted batch path.
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
-    val s = spark
-    import s.implicits._
-
-    val (cents, books) = Pq.trainIvfPq(spark, SfDir)
-    val quantPath = Files.createTempDirectory("ivfpq-rst-coarse").toString
-    val bookPath = Files.createTempDirectory("ivfpq-rst-books").toString
-    Embeddings.saveQuantizer(spark, cents, quantPath)
-    Pq.saveCodebooks(spark, books, bookPath)
-
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
-    val batch = Pq.ivfPqTopK(spark, SfDir, k = 5, queryMod = 50, nprobe = 2)
-      .collect().map(r => key(r) -> value(r)).toMap
-    graft.ops.Caches.releaseAll(spark)
-
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    val (firstHalf, secondHalf) = queryVecs.splitAt(queryVecs.length / 2)
-
-    val srcDir = Files.createTempDirectory("ivfpq-rst-src").toString
-    val ckpt = Files.createTempDirectory("ivfpq-rst-ckpt").toString
-    val schema = firstHalf.toSeq.toDF("q_id", "embedding").schema
-    def stream() = spark.readStream.schema(schema).parquet(srcDir)
-
-    // ---- run 1: serve batch 1, then KILL the query
-    firstHalf.toSeq.toDF("q_id", "embedding").write.mode("append").parquet(srcDir)
-    val got1 = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val q1 = graft.stream.StreamingIvfPqServe.run(spark, stream(),
-      SfDir, quantPath, bookPath, ckpt, k = 5, nprobe = 2, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got1 += key(r) -> value(r))
-    }
-    try q1.processAllAvailable() finally q1.stop()
-    assert(got1.keySet.map(_._1) == firstHalf.map(_._1).toSet,
-      "run 1 must serve exactly batch 1's queries")
-    graft.ops.Caches.releaseAll(spark)
-
-    // ---- new data lands while the service is DOWN
-    secondHalf.toSeq.toDF("q_id", "embedding").write.mode("append").parquet(srcDir)
-
-    // ---- run 2: restart from the SAME checkpoint
-    val got2 = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val q2 = graft.stream.StreamingIvfPqServe.run(spark, stream(),
-      SfDir, quantPath, bookPath, ckpt, k = 5, nprobe = 2, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got2 += key(r) -> value(r))
-    }
-    try q2.processAllAvailable() finally q2.stop()
-
-    assert(got2.keySet.map(_._1) == secondHalf.map(_._1).toSet,
-      s"restart must serve exactly the files that arrived while down — no re-emission of batch 1 " +
-        s"(got ${got2.keySet.map(_._1)})")
-    assert((got1 ++ got2).toMap == batch,
-      "restarted serving diverged from the uninterrupted batch path")
-    graft.ops.Caches.releaseAll(spark)
+    // The serving seams pin stream ≡ batch; this kills and resumes the
+    // query — the recovery story a production serving loop depends
+    // on: a FILE source, the query stopped after batch 1, a restart
+    // from the SAME checkpoint, batch 1 never re-emitted and batch 2's
+    // results bit-identical to the uninterrupted batch path.
+    assumeTestdata()
+    val (quantPath, bookPath, batch) = ivfPqArtifacts()
+    assertRestartMatchesBatch(batch, probeVectors())(serveIvfPq(quantPath, bookPath))
   }
 }

@@ -1,29 +1,22 @@
 package graft
 
-import graft.ops.{Embeddings, Pq, Sq}
-import graft.stream.StreamingRefineServe
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.ops.{Caches, Embeddings, Pq, Sq}
+import graft.stream.ServeLoop
 import java.nio.file.Files
 
 /** The q85 serving seam: all three training artifacts (coarse
   * quantizer + residual codebooks + residual bounds) round-trip, and
-  * a stream of query vectors two-stage-served against the two
-  * compressed tiers must agree bit-for-bit with the batch q85 path —
-  * across micro-batch boundaries (the family's standard stream ≡
-  * batch identity). The serving loop reads raw vectors exactly once,
-  * at startup, to encode both compressed tiers off one shared
-  * residual pass; no micro-batch touches them again. */
-class StreamingRefineServeSpec extends SparkSpec {
-
-  private val SfDir = "/root/testdata/sf0.001"
+  * a stream of query vectors two-stage-served through [[ServeLoop]]
+  * against the two compressed tiers must agree bit-for-bit with the
+  * batch q85 path — across micro-batch boundaries (the family's
+  * standard stream ≡ batch identity). The deployment reads raw vectors
+  * exactly once, at startup, to encode both compressed tiers off one
+  * shared residual pass ([[Sq.buildRefineTiers]]); no micro-batch
+  * touches them again. */
+class StreamingRefineServeSpec extends SparkSpec with VectorServeFixtures {
 
   test("artifact triple round-trips; stream of query vectors ≡ batch ivfPqSq8RefineTopK") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
+    assumeTestdata()
     val (cents, books) = Pq.trainIvfPq(spark, SfDir)
     val (cents2, mins, maxs) = Sq.trainIvfSq8(spark, SfDir)
     assert(cents.map(c => (c.j, c.n, c.s)) == cents2.map(c => (c.j, c.n, c.s)))
@@ -35,41 +28,16 @@ class StreamingRefineServeSpec extends SparkSpec {
     assert(lb.map(_.map(c => (c.j, c.n, c.s))) == books.map(_.map(c => (c.j, c.n, c.s))),
       "codebooks artifact round-trip diverged")
 
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
-    val batch = Sq.ivfPqSq8RefineTopK(spark, SfDir, k = 5, queryMod = 50)
-      .collect().map(r => key(r) -> value(r)).toMap
-    assert(batch.nonEmpty)
-    graft.ops.Caches.releaseAll(spark)
+    val batch = byRank(Sq.ivfPqSq8RefineTopK(spark, SfDir, k = 5, queryMod = 50).collect().toSeq)
+    Caches.releaseAll(spark)
 
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    assert(queryVecs.length >= 2, "need at least two queries to split across batches")
-    val (firstHalf, secondHalf) = queryVecs.splitAt(queryVecs.length / 2)
-
-    val input = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val ckpt = Files.createTempDirectory("refineserve-ckpt").toString
-    val q = StreamingRefineServe.run(spark,
-      input.toDF().toDF("q_id", "embedding"),
-      SfDir, s"$base/quantizer", s"$base/codebooks", s"$base/bounds",
-      ckpt, k = 5, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(firstHalf.toSeq)
-      q.processAllAvailable()
-      assert(got.keySet.map(_._1) == firstHalf.map(_._1).toSet,
-        "first micro-batch must serve exactly its own queries")
-      input.addData(secondHalf.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap == batch,
-      "streamed refine serving diverged from the batch q85 path")
-    graft.ops.Caches.releaseAll(spark)
+    val lc = Embeddings.loadQuantizer(spark, s"$base/quantizer")
+    val (lm, lx) = Sq.loadBounds(spark, s"$base/bounds")
+    val (pqTier, sqTier) = Sq.buildRefineTiers(spark, SfDir, lc, lb, lm, lx)
+    val (pqCodes, sqCodes) = (Caches.persist(pqTier), Caches.persist(sqTier))
+    assertStreamMatchesBatch(batch, probeVectors(),
+      "streamed refine serving diverged from the batch q85 path")(
+      ServeLoop.run(_, _)(b => Sq.ivfPqSq8RefineServe(pqCodes, sqCodes, lc, lb, lm, lx,
+        Pq.quantizeQueries(b), 5, Pq.RefineR, 2, excludeSelf = true))(_))
   }
 }

@@ -1,20 +1,20 @@
 package graft
 
-import graft.ops.{Dsir, Retrieval}
-import graft.stream.{StreamingBm25Serve, StreamingDsirScore}
+import graft.ops.{Caches, Dsir, Retrieval}
+import graft.stream.ServeLoop
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
 
-/** The DSIR and BM25 serving seams: streamed scoring against the
-  * persisted artifacts must agree bit-for-bit with the batch paths,
-  * across micro-batch boundaries (no cross-batch state). */
+/** The DSIR and BM25 serving seams: streamed scoring through
+  * [[ServeLoop]] against the persisted artifacts must agree
+  * bit-for-bit with the batch paths, across micro-batch boundaries (no
+  * cross-batch state). */
 class StreamingServeSpec extends SparkSpec {
 
   test("stream of documents ≡ batch dsirLogWeights, across two micro-batches") {
     val s = spark
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
 
     val targetTexts = Seq((1L, "the quiet garden held a hundred small worlds"),
       (2L, "she read the letter twice before answering"))
@@ -29,37 +29,27 @@ class StreamingServeSpec extends SparkSpec {
       (23L, "a zebra wanders"), (24L, "   "))
     val target = Dsir.dsirLoad(spark, s"$dir/t")
     val raw = Dsir.dsirLoad(spark, s"$dir/r")
-    def key(r: Row): Long = r.getAs[Long]("doc_id")
-    def value(r: Row): (Long, Double) =
-      (r.getAs[Long]("n_feats"), r.getAs[Double]("log_weight"))
-    val batch = Dsir.dsirLogWeights(pool.toDF("doc_id", "text"), target, raw)
-      .collect().map(r => key(r) -> value(r)).toMap
+    def view(rows: Seq[Row]) = rows.map(r => r.getAs[Long]("doc_id") ->
+      (r.getAs[Long]("n_feats"), r.getAs[Double]("log_weight"))).toMap
+    val batch = view(Dsir.dsirLogWeights(pool.toDF("doc_id", "text"), target, raw).collect().toSeq)
     assert(batch.keySet == Set(21L, 22L, 23L))
 
+    // the serving deployment: both bucket tables persisted once
+    val (t, r) = (target.copy(buckets = Caches.persist(target.buckets)),
+      raw.copy(buckets = Caches.persist(raw.buckets)))
     val (h1, h2) = pool.splitAt(2)
-    val input = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map.empty[Long, (Long, Double)]
-    val ckpt = Files.createTempDirectory("dsir-ckpt").toString
-    val q = StreamingDsirScore.run(spark, input.toDF().toDF("doc_id", "text"),
-      s"$dir/t", s"$dir/r", ckpt) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(h1)
-      q.processAllAvailable()
-      assert(got.keySet == Set(21L, 22L),
-        "first micro-batch must weigh exactly its own docs")
-      input.addData(h2)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(got.toMap == batch,
+    val (r1, r2) = streamInHalves(h1, h2, "doc_id", "text")(
+      ServeLoop.run(_, _)(Dsir.dsirLogWeights(_, t, r))(_))
+    assert(view(r1).keySet == Set(21L, 22L),
+      "first micro-batch must weigh exactly its own docs")
+    assert(view(r1 ++ r2) == batch,
       "streamed weighting diverged from the batch dsirLogWeights path")
+    Caches.releaseAll(spark)
   }
 
   test("stream of queries ≡ batch bm25TopK, across two micro-batches") {
     val s = spark
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
 
     val corpus = Seq((1L, "the cat sat on the mat"), (2L, "a dog chased the cat"),
       (3L, "dogs and cats live together"), (4L, "the stock market closed higher"))
@@ -70,37 +60,27 @@ class StreamingServeSpec extends SparkSpec {
     val queries = Seq((10L, "the cat"), (11L, "dog chased"),
       (12L, "zebra quux"), (13L, "stock market"))
     val loaded = Retrieval.bm25Load(spark, s"$dir/ix")
-    def key(r: Row): (Long, Int) = (r.getAs[Long]("query_id"), r.getAs[Int]("rank"))
-    def value(r: Row): (Long, Double) =
-      (r.getAs[Long]("doc_id"), r.getAs[Double]("score"))
-    val batch = Retrieval.bm25TopK(loaded, queries.toDF("query_id", "query"), k = 2)
-      .collect().map(r => key(r) -> value(r)).toMap
+    def view(rows: Seq[Row]) = rows.map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
+      (r.getAs[Long]("doc_id"), r.getAs[Double]("score"))).toMap
+    val batch = view(Retrieval.bm25TopK(loaded, queries.toDF("query_id", "query"), k = 2)
+      .collect().toSeq)
     assert(batch.keys.map(_._1).toSet == Set(10L, 11L, 13L))
 
+    val ix = loaded.copy(postings = Caches.persist(loaded.postings))
     val (h1, h2) = queries.splitAt(2)
-    val input = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map.empty[(Long, Int), (Long, Double)]
-    val ckpt = Files.createTempDirectory("bm25-ckpt").toString
-    val q = StreamingBm25Serve.run(spark, input.toDF().toDF("query_id", "query"),
-      s"$dir/ix", k = 2, ckpt) { res =>
-      res.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(h1)
-      q.processAllAvailable()
-      assert(got.keys.map(_._1).toSet == Set(10L, 11L),
-        "first micro-batch must answer exactly its own queries")
-      input.addData(h2)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(got.toMap == batch,
+    val (r1, r2) = streamInHalves(h1, h2, "query_id", "query")(
+      ServeLoop.run(_, _)(Retrieval.bm25TopK(ix, _, k = 2))(_))
+    assert(view(r1).keys.map(_._1).toSet == Set(10L, 11L),
+      "first micro-batch must answer exactly its own queries")
+    assert(view(r1 ++ r2) == batch,
       "streamed serving diverged from the batch bm25TopK path")
+    Caches.releaseAll(spark)
   }
 
   test("bm25 index REBUILD swaps atomically under a live serving stream (versioned artifact)") {
     // VERDICT r11 #4: the quantizer lifecycle (StorageSpec) applied to
     // the lexical index — the rebuild the q95 frozen-stats ingest
-    // defers. A live StreamingBm25Serve stays pinned to the version it
+    // defers. A live BM25 serving loop stays pinned to the version it
     // resolved at startup while a retrain publishes v2; answers on the
     // live stream never change mid-flight; a NEW serving job resolves
     // the rebuilt index and sees the new corpus; vacuum retires v1
@@ -143,8 +123,10 @@ class StreamingServeSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val got = collection.mutable.Map.empty[(Long, Int), Long]
     val ckpt = Files.createTempDirectory("bm25-art-ckpt").toString
-    val q = StreamingBm25Serve.run(spark, input.toDF().toDF("query_id", "query"),
-      Storage.resolveArtifact(spark, root), k = 2, ckpt) { res =>
+    val pinned = Retrieval.bm25Load(spark, Storage.resolveArtifact(spark, root))
+    val ix = pinned.copy(postings = Caches.persist(pinned.postings))
+    val q = ServeLoop.run(input.toDF().toDF("query_id", "query"), ckpt)(
+        Retrieval.bm25TopK(ix, _, k = 2)) { res =>
       res.collect().foreach(r => got += key(r) -> value(r))
     }
     try {

@@ -1,25 +1,18 @@
 package graft
 
-import graft.ops.{Embeddings, Sq}
-import graft.stream.StreamingSqServe
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.ops.{Caches, Embeddings, Pq, Sq}
+import graft.stream.ServeLoop
 import java.nio.file.Files
 
 /** The SQ8 serving seam: bounds artifact round-trip, and a stream of
-  * query vectors scored against the persisted artifact must agree
-  * bit-for-bit with the batch q81 path — across micro-batch
-  * boundaries (the family's standard stream ≡ batch identity). */
-class StreamingSqServeSpec extends SparkSpec {
-
-  private val SfDir = "/root/testdata/sf0.001"
+  * query vectors scored through [[ServeLoop]] against the persisted
+  * artifact must agree bit-for-bit with the batch q81 path — across
+  * micro-batch boundaries (the family's standard stream ≡ batch
+  * identity). */
+class StreamingSqServeSpec extends SparkSpec with VectorServeFixtures {
 
   test("bounds artifact round-trips; stream of query vectors ≡ batch sq8TopK") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
+    assumeTestdata()
     val vecs = Embeddings.quantized(spark, SfDir)
     val (mins, maxs) = Sq.gridBounds(vecs)
     val artifact = Files.createTempDirectory("sqbounds").toString + "/bounds"
@@ -27,40 +20,11 @@ class StreamingSqServeSpec extends SparkSpec {
     val (lm, lx) = Sq.loadBounds(spark, artifact)
     assert(lm == mins && lx == maxs, "bounds artifact round-trip diverged")
 
-    def key(r: Row): (Long, Long) = (r.getAs[Long]("q_id"), r.getAs[Long]("rank"))
-    def value(r: Row): (Long, Long) =
-      (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))
-    val batch = Sq.sq8TopK(spark, SfDir, k = 5, queryMod = 50)
-      .collect().map(r => key(r) -> value(r)).toMap
-    assert(batch.nonEmpty)
-    graft.ops.Caches.releaseAll(spark)
-
-    val queryVecs = graft.ops.Tables.embeddings(spark, SfDir)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("q_id"), $"embedding")
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    assert(queryVecs.length >= 2, "need at least two queries to split across batches")
-    val (firstHalf, secondHalf) = queryVecs.splitAt(queryVecs.length / 2)
-
-    val input = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map.empty[(Long, Long), (Long, Long)]
-    val ckpt = Files.createTempDirectory("sqserve-ckpt").toString
-    val q = StreamingSqServe.run(spark,
-      input.toDF().toDF("q_id", "embedding"),
-      SfDir, artifact, ckpt, k = 5, excludeSelf = true) { scored =>
-      scored.collect().foreach(r => got += key(r) -> value(r))
-    }
-    try {
-      input.addData(firstHalf.toSeq)
-      q.processAllAvailable()
-      assert(got.keySet.map(_._1) == firstHalf.map(_._1).toSet,
-        "first micro-batch must serve exactly its own queries")
-      input.addData(secondHalf.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap == batch,
-      "streamed SQ8 serving diverged from the batch q81 path")
-    graft.ops.Caches.releaseAll(spark)
+    val batch = byRank(Sq.sq8TopK(spark, SfDir, k = 5, queryMod = 50).collect().toSeq)
+    Caches.releaseAll(spark)
+    val codes = Caches.persist(Sq.encode(Embeddings.quantized(spark, SfDir), lm, lx))
+    assertStreamMatchesBatch(batch, probeVectors(),
+      "streamed SQ8 serving diverged from the batch q81 path")(
+      ServeLoop.run(_, _)(b => Sq.sq8Serve(codes, lm, lx, Pq.quantizeQueries(b), 5, excludeSelf = true))(_))
   }
 }

@@ -1,26 +1,40 @@
 package graft
 
 import graft.ops.{Embeddings, Sq, Storage}
-import graft.stream.StreamingVectorIngest
+import graft.stream.ServeLoop
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
 
 /** The rolling-ingest write loop end-to-end (the streaming form of
   * q87): frozen artifacts trained on the base tranche, the base tier
-  * published as snapshot v1, NEW vectors streamed through
-  * [[graft.stream.StreamingVectorIngest]] across TWO micro-batches —
-  * then a serve off the newest-committed snapshot must be
-  * bit-identical to q87's one-pass encode of the full corpus. Any
+  * published as snapshot v1, NEW vectors streamed through a
+  * [[ServeLoop]] whose sink upserts each batch's
+  * [[Sq.ivfSq8EncodeBatch]] codes ([[Storage.upsertSnapshot]]) across
+  * TWO micro-batches — then a serve off the newest-committed
+  * snapshot must be bit-identical to q87's one-pass encode of the
+  * full corpus. Any
   * divergence is an ingest defect (lost delta, duplicate key, stale
   * resolution, clamp drift between the batch and streaming encoders),
   * since encode is row-local. */
-class StreamingVectorIngestSpec extends SparkSpec {
+class StreamingVectorIngestSpec extends SparkSpec with VectorServeFixtures {
 
-  private val SfDir = "/root/testdata/sf0.001"
+  /** The ingest loop: load the frozen artifact pair, encode each
+    * micro-batch of (vec_id, embedding) against it and upsert it into
+    * the codes snapshot at `root` — keyed by vec_id, so a re-delivered
+    * vector UPDATES its codes rather than duplicating them. */
+  private def ingest(vectors: DataFrame, root: String, qPath: String, bPath: String,
+                     ckpt: String): StreamingQuery = {
+    val cents = Embeddings.loadQuantizer(spark, qPath)
+    val (mins, maxs) = Sq.loadBounds(spark, bPath)
+    ServeLoop.run(vectors, ckpt)(Sq.ivfSq8EncodeBatch(_, cents, mins, maxs))(
+      Storage.upsertSnapshot(spark, root, _, "vec_id"))
+  }
 
   test("base publish + two streamed delta batches; snapshot serve ≡ one-pass q87") {
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
+    assumeTestdata()
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -51,9 +65,7 @@ class StreamingVectorIngestSpec extends SparkSpec {
     val (firstHalf, secondHalf) = deltas.splitAt(deltas.length / 2)
     val input = MemoryStream[(Long, Seq[Float])]
     val ckpt = Files.createTempDirectory("vecingest-ckpt").toString
-    val q = StreamingVectorIngest.run(spark,
-      input.toDF().toDF("vec_id", "embedding"),
-      root, qArtifact, bArtifact, ckpt)
+    val q = ingest(input.toDF().toDF("vec_id", "embedding"), root, qArtifact, bArtifact, ckpt)
     try {
       input.addData(firstHalf.toSeq)
       q.processAllAvailable()
@@ -82,14 +94,14 @@ class StreamingVectorIngestSpec extends SparkSpec {
   }
 
   test("ingest RESTARTS from checkpoint: batch 1's snapshot version is not re-published") {
-    // VERDICT r11 #5: the snapshot-PUBLISHING seam's restart contract
-    // is stronger than a serve's — a replayed batch would not just
+    // The snapshot-PUBLISHING seam's restart contract is stronger
+    // than a serve's — a replayed batch would not just
     // re-emit rows, it would publish a SPURIOUS snapshot version (same
     // content, new version number, a vacuum-cycle tax forever). File
     // source, kill after batch 1, restart from the SAME checkpoint:
     // batch 1 must NOT re-upsert (version chain stays v1..v3), and the
     // final snapshot serves bit-identically to q87's one-pass encode.
-    assume(new java.io.File(SfDir).isDirectory, "testdata not present")
+    assumeTestdata()
     val s = spark
     import s.implicits._
 
@@ -127,7 +139,7 @@ class StreamingVectorIngestSpec extends SparkSpec {
 
     // ---- run 1: ingest batch 1 (publishes v2), then KILL the query
     firstHalf.toSeq.toDF("vec_id", "embedding").write.mode("append").parquet(srcDir)
-    val q1 = StreamingVectorIngest.run(spark, stream(), root, qArtifact, bArtifact, ckpt)
+    val q1 = ingest(stream(), root, qArtifact, bArtifact, ckpt)
     try q1.processAllAvailable() finally q1.stop()
     assert(versionDirs() == Seq("v1", "v2"),
       s"run 1 must publish exactly v2 (got ${versionDirs()})")
@@ -137,7 +149,7 @@ class StreamingVectorIngestSpec extends SparkSpec {
 
     // ---- run 2: restart from the SAME checkpoint — batch 1 must not
     // replay (no v4; v3 carries ONLY batch 2's delta on top of v2)
-    val q2 = StreamingVectorIngest.run(spark, stream(), root, qArtifact, bArtifact, ckpt)
+    val q2 = ingest(stream(), root, qArtifact, bArtifact, ckpt)
     try q2.processAllAvailable() finally q2.stop()
     assert(versionDirs() == Seq("v1", "v2", "v3"),
       s"restart re-published a committed batch (got ${versionDirs()})")
