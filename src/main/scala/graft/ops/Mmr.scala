@@ -74,19 +74,19 @@ object Mmr {
     * caller. The batch's own quantized vectors are the query relation
     * of [[mmrSelectWith]], so external ids never need corpus rows. MMR
     * is per-query, so how queries split into batches cannot change an
-    * answer.
+    * answer. It serves q92's configuration, [[mmrRerankTopK]] at its
+    * defaults: [[Pq.RefineR]] candidates at nprobe 2, top-5 selected.
     *
     * `excludeSelf`: pass true only when the q_ids ARE corpus vec_ids
     * (the q92 conformance situation). */
   def mmrServe(codes: DataFrame, exact: DataFrame, cents: Seq[Embeddings.Centroid],
                mins: Seq[Long], maxs: Seq[Long], queries: DataFrame,
-               k: Int = 5, r: Int = Pq.RefineR, nprobe: Int = 2,
                excludeSelf: Boolean = false): DataFrame = {
     val probes = Pq.quantizeQueries(queries)
     val cands = Sq.ivfSq8Serve(codes, cents, mins, maxs, probes,
-        k = r, nprobe = nprobe, excludeSelf = excludeSelf)
+        k = Pq.RefineR, nprobe = 2, excludeSelf = excludeSelf)
       .select(col("q_id"), col("neighbor_id"))
-    mmrSelectWith(probes.select(col("q_id"), col("qv").as("q_v")), exact, cands, k)
+    mmrSelectWith(probes.select(col("q_id"), col("qv").as("q_v")), exact, cands, k = 5)
   }
 
   /** Exact squared L2 between two qv-grid vector COLUMNS (by name) —

@@ -361,21 +361,24 @@ object Retrieval {
     * through the same [[rrfFuse]] the q88 oracle replays; RRF is
     * per-query, so how requests split into batches cannot change an
     * answer. The legs are not persisted: they are probe-sized here.
+    * It serves q88's configuration, [[hybridRrfDocs]] at its
+    * defaults: 10 candidates per leg, the ANN leg at nprobe 2, fused
+    * top-10.
     *
     * `excludeSelf`: pass true only when the query_ids ARE corpus ids
     * (the q88 conformance situation); an external id matches nothing
     * on either leg and is unaffected. */
   def hybridServe(ix: Bm25Index, codes: DataFrame, cents: Seq[Embeddings.Centroid],
                   mins: Seq[Long], maxs: Seq[Long], queries: DataFrame,
-                  k: Int = 10, perList: Int = 10, nprobe: Int = 2,
                   excludeSelf: Boolean = false): DataFrame = {
+    val perList = 10
     val lex = bm25TopK(ix, queries.select(col("query_id"), col("query")), perList, excludeSelf)
       .select(col("query_id"), col("rank"), col("doc_id"))
     val sem = Sq.ivfSq8Serve(codes, cents, mins, maxs,
         Pq.quantizeQueries(queries.select(col("query_id").as("q_id"), col("embedding"))),
-        perList, nprobe, excludeSelf)
+        k = perList, nprobe = 2, excludeSelf = excludeSelf)
       .select(col("q_id").as("query_id"), col("rank"), col("neighbor_id").as("doc_id"))
-    rrfFuse(lex, sem, k)
+    rrfFuse(lex, sem, k = 10)
   }
 
   /** Integer scale for the expansion-term weights: w(q,t) =

@@ -1,7 +1,9 @@
 package graft.stream
 
+import scala.jdk.CollectionConverters._
+
 import graft.ops.ReviewGate
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -80,90 +82,113 @@ object ReviewStateMachine {
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updatePr)
   }
 
+  /** The three review stages, in the order of [[fullStatus]]'s
+    * `<stage>_approved` columns. */
+  private val Stages = Seq("codeowners", "facilitators", "tech")
+
   /** Per-batch 3-stage status (E3 steps c-d): each stage's required
-    * teams must all have an approving active member
-    * (ReviewGate.stageGate = J4 + A4/A5). `required*`: (pr, team);
+    * teams must all have an approving active member (the
+    * ReviewGate.stageGate rule, J4 + A4/A5). `required*`: (pr, team);
     * `membership`: (team, user). Only PRs present in `updates` are
-    * evaluated.
+    * evaluated; output is (pr, codeowners_approved,
+    * facilitators_approved, tech_approved), one row per touched PR.
+    *
+    * One pass for all three stages: the required tables are unioned
+    * with a `stage` tag, left-joined onto the touched PRs (which
+    * restricts them to this batch), left-joined once to
+    * ReviewGate.approvedTeams and grouped by `pr`; each stage is
+    * `every` over its own rows.
     *
     * A touched PR with ZERO required teams for a stage passes that
     * stage vacuously — the reference's `results.every(Boolean)` over
     * an empty team list is `true` (pr-review-flow.yml:190-211), e.g. a
     * docs-only PR whose files match no CODEFACILITATORS pattern needs
-    * no facilitator review. Such PRs are absent from the stage-gate
-    * aggregation (no required rows to group), hence the `true` fill. */
+    * no facilitator review. Such a PR has no rows for that stage, so
+    * its `every` aggregates only nulls and reads null, hence the
+    * `true` fill. */
   def fullStatus(updates: DataFrame, requiredCodeowners: DataFrame,
                  requiredFacilitators: DataFrame, requiredTech: DataFrame,
                  membership: DataFrame): DataFrame = {
-    val touched = updates.select(col("pr")).distinct()
-    val approvers = updates.select(col("pr"), explode_outer(col("approvers")).as("user"))
-    def stage(required: DataFrame, name: String): DataFrame =
-      ReviewGate.stageGate(required.join(touched, Seq("pr")), membership, approvers)
-        .withColumnRenamed("stage_approved", name)
-    touched
-      .join(stage(requiredCodeowners, "codeowners_approved"), Seq("pr"), "left")
-      .join(stage(requiredFacilitators, "facilitators_approved"), Seq("pr"), "left")
-      .join(stage(requiredTech, "tech_approved"), Seq("pr"), "left")
+    val required = Stages.zip(Seq(requiredCodeowners, requiredFacilitators, requiredTech))
+      .map { case (stage, req) => req.select(col("pr"), col("team"), lit(stage).as("stage")) }
+      .reduce(_ unionByName _)
+    val approvedTeams = ReviewGate.approvedTeams(
+      updates.select(col("pr"), explode(col("approvers")).as("user")), membership)
+    val stageCols = Stages.map(s =>
+      every(when(col("stage") === s, coalesce(col("ok"), lit(false)))).as(s"${s}_approved"))
+    updates.select(col("pr"))
+      .join(required, Seq("pr"), "left")
+      .join(approvedTeams, Seq("pr", "team"), "left")
+      .groupBy(col("pr"))
+      .agg(stageCols.head, stageCols.tail: _*)
       .na.fill(true)
   }
 
   /** K4/K5 side-effect target standing in for the GitHub label /
     * reviewer-request API: adds are no-ops when present, removes are
     * tolerated-if-absent (pr-review-flow.yml:254-264, 277-287), so
-    * replayed batches are idempotent. */
+    * replayed batches are idempotent. Keyed by PR, so a batch reads
+    * the labels of its touched PRs only ([[of]]), however many labels
+    * the store has seen. */
   class LabelStore extends Serializable {
-    private val labels = scala.collection.concurrent.TrieMap.empty[(Long, String), Unit]
+    private val labels = scala.collection.concurrent.TrieMap.empty[Long, Set[String]]
     def apply(pr: Long, op: String, label: String): Unit = op match {
-      case "add"    => labels.put((pr, label), ()); ()
-      case "remove" => labels.remove((pr, label)); ()
+      case "add"    => labels.updateWith(pr)(ls => Some(ls.getOrElse(Set.empty[String]) + label)); ()
+      case "remove" => labels.updateWith(pr)(_.map(_ - label).filter(_.nonEmpty)); ()
       case other    => throw new IllegalArgumentException(s"unknown label op: $other")
     }
-    def current: Set[(Long, String)] = labels.keySet.toSet
-    def asDF(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      val rows = current.toSeq.sorted
-      if (rows.isEmpty) Seq.empty[(Long, String)].toDF("pr", "label")
-      else rows.toDF("pr", "label")
-    }
+    def current: Set[(Long, String)] =
+      labels.iterator.flatMap { case (pr, ls) => ls.iterator.map(pr -> _) }.toSet
+    /** (pr, label) rows of the given PRs only. */
+    def of(prs: Iterable[Long]): Seq[(Long, String)] =
+      prs.iterator.flatMap(pr => labels.getOrElse(pr, Set.empty[String]).iterator.map(pr -> _)).toSeq
   }
 
   /** End-to-end pipeline (E3): events → stateful dedup/gate →
     * foreachBatch label sink. Each micro-batch recomputes stage status
-    * for the touched PRs only, diffs against the store's current
-    * labels (ReviewGate.labelOps emits only deltas) and applies them.
-    * The final `collect` is the side-effect boundary — label deltas
-    * per batch are O(changed PRs), the reference's own API-call
-    * granularity. */
+    * for the touched PRs only, diffs it against the store's current
+    * labels for those PRs (ReviewGate.labelOps emits only deltas) and
+    * applies the label and reviewer-request deltas — O(changed PRs)
+    * per batch, the reference's own API-call granularity.
+    *
+    * The batch is collected once, first thing: every action on a
+    * `foreachBatch` frame re-executes the plan behind it, the
+    * `flatMapGroupsWithState` operator included, so a second action
+    * would reload and re-commit the state store for the same batch.
+    * The collected rows (at most one [[ApproverUpdate]] per touched
+    * PR) become a local relation that everything downstream reads;
+    * the status is likewise collected once into a local relation, so
+    * the label diff and the reviewer requests read the same rows, and
+    * both deltas come back in one tagged `collect`. */
   def run(events: Dataset[ReviewEvent],
           requiredCodeowners: DataFrame, requiredFacilitators: DataFrame,
           requiredTech: DataFrame, membership: DataFrame,
           store: LabelStore, checkpointDir: String,
           requests: LabelStore = new LabelStore): StreamingQuery = {
     val spark = events.sparkSession
+    import spark.implicits._
     approverUpdates(events).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[ApproverUpdate], _: Long) =>
-        val updates = batch.toDF()
-        if (!updates.isEmpty) {
-          val status = fullStatus(updates, requiredCodeowners,
-            requiredFacilitators, requiredTech, membership).persist()
+        val rows = batch.collect()
+        if (rows.nonEmpty) {
+          val gate = fullStatus(rows.toSeq.toDF(), requiredCodeowners,
+            requiredFacilitators, requiredTech, membership)
+          val status = spark.createDataFrame(gate.collect().toSeq.asJava, gate.schema)
           // diff only the touched PRs: labelOps treats absence from
           // `desired` as "remove", so the current-label side must be
           // scoped to this batch's PRs or untouched PRs would be wiped.
-          val current = store.asDF(spark)
-            .join(updates.select(col("pr")).distinct(), Seq("pr"), "left_semi")
-          val ops = ReviewGate.labelOps(status, current)
-          ops.orderBy(col("pr"), col("op"), col("label")).collect().foreach { r =>
-            store(r.getLong(0), r.getString(1), r.getString(2))
-          }
+          val current = store.of(rows.map(_.pr)).toDF("pr", "label")
+          val labelDeltas = ReviewGate.labelOps(status, current)
+            .select(lit(true).as("is_label"), col("pr"), col("op"), col("label").as("value"))
           // K5: reviewer-request fan-out for PRs entering a stage
           // (idempotent add-only target set)
-          ReviewGate.reviewerRequests(status).collect().foreach { r =>
-            requests(r.getLong(0), "add", r.getString(1))
-          }
-          status.unpersist()
-          ()
+          val requestDeltas = ReviewGate.reviewerRequests(status)
+            .select(lit(false).as("is_label"), col("pr"), lit("add").as("op"), col("target").as("value"))
+          labelDeltas.unionByName(requestDeltas).collect()
+            .sortBy(r => (r.getLong(1), r.getString(2), r.getString(3)))
+            .foreach { r => (if (r.getBoolean(0)) store else requests)(r.getLong(1), r.getString(2), r.getString(3)) }
         }
       }
       .start()

@@ -90,11 +90,64 @@ class ReviewStateMachineSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("the stateful operator runs once per micro-batch: state rows = distinct PRs seen") {
+    // Every action on the foreachBatch frame re-executes the
+    // flatMapGroupsWithState plan, and each execution adds the store's
+    // row count to the operator's numRowsTotal again: a sink that acts
+    // on the frame k times reads k × (PRs in state).
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val prs = 1L to 6L
+    val reqCode = prs.map(pr => (pr, s"team_${pr % 2}")).toDF("pr", "team")
+    val reqFac = Seq((1L, "team_f"), (4L, "team_f")).toDF("pr", "team")
+    val reqTech = prs.map(pr => (pr, "team_t")).toDF("pr", "team")
+    val membership = Seq(("team_0", "alice"), ("team_1", "bob"),
+      ("team_f", "frank"), ("team_t", "tina")).toDF("team", "user")
+    val events = MemoryStream[ReviewEvent]
+    val store = new ReviewStateMachine.LabelStore
+    val ckpt = java.nio.file.Files.createTempDirectory("rsm-once").toString
+    val q = ReviewStateMachine.run(events.toDS(), reqCode, reqFac, reqTech,
+      membership, store, ckpt)
+    val batches = Seq(
+      Seq(ReviewEvent(1, "bob", "APPROVED", 1), ReviewEvent(2, "alice", "APPROVED", 2),
+        ReviewEvent(3, "bob", "COMMENTED", 3)),
+      Seq(ReviewEvent(3, "bob", "APPROVED", 4), ReviewEvent(4, "alice", "APPROVED", 5),
+        ReviewEvent(5, "tina", "APPROVED", 6), ReviewEvent(1, "bob", "APPROVED", 1)),
+      Seq(ReviewEvent(6, "alice", "CHANGES_REQUESTED", 7), ReviewEvent(2, "tina", "APPROVED", 8),
+        ReviewEvent(1, "frank", "APPROVED", 9)))
+    try {
+      val seen = collection.mutable.Set.empty[Long]
+      batches.zipWithIndex.foreach { case (b, i) =>
+        events.addData(b)
+        q.processAllAvailable()
+        seen ++= b.map(_.pr)
+        val rows = q.lastProgress.stateOperators(0).numRowsTotal
+        assert(rows == seen.size,
+          s"batch $i: $rows state rows for ${seen.size} PRs — the stateful plan ran more than once")
+      }
+      assert(seen.size == prs.size)
+      // the gate still ran: PR 2 (team_0 via alice, tech via tina,
+      // facilitators vacuous) is green on all three stages
+      assert(store.current.filter(_._1 == 2L) == Set((2L, "codeowners-approved"),
+        (2L, "facilitators-approved"), (2L, "tech-approved")))
+    } finally q.stop()
+  }
+
   test("labelOps application is idempotent (remove tolerated if absent)") {
     val store = new ReviewStateMachine.LabelStore
     store(1, "add", "x"); store(1, "add", "x")
     assert(store.current == Set((1L, "x")))
     store(1, "remove", "x"); store(1, "remove", "x")
     assert(store.current.isEmpty)
+  }
+
+  test("LabelStore.of reads the given PRs' labels only") {
+    val store = new ReviewStateMachine.LabelStore
+    store(1, "add", "x"); store(1, "add", "y"); store(2, "add", "x"); store(3, "add", "z")
+    store(3, "remove", "z")
+    assert(store.of(Seq(1L, 3L, 9L)).toSet == Set((1L, "x"), (1L, "y")))
+    assert(store.of(Nil).isEmpty)
+    assert(store.current == Set((1L, "x"), (1L, "y"), (2L, "x")))
   }
 }
