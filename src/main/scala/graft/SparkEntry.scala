@@ -556,8 +556,10 @@ object SparkEntry {
     * probe's residual AGAINST EACH PROBED CELL (`iprq`). ONE
     * definition so the two compressions can never diverge on the
     * routing they share — the Spark side shares it the same way
-    * ([[graft.ops.Pq.residualsOf]] / [[graft.ops.Pq
-    * .probeCellsRelation]] feed both serves). `queryMod` selects the
+    * ([[graft.ops.Pq.residualsOf]] feeds both serves, and both rank
+    * probes with the one `CellTable.probe` kernel: q79 through
+    * [[graft.ops.Pq.probeCellsRelation]], q82 on the driver through
+    * [[graft.ops.Sq.probeRows]]). `queryMod` selects the
     * probe set (`vec_id % queryMod = 0` under the ProbeCap) — 50 for
     * the q79/q82 family, 100 for q88's hybrid leg, which must share
     * ONE probe set with the BM25 leg it fuses against. */

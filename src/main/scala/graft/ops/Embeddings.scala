@@ -268,7 +268,7 @@ object Embeddings {
     * corrupt every assignment; past the bound, shard cells or switch
     * to double means. The final IEEE division is identical to the
     * oracle's direct-form expression. */
-  private def cellTable(ordered: Seq[Centroid],
+  private[ops] def cellTable(ordered: Seq[Centroid],
                         supers: Seq[Centroid] = Nil,
                         groups: Seq[Seq[Centroid]] = Nil): graft.functions.CellTable = {
     ordered.foreach(c => require(c.n <= MaxCellMembers,

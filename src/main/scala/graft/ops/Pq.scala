@@ -670,7 +670,7 @@ object Pq {
   }
 
   /** Each cell's integer mean grid as a broadcastable relation. */
-  private[ops] def gridDfOf(spark: SparkSession, cents: Seq[Centroid]): DataFrame = {
+  private[graft] def gridDfOf(spark: SparkSession, cents: Seq[Centroid]): DataFrame = {
     import spark.implicits._
     cents.map(c => (c.j, Embeddings.meanGrid(c.s, c.n))).toDF("cell", "grid")
   }
@@ -743,8 +743,9 @@ object Pq {
       k, excludeSelf)
   }
 
-  /** [[ivfPqServe]] from an ALREADY-COLLECTED probe relation (rows of
-    * [[probeCellsRelation]]'s schema): the q85 refine composition runs
+  /** [[ivfPqServe]] from an ALREADY-COLLECTED probe relation (rows
+    * carrying [[probeCellsRelation]]'s columns, such as
+    * [[Sq.probeRows]]): the q85 refine composition runs
     * the routed ADC stage AND a probe-residual refine stage off the
     * same probe ranking — this entry point lets it pay the ranking
     * once (the review-r10 one-evaluation rationale, extended across

@@ -318,17 +318,18 @@ object Retrieval {
     * serve) fused by [[rrfFuse]]. Rides the dataset contract that
     * `documents.doc_id` and `embeddings.vec_id` share one id space
     * (each document has its embedding row) — the probe set is ids
-    * `% queryMod = 0` under [[Pq.ProbeCap]], the SAME set on both
-    * legs, each leg self-excluded (the query doc is not its own
-    * answer — the external-query production contract). perList = 10
-    * candidates per leg, fused top-10.
+    * `% 100 = 0` under [[Pq.ProbeCap]], the SAME set on both legs,
+    * each leg self-excluded (the query doc is not its own answer — the
+    * external-query production contract). 10 candidates per leg, the
+    * ANN leg at nprobe 2, fused top-10: the one configuration the q88
+    * oracle replays.
     *
     * Exact-replayable end to end: BM25's decimal-quantized scores,
     * the q82 exact-integer serve, and the integer RRF grid — the q88
     * oracle replays both legs AND the fusion. */
-  def hybridRrfDocs(spark: SparkSession, dir: String,
-                    k: Int = 10, perList: Int = 10, queryMod: Int = 100,
-                    nprobe: Int = 2): DataFrame = {
+  def hybridRrfDocs(spark: SparkSession, dir: String): DataFrame = {
+    val perList = 10
+    val queryMod = 100
     val docs = Tables.documents(spark, dir)
     val ix = bm25Build(docs)
     val probes = docs
@@ -348,9 +349,9 @@ object Retrieval {
     val lex = Caches.persist(bm25TopK(ix, probes, perList, excludeSelf = true)
       .select(col("query_id"), col("rank"), col("doc_id")))
     val sem = Caches.persist(
-      Sq.ivfSq8TopK(spark, dir, k = perList, queryMod = queryMod, nprobe = nprobe)
+      Sq.ivfSq8TopK(spark, dir, k = perList, queryMod = queryMod, nprobe = 2)
         .select(col("q_id").as("query_id"), col("rank"), col("neighbor_id").as("doc_id")))
-    rrfFuse(lex, sem, k)
+    rrfFuse(lex, sem, k = 10)
   }
 
   /** The per-batch form of [[hybridRrfDocs]] for external requests:
@@ -361,9 +362,8 @@ object Retrieval {
     * through the same [[rrfFuse]] the q88 oracle replays; RRF is
     * per-query, so how requests split into batches cannot change an
     * answer. The legs are not persisted: they are probe-sized here.
-    * It serves q88's configuration, [[hybridRrfDocs]] at its
-    * defaults: 10 candidates per leg, the ANN leg at nprobe 2, fused
-    * top-10.
+    * It serves q88's configuration, the one [[hybridRrfDocs]] runs:
+    * 10 candidates per leg, the ANN leg at nprobe 2, fused top-10.
     *
     * `excludeSelf`: pass true only when the query_ids ARE corpus ids
     * (the q88 conformance situation); an external id matches nothing

@@ -1,20 +1,31 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
-import graft.functions.vecDot
+import graft.functions.{VecDot, vecDot}
 
 /** Scalar quantization (SQ8) — the MIDDLE point of the ANN memory
   * axis, between raw vectors (q45: 256 B/vec at Dim = 64 float) and
   * product quantization (q77/q80: 4 code bytes): one byte PER
   * DIMENSION against a per-dim [min, max] grid learned from the
-  * corpus — 64 B/vec, 4× smaller than raw with far higher fidelity
-  * than PQ (256 levels per dim vs 16-256 levels per 16-dim
-  * subspace). The standard FAISS `SQ8` production shape; the right
-  * default when memory pressure is real but recall must stay near
-  * exact (the measured recall@5 floor here is far above q77's).
+  * corpus, with far higher fidelity than PQ (256 levels per dim vs
+  * 16-256 levels per 16-dim subspace). The standard FAISS `SQ8`
+  * production shape; the right default when memory pressure is real
+  * but recall must stay near exact (the measured recall@5 floor here
+  * is far above q77's).
+  *
+  * Sizes: a code takes 256 values, so a byte-packed layout holds a
+  * vector in 64 B, 4× below 64 floats. This engine does not pack: in
+  * Spark the codes are `array<bigint>`, 8 B per dimension, the same
+  * width as the integer grid `qv` they encode. The "B/vec" figures
+  * below are the packed sizes the plan shape is argued for; the
+  * decoded serve tier ([[decodedTier]]) costs one bigint per row more
+  * than the codes relation.
   *
   * Exact-replayable construction (the q81 oracle replays every step):
   *  - per-dim bounds: min_d / max_d over the quantized integer grid
@@ -34,9 +45,9 @@ import graft.functions.vecDot
   * shuffle carries 64 rows); encoding and decoding are scan-riding
   * projections over dim-bounded literal arrays (128 literals — fixed
   * by Dim, not by corpus or level count); the serve is the q45/q77
-  * broadcast-cross-join shape over the 4×-smaller codes relation,
-  * per-pair work one codegen `vec_dot` cross term (the q·q and r·r
-  * norms precompute per side). */
+  * broadcast-cross-join shape over the codes relation, per-pair work
+  * one codegen `vec_dot` cross term (the q·q and r·r norms precompute
+  * per side). */
 object Sq {
 
   /** Quantization levels — byte codes, FAISS SQ8. */
@@ -98,15 +109,61 @@ object Sq {
             (c * element_at(${sqlArr(rng)}, i + 1)) div ${Levels - 1}L)""")
   }
 
-  /** The probe side of every ROUTED SQ8 serve: each probe row's
-    * residual against its probed cell (q_v) plus its exact norm — ONE
-    * definition shared by q82's serve and q85's refine stage so the
-    * probe residuals can never drift between the compositions. */
-  private def qresOf(probes: DataFrame, sorted: Seq[Embeddings.Centroid]): DataFrame =
-    probes.join(broadcast(Pq.gridDfOf(probes.sparkSession, sorted)), "cell")
-      .select(col("q_id"), col("cell"),
-        zip_with(col("qv"), col("grid"), (a, b) => a - b).as("q_v"))
-      .withColumn("q_n", vecDot(col("q_v"), col("q_v")))
+  /** Schema of [[probeRows]]: the probed-cell relation of
+    * [[Pq.probeCellsRelation]] (q_id, qv, nrm, cell) plus the query's
+    * residual against the probed cell's mean grid (q_v) and its exact
+    * norm (q_n). */
+  private val ProbeSchema: StructType = StructType(Seq(
+    StructField("q_id", LongType),
+    StructField("qv", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("nrm", LongType, nullable = false),
+    StructField("cell", LongType, nullable = false),
+    StructField("q_v", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("q_n", LongType, nullable = false)))
+
+  /** The probe side of every ROUTED SQ8 serve, built on the driver:
+    * one row per (query, probed cell), in [[ProbeSchema]]. The query
+    * batch is broadcast-sized by contract, so it is collected once and
+    * each query's `nprobe` cells are ranked by `CellTable.probe`, the
+    * kernel [[graft.functions.ProbeCells]] evaluates in
+    * [[Pq.probeCellsRelation]], over the same [[Embeddings.cellTable]];
+    * q_v and q_n use the Long arithmetic of the distributed form
+    * (`zip_with(qv, grid, _ - _)` against [[Embeddings.meanGrid]],
+    * then `vec_dot`). A query whose qv is null or holds a null yields
+    * no rows, as `explode` of the null probe array does there
+    * (SqProbeProperties pins the two forms equal). `sorted` must be
+    * cell-id-sorted. */
+  private[graft] def probeRows(queries: DataFrame, sorted: Seq[Embeddings.Centroid],
+                               nprobe: Int): Array[Row] = {
+    require(nprobe >= 1, "nprobe must be positive")
+    val table = Embeddings.cellTable(sorted)
+    val grids = sorted.map(c => c.j -> Embeddings.meanGrid(c.s, c.n)).toMap
+    queries.select(col("q_id"), col("qv")).collect().flatMap { r =>
+      val raw = if (r.isNullAt(1)) null else r.getSeq[java.lang.Long](1)
+      if (raw == null || raw.contains(null)) Array.empty[Row]
+      else {
+        val qv = raw.map(_.longValue).toArray
+        require(qv.length == Embeddings.Dim,
+          s"query ${r.get(0)} has ${qv.length} dims (want ${Embeddings.Dim})")
+        val qa = new GenericArrayData(qv)
+        val nrm = VecDot.computeStrict(qa, qa)
+        table.probe(qa, nrm, nprobe).toLongArray.map { cell =>
+          val g = grids(cell)
+          val qres = Array.tabulate(qv.length)(d => qv(d) - g(d))
+          val ra = new GenericArrayData(qres)
+          new GenericRowWithSchema(
+            Array(r.get(0), qv.toSeq, nrm, cell, qres.toSeq, VecDot.computeStrict(ra, ra)),
+            ProbeSchema): Row
+        }
+      }
+    }
+  }
+
+  /** [[probeRows]] as the broadcastable (q_id, cell, q_v, q_n) side of
+    * the cell equi-join. */
+  private def probeSide(spark: SparkSession, rows: Array[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ProbeSchema)
+      .select(col("q_id"), col("cell"), col("q_v"), col("q_n"))
 
   /** The corpus side of every SQ8 serve: the reconstruction rides the
     * codes scan (row-local) with its exact norm precomputed; `keep`
@@ -117,6 +174,15 @@ object Sq {
     codes.withColumn("rv", decodeCol(mins, maxs))
       .select(Seq(col("vec_id").as("neighbor_id")) ++ keep.map(col) ++
         Seq(col("rv"), vecDot(col("rv"), col("rv")).as("r_n")): _*)
+
+  /** The routed serve tier: (neighbor_id, cell, rv, r_n) decoded from a
+    * routed codes relation ([[ivfSq8Codes]]). A serving deployment
+    * persists this instead of the codes, so its batches never re-run
+    * the decode, an interpreted `transform` that falls back from
+    * codegen; the cache holds one bigint per row more than the codes
+    * relation. [[ivfSq8ServeDecoded]] serves it. */
+  def decodedTier(codes: DataFrame, mins: Seq[Long], maxs: Seq[Long]): DataFrame =
+    decoded(codes, mins, maxs, keep = Seq("cell"))
 
   /** The ONE ranking tail of every SQ8 serve ([[Pq.adcTail]]'s
     * counterpart): `pairs` carries (q_id, neighbor_id, q_v, q_n, rv,
@@ -332,44 +398,40 @@ object Sq {
   }
 
   /** The q82 SERVE stage: probe each query's `nprobe` nearest cells
-    * (fused [[graft.functions.ProbeCells]] ranking via
-    * [[Pq.probeCellsRelation]] — ONE definition with q79, so the
-    * probed set cannot drift between the compressions), build the
-    * query's per-probed-cell RESIDUAL, and resolve est through the
-    * cell equi-join against `codes` with the probed-cell set riding
-    * the codes scan as a static filter. `queries` carries (q_id, qv)
-    * on the corpus integer grid ([[Pq.quantizeQueries]] for external
-    * embeddings). ONE definition shared by batch q82 and the
-    * streaming seam, so their agreement is an identity. */
+    * (the [[graft.functions.ProbeCells]] ranking, on the driver
+    * through [[probeRows]]), build the query's per-probed-cell
+    * RESIDUAL, and resolve est through the cell equi-join against the
+    * decoded `codes` with the probed-cell set riding the codes scan as
+    * a static filter (it pushes below the decode). `queries` carries
+    * (q_id, qv) on the corpus integer grid ([[Pq.quantizeQueries]] for
+    * external embeddings). The same kernel as [[ivfSq8ServeDecoded]]
+    * over [[decodedTier]]`(codes)`, so batch q82 and the streaming
+    * seam agree by identity. */
   def ivfSq8Serve(codes: DataFrame, cents: Seq[Embeddings.Centroid],
                   mins: Seq[Long], maxs: Seq[Long],
                   queries: DataFrame, k: Int = 5, nprobe: Int = 2,
                   excludeSelf: Boolean = false): DataFrame =
-    sqTail(ivfSq8Pairs(codes, cents, mins, maxs, queries, nprobe, excludeSelf), k)
+    ivfSq8ServeDecoded(decodedTier(codes, mins, maxs), cents, queries, k, nprobe, excludeSelf)
 
-  /** The candidate-pair half of every routed SQ8 serve — ONE
-    * evaluation of the probe ranking (the q79 rationale: the probe
-    * relation is broadcast-sized by contract, so collect it once and
-    * derive both the probed-cell static filter and the query side
-    * from the local rows), the cell equi-join of decoded
-    * reconstructions against per-probed-cell query residuals.
-    * [[ivfSq8Serve]] ranks these pairs to top-k;
+  /** [[ivfSq8Serve]] over an already-decoded tier ([[decodedTier]]). */
+  def ivfSq8ServeDecoded(tier: DataFrame, cents: Seq[Embeddings.Centroid],
+                         queries: DataFrame, k: Int = 5, nprobe: Int = 2,
+                         excludeSelf: Boolean = false): DataFrame =
+    sqTail(ivfSq8Pairs(tier, cents, queries, nprobe, excludeSelf), k)
+
+  /** The candidate-pair half of every routed SQ8 serve: ONE driver-side
+    * evaluation of the probe ranking ([[probeRows]]) yields both the
+    * probed-cell static filter and the broadcast query side, which
+    * meets the decoded `tier` in the cell equi-join.
+    * [[ivfSq8ServeDecoded]] ranks these pairs to top-k;
     * [[ivfSq8RangeServe]] keeps every pair within a radius. */
-  private def ivfSq8Pairs(codes: DataFrame, cents: Seq[Embeddings.Centroid],
-                          mins: Seq[Long], maxs: Seq[Long],
+  private def ivfSq8Pairs(tier: DataFrame, cents: Seq[Embeddings.Centroid],
                           queries: DataFrame, nprobe: Int,
                           excludeSelf: Boolean): DataFrame = {
-    val spark = queries.sparkSession
-    val sorted = cents.sortBy(_.j)
-    val probesPlan = Pq.probeCellsRelation(queries, sorted, nprobe)
-    val probeRows = probesPlan.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val probedCells = probeRows.map(_.getAs[Long]("cell")).distinct.toSeq
-    val qres = qresOf(probes, sorted)
-    val corpus = decoded(codes.filter(col("cell").isin(probedCells: _*)),
-      mins, maxs, keep = Seq("cell"))
-    val pairs = corpus.join(broadcast(qres), Seq("cell"))
+    val rows = probeRows(queries, cents.sortBy(_.j), nprobe)
+    val probedCells = rows.map(_.getLong(3)).distinct.toSeq
+    val pairs = tier.filter(col("cell").isin(probedCells: _*))
+      .join(broadcast(probeSide(queries.sparkSession, rows)), Seq("cell"))
     if (excludeSelf) pairs.filter(col("neighbor_id") =!= col("q_id")) else pairs
   }
 
@@ -425,7 +487,7 @@ object Sq {
                        queries: DataFrame, tau: Long, nprobe: Int = 2,
                        excludeSelf: Boolean = false): DataFrame = {
     require(tau >= 0, "radius must be non-negative")
-    withEst(ivfSq8Pairs(codes, cents, mins, maxs, queries, nprobe, excludeSelf))
+    withEst(ivfSq8Pairs(decodedTier(codes, mins, maxs), cents, queries, nprobe, excludeSelf))
       .filter(col("est") <= tau)
       .select(col("q_id"), col("neighbor_id"), col("est"))
       .orderBy(col("q_id"), col("est"), col("neighbor_id"))
@@ -693,8 +755,9 @@ object Sq {
     * definition shared by the batch q85 and the
     * [[graft.stream.ServeLoop]] serve, so batch/stream agreement is an
     * identity (StreamingRefineServeSpec). The probe ranking is paid
-    * ONCE and feeds all three uses: stage 1's probed-cell filter + ADC
-    * tables ([[Pq.ivfPqServeFrom]]), stage 2's per-probed-cell query
+    * ONCE, on the driver ([[probeRows]]), and feeds all three uses:
+    * stage 1's probed-cell filter + ADC tables
+    * ([[Pq.ivfPqServeFrom]]), stage 2's per-probed-cell query
     * residuals, and stage 2's own static probed-cell filter. */
   def ivfPqSq8RefineServe(pqCodes: DataFrame, sqCodes: DataFrame,
                           cents: Seq[Embeddings.Centroid],
@@ -704,25 +767,18 @@ object Sq {
                           nprobe: Int = 2,
                           excludeSelf: Boolean = false): DataFrame = {
     require(r >= k, s"refine candidate budget r=$r must cover k=$k")
-    val spark = queries.sparkSession
     val sorted = cents.sortBy(_.j)
-    val probesPlan = Pq.probeCellsRelation(queries, sorted, nprobe)
-    val probeRows = probesPlan.collect()
-    val probedCells = probeRows.map(_.getAs[Long]("cell")).distinct.toSeq
+    val rows = probeRows(queries, sorted, nprobe)
+    val probedCells = rows.map(_.getLong(3)).distinct.toSeq
     // stage 1: routed ADC candidate generation — q79's serve at k = r
-    val cands = Pq.ivfPqServeFrom(pqCodes, sorted, books, probeRows,
-        probesPlan.schema, r, excludeSelf)
+    val cands = Pq.ivfPqServeFrom(pqCodes, sorted, books, rows, ProbeSchema, r, excludeSelf)
       .select(col("q_id"), col("neighbor_id"))
     // stage 2: each probe's residual against each PROBED cell (the
     // q82 probe side) meets the candidates' SQ8 reconstructions
     // through candidate-sized equi-joins
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val qres = qresOf(probes, sorted)
-    val nb = decoded(sqCodes.filter(col("cell").isin(probedCells: _*)),
-      mins, maxs, keep = Seq("cell"))
+    val nb = decodedTier(sqCodes, mins, maxs).filter(col("cell").isin(probedCells: _*))
     sqTail(nb.join(broadcast(cands), Seq("neighbor_id"))
-      .join(broadcast(qres), Seq("q_id", "cell")), k)
+      .join(broadcast(probeSide(queries.sparkSession, rows)), Seq("q_id", "cell")), k)
   }
 
   /** Persist the learned bounds as a parquet artifact (d, mn, mx) —

@@ -6,20 +6,24 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming IVF+SQ8 serving, the deployment shape of q82: load the
   * coarse quantizer ([[graft.ops.Embeddings.saveQuantizer]]) and the
-  * residual bounds ([[graft.ops.Sq.saveBounds]]), build and persist
-  * the routed 4×-compressed codes relation once, then run every
-  * micro-batch through [[ServeLoop]] with the
-  * [[graft.ops.Sq.ivfSq8Serve]] kernel the q82 oracle certifies
-  * (StreamingIvfSqServeSpec pins stream ≡ batch).
+  * residual bounds ([[graft.ops.Sq.saveBounds]]), build the routed
+  * codes relation, decode it and persist the decoded tier once
+  * ([[graft.ops.Sq.decodedTier]]: `array<bigint>` reconstructions,
+  * one bigint per row more than the codes), then run every
+  * micro-batch through [[ServeLoop]] with the kernel of
+  * [[graft.ops.Sq.ivfSq8Serve]], which the q82 oracle certifies
+  * (StreamingIvfSqServeSpec pins stream ≡ batch). A batch does only
+  * per-query work: the probe ranking on the driver and the cell
+  * equi-join against the cached tier; it never decodes.
   *
   * This one serve keeps a named entry point because the `search_serve`
   * benchmark drives it; every other kernel is served by calling
   * [[ServeLoop.run]] directly.
   *
-  * At 100 TB the codes relation never moves: each micro-batch
-  * broadcasts probe rows that equi-join only their nprobe cells'
-  * codes (persisted partitioned by cell, the probed cells prune at
-  * listing time — StorageSpec proves it through this path). If the
+  * At 100 TB the tier never moves: each micro-batch broadcasts probe
+  * rows that equi-join only their nprobe cells' rows (persisted
+  * partitioned by cell, the probed cells prune at listing time —
+  * StorageSpec proves it for the codes through the same kernel). If the
   * corpus drifts past the bounds artifact, encoding saturates at the
   * grid edge ([[graft.ops.Sq.encode]]): the byte codes stay valid and
   * recall degrades at the drifted edges, the signal to re-learn the
@@ -49,9 +53,9 @@ object StreamingIvfSqServe {
     val (mins, maxs) = Sq.loadBounds(spark, boundsPath)
     val tier = if (selector.isDefined) Sq.ivfSq8CodesWithLabel(spark, corpusDir, cents, mins, maxs)
                else Sq.ivfSq8Codes(spark, corpusDir, cents, mins, maxs)
-    val codes = Caches.persist(selector.map(tier.filter).getOrElse(tier))
+    val decoded = Caches.persist(Sq.decodedTier(selector.map(tier.filter).getOrElse(tier), mins, maxs))
     ServeLoop.run(queries, checkpointDir)(batch =>
-      Sq.ivfSq8Serve(codes, cents, mins, maxs, Pq.quantizeQueries(batch), k, nprobe, excludeSelf)
+      Sq.ivfSq8ServeDecoded(decoded, cents, Pq.quantizeQueries(batch), k, nprobe, excludeSelf)
     )(onBatch)
   }
 }

@@ -1,9 +1,20 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.collection.mutable
+
 import graft.ops.{Caches, Embeddings, Sq}
 import graft.stream.StreamingIvfSqServe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.expressions.ArrayTransform
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
-import java.nio.file.Files
 
 /** The IVF+SQ8 serving seam: both artifacts (coarse quantizer +
   * residual bounds) round-trip, and a stream of query vectors scored
@@ -72,5 +83,75 @@ class StreamingIvfSqServeSpec extends SparkSpec with VectorServeFixtures {
     Caches.releaseAll(spark)
     assertRestartMatchesBatch(batch, probeVectors())(
       StreamingIvfSqServe.run(spark, _, SfDir, qArtifact, bArtifact, _, k = 5, excludeSelf = true)(_))
+  }
+
+  /** Spark jobs started per micro-batch of the streaming query
+    * `queryId`, read from the job properties every micro-batch job
+    * carries. `run` does the work; a marker job afterwards, whose end
+    * the listener must see, drains the listener bus. */
+  private def jobsPerBatch(run: => String): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val started = mutable.ArrayBuffer.empty[(String, String)]
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      private var marker = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p != null && p.getProperty("graft.marker") != null) marker = e.jobId
+        else if (p != null) started.synchronized {
+          started += ((p.getProperty("sql.streaming.queryId"), p.getProperty("streaming.sql.batchId")))
+        }
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (e.jobId == marker) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val queryId = run
+      sc.setLocalProperty("graft.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.marker", null)
+      assert(drained.await(60, TimeUnit.SECONDS), "the listener bus did not drain")
+      started.synchronized(started.filter(_._1 == queryId).groupBy(_._2).map { case (b, js) => b -> js.size })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a serve micro-batch runs at most 6 jobs and never decodes the codes") {
+    // the decoded tier is persisted once per loop and the probe ranking
+    // runs on the driver, so a batch's plan reads the cached (rv, r_n)
+    // tier directly: no `transform` over `codes` above the cache scan
+    assumeTestdata()
+    val s = spark
+    import s.implicits._
+    val (_, _, _, qArtifact, bArtifact) = artifacts("ivfsq-jobs")
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val queries = probeVectors()
+    val batches = queries.grouped((queries.length + 2) / 3).toSeq
+    val perBatch = jobsPerBatch {
+      val input = MemoryStream[(Long, Seq[Float])](implicitly[Encoder[(Long, Seq[Float])]], spark.sqlContext)
+      val q = StreamingIvfSqServe.run(spark, input.toDF().toDF("q_id", "embedding"), SfDir,
+          qArtifact, bArtifact, Files.createTempDirectory("ivfsq-jobs-ckpt").toString, k = 5) { ranked =>
+        assert(ranked.collect().nonEmpty)
+        plans += ranked.queryExecution.executedPlan
+      }
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() } finally q.stop()
+      q.id.toString
+    }
+    Caches.releaseAll(spark)
+    assert(batches.size == 3 && perBatch.size == 3, s"jobs by micro-batch: $perBatch")
+    // batch 0 also fills the cache; the later ones are the steady state
+    assert(perBatch.filter(_._1 != "0").values.forall(_ <= 6),
+      s"jobs by micro-batch (want at most 6 after batch 0): $perBatch")
+    object Aqe extends AdaptiveSparkPlanHelper
+    assert(plans.size == batches.size)
+    plans.foreach { plan =>
+      val nodes = Aqe.collect(plan) { case p => p }
+      val decodes = nodes.flatMap(_.expressions).flatMap(_.collect {
+        case t: ArrayTransform if t.references.exists(_.name == "codes") => t
+      })
+      assert(decodes.isEmpty, s"a serve batch decodes the codes:\n$plan")
+      assert(nodes.exists {
+        case scan: InMemoryTableScanExec => scan.output.exists(_.name == "rv")
+        case _ => false
+      }, s"a serve batch does not scan the cached decoded tier:\n$plan")
+    }
   }
 }
