@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One query's raw bench samples: start offset (seconds since the
   * first timed query — the BENCH_DETAIL "t0" burst axis), the two
@@ -13,32 +13,33 @@ private[graft] case class QSample(name: String, t0: Double, first: Double,
 }
 
 object Bench {
+  /** The measured scale factor, and that of the untimed warm loop ([[warm]]). */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private[graft] def warmDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+
+  /** Seconds to build `run` and write it to the noop sink, which
+    * evaluates every column and the final sort (count() would let
+    * EliminateSorts/pruning skip most of the work). */
+  private[graft] def timed(run: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    run.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The untimed warm loop: every query once at `dir`, then every
+    * session cache released; returns its seconds. */
+  private[graft] def warm(spark: SparkSession, dir: String): Double = {
+    val w0 = System.nanoTime()
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) => timed(fn(spark, dir)) }
+    graft.ops.Caches.releaseAll(spark)
+    spark.catalog.clearCache()
+    (System.nanoTime() - w0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE coalesce post-shuffle partitions by SIZE instead of
-      // pinning reducer count to the core count: at bench SF most
-      // shuffles carry a few MB and 32-task reduce stages are pure
-      // scheduling floor; at 100 TB the advisory size (64 MB default)
-      // keeps full fan-out. This is the setting Spark's own docs
-      // recommend for clusters (parallelismFirst=true is the
-      // regression-safe interactive default).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // 4m (not the 64m default): local[32] reduce stages are CPU-bound,
-      // not IO-bound — a 15 MB shingle-join shuffle coalesced to ONE
-      // partition serializes the quadratic pair scoring (q20 +1.1 s);
-      // 4m keeps such stages at a handful of tasks while still
-      // collapsing the KB-sized ones that were the scheduling floor
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Peak-memory canary (VERDICT r12 #7 — prove the 8 GB-heap claim
     // is a floor with a number, not the absence of an OOM): the max
     // single-task peak EXECUTION memory across the whole run, from the
@@ -79,13 +80,7 @@ object Bench {
     // 10-20 s of JVM cold-start (BENCH_r03: q29 = 24.0 s cold vs 0.83 s
     // warm as q27 — same computation). Warm-up failures fail the bench:
     // the same query would fail timed.
-    val w0 = System.nanoTime()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-    }
-    graft.ops.Caches.releaseAll(spark)
-    spark.catalog.clearCache()
-    val warmup = (System.nanoTime() - w0) / 1e9
+    val warmup = warm(spark, warmDir)
     // Measurement-SF settling pass (VERDICT r11 #6): the sf0.001 warm
     // loop JITs the code paths but not the ALLOCATION REGIME — at
     // sf1/sf10 the first timed query still absorbed heap growth + GC
@@ -96,17 +91,13 @@ object Bench {
     // needing a first-query box-noise footnote. One query only: it
     // settles the JVM for all; warming the whole surface at sf10 would
     // double the bench.
-    val ws0 = System.nanoTime()
-    SparkEntry.queries.toSeq.sortBy(_._1).headOption.foreach { case (_, fn) =>
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    }
+    val warmupSf = SparkEntry.queries.toSeq.sortBy(_._1).headOption
+      .fold(0.0) { case (_, fn) => timed(fn(spark, sfDir)) }
     graft.ops.Caches.releaseAll(spark)
     spark.catalog.clearCache()
-    val warmupSf = (System.nanoTime() - ws0) / 1e9
-    // Timed runs in sorted name order (stable round-over-round diffs).
-    // noop sink: full evaluation of every column and the final sort
-    // (count() would let EliminateSorts/pruning skip most of the work);
-    // a failing query fails the bench — no silent -1s.
+    // Timed runs in sorted name order (stable round-over-round diffs)
+    // into the noop sink ([[timed]]); a failing query fails the bench —
+    // no silent -1s.
     // Each query runs TWICE back-to-back and the per-query MINIMUM is
     // graded: at ±20-30% machine noise with multi-second contention
     // spikes (BENCH_r04: a cached 1.7 s plan sampled at 8.8 s on its
@@ -163,17 +154,10 @@ object Bench {
     val tBase = System.nanoTime()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val f0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val first = (System.nanoTime() - f0) / 1e9
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val second = (System.nanoTime() - t0) / 1e9
+      val first = timed(fn(spark, sfDir))
+      val second = timed(fn(spark, sfDir))
       val minTwo = math.min(first, second)
-      val third = guards.get(name).filter(g => minTwo > 2 * g).map { _ =>
-        val a0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - a0) / 1e9
-      }
+      val third = guards.get(name).filter(g => minTwo > 2 * g).map(_ => timed(fn(spark, sfDir)))
       graft.ops.Caches.releaseAll(spark)
       QSample(name, (f0 - tBase) / 1e9, first, second, third)
     }
@@ -207,18 +191,11 @@ object Bench {
     val mismatch = BenchFormat.guardSfMismatch(allSurvivors.size, results.size, atGuardSf)
     val preSurvivors = if (mismatch) Seq.empty else allSurvivors
     val (warmupEnd, post) = if (preSurvivors.isEmpty) (None, Map.empty[String, Double]) else {
-      val we0 = System.nanoTime()
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-      }
-      graft.ops.Caches.releaseAll(spark)
-      spark.catalog.clearCache()
-      val settled = (System.nanoTime() - we0) / 1e9
+      val settled = warm(spark, warmDir)
       val posts = preSurvivors.map { r =>
-        val p0 = System.nanoTime()
-        SparkEntry.queries(r.name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val p = timed(SparkEntry.queries(r.name)(spark, sfDir))
         graft.ops.Caches.releaseAll(spark)
-        r.name -> (System.nanoTime() - p0) / 1e9
+        r.name -> p
       }
       (Some(settled), posts.toMap)
     }
@@ -393,13 +370,19 @@ private[graft] object BenchFormat {
   def postMap(entries: Seq[(String, Double)]): String =
     jmap(entries.sortBy(_._1).take(AdjCap).map { case (n, v) => n.take(3) -> v })
 
-  /** A JSON STRING value with quotes/backslashes escaped — used for
-    * every path interpolated into the bench JSONs (an unescaped quote
-    * in SPARK_GRAFT_SF_DIR would corrupt the line). */
+  /** A JSON STRING value with quotes, backslashes and every control
+    * char (< 0x20) escaped — used for every path interpolated into the
+    * bench JSONs (an unescaped quote in SPARK_GRAFT_SF_DIR would
+    * corrupt the line) and for [[Verify]]'s oracle_sql.json (a tab or
+    * CR in an oracle's SQL would make the driver's json.load fail). */
   def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
 

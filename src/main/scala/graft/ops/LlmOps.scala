@@ -130,7 +130,7 @@ object LlmOps {
     // single-split driver layout the cached shingle relation has ONE
     // partition, the self-join plans as a broadcast hash join, and the
     // ENTIRE quadratic candidate expansion + (d1,d2) partial
-    // aggregation runs on one task — StageProfile measured 1.4-1.8 s
+    // aggregation runs on one task — Probe's stage table read 1.4-1.8 s
     // single-threaded (shW = 1.13M pair rows) under every steady run
     // of q20/q32/q35/q42/q44/q97. Hash-repartitioning the PROBE side
     // by doc_id parallelizes the expansion without touching the cache

@@ -68,8 +68,9 @@ object Mmr {
   }
 
   /** The per-batch form of [[mmrRerankTopK]] for external queries:
-    * `queries` carries (q_id, embedding); `codes` is the routed
-    * IVF+SQ8 tier built from the `cents`/`mins`/`maxs` artifacts and
+    * `queries` carries (q_id, embedding); `tier` is the decoded routed
+    * IVF+SQ8 tier ([[Sq.decodedTier]]) built from the
+    * `cents`/`mins`/`maxs` artifacts, so a batch never decodes, and
     * `exact` the (vec_id, qv) grid tier, both persisted by the
     * caller. The batch's own quantized vectors are the query relation
     * of [[mmrSelectWith]], so external ids never need corpus rows. MMR
@@ -79,11 +80,10 @@ object Mmr {
     *
     * `excludeSelf`: pass true only when the q_ids ARE corpus vec_ids
     * (the q92 conformance situation). */
-  def mmrServe(codes: DataFrame, exact: DataFrame, cents: Seq[Embeddings.Centroid],
-               mins: Seq[Long], maxs: Seq[Long], queries: DataFrame,
-               excludeSelf: Boolean = false): DataFrame = {
+  def mmrServe(tier: DataFrame, exact: DataFrame, cents: Seq[Embeddings.Centroid],
+               queries: DataFrame, excludeSelf: Boolean = false): DataFrame = {
     val probes = Pq.quantizeQueries(queries)
-    val cands = Sq.ivfSq8Serve(codes, cents, mins, maxs, probes,
+    val cands = Sq.ivfSq8ServeDecoded(tier, cents, probes,
         k = Pq.RefineR, nprobe = 2, excludeSelf = excludeSelf)
       .select(col("q_id"), col("neighbor_id"))
     mmrSelectWith(probes.select(col("q_id"), col("qv").as("q_v")), exact, cands, k = 5)

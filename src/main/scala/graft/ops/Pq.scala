@@ -331,7 +331,7 @@ object Pq {
     // encode rides the codes scan, and per-row cost is M fused argmin
     // loops ∝ nCodes — at the kFor-derived K = 128-256 (q80) that
     // stage measured 1.2 s on ONE task over the single-split layout
-    // (StageProfile st2142). Fan the encode input out only past the
+    // (Probe's stage table, st2142). Fan the encode input out only past the
     // pinned K (q77/q83/q91 stay byte-identical — their encode is
     // 8-16× cheaper and the extra exchange was the measured r15 loss
     // on small serves); size-aware width, no-op on ≥ cores splits.
@@ -517,7 +517,7 @@ object Pq {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
     val books = trainCodebooks(vecs, iters, nCodes)
     // same production-K encode fan-out as pqTopKOn (q98's stage-1 ADC
-    // serve at kFor-K measured 1.25 s single-task — StageProfile
+    // serve at kFor-K measured 1.25 s single-task — Probe's stage table,
     // st2329); the pinned-K q83 path is untouched
     val codes = encode(if (nCodes > K) Tables.fanOut(vecs) else vecs, books)
     val probes = vecs

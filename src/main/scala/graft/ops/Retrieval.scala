@@ -86,7 +86,7 @@ object Retrieval {
     // serve's (query_id, doc_id) roll-up keeps its exchange, but its
     // map-side PARTIAL aggregation collapses fully only when all of a
     // doc's term rows sit in one partition. On the term-clustered
-    // layout the idf join leaves behind, they never do — StageProfile
+    // layout the idf join leaves behind, they never do — Probe's stage table
     // measured the matched-stream exchange carrying 1.3M rows/17 MB
     // (q71/q95, ≈ zero collapse over 250k (q,d) groups) and 2.9M/40 MB
     // (q93 pass 2). One doc_id repartition at BUILD time (the index
@@ -356,8 +356,9 @@ object Retrieval {
 
   /** The per-batch form of [[hybridRrfDocs]] for external requests:
     * `queries` carries (query_id, query, embedding); `ix` is a loaded
-    * BM25 index and `codes` the routed IVF+SQ8 tier built from the
-    * `cents`/`mins`/`maxs` artifacts, both persisted by the caller.
+    * BM25 index and `tier` the decoded routed IVF+SQ8 tier
+    * ([[Sq.decodedTier]]) built from the `cents`/`mins`/`maxs`
+    * artifacts, both persisted by the caller, so a batch never decodes.
     * Both legs run the kernels the q71/q82 oracles certify and fuse
     * through the same [[rrfFuse]] the q88 oracle replays; RRF is
     * per-query, so how requests split into batches cannot change an
@@ -368,13 +369,12 @@ object Retrieval {
     * `excludeSelf`: pass true only when the query_ids ARE corpus ids
     * (the q88 conformance situation); an external id matches nothing
     * on either leg and is unaffected. */
-  def hybridServe(ix: Bm25Index, codes: DataFrame, cents: Seq[Embeddings.Centroid],
-                  mins: Seq[Long], maxs: Seq[Long], queries: DataFrame,
-                  excludeSelf: Boolean = false): DataFrame = {
+  def hybridServe(ix: Bm25Index, tier: DataFrame, cents: Seq[Embeddings.Centroid],
+                  queries: DataFrame, excludeSelf: Boolean = false): DataFrame = {
     val perList = 10
     val lex = bm25TopK(ix, queries.select(col("query_id"), col("query")), perList, excludeSelf)
       .select(col("query_id"), col("rank"), col("doc_id"))
-    val sem = Sq.ivfSq8Serve(codes, cents, mins, maxs,
+    val sem = Sq.ivfSq8ServeDecoded(tier, cents,
         Pq.quantizeQueries(queries.select(col("query_id").as("q_id"), col("embedding"))),
         k = perList, nprobe = 2, excludeSelf = excludeSelf)
       .select(col("q_id").as("query_id"), col("rank"), col("neighbor_id").as("doc_id"))

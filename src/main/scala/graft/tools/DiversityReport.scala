@@ -13,8 +13,8 @@ import graft.BenchFormat.num
   * per geometry:
   *
   *   - cluster coverage: mean over probes of |distinct labels| among
-  *     the top-5 (labels = ground-truth clusters on
-  *     [[ClusteredEmbeddings]] corpora);
+  *     the top-5 (labels = ground-truth clusters of a clustered
+  *     corpus, such as the test fixture `ClusteredEmbeddings` writes);
   *   - metric spread: mean over probes of the MIN pairwise exact
   *     integer distance inside the returned set (the quantity MMR's
   *     penalty term maximizes greedily).
@@ -43,16 +43,7 @@ object DiversityReport {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: DiversityReport <dir-with-embeddings.parquet>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try {
       println(report(spark, args(0)))
       println(coverageVsR(spark, args(0)))

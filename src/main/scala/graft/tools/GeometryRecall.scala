@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * against the exact brute ranking
   * (q45) on ONE corpus directory, and emit a single JSON line of
   * recall@5 numbers. Run it on a driver-testdata sf dir (the
-  * near-isotropic adversarial geometry) and on a
-  * [[ClusteredEmbeddings]] output (the production-like clustered
-  * geometry) and the difference IS the measured geometry consequence
+  * near-isotropic adversarial geometry) and on a clustered corpus
+  * such as the test fixture `ClusteredEmbeddings` writes (the
+  * production-like clustered geometry) and the difference IS the measured geometry consequence
   * SCALING used to assert.
   *
   * Recall is computed through JOINS (inner join on (q_id,
@@ -30,17 +30,7 @@ object GeometryRecall {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: GeometryRecall <dir-with-embeddings.parquet>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try println(report(spark, args(0)))
     finally spark.stop()
   }

@@ -32,17 +32,7 @@ object RecallReport {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RecallReport <sfDir> [serve] [targetCell ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try {
       val out =
         if (args.length >= 2 && args(1) == "serve") {

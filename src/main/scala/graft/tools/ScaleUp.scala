@@ -36,15 +36,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleUp <srcSfDir> <dstDir> <factor>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try run(spark, args(0), args(1), args(2).toInt)
     finally spark.stop()
   }
@@ -60,12 +52,12 @@ object ScaleUp {
     // resolving into the WRONG copy, and garbage scaling measurements
     // with no error. Scale from the ORIGINAL source instead (factor
     // 100 of sf0.1, not factor 10 of a factor-10 output).
-    val keyCols = Seq(
+    val shiftOnly = Seq(
       "customer" -> Seq("c_custkey"), "supplier" -> Seq("s_suppkey"),
       "part" -> Seq("p_partkey"), "orders" -> Seq("o_orderkey", "o_custkey"),
       "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
-      "events" -> Seq("event_id", "user_id"),
-      "documents" -> Seq("doc_id"), "embeddings" -> Seq("vec_id"))
+      "events" -> Seq("event_id", "user_id"))
+    val keyCols = shiftOnly ++ Seq("documents" -> Seq("doc_id"), "embeddings" -> Seq("vec_id"))
     keyCols.foreach { case (t, ks) =>
       val row = spark.read.parquet(s"$src/$t.parquet")
         .select(ks.map(k => max(col(k)).as(k)): _*).collect()(0)
@@ -88,12 +80,7 @@ object ScaleUp {
     for (t <- Seq("region", "nation"))
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    rep("customer")(shifted(_, _, "c_custkey"))
-    rep("supplier")(shifted(_, _, "s_suppkey"))
-    rep("part")(shifted(_, _, "p_partkey"))
-    rep("orders")(shifted(_, _, "o_orderkey", "o_custkey"))
-    rep("lineitem")(shifted(_, _, "l_orderkey", "l_partkey", "l_suppkey"))
-    rep("events")(shifted(_, _, "event_id", "user_id"))
+    shiftOnly.foreach { case (t, ks) => rep(t)(shifted(_, _, ks: _*)) }
     rep("documents") { (df, i) =>
       if (i == 0) df
       else shifted(df, i, "doc_id")

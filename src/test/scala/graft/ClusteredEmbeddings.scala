@@ -1,4 +1,4 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * corpus — the ADVERSARIAL geometry for IVF-family routing, where
   * cell populations are thin shells and probing few cells costs real
   * recall. Real embedding corpora are CLUSTERED (semantic structure),
-  * and routing is claimed to behave far better there; this tool makes
+  * and routing is claimed to behave far better there; this generator makes
   * that claim MEASURABLE instead of asserted by writing a
   * `embeddings.parquet` (same schema: vec_id int64, embedding
   * list<float>, label int32) drawn from a mixture of well-separated
@@ -28,10 +28,9 @@ import org.apache.spark.sql.functions._
   * clustered, not degenerate-separable. `label` = the true cluster,
   * so classification probes (q78) read against ground truth.
   *
-  * `runMain graft.tools.ClusteredEmbeddings <dstDir> <n> [nClusters [sep [sigma [seed]]]]`
-  * NOT part of the query surface — a measurement tool like ScaleUp;
-  * outputs land in an untracked scratch dir and feed
-  * [[GeometryRecall]]. */
+  * A test fixture, not part of the query surface: [[run]] writes a
+  * corpus directory that [[graft.tools.GeometryRecall]] and
+  * [[graft.tools.DiversityReport]] read. */
 object ClusteredEmbeddings {
 
   val Dim: Int = graft.ops.Embeddings.Dim
@@ -64,26 +63,6 @@ object ClusteredEmbeddings {
     val c = cs((vecId % cs.size).toInt)
     Array.tabulate(Dim)(d =>
       (c(d) + sigma * gauss(splitmix64(seed ^ vecId) ^ d.toLong)).toFloat)
-  }
-
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: ClusteredEmbeddings <dstDir> <n> [nClusters [sep [sigma [seed]]]]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try run(spark, args(0), args(1).toLong,
-      args.lift(2).map(_.toInt).getOrElse(20),
-      args.lift(3).map(_.toDouble).getOrElse(0.3),
-      args.lift(4).map(_.toDouble).getOrElse(0.15),
-      args.lift(5).map(_.toLong).getOrElse(20260814L))
-    finally spark.stop()
   }
 
   /** The generator on a caller-owned session (ClusteredEmbeddingsSpec

@@ -1,6 +1,6 @@
 package graft
 
-import graft.tools.{ClusteredEmbeddings, GeometryRecall}
+import graft.tools.GeometryRecall
 
 /** The clustered-geometry fixture (VERDICT r10 #3): deterministic
   * like the rest of ScaleUp, schema-compatible with the driver's

@@ -114,6 +114,13 @@ class DriverContractSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("streaming loop outside ServeLoop:\n", "\n", ""))
   }
 
+  test("one session builder: SparkSession.builder only in GraftSession") {
+    // Bench, Verify and every tool run on GraftSession(); a second
+    // builder is a copied session config that drifts from it
+    val offenders = mainSourceHits("SparkSession\\.builder".r, Set("graft/GraftSession.scala"))
+    assert(offenders.isEmpty, offenders.mkString("session builder outside GraftSession:\n", "\n", ""))
+  }
+
   /** `file:line: text` of every `src/main/scala` line matching
     * `pattern`, skipping the `allowed` files (paths relative to the
     * tree, which must contain them all). */

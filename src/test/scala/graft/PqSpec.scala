@@ -413,7 +413,7 @@ class PqSpec extends SparkSpec {
     // centers spread per-dim variance unevenly (between-cluster
     // variance differs per dim), unlike the near-isotropic testdata
     val t = java.nio.file.Files.createTempDirectory("pqbal").toString
-    graft.tools.ClusteredEmbeddings.run(spark, t, n = 500, nClusters = 10)
+    ClusteredEmbeddings.run(spark, t, n = 500, nClusters = 10)
     def sets(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
         .map { case (q, g) => q -> g.map(_._2).toSet }
@@ -453,7 +453,7 @@ class PqSpec extends SparkSpec {
     // each on ~1 effective dim. Deterministic splitmix64 fixture (the
     // ClusteredEmbeddings discipline).
     import spark.implicits._
-    val sm = graft.tools.ClusteredEmbeddings
+    val sm = ClusteredEmbeddings
     val n = 400L
     val amps = IndexedSeq(1000L, 950L, 900L, 850L)
     def vec(id: Long): Seq[Long] = (0 until Embeddings.Dim).map { d =>

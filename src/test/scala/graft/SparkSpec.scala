@@ -4,6 +4,10 @@ import java.nio.file.Files
 
 import graft.ops.{Caches, Tables}
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ArrayTransform
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
@@ -129,6 +133,29 @@ trait VectorServeFixtures { this: SparkSpec =>
   def byRank(rows: Seq[Row]): Map[(Long, Long), (Long, Long)] = rows.map(r =>
     (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
       (r.getAs[Long]("neighbor_id"), r.getAs[Long]("est"))).toMap
+
+  /** Wrap a serve's `start` so the executed plan of every micro-batch
+    * (read after the sink has run it) lands in `plans`. */
+  def recordingPlans(plans: collection.mutable.Buffer[SparkPlan])
+      (start: (DataFrame, String, DataFrame => Unit) => StreamingQuery)
+      : (DataFrame, String, DataFrame => Unit) => StreamingQuery =
+    (in, ckpt, sink) => start(in, ckpt, { b => sink(b); plans += b.queryExecution.executedPlan })
+
+  /** A routed SQ8 serve batch reads the cached decoded tier (an
+    * `InMemoryTableScan` with `rv`) and never decodes the codes: no
+    * `transform` over `codes` anywhere in its executed `plan`. */
+  def assertServesDecodedTier(plan: SparkPlan): Unit = {
+    object Aqe extends AdaptiveSparkPlanHelper
+    val nodes = Aqe.collect(plan) { case p => p }
+    val decodes = nodes.flatMap(_.expressions).flatMap(_.collect {
+      case t: ArrayTransform if t.references.exists(_.name == "codes") => t
+    })
+    assert(decodes.isEmpty, s"a serve batch decodes the codes:\n$plan")
+    assert(nodes.exists {
+      case scan: InMemoryTableScanExec => scan.output.exists(_.name == "rv")
+      case _ => false
+    }, s"a serve batch does not scan the cached decoded tier:\n$plan")
+  }
 
   /** Stream `queries` in two halves through `start`: the first
     * micro-batch must serve exactly its own queries, and the streamed

@@ -3,9 +3,11 @@ package graft
 import graft.ops.{Caches, Embeddings, Retrieval, Sq, Tables}
 import graft.stream.ServeLoop
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.file.Files
+import scala.collection.mutable
 
 /** The hybrid serving seam: all three artifacts (BM25 index, coarse
   * quantizer, residual bounds) feed one [[ServeLoop]] over
@@ -52,14 +54,15 @@ class StreamingHybridServeSpec extends SparkSpec with VectorServeFixtures {
       val ix = ix0.copy(postings = Caches.persist(ix0.postings))
       val cents = Embeddings.loadQuantizer(spark, qPath)
       val (mins, maxs) = Sq.loadBounds(spark, bPath)
-      val codes = Caches.persist(Sq.ivfSq8Codes(spark, SfDir, cents, mins, maxs))
+      val tier = Caches.persist(Sq.decodedTier(Sq.ivfSq8Codes(spark, SfDir, cents, mins, maxs), mins, maxs))
       ServeLoop.run(in, ckpt)(
-        Retrieval.hybridServe(ix, codes, cents, mins, maxs, _, excludeSelf = true))(sink)
+        Retrieval.hybridServe(ix, tier, cents, _, excludeSelf = true))(sink)
     }
     (batch, reqs, start _)
   }
 
   test("stream of hybrid (text, vector) queries ≡ batch hybridRrfDocs, across two micro-batches") {
+    // the ANN leg reads the persisted decoded tier: no batch decodes
     assumeTestdata()
     val s = spark
     import s.implicits._
@@ -67,11 +70,15 @@ class StreamingHybridServeSpec extends SparkSpec with VectorServeFixtures {
     assert(batch.nonEmpty)
     assert(reqs.length >= 2, "need at least two hybrid queries to split across batches")
     val (firstHalf, secondHalf) = reqs.splitAt(reqs.length / 2)
-    val (r1, r2) = streamInHalves(firstHalf, secondHalf, "query_id", "query", "embedding")(start)
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val (r1, r2) = streamInHalves(firstHalf, secondHalf, "query_id", "query", "embedding")(
+      recordingPlans(plans)(start))
     assert(view(r1).keySet.map(_._1) == firstHalf.map(_._1).toSet,
       "first micro-batch must answer exactly its own queries")
     assert(view(r1 ++ r2) == batch,
       "streamed hybrid serving diverged from the batch q88 path")
+    assert(plans.size == 2)
+    plans.foreach(assertServesDecodedTier)
     Caches.releaseAll(spark)
   }
 

@@ -9,10 +9,7 @@ import graft.ops.{Caches, Embeddings, Sq}
 import graft.stream.StreamingIvfSqServe
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.catalyst.expressions.ArrayTransform
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
@@ -140,18 +137,7 @@ class StreamingIvfSqServeSpec extends SparkSpec with VectorServeFixtures {
     // batch 0 also fills the cache; the later ones are the steady state
     assert(perBatch.filter(_._1 != "0").values.forall(_ <= 6),
       s"jobs by micro-batch (want at most 6 after batch 0): $perBatch")
-    object Aqe extends AdaptiveSparkPlanHelper
     assert(plans.size == batches.size)
-    plans.foreach { plan =>
-      val nodes = Aqe.collect(plan) { case p => p }
-      val decodes = nodes.flatMap(_.expressions).flatMap(_.collect {
-        case t: ArrayTransform if t.references.exists(_.name == "codes") => t
-      })
-      assert(decodes.isEmpty, s"a serve batch decodes the codes:\n$plan")
-      assert(nodes.exists {
-        case scan: InMemoryTableScanExec => scan.output.exists(_.name == "rv")
-        case _ => false
-      }, s"a serve batch does not scan the cached decoded tier:\n$plan")
-    }
+    plans.foreach(assertServesDecodedTier)
   }
 }

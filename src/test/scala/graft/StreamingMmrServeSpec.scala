@@ -2,8 +2,10 @@ package graft
 
 import graft.ops.{Caches, Embeddings, Mmr, Pq, Sq}
 import graft.stream.ServeLoop
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.col
 import java.nio.file.Files
+import scala.collection.mutable
 
 /** The MMR serving seam: a stream of query vectors served through
   * [[ServeLoop]] over [[Mmr.mmrServe]] — the persisted q82 artifact
@@ -28,10 +30,14 @@ class StreamingMmrServeSpec extends SparkSpec with VectorServeFixtures {
 
     val lc = Embeddings.loadQuantizer(spark, quantizerPath)
     val (lm, lx) = Sq.loadBounds(spark, boundsPath)
-    val codes = Caches.persist(Sq.ivfSq8Codes(spark, SfDir, lc, lm, lx))
+    val tier = Caches.persist(Sq.decodedTier(Sq.ivfSq8Codes(spark, SfDir, lc, lm, lx), lm, lx))
     val exact = Caches.persist(Embeddings.quantized(spark, SfDir).select(col("vec_id"), col("qv")))
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
     assertStreamMatchesBatch(batch, probeVectors(cap = Pq.ProbeCap),
-      "streamed MMR serve diverged from the batch q92 ranking")(
-      ServeLoop.run(_, _)(Mmr.mmrServe(codes, exact, lc, lm, lx, _, excludeSelf = true))(_))
+      "streamed MMR serve diverged from the batch q92 ranking")(recordingPlans(plans)(
+      ServeLoop.run(_, _)(Mmr.mmrServe(tier, exact, lc, _, excludeSelf = true))(_)))
+    // the candidate leg reads the persisted decoded tier: no batch decodes
+    assert(plans.size == 2)
+    plans.foreach(assertServesDecodedTier)
   }
 }
