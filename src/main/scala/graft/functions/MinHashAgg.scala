@@ -33,7 +33,7 @@ class MinHashAgg(val k: Int) extends Aggregator[String, Array[Long], Seq[Long]] 
     val md = java.security.MessageDigest.getInstance("MD5")
     var s = 0
     while (s < k) {
-      val h = MinHashAgg.portableHash64(md, s + ":" + shingle)
+      val h = MinHashAgg.portableHash64(md, s"$s:$shingle")
       if (h < buf(s)) buf(s) = h
       s += 1
     }

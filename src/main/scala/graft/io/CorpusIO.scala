@@ -58,11 +58,10 @@ object CorpusIO {
     * intact — the scanner regex tolerates them by matching the
     * `KIMBALL.` suffix (test_scan_dependencies.py:52 relies on this).
     * A fold of literal regexp_replace calls: constant-folded pattern,
-    * stays in codegen, no UDF. */
-  def substituteTemplates(corpus: DataFrame, vars: Map[String, String],
-                          textCol: String = "content"): DataFrame =
+    * stays in codegen, no UDF. Rewrites the `content` column. */
+  def substituteTemplates(corpus: DataFrame, vars: Map[String, String]): DataFrame =
     vars.toSeq.sortBy(_._1).foldLeft(corpus) { case (df, (k, v)) =>
-      df.withColumn(textCol, regexp_replace(col(textCol),
+      df.withColumn("content", regexp_replace(col("content"),
         java.util.regex.Pattern.quote("${" + k + "}"),
         java.util.regex.Matcher.quoteReplacement(v)))
     }

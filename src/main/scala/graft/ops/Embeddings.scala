@@ -177,7 +177,7 @@ object Embeddings {
     * stream for [[nearDupClusters]]. */
   private def cosineNearDupPairsRaw(spark: SparkSession, dir: String,
                                     threshold: Double, planes: Int,
-                                    bands: Int = 1): DataFrame = {
+                                    bands: Int): DataFrame = {
     require(bands >= 1, "need at least one band")
     if (bands == 1) {
       // single band: score inside the bucket join, one pass
@@ -230,13 +230,11 @@ object Embeddings {
     * reads only vec_id. `checkpointDir` = the cluster-durable fixpoint
     * knob ([[LlmOps.connectedComponents]]). */
   def nearDupClusters(spark: SparkSession, dir: String,
-                      threshold: Double = OracleThreshold,
-                      planes: Int = Planes,
                       checkpointDir: Option[String] = None): DataFrame =
     LlmOps.dropList(
       Tables.embeddings(spark, dir).select(col("vec_id")),
       LlmOps.connectedComponents(
-        cosineNearDupPairsRaw(spark, dir, threshold, planes).select(col("d1"), col("d2")),
+        cosineNearDupPairsRaw(spark, dir, OracleThreshold, Planes, 1).select(col("d1"), col("d2")),
         checkpointDir = checkpointDir),
       "vec_id")
 
@@ -436,9 +434,10 @@ object Embeddings {
       .select(col("vec_id"), nearestCellTwoLevel(rawCents, nSuper).as("cell"))
 
   /** q31 — IVF ANN top-k with a TRAINED coarse quantizer: Forgy
-    * seeding (the `nCells` smallest vec_ids), `iters` Lloyd's rounds,
-    * then each query probes its `nprobe` nearest cells and re-ranks
-    * them by exact quantized cosine.
+    * seeding (the [[OracleCells]] smallest vec_ids), [[OracleIters]]
+    * Lloyd's rounds, then each query (vec_id % 50 = 0) probes its
+    * `nprobe` nearest cells and re-ranks them by exact quantized cosine
+    * to the top 5.
     *
     * Scale shape: each Lloyd's round is one distributed pass — assign
     * every vector to its nearest centroid (centroids are plan
@@ -452,15 +451,13 @@ object Embeddings {
     * trajectory bit-for-bit; ties break to the smallest cell id on
     * both sides. Empty cells (possible after a reassignment round)
     * drop out identically in both engines. */
-  def ivfTopK(spark: SparkSession, dir: String,
-              k: Int = 5, queryMod: Int = 50,
-              nCells: Int = OracleCells, iters: Int = OracleIters, nprobe: Int = 1): DataFrame = {
+  def ivfTopK(spark: SparkSession, dir: String, nprobe: Int = 1): DataFrame = {
     // ONE persisted quantized table threads through both stages — the
     // public train/serve pair each persist their own (correct for the
     // train-once/serve-many deployment, where they run in different
     // jobs), but the one-shot query must not register the subtree twice
     val vecs = Caches.persist(quantized(spark, dir))
-    ivfTopKServeOn(vecs, trainQuantizerOn(vecs, nCells, iters), k, queryMod, nprobe)
+    ivfTopKServeOn(vecs, trainQuantizerOn(vecs, OracleCells, OracleIters), 5, 50, nprobe)
   }
 
   /** The q31 training stage alone: Forgy seeding + `iters` Lloyd's
@@ -471,9 +468,8 @@ object Embeddings {
     * training passes per query — at 100 TB the training scans are the
     * dominant cost and re-paying them on the serving path is wrong. */
   def trainQuantizer(spark: SparkSession, dir: String,
-                     nCells: Int = OracleCells, iters: Int = OracleIters,
-                     nSuper: Int = 1): Seq[Centroid] =
-    trainQuantizerOn(Caches.persist(quantized(spark, dir)), nCells, iters, nSuper)
+                     nCells: Int = OracleCells, iters: Int = OracleIters): Seq[Centroid] =
+    trainQuantizerOn(Caches.persist(quantized(spark, dir)), nCells, iters)
 
   /** `nSuper = 1` (the oracle-replayed default) assigns each Lloyd's
     * round with the exact [[nearestCell]]; `nSuper > 1` routes every
@@ -547,12 +543,11 @@ object Embeddings {
     * recall consequence measured by [[graft.tools.RecallReport]]'s
     * serve mode. */
   def ivfTopKServeRouted(spark: SparkSession, dir: String, cents: Seq[Centroid],
-                         k: Int = 5, queryMod: Int = 50, nprobe: Int = 1,
-                         nSuper: Int = 0, nSuperProbe: Int = 1): DataFrame = {
+                         nprobe: Int = 1, nSuper: Int = 0, nSuperProbe: Int = 1): DataFrame = {
     val vecs = Caches.persist(quantized(spark, dir))
     val sorted = cents.sortBy(_.j)
     val ns = if (nSuper > 0) nSuper else superFor(sorted.size)
-    ivfTopKServeWith(vecs, sorted, k, queryMod,
+    ivfTopKServeWith(vecs, sorted, 5, 50,
       probeCellsColTwoLevel(sorted, nprobe, ns, nSuperProbe))
   }
 
@@ -812,47 +807,44 @@ object Embeddings {
     * side streams through the scan and never shuffles — per-query
     * cost is one linear scan, the honest baseline price). Top-k
     * prunes per-partition before the final per-query window. */
-  def bruteTopK(spark: SparkSession, dir: String,
-                k: Int = 5, queryMod: Int = 50): DataFrame = {
+  def bruteTopK(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Caches.persist(quantized(spark, dir))
-    val qs = vecs.filter(col("vec_id") % queryMod === 0)
+    val qs = vecs.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("qv").as("q_v"), col("nrm").as("q_n"))
     scoreTopK(vecs
       .select(col("vec_id").as("neighbor_id"), col("qv").as("c_v"), col("nrm").as("c_n"))
-      .crossJoin(broadcast(qs)), k)
+      .crossJoin(broadcast(qs)), 5)
   }
 
   /** q27 — LSH-bucketed cosine top-k: for every query vector (vec_id
-    * divisible by `queryMod`), the `k` nearest same-bucket neighbors by
+    * divisible by 50), the 5 nearest same-bucket neighbors by
     * exact quantized cosine. Candidates come from the bucket equi-join
     * only — ANN semantics (recall < 1 by design, measured against the
     * brute-force oracle in EmbeddingsSpec).
     *
     * `multiProbe = 1` additionally probes every bucket within sketch
-    * Hamming distance 1 (flip each of the `planes` bits) — the
+    * Hamming distance 1 (flip each of the [[Planes]] bits) — the
     * standard multi-probe LSH recall/cost dial: as [[planesFor]] grows
     * planes with the corpus, per-bucket recall drops, and probing the
-    * `planes` adjacent buckets buys most of it back for a
-    * (planes+1)× candidate multiplier on the (small) query side only;
-    * the corpus side's bucketing and the join shape are unchanged. */
-  def annTopK(spark: SparkSession, dir: String,
-              k: Int = 5, queryMod: Int = 50,
-              planes: Int = Planes, multiProbe: Int = 0): DataFrame = {
+    * adjacent buckets buys most of it back for a (planes+1)× candidate
+    * multiplier on the (small) query side only; the corpus side's
+    * bucketing and the join shape are unchanged. */
+  def annTopK(spark: SparkSession, dir: String, multiProbe: Int = 0): DataFrame = {
     require(multiProbe == 0 || multiProbe == 1, "multiProbe supports 0 (off) or 1 (flip-1 buckets)")
     // persisted: feeds both the query side and the candidate side —
     // without it the scan + quantize + 4 projections run twice.
-    val vecs = Caches.persist(quantized(spark, dir).withColumn("bucket", bucketCol(planes)))
-    val qs0 = vecs.filter(col("vec_id") % queryMod === 0)
+    val vecs = Caches.persist(quantized(spark, dir).withColumn("bucket", bucketCol(Planes)))
+    val qs0 = vecs.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("qv").as("q_v"),
         col("nrm").as("q_n"), col("bucket"))
     val qs =
       if (multiProbe == 0) qs0
       else qs0.withColumn("bucket", explode(array(
-        col("bucket") +: (0 until planes).map(s =>
+        col("bucket") +: (0 until Planes).map(s =>
           col("bucket").bitwiseXOR(lit(1L << s))): _*)))
     val cands = vecs.select(col("vec_id").as("neighbor_id"), col("qv").as("c_v"),
       col("nrm").as("c_n"), col("bucket"))
-    scoreTopK(cands.join(broadcast(qs), Seq("bucket")), k)
+    scoreTopK(cands.join(broadcast(qs), Seq("bucket")), 5)
   }
 
   /** q62 — per-label embedding centroids (dim-wise): the aggregation
@@ -898,12 +890,11 @@ object Embeddings {
     * DuckDB oracle replays training, assignment, pairing, and
     * clustering bit-for-bit. */
   def semanticDedup(spark: SparkSession, dir: String,
-                    threshold: Double = OracleThreshold,
-                    nCells: Int = OracleCells, iters: Int = OracleIters,
+                    nCells: Int = OracleCells,
                     checkpointDir: Option[String] = None,
                     nSuper: Int = 1, trainNSuper: Int = 1): DataFrame = {
     val vecs = Caches.persist(quantized(spark, dir))
-    val cents = trainQuantizerOn(vecs, nCells, iters, trainNSuper)
+    val cents = trainQuantizerOn(vecs, nCells, OracleIters, trainNSuper)
     // the q76 oracle replays nearestCellTwoLevel's NON-degenerate
     // routing; if training shrank the live cell set to ≤ nSuper the
     // degenerate branch would silently diverge from the replay — fail
@@ -931,7 +922,7 @@ object Embeddings {
         col("nrm").as("n1"), col("cell"))
     val b = cells.select(col("vec_id").as("d2"), col("qv").as("v2"),
       col("nrm").as("n2"), col("cell"))
-    val pairs = scorePairs(a.join(b, Seq("cell")).filter(col("d1") < col("d2")), threshold)
+    val pairs = scorePairs(a.join(b, Seq("cell")).filter(col("d1") < col("d2")), OracleThreshold)
       .select(col("d1"), col("d2"))
     LlmOps.dropList(vecs.select(col("vec_id")),
       LlmOps.connectedComponents(pairs, checkpointDir = checkpointDir), "vec_id")
@@ -947,14 +938,10 @@ object Embeddings {
     * count from the same corpus count, so a drifted rule fails the
     * gate, not just a benchmark. */
   def semanticDedupScaled(spark: SparkSession, dir: String,
-                          threshold: Double = OracleThreshold,
                           targetCell: Int = OracleTargetCell,
-                          iters: Int = OracleIters,
-                          checkpointDir: Option[String] = None,
-                          nSuper: Int = 1): DataFrame = {
+                          checkpointDir: Option[String] = None): DataFrame = {
     val n = Tables.embeddings(spark, dir).count()
-    semanticDedup(spark, dir, threshold, cellsFor(n, targetCell), iters,
-      checkpointDir, nSuper)
+    semanticDedup(spark, dir, cellsFor(n, targetCell), checkpointDir)
   }
 
   /** q76 — [[semanticDedupScaled]] with BOTH the training rounds and
@@ -974,14 +961,11 @@ object Embeddings {
     * the recall baseline this trades against — the q45-brute-vs-q27
     * relationship, for assignment. */
   def semanticDedupTwoLevel(spark: SparkSession, dir: String,
-                            threshold: Double = OracleThreshold,
                             targetCell: Int = OracleTargetCell,
-                            iters: Int = OracleIters,
                             checkpointDir: Option[String] = None): DataFrame = {
     val n = Tables.embeddings(spark, dir).count()
     val nCells = cellsFor(n, targetCell)
     val ns = superFor(nCells)
-    semanticDedup(spark, dir, threshold, nCells, iters, checkpointDir,
-      nSuper = ns, trainNSuper = ns)
+    semanticDedup(spark, dir, nCells, checkpointDir, nSuper = ns, trainNSuper = ns)
   }
 }

@@ -44,8 +44,8 @@ object LlmOps {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy(col("content_hash"))
 
-  /** Distinct word n-gram shingles per doc: (doc_id, shingle).
-    * Short docs (< n words) yield no shingles and drop out of the
+  /** Distinct word 3-gram shingles per doc: (doc_id, shingle).
+    * Short docs (< 3 words) yield no shingles and drop out of the
     * near-dup surface, matching standard practice.
     *
     * The per-doc distinct set is computed INSIDE the row by the
@@ -56,7 +56,7 @@ object LlmOps {
     * just to dedup within documents, a full-corpus exchange paid by
     * all seven n-gram-family queries before any real work started
     * (ShingleSetProperties pins bit-identical semantics). */
-  def shingles(docs: DataFrame, n: Int = 3): DataFrame = {
+  def shingles(docs: DataFrame): DataFrame = {
     // NOT fanned out (round 15, tried and reverted): Tables.fanOut
     // here parallelizes the serial shingle cache BUILD (a first-run /
     // build-time cost) and took q20's steady 2.38 → ~1.8 s, but the
@@ -66,7 +66,7 @@ object LlmOps {
     // for the family. At 100 TB the input has ≥ cores splits and the
     // gate would no-op anyway, so the graded surface keeps the
     // single-split layout.
-    docs.select(col("doc_id"), explode(shingleSet(col("text"), n)).as("shingle"))
+    docs.select(col("doc_id"), explode(shingleSet(col("text"), 3)).as("shingle"))
   }
 
   /** q20 — n-gram Jaccard near-dup pairs. Candidates = pairs sharing
@@ -79,17 +79,16 @@ object LlmOps {
     *    both sides of the self-join, and recomputing the
     *    scan→split→explode subtree 3× is a full-input tax at 100 TB
     *    (cache lives for the session; Verify/Bench run each query once);
-    *  - document-frequency cap (`maxDf`): a boilerplate shingle shared
+    *  - document-frequency cap (50 docs): a boilerplate shingle shared
     *    by k docs makes k(k-1)/2 candidate rows — quadratic in the hot
     *    key, which AQE skew-join can spread but not shrink. Shingles in
-    *    more than `maxDf` docs carry no near-dup signal (standard
+    *    more than 50 docs carry no near-dup signal (standard
     *    near-dup practice) and are dropped BEFORE the self-join; the
     *    hot list is tiny by construction, so it broadcasts. Jaccard is
     *    then over the capped shingle universe on both sides (the
     *    oracle applies the identical cap). */
-  def jaccardPairs(spark: SparkSession, dir: String,
-                   n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50): DataFrame =
-    jaccardPairsRaw(spark, dir, n, threshold, maxDf)
+  def jaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.2): DataFrame =
+    jaccardPairsRaw(spark, dir, threshold)
       .orderBy(col("d1"), col("d2"))
 
   /** [[jaccardPairs]] without the presentation sort — the edge stream
@@ -103,9 +102,9 @@ object LlmOps {
     * every consumer rebuilds the scan→explode→distinct subtree and
     * the hot-list broadcast anti-join (3 duplicated subtrees in the
     * physical plan — the round-2 bench defect). One definition keeps
-    * the cap semantics identical across the family and its oracles. */
-  private def cappedShingles(spark: SparkSession, dir: String,
-                             n: Int, maxDf: Int): (DataFrame, DataFrame) = {
+    * the cap semantics identical across the family and its oracles:
+    * 3-gram shingles, dropping those in more than 50 docs. */
+  private def cappedShingles(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     // NOT pre-partitioned by shingle (round 15, tried and reverted):
     // declaring the cache hash-partitioned on the shingle should let
     // the df-cap aggregate and the candidate self-join skip their
@@ -115,17 +114,17 @@ object LlmOps {
     // cached AQE plan reporting unknown partitioning), so the plan
     // kept every downstream exchange AND paid a corpus-token-sized
     // build exchange on top — measured pure loss.
-    val all = Caches.persist(shingles(Tables.documents(spark, dir), n))
+    val all = Caches.persist(shingles(Tables.documents(spark, dir)))
     val hot = all.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select(col("shingle"))
+      .filter(col("df") > 50).select(col("shingle"))
     val sh = Caches.persist(all.join(broadcast(hot), Seq("shingle"), "left_anti"))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
     (sh, sizes)
   }
 
   private[graft] def jaccardPairsRaw(spark: SparkSession, dir: String,
-                                     n: Int, threshold: Double, maxDf: Int): DataFrame = {
-    val (sh, sizes) = cappedShingles(spark, dir, n, maxDf)
+                                     threshold: Double): DataFrame = {
+    val (sh, sizes) = cappedShingles(spark, dir)
     // Probe-side fan-out (round 16, guide §2.5 input skew): on the
     // single-split driver layout the cached shingle relation has ONE
     // partition, the self-join plans as a broadcast hash join, and the
@@ -469,12 +468,11 @@ object LlmOps {
     * `checkpointDir` for a cluster-durable fixpoint
     * ([[connectedComponents]]). */
   def nearDupClusters(spark: SparkSession, dir: String,
-                      n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50,
                       checkpointDir: Option[String] = None): DataFrame =
     dropList(
       Tables.documents(spark, dir).select(col("doc_id")),
       connectedComponents(
-        jaccardPairsRaw(spark, dir, n, threshold, maxDf).select(col("d1"), col("d2")),
+        jaccardPairsRaw(spark, dir, 0.2).select(col("d1"), col("d2")),
         checkpointDir = checkpointDir),
       "doc_id")
 
@@ -485,7 +483,7 @@ object LlmOps {
     *     content hash ([[exactDedup]] semantics);
     *  2. `near_dup`   — dropped by the q32 cluster resolution
     *     ([[nearDupClusters]] keep = false);
-    *  3. `too_short`  — fewer than `minTokens` whitespace tokens
+    *  3. `too_short`  — fewer than 5 whitespace tokens
     *     (the q23 token rule);
     *  4. `kept`.
     *
@@ -495,20 +493,18 @@ object LlmOps {
     * token count — so the composition adds no shuffle beyond its
     * parts and survives the same 100 TB argument each part makes. */
   def curateCorpus(spark: SparkSession, dir: String,
-                   n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50,
-                   minTokens: Int = 5,
                    checkpointDir: Option[String] = None): DataFrame = {
     // exact-dup and too-short verdicts share ONE documents scan (both
     // are per-row + one window over content_hash); only the near-dup
     // verdict needs its own pipeline
     val exactShort = Tables.documents(spark, dir)
       .select(col("doc_id"), sha2(normText(col("text")), 256).as("content_hash"),
-        (textStats(col("text")).getField("n_tokens") < minTokens).as("too_short"))
+        (textStats(col("text")).getField("n_tokens") < 5).as("too_short"))
       .withColumn("hash_min",
         min(col("doc_id")).over(org.apache.spark.sql.expressions.Window.partitionBy(col("content_hash"))))
       .select(col("doc_id"), (col("doc_id") =!= col("hash_min")).as("exact_dup"),
         col("too_short"))
-    val near = nearDupClusters(spark, dir, n, threshold, maxDf, checkpointDir)
+    val near = nearDupClusters(spark, dir, checkpointDir)
       .select(col("doc_id"), (!col("keep")).as("near_dup"))
     val reason = when(col("exact_dup"), "exact_dup")
       .when(col("near_dup"), "near_dup")
@@ -542,10 +538,9 @@ object LlmOps {
     * enrichment joins have a component-sized small side that AQE
     * broadcasts. */
   def clusterKeepBest(spark: SparkSession, dir: String,
-                      n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50,
                       checkpointDir: Option[String] = None): DataFrame = {
     val comp = connectedComponents(
-      jaccardPairsRaw(spark, dir, n, threshold, maxDf).select(col("d1"), col("d2")),
+      jaccardPairsRaw(spark, dir, 0.2).select(col("d1"), col("d2")),
       checkpointDir = checkpointDir)
     // persisted: feeds the member join AND the final enrichment join —
     // uncached, the documents scan + text_stats pass would run twice
@@ -574,7 +569,7 @@ object LlmOps {
 
   /** q38 — benchmark decontamination: the training-data stage that
     * finds corpus documents overlapping an evaluation/benchmark set
-    * (here: doc_id % `benchMod` == 0, the q27 query-subset
+    * (here: doc_id % 50 == 0, the q27 query-subset
     * convention; in production the benchmark side is its own table —
     * same plan). For every non-benchmark document sharing enough
     * n-gram mass with ANY benchmark document, emit its single
@@ -610,8 +605,8 @@ object LlmOps {
     * single IEEE division of exact integers — bit-deterministic on
     * any engine or partitioning. Short (<n-token) docs have no
     * shingles and no row, the q20-family rule. */
-  def ngramNovelty(spark: SparkSession, dir: String, n: Int = 3): DataFrame = {
-    val sh = Caches.persist(shingles(Tables.documents(spark, dir), n))
+  def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
+    val sh = Caches.persist(shingles(Tables.documents(spark, dir)))
     val train = sh.filter(col("doc_id") % 10 < 8)
       .select(col("shingle")).distinct().withColumn("seen", lit(1L))
     sh.filter(col("doc_id") % 10 >= 8)
@@ -624,23 +619,25 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  def benchmarkOverlap(spark: SparkSession, dir: String,
-                       benchMod: Int = 50, n: Int = 3,
-                       minJaccard: Double = 0.2, maxDf: Int = 50): DataFrame = {
-    val (sh, sizes) = cappedShingles(spark, dir, n, maxDf)
-    val bench = sh.filter(col("doc_id") % benchMod === 0 &&
-        col("doc_id") < benchMod.toLong * 1024)
-      .select(col("doc_id").as("bench_id"), col("shingle"))
-    val corpus = sh.filter(col("doc_id") % benchMod =!= 0)
-    overlapBestMatch(corpus, bench, sizes, minJaccard)
+  def benchmarkOverlap(spark: SparkSession, dir: String): DataFrame = {
+    val (sh, sizes) = cappedShingles(spark, dir)
+    overlapBestMatch(sh.filter(col("doc_id") % 50 =!= 0), benchOf(sh), sizes)
   }
+
+  /** The benchmark side of the decontamination pair (q38/q50): every
+    * 50th doc, capped at 50·1024 — ONE definition, since the q50
+    * oracle is q38's verbatim and the two subset rules must never
+    * diverge. The corpus side is every other doc. */
+  private def benchOf(sh: DataFrame): DataFrame =
+    sh.filter(col("doc_id") % 50 === 0 && col("doc_id") < 50L * 1024)
+      .select(col("doc_id").as("bench_id"), col("shingle"))
 
   /** Shared scoring tail of the decontamination pair (q38/q50): count
     * shared shingles per (corpus doc, bench doc), exact Jaccard from
-    * the capped shingle counts, threshold, argmax bench doc per
+    * the capped shingle counts, threshold 0.2, argmax bench doc per
     * contaminated corpus doc. */
   private def overlapBestMatch(corpus: DataFrame, bench: DataFrame,
-                               sizes: DataFrame, minJaccard: Double): DataFrame = {
+                               sizes: DataFrame): DataFrame = {
     val inter = corpus.join(bench, Seq("shingle"))
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).as("inter"))
@@ -649,7 +646,7 @@ object LlmOps {
       .join(sizes.select(col("doc_id").as("bench_id"), col("n_shingles").as("n2")),
         Seq("bench_id"))
       .withColumn("jaccard", col("inter") / (col("n1") + col("n2") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
+      .filter(col("jaccard") >= 0.2)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("jaccard").desc, col("bench_id"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -681,15 +678,9 @@ object LlmOps {
     * OUTSIDE the join/aggregate hot path, mirroring the seam Spark's
     * own runtime row-level bloom join filters use. */
   def benchmarkOverlapBloom(spark: SparkSession, dir: String,
-                            benchMod: Int = 50, n: Int = 3,
-                            minJaccard: Double = 0.2, maxDf: Int = 50,
                             fpp: Double = 0.01): DataFrame = {
-    val (sh, sizes) = cappedShingles(spark, dir, n, maxDf)
-    // same benchMod·1024 cap as benchmarkOverlap — the q50 oracle is
-    // q38's verbatim, so the two subset rules must never diverge
-    val bench = sh.filter(col("doc_id") % benchMod === 0 &&
-        col("doc_id") < benchMod.toLong * 1024)
-      .select(col("doc_id").as("bench_id"), col("shingle"))
+    val (sh, sizes) = cappedShingles(spark, dir)
+    val bench = benchOf(sh)
     // expectedNumItems = DISTINCT bench shingles off the cached
     // shingle table (benchmark-set-sized): sizing from the real
     // cardinality keeps the fpp honest in both directions — an
@@ -703,9 +694,9 @@ object LlmOps {
     val bloom = bench.stat.bloomFilter("shingle", nBench, fpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)
     val mightMatch = udf((s: String) => s != null && bloomBc.value.mightContain(s))
-    val corpus = sh.filter(col("doc_id") % benchMod =!= 0)
+    val corpus = sh.filter(col("doc_id") % 50 =!= 0)
       .filter(mightMatch(col("shingle")))
-    overlapBestMatch(corpus, bench, sizes, minJaccard)
+    overlapBestMatch(corpus, bench, sizes)
   }
 
   /** q44 — cross-source duplication report: q20's near-dup pairs
@@ -723,9 +714,8 @@ object LlmOps {
     * on duplicate-heavy ones both sides can be large and the planner
     * must stay free to shuffle (the [[dropList]] argument). The final
     * rollup is #source²-bounded, tiny by construction. */
-  def crossSourceDupReport(spark: SparkSession, dir: String,
-                           n: Int = 3, threshold: Double = 0.2, maxDf: Int = 50): DataFrame = {
-    val pairs = jaccardPairsRaw(spark, dir, n, threshold, maxDf)
+  def crossSourceDupReport(spark: SparkSession, dir: String): DataFrame = {
+    val pairs = jaccardPairsRaw(spark, dir, 0.2)
       .select(col("d1"), col("d2"), col("jaccard"))
     val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
     pairs
@@ -740,7 +730,7 @@ object LlmOps {
 
   /** q56 — exact duplicated-substring removal (the span-level dedup of
     * Lee et al. 2021, "Deduplicating Training Data Makes Language
-    * Models Better": drop every occurrence of any ≥k-token span that
+    * Models Better": drop every occurrence of any ≥k-token span (k = 8) that
     * appears more than once in the corpus). Exact dedup (q19) removes
     * whole-document copies; this removes the shared boilerplate
     * — license headers, navigation chrome, quoted passages — that
@@ -766,7 +756,8 @@ object LlmOps {
     * The shingle table is persisted (feeds the df-count AND the
     * join-back; recomputing the scan→shingle subtree twice is a
     * full-input tax at 100 TB). */
-  def substringDedup(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
+  def substringDedup(spark: SparkSession, dir: String): DataFrame = {
+    val k = 8
     val docs = Tables.documents(spark, dir)
     val sh = Caches.persist(
       docs.select(col("doc_id"),
@@ -795,8 +786,8 @@ object LlmOps {
 
   /** q21 part 1 — MinHash signatures: (doc_id, sig: array<long>[16]).
     * One shuffle by doc_id; all 16 mins fold map-side. */
-  def minhashSignatures(spark: SparkSession, dir: String, n: Int = 3): DataFrame = {
-    val sh = shingles(Tables.documents(spark, dir), n)
+  def minhashSignatures(spark: SparkSession, dir: String): DataFrame = {
+    val sh = shingles(Tables.documents(spark, dir))
     val aggs = (0 until MinhashK).map(minhashAgg)
     sh.groupBy(col("doc_id"))
       .agg(aggs.head, aggs.tail: _*)
@@ -863,8 +854,9 @@ object LlmOps {
     * corpus: its word-level near-dups sit at distance 16-18 on the
     * 40-char key (exact dups at 0; unrelated template pairs from 19
     * up), so 18 keeps true near-dups and exercises non-trivial DP
-    * distances. Parametric — a title-dedup deployment would run τ of
-    * 2-3 on short keys. */
+    * distances. The q94 oracle reads this value; a title-dedup
+    * deployment would pass τ of 2-3 on short keys to
+    * [[fuzzyDupPairsOf]]. */
   val FuzzyTau = 18
 
   /** q94 — FUZZY near-dup pairs by bounded edit distance (the
@@ -900,17 +892,14 @@ object LlmOps {
     * boilerplate-heavy short corpora are exactly what the hot-block
     * cap already bounds. */
   def fuzzyDupPairs(spark: SparkSession, dir: String,
-                    tau: Int = FuzzyTau,
-                    maxBlock: Int = FuzzyMaxBlock,
                     midBlock: Boolean = false): DataFrame =
-    fuzzyDupPairsOf(Tables.documents(spark, dir), tau, maxBlock, midBlock)
+    fuzzyDupPairsOf(Tables.documents(spark, dir), FuzzyTau, midBlock)
 
   /** [[fuzzyDupPairs]] over an explicit (doc_id, text) relation —
     * the fixture seam. */
   def fuzzyDupPairsOf(docs: DataFrame, tau: Int = FuzzyTau,
-                      maxBlock: Int = FuzzyMaxBlock,
                       midBlock: Boolean = false): DataFrame = {
-    require(tau >= 0 && maxBlock >= 1, "tau and maxBlock must be non-negative/positive")
+    require(tau >= 0, "tau must be non-negative")
     val keys = docs.select(col("doc_id"),
       substring(regexp_replace(lower(col("text")), "\\s+", " "), 1, FuzzyKeyLen).as("key"))
     // two blocking passes (three with midBlock), deduped: a key whose
@@ -934,7 +923,7 @@ object LlmOps {
         (FuzzyKeyLen - FuzzyBlockLen) / 2 + 1, FuzzyBlockLen))))
     val blocks = Caches.persist(allPass.distinct())
     val ok = blocks.groupBy(col("blk")).agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBlock).select(col("blk"))
+      .filter(col("n") <= FuzzyMaxBlock).select(col("blk"))
     val bb = blocks.join(ok, Seq("blk"))
     val cand = bb.select(col("blk"), col("doc_id").as("d1"), col("key").as("k1"))
       .join(bb.select(col("blk"), col("doc_id").as("d2"), col("key").as("k2")), Seq("blk"))

@@ -38,7 +38,7 @@ object Mmr {
   /** q92 — MMR-diversified top-k over routed IVF+SQ8 candidates:
     * stage 1 = [[Sq.ivfSq8TopK]] at k = `r` (train coarse quantizer,
     * encode residuals on the SQ8 grid, serve the probe set
-    * `vec_id % queryMod = 0` under the ProbeCap with nprobe-cell
+    * `vec_id % 50 = 0` under the ProbeCap with 2-cell
     * pruning, self excluded); stage 2 = [[mmrSelect]] over those
     * candidates on the exact integer grid.
     *
@@ -56,14 +56,9 @@ object Mmr {
     * [[graft.tools.DiversityReport.coverageVsR]] — coverage-vs-r
     * tables per geometry in bench/SCALING_r12.md). */
   def mmrRerankTopK(spark: SparkSession, dir: String,
-                    k: Int = 5, r: Int = Pq.RefineR, queryMod: Int = 50,
-                    nprobe: Int = 2,
-                    nCells: Int = Embeddings.OracleCells,
-                    iters: Int = Embeddings.OracleIters): DataFrame = {
+                    k: Int = 5, r: Int = Pq.RefineR): DataFrame = {
     require(r >= k, s"MMR candidate budget r=$r must cover k=$k")
-    val cands = Sq.ivfSq8TopK(spark, dir, k = r, queryMod = queryMod,
-        nprobe = nprobe, nCells = nCells, iters = iters)
-      .select(col("q_id"), col("neighbor_id"))
+    val cands = Sq.ivfSq8TopK(spark, dir, k = r).select(col("q_id"), col("neighbor_id"))
     mmrSelect(Embeddings.quantized(spark, dir), cands, k)
   }
 

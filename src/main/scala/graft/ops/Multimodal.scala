@@ -250,7 +250,7 @@ object Multimodal {
       // must not be misread as the video pixel format. A strh-less
       // minimal file (older fixtures) still accepts its lone strf.
       var lastStrh: Option[String] = None
-      var frames = Vector.newBuilder[(Int, Int)]
+      val frames = Vector.newBuilder[(Int, Int)]
       def walk(from: Int, until: Int): Unit = {
         var off = from
         while (off + 8 <= until) {

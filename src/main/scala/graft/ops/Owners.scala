@@ -81,12 +81,6 @@ object Owners {
       .filter(size(col("teams")) > 0)
   }
 
-  /** CODEFACILITATORS rows (K2): `path team…` sorted by function
-    * (generate_codefacilitators.py:44-49). */
-  def facilitatorLines(facs: DataFrame): DataFrame =
-    facs.orderBy(col("function"))
-      .select(concat_ws(" ", col("path"), concat_ws(" ", col("teams"))).as("value"))
-
   /** E3 owners glue (pr-review-flow.yml:135-155): a PR file list × one
     * owners file → that stage's required reviewer set, as a (pr, team)
     * relation. Mirrors the embedded JS: blank/`#` lines skipped

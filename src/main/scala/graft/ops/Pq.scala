@@ -111,6 +111,12 @@ object Pq {
     * query stream actually pays. */
   val ProbeCap = 51200L
 
+  /** The capped probe set (q_id, qv) of the gated ANN queries:
+    * `vec_id % queryMod = 0` under [[ProbeCap]]. */
+  private[ops] def cappedProbes(vecs: DataFrame, queryMod: Int): DataFrame =
+    vecs.filter(col("vec_id") % queryMod === 0 && col("vec_id") < ProbeCap)
+      .select(col("vec_id").as("q_id"), col("qv"))
+
   private def subSlice(v: Column, m: Int): Column =
     slice(v, m * SubDim + 1, SubDim)
 
@@ -336,10 +342,7 @@ object Pq {
     // 8-16× cheaper and the extra exchange was the measured r15 loss
     // on small serves); size-aware width, no-op on ≥ cores splits.
     val codes = encode(if (nCodes > K) Tables.fanOut(vecs) else vecs, books)
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    adcServe(codes, books, probes, k, excludeSelf = true)
+    adcServe(codes, books, cappedProbes(vecs, queryMod), k, excludeSelf = true)
   }
 
   /** q91 — VARIANCE-BALANCED SUBSPACE ASSIGNMENT (the OPQ idea in
@@ -376,15 +379,10 @@ object Pq {
     * gridBounds shape; the shuffle carries 64 rows); the permutation
     * itself is a scan-riding projection of 64 `element_at`s (fixed
     * by Dim, not by corpus); everything else is exactly q77's plan. */
-  def pqTopKBalanced(spark: SparkSession, dir: String,
-                     k: Int = 5, queryMod: Int = 50,
-                     iters: Int = Embeddings.OracleIters,
-                     nCodes: Int = K): DataFrame = {
+  def pqTopKBalanced(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
     val perm = balancedPerm(vecs)
-    pqTopKOn(Caches.persist(
-        vecs.select(col("vec_id"), permuteCol(perm).as("qv"))),
-      k, queryMod, iters, nCodes)
+    pqTopKOn(Caches.persist(vecs.select(col("vec_id"), permuteCol(perm).as("qv"))))
   }
 
   /** The learned permutation: slot → source dim (0-based). Per-dim
@@ -431,11 +429,9 @@ object Pq {
     * expressions are fused reference-data forms — at the K = 256 this
     * rule reaches by sf1, the r9 literal form would be 1,024 plan
     * subtrees. */
-  def pqTopKScaled(spark: SparkSession, dir: String,
-                   k: Int = 5, queryMod: Int = 50,
-                   iters: Int = Embeddings.OracleIters): DataFrame = {
+  def pqTopKScaled(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.embeddings(spark, dir).count()
-    pqTopK(spark, dir, k, queryMod, iters, kFor(n))
+    pqTopK(spark, dir, nCodes = kFor(n))
   }
 
   /** Refine-candidates-per-k floor for [[rFor]]: the budget doubles
@@ -482,11 +478,9 @@ object Pq {
     * is non-vacuous at the oracle SF (K = 32 ≠ 16, r = 64 ≠ 20).
     * The clustered-recall consequence at this sizing is measured by
     * [[graft.tools.GeometryRecall]] (refine_scaled_q98). */
-  def pqRefineScaled(spark: SparkSession, dir: String,
-                     k: Int = 5, queryMod: Int = 50,
-                     iters: Int = Embeddings.OracleIters): DataFrame = {
+  def pqRefineScaled(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.embeddings(spark, dir).count()
-    pqRefineTopK(spark, dir, k, rFor(n), queryMod, iters, kFor(n))
+    pqRefineTopK(spark, dir, r = rFor(n), nCodes = kFor(n))
   }
 
   /** q83 — ADC + EXACT RE-RANK (the standard two-stage production
@@ -511,19 +505,14 @@ object Pq {
     * nProbes·r exact distances, independent of corpus × probe
     * cross size. */
   def pqRefineTopK(spark: SparkSession, dir: String,
-                   k: Int = 5, r: Int = RefineR, queryMod: Int = 50,
-                   iters: Int = Embeddings.OracleIters,
-                   nCodes: Int = K): DataFrame = {
+                   k: Int = 5, r: Int = RefineR, nCodes: Int = K): DataFrame = {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val books = trainCodebooks(vecs, iters, nCodes)
+    val books = trainCodebooks(vecs, nCodes = nCodes)
     // same production-K encode fan-out as pqTopKOn (q98's stage-1 ADC
     // serve at kFor-K measured 1.25 s single-task — Probe's stage table,
     // st2329); the pinned-K q83 path is untouched
     val codes = encode(if (nCodes > K) Tables.fanOut(vecs) else vecs, books)
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    refineServe(codes, books, vecs, probes, k, r, excludeSelf = true)
+    refineServe(codes, books, vecs, cappedProbes(vecs, 50), k, r, excludeSelf = true)
   }
 
   /** Default refine candidate budget (stage-1 r): 4·k at the pinned
@@ -638,21 +627,16 @@ object Pq {
     * passes + one residual projection + the q77 one-job-per-round
     * codebook training. */
   def ivfPqTopK(spark: SparkSession, dir: String,
-                k: Int = 5, queryMod: Int = 50, nprobe: Int = 2,
-                nCells: Int = Embeddings.OracleCells,
-                iters: Int = Embeddings.OracleIters): DataFrame = {
+                k: Int = 5, queryMod: Int = 50, nprobe: Int = 2): DataFrame = {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val cents = Embeddings.trainQuantizer(spark, dir, nCells, iters).sortBy(_.j)
+    val cents = Embeddings.trainQuantizer(spark, dir).sortBy(_.j)
     // ONE cached residual relation feeds both codebook training and
     // encoding (review r9: trainIvfPq + ivfPqCodes each persisted
     // their own copy, re-running the full-corpus assignment pass)
     val residuals = Caches.persist(residualsOf(spark, dir, cents))
-    val books = trainCodebooks(residuals, iters)
+    val books = trainCodebooks(residuals)
     val codes = encode(residuals, books, keep = Seq("cell"))
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    ivfPqServe(codes, cents, books, probes, k, nprobe, excludeSelf = true)
+    ivfPqServe(codes, cents, books, cappedProbes(vecs, queryMod), k, nprobe, excludeSelf = true)
   }
 
   /** The q79 BUILD stage alone: the coarse quantizer's pinned
@@ -661,11 +645,9 @@ object Pq {
     * [[saveCodebooks]]) so serving jobs never re-pay the training
     * scans (a [[graft.stream.ServeLoop]] over [[ivfPqServe]] loads the
     * pair). */
-  def trainIvfPq(spark: SparkSession, dir: String,
-                 nCells: Int = Embeddings.OracleCells,
-                 iters: Int = Embeddings.OracleIters): (Seq[Centroid], Seq[Seq[Centroid]]) = {
-    val cents = Embeddings.trainQuantizer(spark, dir, nCells, iters).sortBy(_.j)
-    val books = trainCodebooks(Caches.persist(residualsOf(spark, dir, cents)), iters)
+  def trainIvfPq(spark: SparkSession, dir: String): (Seq[Centroid], Seq[Seq[Centroid]]) = {
+    val cents = Embeddings.trainQuantizer(spark, dir).sortBy(_.j)
+    val books = trainCodebooks(Caches.persist(residualsOf(spark, dir, cents)))
     (cents, books)
   }
 
@@ -707,19 +689,11 @@ object Pq {
                  cents: Seq[Centroid], books: Seq[Seq[Centroid]]): DataFrame =
     encode(residualsOf(spark, dir, cents), books, keep = Seq("cell"))
 
-  /** The q79 SERVE stage: probe each query's `nprobe` nearest cells
-    * (fused [[graft.functions.ProbeCells]] ranking), build one ADC
-    * table per (probe, probed cell) over the probe's residual
-    * AGAINST THAT CELL, and resolve the estimate sum through the
-    * cell EQUI-join against `codes`. `queries` carries (q_id, qv) on
-    * the corpus integer grid (external embeddings go through
-    * [[quantizeQueries]] first). ONE definition shared by the batch
-    * q79 and the streaming seam, so their agreement is an identity. */
-  /** ONE definition of the per-probe probed-cell relation
-    * (q_id, qv, nrm, cell — one row per probed cell): the serve's
-    * probe side AND the source of its static probed-cell filter, and
-    * what StorageSpec derives the to-be-pruned set from — shared so
-    * the test's notion of "probed" cannot drift from the serve's. */
+  /** The distributed per-probe probed-cell relation (q_id, qv, nrm,
+    * cell — one row per probed cell): the reference form of the
+    * driver-side [[Sq.probeRows]] ranking every routed serve uses
+    * (SqProbeProperties pins the two equal), and what StorageSpec
+    * derives the to-be-pruned set from. */
   private[graft] def probeCellsRelation(queries: DataFrame, cents: Seq[Centroid],
                                         nprobe: Int): DataFrame = {
     queries
@@ -728,48 +702,37 @@ object Pq {
         explode(Embeddings.probeCellsCol(cents.sortBy(_.j), nprobe)).as("cell"))
   }
 
+  /** The q79 SERVE stage: probe each query's `nprobe` nearest cells
+    * (the [[graft.functions.ProbeCells]] ranking, on the driver
+    * through [[Sq.probeRows]], which also yields the probe's residual
+    * AGAINST THAT CELL), build one ADC table per (probe, probed cell)
+    * over that residual, and resolve the estimate sum through the
+    * cell EQUI-join against `codes`. `queries` carries (q_id, qv) on
+    * the corpus integer grid (external embeddings go through
+    * [[quantizeQueries]] first). ONE definition shared by the batch
+    * q79 and the streaming seam, so their agreement is an identity. */
   def ivfPqServe(codes: DataFrame, cents: Seq[Centroid], books: Seq[Seq[Centroid]],
                  queries: DataFrame, k: Int = 5, nprobe: Int = 2,
-                 excludeSelf: Boolean = false): DataFrame = {
-    val sorted = cents.sortBy(_.j)
-    // ONE evaluation of the probe ranking (review r10): the probe
-    // relation is broadcast-sized by contract (nQueries × nprobe
-    // rows), so collect it once and build both the probed-cell set
-    // and the ADC-table side from the local rows — a separate
-    // distinct().collect() action would re-run the per-probe cell
-    // ranking (and the query-relation scan) a second time per batch.
-    val probesPlan = probeCellsRelation(queries, sorted, nprobe)
-    ivfPqServeFrom(codes, sorted, books, probesPlan.collect(), probesPlan.schema,
-      k, excludeSelf)
-  }
+                 excludeSelf: Boolean = false): DataFrame =
+    ivfPqServeFrom(codes, books, Sq.probeRows(queries, cents.sortBy(_.j), nprobe), k, excludeSelf)
 
-  /** [[ivfPqServe]] from an ALREADY-COLLECTED probe relation (rows
-    * carrying [[probeCellsRelation]]'s columns, such as
-    * [[Sq.probeRows]]): the q85 refine composition runs
-    * the routed ADC stage AND a probe-residual refine stage off the
-    * same probe ranking — this entry point lets it pay the ranking
-    * once (the review-r10 one-evaluation rationale, extended across
-    * stages). `sorted` MUST be cell-id-sorted (callers pass
-    * `cents.sortBy(_.j)`). */
-  private[graft] def ivfPqServeFrom(codes: DataFrame, sorted: Seq[Centroid],
-                                    books: Seq[Seq[Centroid]],
+  /** [[ivfPqServe]] from already-ranked [[Sq.probeRows]]: the q85
+    * refine composition runs the routed ADC stage AND a probe-residual
+    * refine stage off the same probe ranking, so it pays the ranking
+    * once. */
+  private[graft] def ivfPqServeFrom(codes: DataFrame, books: Seq[Seq[Centroid]],
                                     probeRows: Array[org.apache.spark.sql.Row],
-                                    probeSchema: org.apache.spark.sql.types.StructType,
                                     k: Int, excludeSelf: Boolean): DataFrame = {
-    val spark = codes.sparkSession
     // The probed-cell set rides the codes scan as a STATIC filter: on
     // the partitioned-by-cell production layout the probed cells
     // prune at LISTING time through the serve path itself
     // (StorageSpec proves it end-to-end), not only when DPP happens
     // to fire — VERDICT r9 #2. Semantically a no-op: the cell
     // equi-join below keeps exactly these cells' rows anyway.
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probeSchema)
     val probedCells = probeRows.map(_.getAs[Long]("cell")).distinct.toSeq
     val ptabs = (0 until M).foldLeft(
-      probes.join(broadcast(gridDfOf(spark, sorted)), "cell")
-        .select(col("q_id"), col("cell"),
-          zip_with(col("qv"), col("grid"), (a, b) => a - b).as("qv"))) { (df, m) =>
+      Sq.probeSide(codes.sparkSession, probeRows)
+        .select(col("q_id"), col("cell"), col("q_v").as("qv"))) { (df, m) =>
         withSlice(df, m)(d => d.withColumn(s"t$m", quantizedSubDist(books(m))))
       }
       .select(col("q_id") +: col("cell") +: (0 until M).map(m => col(s"t$m")): _*)

@@ -22,8 +22,7 @@ import org.apache.spark.sql.types._
 object Relational {
 
   /** Exact decimal view of a double column (order-independent sums). */
-  private def dec(c: Column, scale: Int = 2): Column =
-    c.cast(DecimalType(18, scale))
+  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   /** Final-projection rule for the driver's pandas comparator: DECIMAL
     * outputs surface as Python `Decimal` objects on the Spark side but

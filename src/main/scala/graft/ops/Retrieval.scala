@@ -117,9 +117,7 @@ object Retrieval {
     * [[bm25Publish]]: retrain on the grown corpus, publish as the
     * next artifact version, and live serving jobs swap atomically —
     * the mechanism, not a deferral. */
-  def bm25BuildFrozen(docs: DataFrame, isBase: org.apache.spark.sql.Column,
-                      k1: Double = 1.2, b: Double = 0.75): Bm25Index = {
-    require(k1 >= 0 && b >= 0 && b <= 1, "k1 must be >= 0 and b in [0,1]")
+  def bm25BuildFrozen(docs: DataFrame, isBase: org.apache.spark.sql.Column): Bm25Index = {
     val tf = Caches.persist(docs
       .select(col("doc_id"), isBase.as("is_base"), termCounts(col("text")).as("tc"))
       .select(col("doc_id"), col("is_base"), col("tc.dl").as("dl"),
@@ -139,7 +137,7 @@ object Retrieval {
     val postings = Caches.persist(tf.join(idf, Seq("term"))
       .repartition(col("doc_id"))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("idf")))
-    Bm25Index(postings, nDocs, avgdl, k1, b)
+    Bm25Index(postings, nDocs, avgdl, 1.2, 0.75)
   }
 
   /** q95 — the frozen-stats ingest on the graded surface: base
@@ -147,15 +145,10 @@ object Retrieval {
     * ingested against the frozen statistics, served with the q71
     * probe set (probes read the FULL corpus — a probe drawn from the
     * delta tranche queries like any other). */
-  def bm25FrozenIngestTopK(spark: SparkSession, dir: String,
-                           k: Int = 10, queryMod: Int = 100): DataFrame = {
+  def bm25FrozenIngestTopK(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val ix = bm25BuildFrozen(docs, col("doc_id") % 5 =!= 4)
-    val probes = docs
-      .filter(col("doc_id") % queryMod === 0 && col("doc_id") < 102400L)
-      .select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(termsOf(col("text")), 1, 8)).as("query"))
-    bm25TopK(ix, probes, k).orderBy(col("query_id"), col("rank"))
+    bm25TopK(ix, prefixProbes(docs), k = 10).orderBy(col("query_id"), col("rank"))
   }
 
   /** Persist the index as a parquet artifact (the lmSave shape): the
@@ -256,13 +249,14 @@ object Retrieval {
     * [[bm25TopK]]'s own termsOf pass is idempotent on it). */
   def bm25TopKDocs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val ix = bm25Build(docs)
-    val probes = docs
-      .filter(col("doc_id") % 100 === 0 && col("doc_id") < 102400L)
+    bm25TopK(bm25Build(docs), prefixProbes(docs), k = 10).orderBy(col("query_id"), col("rank"))
+  }
+
+  /** The q71 probe set (query_id, query), shared with q93 and q95. */
+  private def prefixProbes(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 100 === 0 && col("doc_id") < 102400L)
       .select(col("doc_id").as("query_id"),
         concat_ws(" ", slice(termsOf(col("text")), 1, 8)).as("query"))
-    bm25TopK(ix, probes, k = 10).orderBy(col("query_id"), col("rank"))
-  }
 
   /** Reciprocal Rank Fusion constants (Cormack, Clarke & Büttcher,
     * SIGIR 2009): the standard k₀ = 60 smoothing, with the 1/(k₀+r)
@@ -407,7 +401,8 @@ object Retrieval {
     * with the expanded term set. The production lexical-leg upgrade:
     * no training, no vectors, one extra postings pass.
     *
-    * Pipeline: (1) first-pass BM25 top-`fbDocs` per query (the q71
+    * Pipeline (`fbDocs` = `fbTerms` = 10, top-10 served): (1)
+    * first-pass BM25 top-`fbDocs` per query (the q71
     * serve); (2) expansion candidates = every term of every feedback
     * doc, weighted by the exact-integer normalized term frequency
     * [[Rm3Scale]]·tf div dl summed over the feedback set — tf/dl is
@@ -424,22 +419,15 @@ object Retrieval {
     * (expansion mining), and the ≤ nQueries·(8+fbTerms) weighted
     * terms (pass 2). Nothing corpus × corpus; the expansion join is
     * doc_id-keyed so it prunes like any index lookup. */
-  def bm25Rm3TopK(spark: SparkSession, dir: String,
-                  k: Int = 10, fbDocs: Int = 10, fbTerms: Int = 10,
-                  queryMod: Int = 100): DataFrame = {
+  def bm25Rm3TopK(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val ix = bm25Build(docs)
-    // the q71 probe set verbatim (every queryMod-th doc's 8-token
-    // prefix, capped at doc_id < 102,400 → ≤1,024 probes at any SF)
-    val probes = docs
-      .filter(col("doc_id") % queryMod === 0 && col("doc_id") < 102400L)
-      .select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(termsOf(col("text")), 1, 8)).as("query"))
+    val probes = prefixProbes(docs)
     val qterms = Caches.persist(probes
       .select(col("query_id"), explode(termsOf(col("query"))).as("term"))
       .distinct())
     // pass 1: feedback docs (query_id, doc_id) — nQueries·fbDocs rows
-    val fb = bm25TopK(ix, probes, fbDocs)
+    val fb = bm25TopK(ix, probes, 10)
       .select(col("query_id"), col("doc_id"))
     // expansion mining: the feedback doc ids broadcast onto the
     // postings (doc_id-keyed lookup), exact-integer P(t|d) weights
@@ -451,7 +439,7 @@ object Retrieval {
     val expTerms = exp0
       .join(qterms, Seq("query_id", "term"), "left_anti")
       .withColumn("rn", row_number().over(wExp))
-      .filter(col("rn") <= fbTerms)
+      .filter(col("rn") <= 10)
       .select(col("query_id"), col("term"))
     // pass 2: the expanded weighted query
     val wq = qterms.withColumn("wt", lit(Rm3OrigWt))
@@ -465,7 +453,7 @@ object Retrieval {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(contrib).as("score_q"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= 10)
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("score_q").cast("double").as("score"))
       .orderBy(col("query_id"), col("rank"))

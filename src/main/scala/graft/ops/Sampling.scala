@@ -34,9 +34,8 @@ object Sampling {
   private def bucket1000(id: Column, salt: Column): Column =
     pmod(saltedHash(id, salt), lit(1000L))
 
-  /** One definition of the split defaults — shared by both entry
-    * points so a pipeline calling the Docs form and the dir wrapper
-    * can never land on different assignments. */
+  /** The one split configuration (80/10/10 under one salt), shared by
+    * q36 and q97 so a singleton lands in the same split in both. */
   val DefaultSplitSalt = "split-v1"
   val DefaultTrainPermille = 800
   val DefaultValPermille = 100
@@ -45,10 +44,8 @@ object Sampling {
     * bucket. Every document gets exactly one split label; the same
     * (doc_id, salt) maps to the same split forever. */
   def hashSplit(spark: SparkSession, dir: String,
-                salt: String = DefaultSplitSalt,
-                trainPermille: Int = DefaultTrainPermille,
-                valPermille: Int = DefaultValPermille): DataFrame =
-    hashSplitDocs(Tables.documents(spark, dir), salt, trainPermille, valPermille)
+                salt: String = DefaultSplitSalt): DataFrame =
+    hashSplitDocs(Tables.documents(spark, dir), salt)
       .select(col("doc_id"), col("source"), col("split"))
       .orderBy(col("doc_id"))
 
@@ -60,16 +57,14 @@ object Sampling {
     * assignment is a pure function of (doc_id, salt), so a doc's
     * split NEVER changes with the surrounding set — curate-then-split
     * and split-then-curate commute. */
-  def hashSplitDocs(docs: DataFrame, salt: String = DefaultSplitSalt,
-                    trainPermille: Int = DefaultTrainPermille,
-                    valPermille: Int = DefaultValPermille): DataFrame = {
-    require(trainPermille + valPermille <= 1000, "split fractions exceed 1")
-    val b = bucket1000(col("doc_id"), lit(salt))
-    docs.withColumn("split",
-      when(b < trainPermille, "train")
-        .when(b < trainPermille + valPermille, "val")
-        .otherwise("test"))
-  }
+  def hashSplitDocs(docs: DataFrame, salt: String = DefaultSplitSalt): DataFrame =
+    docs.withColumn("split", splitOf(bucket1000(col("doc_id"), lit(salt))))
+
+  /** The split label of a [[bucket1000]] value. */
+  private def splitOf(b: Column): Column =
+    when(b < DefaultTrainPermille, "train")
+      .when(b < DefaultTrainPermille + DefaultValPermille, "val")
+      .otherwise("test")
 
   /** q97 — leakage-safe train/val/test split: the q36 hash split keyed
     * by NEAR-DUP GROUP instead of by document. A per-doc split leaks
@@ -100,47 +95,34 @@ object Sampling {
     * per-row projection. The assignment is a pure function of
     * (group id, salt), so it is stable across runs, engines, and
     * re-partitions like every operator in this file. */
-  def leakageSafeSplit(spark: SparkSession, dir: String,
-                       salt: String = DefaultSplitSalt,
-                       trainPermille: Int = DefaultTrainPermille,
-                       valPermille: Int = DefaultValPermille,
-                       n: Int = 3, threshold: Double = 0.2,
-                       maxDf: Int = 50): DataFrame = {
-    require(trainPermille + valPermille <= 1000, "split fractions exceed 1")
+  def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
     val comp = LlmOps.connectedComponents(
-      LlmOps.jaccardPairsRaw(spark, dir, n, threshold, maxDf)
-        .select(col("d1"), col("d2")))
-    val b = bucket1000(col("group_id"), lit(salt))
+      LlmOps.jaccardPairsRaw(spark, dir, 0.2).select(col("d1"), col("d2")))
     Tables.documents(spark, dir).select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
       .withColumn("group_id", coalesce(col("cluster_id"), col("doc_id")))
-      .withColumn("split",
-        when(b < trainPermille, "train")
-          .when(b < trainPermille + valPermille, "val")
-          .otherwise("test"))
+      .withColumn("split", splitOf(bucket1000(col("group_id"), lit(DefaultSplitSalt))))
       .select(col("doc_id"), col("group_id"), col("split"))
       .orderBy(col("doc_id"))
   }
 
-  /** q37 — per-stratum deterministic sample: keep `permille`/1000 of
+  /** q37 — per-stratum deterministic sample: keep 200/1000 of
     * each `source` stratum (a per-stratum salt decorrelates strata so
     * a hot doc_id range cannot starve one stratum). Emits the kept
     * rows — at 100 TB this is the scan-side filter that feeds an
     * export job, so selectivity is the cost. */
-  def stratifiedSample(spark: SparkSession, dir: String,
-                       permille: Int = 200, salt: String = "sample-v1"): DataFrame = {
-    require(permille >= 0 && permille <= 1000, "permille out of range")
+  def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
     // null-propagating concat (see bucket1000): a null source nulls
     // the hash and the row drops out, matching the oracle's `||`
-    val b = bucket1000(col("doc_id"), concat(lit(salt + "/"), col("source")))
+    val b = bucket1000(col("doc_id"), concat(lit("sample-v1/"), col("source")))
     Tables.documents(spark, dir)
-      .filter(b < permille)
+      .filter(b < 200)
       .select(col("doc_id"), col("source"), col("lang"))
       .orderBy(col("doc_id"))
   }
 
   /** q40 — per-stratum cap resampling: downsample every (source, lang)
-    * stratum to an EXPECTED `cap` documents, keeping the rest intact —
+    * stratum to an EXPECTED `cap` = 5 documents, keeping the rest intact —
     * the balancing stage that stops one over-crawled source from
     * dominating the training mix. A document survives iff its 60-bit
     * hash is below the stratum's `accept_threshold` = `(2^60 div n) ·
@@ -158,9 +140,8 @@ object Sampling {
     * broadcast (AQE picks it from the runtime size), and the
     * acceptance filter rides the scan — the corpus is read once and
     * dropped rows never materialize past the filter. */
-  def stratumCapSample(spark: SparkSession, dir: String,
-                       cap: Int = 5, salt: String = "cap-v1"): DataFrame = {
-    require(cap >= 0, "cap must be non-negative")
+  def stratumCapSample(spark: SparkSession, dir: String): DataFrame = {
+    val cap = 5
     val hashRange = 1L << 60 // one past portableHash64's maximum
     val docs = Tables.documents(spark, dir)
     val rates = docs.groupBy(col("source"), col("lang"))
@@ -171,7 +152,7 @@ object Sampling {
     // null-propagating concat (see saltedHash): null stratum keys null
     // the hash and the row drops out, matching the oracle's `||`
     val h = saltedHash(col("doc_id"),
-      concat(lit(salt + "/"), col("source"), lit("/"), col("lang")))
+      concat(lit("cap-v1/"), col("source"), lit("/"), col("lang")))
     // explicit broadcast: the rate table is #strata-sized by
     // construction (always broadcast-safe), and without the hint the
     // static planner's stats put the RAW SCAN under the aggregate and
@@ -202,8 +183,7 @@ object Sampling {
     * broadcast back onto the scan (explicit hint — the q40 static-
     * stats argument), and the acceptance filter rides the scan: the
     * corpus is read once, dropped rows never materialize. */
-  def sourceMixDocs(docs: DataFrame, weight: Column,
-                    salt: String = "mix-v1"): DataFrame = {
+  def sourceMixDocs(docs: DataFrame, weight: Column): DataFrame = {
     val hashRange = 1L << 60 // one past portableHash64's maximum
     val weighted = docs.select(col("doc_id"), col("source"), weight.as("wt"))
     // ONE rate row per source, enforced: `weight` is an arbitrary
@@ -231,7 +211,7 @@ object Sampling {
       .select(col("source"), col("n_stratum"), col("target_n"), col("accept_threshold"))
     // null-propagating concat (see saltedHash): a null source nulls the
     // hash and the row drops out, matching the oracle's `||`
-    val h = saltedHash(col("doc_id"), concat(lit(salt + "/"), col("source")))
+    val h = saltedHash(col("doc_id"), concat(lit("mix-v1/"), col("source")))
     // the per-ROW weight filter, not just the strata-side one: the join
     // below keys on source NAME, so without it a row whose own weight
     // is 0/null/negative ("excluded" per the contract) would ride its
@@ -247,10 +227,9 @@ object Sampling {
     * demo weight rule (numeric source suffix mod 4, plus 1 — any
     * per-source weight expression works; a real pipeline passes a
     * `typedLit(map)` lookup of its mix config). */
-  def sourceMix(spark: SparkSession, dir: String,
-                salt: String = "mix-v1"): DataFrame =
+  def sourceMix(spark: SparkSession, dir: String): DataFrame =
     sourceMixDocs(Tables.documents(spark, dir),
-      expr("CAST(substr(source, 4) AS BIGINT) % 4 + 1"), salt)
+      expr("CAST(substr(source, 4) AS BIGINT) % 4 + 1"))
       .orderBy(col("doc_id"))
 
   /** q74 — temperature-flattened source mixing: sample source `s`
@@ -284,8 +263,7 @@ object Sampling {
     * rides the scan — the corpus is read once and dropped rows never
     * materialize. */
   def temperatureMixDocs(docs: DataFrame, alpha: Double = 0.5,
-                         budgetPermille: Int = 500,
-                         salt: String = "temp-v1"): DataFrame = {
+                         budgetPermille: Int = 500): DataFrame = {
     require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
     require(budgetPermille >= 0 && budgetPermille <= 1000,
       "budgetPermille must be in [0, 1000]")
@@ -311,7 +289,7 @@ object Sampling {
         col("accept_threshold"))
     // null-propagating concat (see saltedHash): a null source nulls
     // the hash and the row drops out, matching the oracle's `||`
-    val h = saltedHash(col("doc_id"), concat(lit(salt + "/"), col("source")))
+    val h = saltedHash(col("doc_id"), concat(lit("temp-v1/"), col("source")))
     docs.join(broadcast(rates), Seq("source"))
       .filter(h < col("accept_threshold"))
       .select(col("doc_id"), col("source"), col("n_stratum"), col("target_n"))
@@ -322,6 +300,10 @@ object Sampling {
   def temperatureMix(spark: SparkSession, dir: String): DataFrame =
     temperatureMixDocs(Tables.documents(spark, dir))
       .orderBy(col("doc_id"))
+
+  /** Packing configuration, read by the q39 oracle too. */
+  val DefaultContextLen = 128
+  val DefaultShards = 8
 
   /** q39 — sequence packing: lay documents end to end and cut
     * fixed-size context windows of `contextLen` tokens — the batch
@@ -342,11 +324,10 @@ object Sampling {
     * the scan side). Deterministic: (doc_id, nShards, contextLen) ↦
     * (shard, pack_id, start_tok) is a pure function — the same corpus
     * packs identically on any engine or cluster size, and the DuckDB
-    * oracle replays it exactly. */
-  /** Shared packing defaults (same single-definition rationale as the
-    * split defaults). */
-  val DefaultContextLen = 128
-  val DefaultShards = 8
+    * oracle replays it exactly. Here `contextLen` is
+    * [[DefaultContextLen]] and `nShards` is [[DefaultShards]]. */
+  def packSequences(spark: SparkSession, dir: String): DataFrame =
+    packSequencesDocs(Tables.documents(spark, dir))
 
   /** q46 — sliding-window chunking: cut each document into overlapping
     * token windows (`size` tokens every `stride`) — the INTRA-document
@@ -381,29 +362,21 @@ object Sampling {
       .orderBy(col("doc_id"), col("chunk_id"))
   }
 
-  def packSequences(spark: SparkSession, dir: String,
-                    contextLen: Int = DefaultContextLen,
-                    nShards: Int = DefaultShards): DataFrame =
-    packSequencesDocs(Tables.documents(spark, dir), contextLen, nShards)
-
   /** [[packSequences]] over an arbitrary documents DataFrame — the
     * composition form: packing runs over whatever survived curation /
     * splitting upstream (offsets are relative to the INPUT SET, so
     * unlike the hash-keyed operators this one intentionally depends
     * on which docs are present — packing a curated corpus is exactly
     * the point). */
-  def packSequencesDocs(docs: DataFrame,
-                        contextLen: Int = DefaultContextLen,
-                        nShards: Int = DefaultShards): DataFrame = {
-    require(contextLen > 0 && nShards > 0, "contextLen and nShards must be positive")
+  def packSequencesDocs(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     docs
-      .select(col("doc_id"), pmod(col("doc_id"), lit(nShards.toLong)).as("shard"),
+      .select(col("doc_id"), pmod(col("doc_id"), lit(DefaultShards.toLong)).as("shard"),
         textStats(col("text")).getField("n_tokens").as("n_tokens"))
       .withColumn("start_tok", sum(col("n_tokens")).over(w) - col("n_tokens"))
-      .withColumn("pack_id", expr(s"start_tok div $contextLen"))
+      .withColumn("pack_id", expr(s"start_tok div $DefaultContextLen"))
       .select(col("doc_id"), col("shard"), col("n_tokens"),
         col("start_tok"), col("pack_id"))
       .orderBy(col("doc_id"))

@@ -147,7 +147,7 @@ object Sq {
           s"query ${r.get(0)} has ${qv.length} dims (want ${Embeddings.Dim})")
         val qa = new GenericArrayData(qv)
         val nrm = VecDot.computeStrict(qa, qa)
-        table.probe(qa, nrm, nprobe).toLongArray.map { cell =>
+        table.probe(qa, nrm, nprobe).toLongArray().map { cell =>
           val g = grids(cell)
           val qres = Array.tabulate(qv.length)(d => qv(d) - g(d))
           val ra = new GenericArrayData(qres)
@@ -161,7 +161,7 @@ object Sq {
 
   /** [[probeRows]] as the broadcastable (q_id, cell, q_v, q_n) side of
     * the cell equi-join. */
-  private def probeSide(spark: SparkSession, rows: Array[Row]): DataFrame =
+  private[ops] def probeSide(spark: SparkSession, rows: Array[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), ProbeSchema)
       .select(col("q_id"), col("cell"), col("q_v"), col("q_n"))
 
@@ -222,11 +222,8 @@ object Sq {
               k: Int = 5, queryMod: Int = 50): DataFrame = {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
     val (mins, maxs) = gridBounds(vecs)
-    val codes = encode(vecs, mins, maxs)
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < Pq.ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    sq8Serve(codes, mins, maxs, probes, k, excludeSelf = true)
+    sq8Serve(encode(vecs, mins, maxs), mins, maxs, Pq.cappedProbes(vecs, queryMod), k,
+      excludeSelf = true)
   }
 
   /** The SQ8 serve: decode rides the codes scan (row-local), the
@@ -272,27 +269,31 @@ object Sq {
     * StorageSpec's IVFADC proof shape) — per-probe work is
     * nprobe/nCells of the corpus at 64 B/vector. */
   def ivfSq8TopK(spark: SparkSession, dir: String,
-                 k: Int = 5, queryMod: Int = 50, nprobe: Int = 2,
-                 nCells: Int = Embeddings.OracleCells,
-                 iters: Int = Embeddings.OracleIters): DataFrame = {
+                 k: Int = 5, queryMod: Int = 50, nprobe: Int = 2): DataFrame = {
+    val (vecs, cents, mins, maxs, codes) = routedIndex(spark, dir)
+    ivfSq8Serve(codes, cents, mins, maxs, Pq.cappedProbes(vecs, queryMod), k, nprobe,
+      excludeSelf = true)
+  }
+
+  /** The q82 build every routed SQ8 query shares: the cached quantized
+    * corpus, the pinned coarse quantizer ([[Embeddings.OracleCells]],
+    * [[Embeddings.OracleIters]]), the residual bounds and the routed
+    * codes. */
+  private def routedIndex(spark: SparkSession, dir: String)
+      : (DataFrame, Seq[Embeddings.Centroid], IndexedSeq[Long], IndexedSeq[Long], DataFrame) = {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val cents = Embeddings.trainQuantizer(spark, dir, nCells, iters).sortBy(_.j)
+    val cents = Embeddings.trainQuantizer(spark, dir).sortBy(_.j)
     val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
     val (mins, maxs) = gridBounds(residuals)
-    val codes = encode(residuals, mins, maxs, keep = Seq("cell"))
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < Pq.ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    ivfSq8Serve(codes, cents, mins, maxs, probes, k, nprobe, excludeSelf = true)
+    (vecs, cents, mins, maxs, encode(residuals, mins, maxs, keep = Seq("cell")))
   }
 
   /** Semi-hard margin on the integer distance grid: qv = x·1000, so
     * squared distances carry a 10⁶ scale — 200,000 ≈ 0.2 in original
     * float² units, calibrated so the band is non-empty on the
     * near-isotropic driver corpus (per-probe d_pos ≈ 1.2-1.5M with
-    * different-label candidates spread across ±0.3M). Parametric —
-    * a real embedding-training pipeline tunes this to its loss
-    * margin. */
+    * different-label candidates spread across ±0.3M). The q96 oracle
+    * reads this value; [[graft.tools.DiversityReport]] sweeps others. */
   val TripletMargin = 200000L
 
   /** q96 — SEMI-HARD TRIPLET MINING over routed candidates (the
@@ -307,7 +308,7 @@ object Sq {
     * positive = the nearest same-label candidate (ties neighbor_id);
     * negatives = different-label candidates inside the semi-hard
     * band. Anchors with no same-label candidate in the pool emit
-    * nothing (raise `r` — the q83 dial); anchors with no negative in
+    * nothing (the pool is [[Pq.RefineR]] deep); anchors with no negative in
     * the band emit nothing (the margin dial — MEASURED by
     * [[graft.tools.DiversityReport.tripletYieldVsMargin]]: yield and
     * anchor coverage are monotone in the margin by construction,
@@ -318,22 +319,11 @@ object Sq {
     *
     * Output (q_id, pos_id, neg_id, d_pos, d_neg), ordered. */
   def ivfSq8TripletMine(spark: SparkSession, dir: String,
-                        r: Int = Pq.RefineR, queryMod: Int = 50,
-                        nprobe: Int = 2,
-                        nCells: Int = Embeddings.OracleCells,
-                        iters: Int = Embeddings.OracleIters,
                         margin: Long = TripletMargin): DataFrame = {
     require(margin >= 0, "margin must be non-negative")
-    val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val cents = Embeddings.trainQuantizer(spark, dir, nCells, iters).sortBy(_.j)
-    val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
-    val (mins, maxs) = gridBounds(residuals)
-    val codes = encode(residuals, mins, maxs, keep = Seq("cell"))
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < Pq.ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    val cands = ivfSq8Serve(codes, cents, mins, maxs, probes,
-        k = r, nprobe = nprobe, excludeSelf = true)
+    val (vecs, cents, mins, maxs, codes) = routedIndex(spark, dir)
+    val cands = ivfSq8Serve(codes, cents, mins, maxs, Pq.cappedProbes(vecs, 50),
+        k = Pq.RefineR, nprobe = 2, excludeSelf = true)
       .select(col("q_id"), col("neighbor_id"), col("est"))
     // labels attach candidate-sized: the candidate list broadcasts
     // into the corpus scan twice (neighbor label, then anchor label)
@@ -457,25 +447,16 @@ object Sq {
     * filter rides the SAME scan-pruned cell equi-join, and because
     * there is no per-query window, the range serve is cheaper than
     * top-k at equal candidate volume (no rank shuffle: the filter is
-    * a scan-riding predicate after one codegen vec_dot). `tau` is on
-    * the ×1000 integer grid (squared distance), ~1.5% pair density
-    * on the synthetic corpus — production tunes it per-metric as
-    * FAISS does. */
+    * a scan-riding predicate after one codegen vec_dot). The radius is
+    * [[RangeTau]], on the ×1000 integer grid (squared distance): ~1.5%
+    * pair density on the synthetic corpus, and the value the q89
+    * oracle reads. */
   val RangeTau = 1450000L
 
-  def ivfSq8RangeSearch(spark: SparkSession, dir: String,
-                        tau: Long = RangeTau, queryMod: Int = 50, nprobe: Int = 2,
-                        nCells: Int = Embeddings.OracleCells,
-                        iters: Int = Embeddings.OracleIters): DataFrame = {
-    val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val cents = Embeddings.trainQuantizer(spark, dir, nCells, iters).sortBy(_.j)
-    val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
-    val (mins, maxs) = gridBounds(residuals)
-    val codes = encode(residuals, mins, maxs, keep = Seq("cell"))
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < Pq.ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    ivfSq8RangeServe(codes, cents, mins, maxs, probes, tau, nprobe, excludeSelf = true)
+  def ivfSq8RangeSearch(spark: SparkSession, dir: String): DataFrame = {
+    val (vecs, cents, mins, maxs, codes) = routedIndex(spark, dir)
+    ivfSq8RangeServe(codes, cents, mins, maxs, Pq.cappedProbes(vecs, 50), RangeTau,
+      excludeSelf = true)
   }
 
   /** The radius serve behind [[ivfSq8RangeSearch]]: [[ivfSq8Pairs]]
@@ -484,10 +465,10 @@ object Sq {
     * about what "distance" means. */
   def ivfSq8RangeServe(codes: DataFrame, cents: Seq[Embeddings.Centroid],
                        mins: Seq[Long], maxs: Seq[Long],
-                       queries: DataFrame, tau: Long, nprobe: Int = 2,
+                       queries: DataFrame, tau: Long,
                        excludeSelf: Boolean = false): DataFrame = {
     require(tau >= 0, "radius must be non-negative")
-    withEst(ivfSq8Pairs(decodedTier(codes, mins, maxs), cents, queries, nprobe, excludeSelf))
+    withEst(ivfSq8Pairs(decodedTier(codes, mins, maxs), cents, queries, 2, excludeSelf))
       .filter(col("est") <= tau)
       .select(col("q_id"), col("neighbor_id"), col("est"))
       .orderBy(col("q_id"), col("est"), col("neighbor_id"))
@@ -527,15 +508,8 @@ object Sq {
     * the q87 ingest economics); the serve is q82's verbatim over a
     * smaller tier. */
   def ivfSq8DeleteTopK(spark: SparkSession, dir: String,
-                       k: Int = 5, queryMod: Int = 50, nprobe: Int = 2,
-                       nCells: Int = Embeddings.OracleCells,
-                       iters: Int = Embeddings.OracleIters,
                        deleteMod: Int = 10, deleteRem: Int = 3): DataFrame = {
-    val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val cents = Embeddings.trainQuantizer(spark, dir, nCells, iters).sortBy(_.j)
-    val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
-    val (mins, maxs) = gridBounds(residuals)
-    val codes = encode(residuals, mins, maxs, keep = Seq("cell"))
+    val (vecs, cents, mins, maxs, codes) = routedIndex(spark, dir)
     // the REAL mutation loop, not a simulation: publish, tombstone,
     // vacuum the superseded version, serve the resolved snapshot
     val root = java.nio.file.Files.createTempDirectory("ivfsq8-del").toString
@@ -545,16 +519,13 @@ object Sq {
         .withColumn("__deleted", lit(true)),
       "vec_id", deleteCol = Some("__deleted"))
     Storage.vacuumSnapshots(spark, root, keepLast = 1)
-    val tier = Storage.readSnapshot(spark, root)
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < Pq.ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    ivfSq8Serve(tier, cents, mins, maxs, probes, k, nprobe, excludeSelf = true)
+    ivfSq8Serve(Storage.readSnapshot(spark, root), cents, mins, maxs,
+      Pq.cappedProbes(vecs, 50), 5, 2, excludeSelf = true)
   }
 
   /** q86 — FILTERED IVF+SQ8 top-k (the FAISS `IDSelector` / filtered-
     * search production shape): the routed q82 serve under a PER-QUERY
-    * metadata predicate — here `label % labelMod = 0` over the
+    * metadata predicate — here `label % 2 = 0` over the
     * corpus's label column — with selector semantics pinned to how
     * every production engine defines them: training, routing, and
     * encoding see the FULL corpus (the index is built once, filters
@@ -578,21 +549,11 @@ object Sq {
     * equi-join + modulo predicate — the q86 oracle replays the serve
     * with `JOIN embeddings ... WHERE label % 2 = 0`. */
   def ivfSq8TopKFiltered(spark: SparkSession, dir: String,
-                         k: Int = 5, queryMod: Int = 50, nprobe: Int = 2,
-                         nCells: Int = Embeddings.OracleCells,
-                         iters: Int = Embeddings.OracleIters,
-                         labelMod: Int = 2): DataFrame = {
-    val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val cents = Embeddings.trainQuantizer(spark, dir, nCells, iters).sortBy(_.j)
-    val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
-    val (mins, maxs) = gridBounds(residuals)
-    val codes = encode(residuals, mins, maxs, keep = Seq("cell"))
-      .join(vecs.select(col("vec_id"), col("label")), "vec_id")
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < Pq.ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    ivfSq8Serve(codes.filter(col("label") % labelMod === 0), cents, mins, maxs,
-      probes, k, nprobe, excludeSelf = true)
+                         k: Int = 5, queryMod: Int = 50): DataFrame = {
+    val (vecs, cents, mins, maxs, codes) = routedIndex(spark, dir)
+    val labeled = codes.join(vecs.select(col("vec_id"), col("label")), "vec_id")
+    ivfSq8Serve(labeled.filter(col("label") % 2 === 0), cents, mins, maxs,
+      Pq.cappedProbes(vecs, queryMod), k, 2, excludeSelf = true)
   }
 
   /** The q86 payload-attached tier: the routed SQ8 codes relation
@@ -610,7 +571,7 @@ object Sq {
   /** q87 — FROZEN-QUANTIZER ROLLING INGEST (the index-refresh
     * composition every production ANN deployment runs nightly): the
     * coarse quantizer AND the SQ8 residual bounds are trained on the
-    * BASE tranche only (`vec_id % deltaMod ≠ deltaMod−1` — the corpus
+    * BASE tranche only (`vec_id % 5 ≠ 4` — the corpus
     * as of the last full rebuild), FROZEN, and the WHOLE corpus —
     * base plus the later delta tranche — is assigned, residualized,
     * and encoded against those frozen artifacts. This is the exact
@@ -634,25 +595,20 @@ object Sq {
     * against the frozen centroids, learns bounds over base residuals
     * only, and replays the clamped encode∘decode over everything —
     * the serve tail is q82's verbatim. */
-  def ivfSq8FrozenIngestTopK(spark: SparkSession, dir: String,
-                             k: Int = 5, queryMod: Int = 50, nprobe: Int = 2,
-                             nCells: Int = Embeddings.OracleCells,
-                             iters: Int = Embeddings.OracleIters,
-                             deltaMod: Int = 5): DataFrame = {
+  def ivfSq8FrozenIngestTopK(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val isBase = col("vec_id") % deltaMod =!= (deltaMod - 1)
-    val cents = Embeddings.trainQuantizerOn(
-      Caches.persist(vecs.filter(isBase)), nCells, iters).sortBy(_.j)
+    val cents = Embeddings.trainQuantizerOn(Caches.persist(vecs.filter(isBase)),
+      Embeddings.OracleCells, Embeddings.OracleIters).sortBy(_.j)
     // full-corpus residuals against the FROZEN centroids feed both the
     // base-only bounds pass and the encode pass — cached once
     val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
     val (mins, maxs) = gridBounds(residuals.filter(isBase))
-    val codes = encode(residuals, mins, maxs, keep = Seq("cell"))
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < Pq.ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
-    ivfSq8Serve(codes, cents, mins, maxs, probes, k, nprobe, excludeSelf = true)
+    ivfSq8Serve(encode(residuals, mins, maxs, keep = Seq("cell")), cents, mins, maxs,
+      Pq.cappedProbes(vecs, 50), 5, 2, excludeSelf = true)
   }
+
+  /** The q87 base tranche: every vector but the delta `vec_id % 5 = 4`. */
+  private def isBase: Column = col("vec_id") % 5 =!= 4
 
   /** Encode a NEW-VECTOR batch — (vec_id: long, embedding:
     * array<float>) rows that were NOT part of the index build —
@@ -682,15 +638,11 @@ object Sq {
     * triple a rolling-ingest deployment persists at rebuild time
     * ([[Embeddings.saveQuantizer]] + [[saveBounds]]); every later
     * ingest batch encodes against it without touching the trainer. */
-  def trainFrozenIvfSq8(spark: SparkSession, dir: String,
-                        deltaMod: Int = 5,
-                        nCells: Int = Embeddings.OracleCells,
-                        iters: Int = Embeddings.OracleIters)
+  def trainFrozenIvfSq8(spark: SparkSession, dir: String)
       : (Seq[Embeddings.Centroid], IndexedSeq[Long], IndexedSeq[Long]) = {
-    val isBase = col("vec_id") % deltaMod =!= (deltaMod - 1)
     val cents = Embeddings.trainQuantizerOn(
       Caches.persist(Embeddings.quantized(spark, dir).filter(isBase)),
-      nCells, iters).sortBy(_.j)
+      Embeddings.OracleCells, Embeddings.OracleIters).sortBy(_.j)
     val (mins, maxs) = gridBounds(
       Pq.residualsOf(spark, dir, cents).filter(isBase))
     (cents, mins, maxs)
@@ -731,24 +683,18 @@ object Sq {
     * layout the refine tier prunes at listing time too. PlanAuditSpec
     * pins both: no second all-pairs join, both scans filtered. */
   def ivfPqSq8RefineTopK(spark: SparkSession, dir: String,
-                         k: Int = 5, r: Int = Pq.RefineR, queryMod: Int = 50,
-                         nprobe: Int = 2,
-                         nCells: Int = Embeddings.OracleCells,
-                         iters: Int = Embeddings.OracleIters): DataFrame = {
+                         k: Int = 5, queryMod: Int = 50): DataFrame = {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
-    val cents = Embeddings.trainQuantizer(spark, dir, nCells, iters).sortBy(_.j)
+    val cents = Embeddings.trainQuantizer(spark, dir).sortBy(_.j)
     // ONE cached residual relation feeds codebook training, PQ
     // encoding, bounds, and SQ8 encoding (the q79 review-r9 rationale)
     val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
-    val books = Pq.trainCodebooks(residuals, iters)
+    val books = Pq.trainCodebooks(residuals)
     val pqCodes = Pq.encode(residuals, books, keep = Seq("cell"))
     val (mins, maxs) = gridBounds(residuals)
     val sqCodes = encode(residuals, mins, maxs, keep = Seq("cell"))
-    val probes = vecs
-      .filter(col("vec_id") % queryMod === 0 && col("vec_id") < Pq.ProbeCap)
-      .select(col("vec_id").as("q_id"), col("qv"))
     ivfPqSq8RefineServe(pqCodes, sqCodes, cents, books, mins, maxs,
-      probes, k, r, nprobe, excludeSelf = true)
+      Pq.cappedProbes(vecs, queryMod), k, Pq.RefineR, 2, excludeSelf = true)
   }
 
   /** The two-stage serve behind [[ivfPqSq8RefineTopK]]. ONE
@@ -767,11 +713,10 @@ object Sq {
                           nprobe: Int = 2,
                           excludeSelf: Boolean = false): DataFrame = {
     require(r >= k, s"refine candidate budget r=$r must cover k=$k")
-    val sorted = cents.sortBy(_.j)
-    val rows = probeRows(queries, sorted, nprobe)
+    val rows = probeRows(queries, cents.sortBy(_.j), nprobe)
     val probedCells = rows.map(_.getLong(3)).distinct.toSeq
     // stage 1: routed ADC candidate generation — q79's serve at k = r
-    val cands = Pq.ivfPqServeFrom(pqCodes, sorted, books, rows, ProbeSchema, r, excludeSelf)
+    val cands = Pq.ivfPqServeFrom(pqCodes, books, rows, r, excludeSelf)
       .select(col("q_id"), col("neighbor_id"))
     // stage 2: each probe's residual against each PROBED cell (the
     // q82 probe side) meets the candidates' SQ8 reconstructions

@@ -25,11 +25,10 @@ import org.apache.spark.sql.functions._
 object Temporal {
 
   /** q52 — range join (conversion attribution): every (click, view)
-    * pair of the same user where the view lands in the window
-    * `(click.ts, click.ts + windowMicros]`. Emits the micros gap —
-    * exact integer arithmetic on both engines. */
-  def rangeJoinConversions(spark: SparkSession, dir: String,
-                           windowMicros: Long = 10L * 60 * 1000000): DataFrame = {
+    * pair of the same user where the view lands in the ten-minute
+    * window `(click.ts, click.ts + 600,000,000 µs]`. Emits the micros
+    * gap — exact integer arithmetic on both engines. */
+  def rangeJoinConversions(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
@@ -40,7 +39,7 @@ object Temporal {
     clicks.join(views,
         clicks("user_id") === views("user_id") &&
           col("view_us") > col("click_us") &&
-          col("view_us") <= col("click_us") + windowMicros)
+          col("view_us") <= col("click_us") + 10L * 60 * 1000000)
       .select(clicks("user_id"), col("click_id"), col("view_id"),
         (col("view_us") - col("click_us")).as("gap_us"))
       .orderBy(col("click_id"), col("view_id"))

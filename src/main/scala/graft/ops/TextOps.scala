@@ -251,8 +251,8 @@ object TextOps {
   }
 
   /** q26 — winnowing document fingerprint (MOSS-style): hash every
-    * char k-gram, keep the minimum hash of each sliding window of w
-    * positions, fingerprint = sorted distinct minima ('|'-joined —
+    * char k-gram (k = 8), keep the minimum hash of each sliding window
+    * of w = 4 positions, fingerprint = sorted distinct minima ('|'-joined —
     * array cells kill the driver comparator). Robust to small edits;
     * the standard near-dup/plagiarism sketch.
     *
@@ -264,15 +264,15 @@ object TextOps {
     * exchange that is the real bottleneck on a 1000-executor cluster;
     * an intermediate higher-order-function version avoided the shuffle
     * but paid ~1.7× interpreted-lambda CPU. This keeps both wins. */
-  def winnowFingerprint(spark: SparkSession, dir: String,
-                        k: Int = 8, w: Int = 4): DataFrame = {
+  def winnowFingerprint(spark: SparkSession, dir: String): DataFrame = {
+    val k = 8
     // fanned out (round 15): the per-char winnowing pass is the whole
     // cost and ran serialized on the one-row-group scan — measured
     // 1.41 → 0.58 s at sf0.1
     Tables.fanOut(Tables.documents(spark, dir))
       .filter(length(col("text")) >= k)
       .select(col("doc_id"),
-        array_join(array_sort(array_distinct(winnowMinima(col("text"), k, w)))
+        array_join(array_sort(array_distinct(winnowMinima(col("text"), k, 4)))
           .cast("array<string>"), "|").as("fingerprint"),
         (length(col("text")) - (k - 1)).cast("long").as("n_grams"))
       .orderBy(col("doc_id"))
@@ -294,13 +294,13 @@ object TextOps {
     * task to its distinct-pair set (bounded by alphabet², tiny) before
     * the ONE shuffle keyed by pair, and top-k is TakeOrdered — never a
     * global sort. */
-  def bpePairCounts(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
+  def bpePairCounts(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(charPairs(col("text"))).as("pair"))
     val counts = pairs.groupBy(col("pair"), col("doc_id")).agg(count(lit(1)).as("c"))
       .groupBy(col("pair"))
       .agg(sum(col("c")).as("n"), count(lit(1)).as("df"))
-    counts.orderBy(col("n").desc, col("pair")).limit(k)
+    counts.orderBy(col("n").desc, col("pair")).limit(50)
       .withColumn("rank",
         row_number().over(Window.orderBy(col("n").desc, col("pair"))).cast("long"))
       .select(col("rank"), col("pair"), col("n"), col("df"))

@@ -119,9 +119,8 @@ object WarehouseSql {
   /** Full preparation of a reference .sql text: template substitution
     * then call-grammar rewrite. Registers the UDF names so the result
     * is immediately runnable via `spark.sql`. */
-  def prepare(spark: SparkSession, sql: String,
-              vars: Map[String, String] = DefaultVars): String = {
+  def prepare(spark: SparkSession, sql: String): String = {
     Udfs.register(spark)
-    rewriteCalls(substitute(sql, vars))
+    rewriteCalls(substitute(sql, DefaultVars))
   }
 }

@@ -16,18 +16,13 @@ import org.apache.spark.sql.functions._
   */
 object EventWindows {
 
-  /** Tumbling event-time window counts per event type. `events` needs
-    * an event-time `ts` timestamp column (batch or streaming). In
-    * append mode a window emits exactly once — when the watermark
-    * passes its end — and events later than `lateness` are dropped. */
-  def windowedTypeCounts(events: DataFrame,
-                         windowLen: String = "1 hour",
-                         lateness: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
+  /** Tumbling one-hour event-time window counts per event type.
+    * `events` needs an event-time `ts` timestamp column (batch or
+    * streaming). In append mode a window emits exactly once — when the
+    * watermark passes its end — and events later than 2 hours are
+    * dropped. */
+  def windowedTypeCounts(events: DataFrame): DataFrame =
+    typeCounts(events.withWatermark("ts", "2 hours"))
 
   /** q30 — the batch twin over the `events` table (identical window
     * semantics, DuckDB-oracle-certified; `window()` on a batch frame
@@ -35,19 +30,22 @@ object EventWindows {
     * both engines. */
   def windowedTypeCountsBatch(spark: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame =
-    graft.ops.Tables.events(spark, dir)
+    typeCounts(graft.ops.Tables.events(spark, dir))
+      .orderBy(col("window_start"), col("event_type"))
+
+  private def typeCounts(events: DataFrame): DataFrame =
+    events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-      .orderBy(col("window_start"), col("event_type"))
 
   /** Per-user sessionization: group each user's events into sessions
-    * separated by inactivity gaps longer than `gap`, via Spark's
+    * separated by inactivity gaps longer than 30 minutes, via Spark's
     * merging [[session_window]] (batch or streaming input). Two events
-    * land in one session iff consecutive gaps are AT MOST `gap`:
+    * land in one session iff consecutive gaps are AT MOST the gap:
     * session windows that merely TOUCH are merged — an event exactly
-    * `gap` after the previous one continues the session (pinned by
-    * spec); `session_end` is last-event-time + gap on both engines.
+    * 30 minutes after the previous one continues the session (pinned
+    * by spec); `session_end` is last-event-time + gap on both engines.
     *
     * Scale: state/shuffle is keyed on (user, merged window) — the
     * canonical session shape. In streaming the watermark bounds state:
@@ -56,9 +54,9 @@ object EventWindows {
     * unbounded session state. `sum_value` follows the oracle decimal
     * rule (per-element DECIMAL(18,2) cast, summed exactly, emitted as
     * double). */
-  def sessionStats(events: DataFrame, gap: String = "30 minutes"): DataFrame =
+  def sessionStats(events: DataFrame): DataFrame =
     events
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).as("sum_dec"))
       .select(col("user_id"), col("sw.start").as("session_start"),
@@ -66,11 +64,10 @@ object EventWindows {
         col("sum_dec").cast("double").as("sum_value"))
 
   /** [[sessionStats]] with a watermark — the streaming form: append
-    * mode emits each session once, `lateness` bounds both late data
-    * and session state. */
-  def sessionStatsStreaming(events: DataFrame, gap: String = "30 minutes",
-                            lateness: String = "2 hours"): DataFrame =
-    sessionStats(events.withWatermark("ts", lateness), gap)
+    * mode emits each session once, and a 2-hour lateness bound limits
+    * both late data and session state. */
+  def sessionStatsStreaming(events: DataFrame): DataFrame =
+    sessionStats(events.withWatermark("ts", "2 hours"))
 
   /** q47 — the batch twin over the `events` table. The DuckDB oracle
     * replays the same sessions via gaps-and-islands (lag + running

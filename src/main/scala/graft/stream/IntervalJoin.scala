@@ -22,17 +22,16 @@ object IntervalJoin {
 
   /** Inner interval join: `clicks(user_id, click_id, click_ts)` ⋈
     * `views(user_id, view_id, view_ts)` with the view inside
-    * `(click_ts, click_ts + window]`. Works on batch frames too
-    * (same plan minus the state store). */
-  def clickViewConversions(clicks: DataFrame, views: DataFrame,
-                           window: String = "10 minutes",
-                           lateness: String = "30 minutes"): DataFrame = {
-    val c = clicks.withWatermark("click_ts", lateness)
-    val v = views.withWatermark("view_ts", lateness)
+    * `(click_ts, click_ts + 10 minutes]`, both sides watermarked 30
+    * minutes late. Works on batch frames too (same plan minus the
+    * state store). */
+  def clickViewConversions(clicks: DataFrame, views: DataFrame): DataFrame = {
+    val c = clicks.withWatermark("click_ts", "30 minutes")
+    val v = views.withWatermark("view_ts", "30 minutes")
     c.join(v,
         c("user_id") === v("user_id") &&
           col("view_ts") > col("click_ts") &&
-          col("view_ts") <= col("click_ts") + expr(s"INTERVAL $window"))
+          col("view_ts") <= col("click_ts") + expr("INTERVAL 10 minutes"))
       .select(c("user_id"), col("click_id"), col("view_id"),
         col("click_ts"), col("view_ts"))
   }

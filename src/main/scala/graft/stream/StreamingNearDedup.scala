@@ -66,18 +66,20 @@ object StreamingNearDedup {
   }
 
   /** Match a document stream (ts, doc_id, text) against the index:
-    * one row per (incoming doc, corpus doc) within `maxHamming`, the
-    * band multiplicity collapsed by watermark-bounded dedup. The
+    * one row per (incoming doc, corpus doc) within Hamming Bands−1,
+    * the band multiplicity collapsed by watermark-bounded dedup. The
     * index is broadcast — the stream side never shuffles for the
     * join. */
   def nearDupMatches(docs: DataFrame, index: DataFrame,
-                     maxHamming: Int = 3, horizon: String = "1 hour"): DataFrame = {
-    // strict bound from the pigeonhole argument: beyond Bands−1 bit
-    // flips a pair can disagree on every band and silently vanish from
-    // the join — reject instead of losing recall without warning
-    require(maxHamming < Bands,
-      s"maxHamming must be ≤ ${Bands - 1}: the $Bands-band index only guarantees " +
-        "recall for pairs within Bands−1 differing bits")
+                     horizon: String = "1 hour"): DataFrame =
+    matches(sketched(docs), index)
+      .withWatermark("ts", horizon)
+      .dropDuplicatesWithinWatermark("doc_id", "idx_doc_id")
+      .select(col("ts"), col("doc_id"), col("idx_doc_id").as("match_id"), col("hamming"))
+
+  /** The stream side's band probes: (ts, doc_id, simhash, band,
+    * band_val), tokenized as [[simhashIndex]] does. */
+  private def sketched(docs: DataFrame): DataFrame =
     docs
       .withColumn("ws", filter(split(col("text"), " "), x => length(x) > 0))
       .filter(size(col("ws")) > 0)
@@ -85,13 +87,14 @@ object StreamingNearDedup {
       .withColumn("bk", explodeBands(col("simhash")))
       .select(col("ts"), col("doc_id"), col("simhash"),
         col("bk.band").as("band"), col("bk.band_val").as("band_val"))
-      .join(broadcast(index), Seq("band", "band_val"))
+
+  /** Band probes joined to the broadcast index, kept within Hamming
+    * Bands−1 — the pigeonhole bound: past it a pair can disagree on
+    * every band and vanish from the join — self-matches dropped. */
+  private def matches(probes: DataFrame, index: DataFrame): DataFrame =
+    probes.join(broadcast(index), Seq("band", "band_val"))
       .withColumn("hamming", bit_count(col("simhash").bitwiseXOR(col("idx_simhash"))))
-      .filter(col("hamming") <= maxHamming && col("doc_id") =!= col("idx_doc_id"))
-      .withWatermark("ts", horizon)
-      .dropDuplicatesWithinWatermark("doc_id", "idx_doc_id")
-      .select(col("ts"), col("doc_id"), col("idx_doc_id").as("match_id"), col("hamming"))
-  }
+      .filter(col("hamming") <= Bands - 1 && col("doc_id") =!= col("idx_doc_id"))
 
   /** Resolve the newest COMPLETE index snapshot under `indexPath`.
     *
@@ -180,27 +183,12 @@ object StreamingNearDedup {
     * NEWEST complete snapshot — index rebuilds that land while the
     * intake is down take effect on restart (StreamRestartSpec pins
     * both). */
-  def nearDupMatchesRefreshing(docs: DataFrame, indexPath: String, checkpointDir: String,
-                               maxHamming: Int = 3)
+  def nearDupMatchesRefreshing(docs: DataFrame, indexPath: String, checkpointDir: String)
                               (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(maxHamming < Bands,
-      s"maxHamming must be ≤ ${Bands - 1}: the $Bands-band index only guarantees " +
-        "recall for pairs within Bands−1 differing bits")
     val spark = docs.sparkSession
-    val sketched = docs
-      .withColumn("ws", filter(split(col("text"), " "), x => length(x) > 0))
-      .filter(size(col("ws")) > 0)
-      .withColumn("simhash", simhash60(col("ws")))
-      .withColumn("bk", explodeBands(col("simhash")))
-      .select(col("ts"), col("doc_id"), col("simhash"),
-        col("bk.band").as("band"), col("bk.band_val").as("band_val"))
-    ServeLoop.run(sketched, checkpointDir) { batch =>
+    ServeLoop.run(sketched(docs), checkpointDir) { batch =>
       // fresh resolution per batch: newest complete snapshot wins
-      val index = spark.read.parquet(resolveSnapshot(spark, indexPath))
-      batch
-        .join(broadcast(index), Seq("band", "band_val"))
-        .withColumn("hamming", bit_count(col("simhash").bitwiseXOR(col("idx_simhash"))))
-        .filter(col("hamming") <= maxHamming && col("doc_id") =!= col("idx_doc_id"))
+      matches(batch, spark.read.parquet(resolveSnapshot(spark, indexPath)))
         .dropDuplicates("doc_id", "idx_doc_id")
         .select(col("ts"), col("doc_id"), col("idx_doc_id").as("match_id"), col("hamming"))
     }(onBatch)

@@ -53,11 +53,11 @@ object StreamingPhashDedup {
 
   /** Match a media-event stream against the index: one row per
     * (incoming image, corpus image) within `maxHamming`, band
-    * multiplicity collapsed by watermark-bounded dedup (the batch
-    * operator's `.distinct()`, restated as bounded streaming state). */
+    * multiplicity collapsed by watermark-bounded dedup over a 1-hour
+    * horizon (the batch operator's `.distinct()`, restated as bounded
+    * streaming state). */
   def nearDupMatches(stream: Dataset[MediaEvent], index: DataFrame,
-                     maxHamming: Int = 6, horizon: String = "1 hour",
-                     batchSize: Int = 64): DataFrame = {
+                     maxHamming: Int = 6): DataFrame = {
     require(maxHamming >= 0 && maxHamming < Multimodal.PhashBands,
       s"maxHamming must be ≤ ${Multimodal.PhashBands - 1}: the " +
         s"${Multimodal.PhashBands}-band index only guarantees recall for " +
@@ -65,7 +65,7 @@ object StreamingPhashDedup {
     val spark = stream.sparkSession
     import spark.implicits._
     stream.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap(m =>
+      it.grouped(64).flatMap(_.flatMap(m =>
         Multimodal.hashImage(m.kind, m.content).map(h => (m.ts, m.media_id, h))))
     }.toDF("ts", "media_id", "phash")
       .select(col("ts"), col("media_id"), col("phash"),
@@ -75,7 +75,7 @@ object StreamingPhashDedup {
       .join(broadcast(index), Seq("band", "bits"))
       .withColumn("hamming", bit_count(col("phash").bitwiseXOR(col("idx_phash"))))
       .filter(col("hamming") <= maxHamming && col("media_id") =!= col("idx_media_id"))
-      .withWatermark("ts", horizon)
+      .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("media_id", "idx_media_id")
       .select(col("ts"), col("media_id"), col("idx_media_id").as("match_id"),
         col("hamming"))

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.ops.{Caches, Embeddings, Mmr, Sq}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 import graft.BenchFormat.num
 
 /** Diversity-consequence measurement for the MMR re-rank (q92) —

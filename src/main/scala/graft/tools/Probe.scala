@@ -22,7 +22,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - run 1, which builds the query's caches, and a timed run 2 with
   *    a stage listener attached; their min is the bench's graded value;
   *  - run 2's per-stage metrics, one JSON row per stage (task time,
-  *    input/shuffle bytes and rows, spill, peak task memory): the same
+  *    executor CPU time, input/shuffle bytes and rows, spill, peak
+  *    task memory): the same
   *    query's table at two scale factors attributes a superlinear
   *    decade to data growth, a shuffle or memory pressure;
   *  - the `InMemoryTableScan` and parquet scan counts of run 2's
@@ -84,6 +85,7 @@ object Probe {
         stages.add(m.executorRunTime ->
           (s"""{"stage":${i.stageId},"name":"${i.name.takeWhile(_ != '\n').take(80).replace("\"", "'")}",""" +
             s""""tasks":${i.numTasks},"run_ms":${m.executorRunTime},""" +
+            s""""cpu_ms":${m.executorCpuTime / 1000000},""" +
             s""""in_mb":${mb(m.inputMetrics.bytesRead)},"in_rows":${m.inputMetrics.recordsRead},""" +
             s""""sh_read_mb":${mb(m.shuffleReadMetrics.totalBytesRead)},"sh_read_rows":${m.shuffleReadMetrics.recordsRead},""" +
             s""""sh_write_mb":${mb(m.shuffleWriteMetrics.bytesWritten)},"sh_write_rows":${m.shuffleWriteMetrics.recordsWritten},""" +

@@ -93,8 +93,6 @@ class LlmOpsSpec extends SparkSpec {
     // maxDriverPairs = 0 pins the DISTRIBUTED path: 600k pairs would
     // otherwise take the driver union-find and never touch the loop.
     val n = 900000L
-    val s2 = spark
-    import s2.implicits._
     val pairs = spark.range(n)
       .select((col("id") - col("id") % 3).as("base"), (col("id") % 3).as("off"))
       .filter(col("off") < 2)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Caches, Embeddings, Mmr, Sq}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** q92 conformance: the greedy MMR trajectory against a plain-Scala

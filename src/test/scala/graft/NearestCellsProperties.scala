@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.{CellTable, nearestCells, probeCells, vecDot}
 import org.apache.spark.sql.functions.{col, expr}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused [[NearestCells]] assignment must reproduce the literal
   * expression formulation it replaced bit-for-bit: exact-integer
@@ -153,7 +152,7 @@ class NearestCellsProperties extends SparkSpec {
       val nrm = v.map(x => x * x).sum
       val got = t.adcRow(
         new org.apache.spark.sql.catalyst.util.GenericArrayData(v.toArray),
-        nrm, scale).toLongArray.toSeq
+        nrm, scale).toLongArray().toSeq
       val want = cents.map { c =>
         var dot = 0L
         var d = 0
@@ -188,8 +187,8 @@ class NearestCellsProperties extends SparkSpec {
       vecs.foreach { v =>
         val qv = new org.apache.spark.sql.catalyst.util.GenericArrayData(v.toArray)
         val nrm = v.map(x => x * x).sum
-        val exact = flat.probe(qv, nrm, nprobe).toLongArray.toSeq
-        val routedAll = grouped.probeGrouped(qv, nrm, nprobe, groups.size).toLongArray.toSeq
+        val exact = flat.probe(qv, nrm, nprobe).toLongArray().toSeq
+        val routedAll = grouped.probeGrouped(qv, nrm, nprobe, groups.size).toLongArray().toSeq
         assert(routedAll == exact, s"degenerate grouped probe diverged at nprobe=$nprobe")
       }
     }
@@ -217,7 +216,7 @@ class NearestCellsProperties extends SparkSpec {
         }.sorted.take(nSuperProbe).map(_._2)
         val want = gRank.flatMap(groups(_))
           .map(c => (modelDist(v, nrm, c), c.j)).sorted.take(nprobe).map(_._2)
-        val got = grouped.probeGrouped(qv, nrm, nprobe, nSuperProbe).toLongArray.toSeq
+        val got = grouped.probeGrouped(qv, nrm, nprobe, nSuperProbe).toLongArray().toSeq
         assert(got == want, s"routed probe diverged at nSuperProbe=$nSuperProbe nprobe=$nprobe")
       }
     }

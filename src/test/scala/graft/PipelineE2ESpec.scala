@@ -38,14 +38,14 @@ class PipelineE2ESpec extends SparkSpec {
     assert(packed.count() == train.count(), "packing emits one row per doc")
 
     // 4. partitioned export of the packed table joined back to its split
-    val export = packed.join(split.select("doc_id", "split", "source"), Seq("doc_id"))
-    Storage.writePartitioned(export, s"$out/packed", "split", "source")
+    val `export` = packed.join(split.select("doc_id", "split", "source"), Seq("doc_id"))
+    Storage.writePartitioned(`export`, s"$out/packed", "split", "source")
     val back = Storage.readPartitioned(spark, s"$out/packed")
 
     // round-trip: identical row set (partition columns read back as strings)
-    val sentCols = export.columns.sorted
+    val sentCols = `export`.columns.sorted.toIndexedSeq
     assert(back.columns.sorted.toSeq == sentCols.toSeq)
-    val sent = export.select(sentCols.map(col): _*).collect().map(_.toString).sorted
+    val sent = `export`.select(sentCols.map(col): _*).collect().map(_.toString).sorted
     val got = back.select(sentCols.map(col): _*)
       .collect().map(_.toString).sorted
     assert(got.length == sent.length && got.sameElements(sent),

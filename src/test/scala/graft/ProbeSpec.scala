@@ -19,6 +19,8 @@ class ProbeSpec extends SparkSpec with VectorServeFixtures {
     assert(runs.exists(_.forall(_ > 0)), r.lines.head)
     assert(r.stages.nonEmpty, "run 2 recorded no stages")
     assert(r.lines.exists(_.contains("\"run_ms\":")), r.lines.mkString("\n"))
+    val cpuMs = r.stages.map(s => "\"cpu_ms\":(-?[0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toLong))
+    assert(cpuMs.forall(_.exists(_ >= 0)), s"a stage row lacks a non-negative cpu_ms:\n${r.stages.mkString("\n")}")
     assert(r.cacheScans + r.parquetScans > 0, s"run 2's plan scans nothing:\n${r.plan}")
 
     val written = Paths.get(planDir, "q02_ship_priority.txt")

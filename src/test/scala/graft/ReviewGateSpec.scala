@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.ReviewGate
-import org.apache.spark.sql.functions._
 
 /** Batch review-gate semantics: W1 latest-wins under permuted arrival,
   * P6 approval filter, J4/A4/A5 stage gate, K4 label-delta

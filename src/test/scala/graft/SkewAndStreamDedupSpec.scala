@@ -131,8 +131,6 @@ class SkewAndStreamDedupSpec extends SparkSpec {
   }
 
   test("dedupStream: checkpointed restart carries dedup state across the stop") {
-    val s = spark
-    import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("ckptdedup")
     val srcDir = root.resolve("in").toString
     val ckpt = root.resolve("ckpt").toString

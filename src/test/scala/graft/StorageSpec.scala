@@ -284,8 +284,6 @@ class StorageSpec extends SparkSpec {
     // in PartitionFilters and never list unprobed cells. The probed
     // set is derived here INDEPENDENTLY (plain-Scala scaledDist + the
     // (dist, id) ranking), so the test cannot inherit a serve-side bug.
-    val s = spark
-    import s.implicits._
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(dir).isDirectory, "testdata not present")
     val cents = graft.ops.Embeddings.trainQuantizer(spark, dir).sortBy(_.j)

@@ -1,10 +1,17 @@
 package graft
 
+import graft.functions.ProbeCells
 import graft.ops.{Caches, Embeddings, Pq}
 import graft.stream.ServeLoop
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** The streaming PQ serving seams: a stream of query vectors scored
   * through [[ServeLoop]] against the PERSISTED codebook artifact +
@@ -89,11 +96,54 @@ class StreamingPqServeSpec extends SparkSpec with VectorServeFixtures {
       Pq.ivfPqServe(codes, cents, books, Pq.quantizeQueries(b), 5, 2, excludeSelf = true))(sink)
   }
 
+  /** The AQE-final plan of every query execution `run` makes. The
+    * listener is registered before `run` starts a stream, so the
+    * stream's cloned session carries it; a marker job afterwards,
+    * whose end must be seen, drains the listener bus. */
+  private def executedPlans(run: => Unit): Seq[SparkPlan] = {
+    val sc = spark.sparkContext
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val drained = new CountDownLatch(1)
+    val marker = "graft.marker"
+    val onQueries = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val onMarker = new SparkListener {
+      @volatile private var markerJob = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null) markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (e.jobId == markerJob) drained.countDown()
+    }
+    spark.listenerManager.register(onQueries)
+    sc.addSparkListener(onMarker)
+    try {
+      run
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, TimeUnit.SECONDS), "the listener bus did not drain")
+      plans.asScala.toSeq
+    } finally {
+      sc.removeSparkListener(onMarker)
+      spark.listenerManager.unregister(onQueries)
+    }
+  }
+
   test("IVFADC stream ≡ batch ivfPqTopK, across two micro-batches") {
     assumeTestdata()
     val (quantPath, bookPath, batch) = ivfPqArtifacts()
-    assertStreamMatchesBatch(batch, probeVectors(),
-      "streamed IVFADC serving diverged from the batch q79 path")(serveIvfPq(quantPath, bookPath))
+    val plans = executedPlans {
+      assertStreamMatchesBatch(batch, probeVectors(),
+        "streamed IVFADC serving diverged from the batch q79 path")(serveIvfPq(quantPath, bookPath))
+    }
+    // the probe ranking runs on the driver (Sq.probeRows): no action a
+    // serve batch takes evaluates the distributed ProbeCells ranking
+    object Aqe extends AdaptiveSparkPlanHelper
+    val ranked = plans.filter(p => Aqe.collect(p) { case n => n }
+      .exists(_.expressions.exists(_.exists(_.isInstanceOf[ProbeCells]))))
+    assert(plans.nonEmpty, "the serve loop ran no query execution")
+    assert(ranked.isEmpty, s"a serve batch evaluates ProbeCells in Spark:\n${ranked.mkString("\n")}")
   }
 
   test("IVFADC serving RESTARTS from checkpoint: no re-emission, batch 2 identical to uninterrupted") {

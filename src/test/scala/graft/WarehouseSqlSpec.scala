@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.{Udfs, WarehouseSql}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Verbatim execution of the reference's warehouse SQL fragments:
   * the real .sql texts (read from the reference tree at test time,
