@@ -89,8 +89,9 @@ object Owners {
     * — [[globToRegex]]'s special case), matched handles are
     * `@`-stripped (yml:149) and de-duplicated. A PR whose files match
     * no pattern yields no rows — the stage is then vacuously satisfied
-    * downstream (`[].every` is true, yml:190-211), which
-    * ReviewStateMachine.fullStatus encodes as its `true` fill.
+    * downstream (`[].every` is true, yml:190-211), which the driver
+    * gate of ReviewStateMachine encodes as a `forall` over the stage's
+    * (empty) team list.
     * `prFiles`: (pr, file) — file paths repo-relative POSIX, the form
     * the GitHub API returns and [[graft.io.CorpusIO.corpus]] emits.
     *
@@ -149,8 +150,9 @@ object Owners {
     * CODETECHTEAM are static config; CODEFACILITATORS is the
     * E2-GENERATED artifact ([[graft.io.CorpusIO.generateFacilitators]])
     * — this composition is the E1→E2→E3 hand-off. Feed the results to
-    * [[graft.stream.ReviewStateMachine.fullStatus]]/`run`. Pass `prs`
-    * to gate zero-file PRs (see [[requiredTeams]]). */
+    * [[graft.stream.ReviewStateMachine.run]] (or `fullStatus`), which
+    * restricts each to a batch's PRs on the driver. Pass `prs` to gate
+    * zero-file PRs (see [[requiredTeams]]). */
   def stageRequirements(prFiles: DataFrame, codeowners: DataFrame,
                         codefacilitators: DataFrame, codetechteam: DataFrame,
                         prs: Option[DataFrame] = None)

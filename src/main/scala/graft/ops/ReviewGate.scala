@@ -31,22 +31,19 @@ object ReviewGate {
       .filter(upper(col("state")) === "APPROVED")
       .select(col("pr"), col("user"))
 
-  /** J4 — (pr, team, ok = true) for each team with an approving
-    * active member; approverDf: (pr, user), membership: (team, user).
-    * A team with two approving members appears twice, which an
-    * `every` over the left-joined requirements reads the same as once. */
-  def approvedTeams(approverDf: DataFrame, membership: DataFrame): DataFrame =
-    approverDf.join(membership, Seq("user"))
-      .select(col("pr"), col("team"), lit(true).as("ok"))
-
   /** J4 + A4/A5 — per (pr): does EVERY required team have ≥1 approver
     * who is an active member (ANY-member gate)?
-    * required: (pr, team); membership: (team, user). */
-  def stageGate(required: DataFrame, membership: DataFrame, approverDf: DataFrame): DataFrame =
+    * required: (pr, team); membership: (team, user); approverDf:
+    * (pr, user). A team with two approving members joins twice, which
+    * `every` reads the same as once. */
+  def stageGate(required: DataFrame, membership: DataFrame, approverDf: DataFrame): DataFrame = {
+    val approvedTeams = approverDf.join(membership, Seq("user"))
+      .select(col("pr"), col("team"), lit(true).as("ok"))
     required
-      .join(approvedTeams(approverDf, membership), Seq("pr", "team"), "left")
+      .join(approvedTeams, Seq("pr", "team"), "left")
       .groupBy(col("pr"))
       .agg(every(coalesce(col("ok"), lit(false))).as("stage_approved"))
+  }
 
   /** K4 — label state machine as idempotent ops (pr-review-flow.yml:
     * 242-288): given per-PR stage booleans and current labels, emit

@@ -1,8 +1,5 @@
 package graft.stream
 
-import scala.jdk.CollectionConverters._
-
-import graft.ops.ReviewGate
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -83,45 +80,90 @@ object ReviewStateMachine {
   }
 
   /** The three review stages, in the order of [[fullStatus]]'s
-    * `<stage>_approved` columns. */
+    * `<stage>_approved` columns and of each PR's [[verdicts]]. */
   private val Stages = Seq("codeowners", "facilitators", "tech")
 
-  /** Per-batch 3-stage status (E3 steps c-d): each stage's required
-    * teams must all have an approving active member (the
-    * ReviewGate.stageGate rule, J4 + A4/A5). `required*`: (pr, team);
-    * `membership`: (team, user). Only PRs present in `updates` are
-    * evaluated; output is (pr, codeowners_approved,
-    * facilitators_approved, tech_approved), one row per touched PR.
+  /** The K4 labels, one per stage, in [[Stages]] order. */
+  private val StageLabels = Stages.map(s => s"$s-approved")
+
+  /** The 3-stage gate (E3 steps c-d) on the driver: for each touched
+    * PR, each stage passes when every team it requires has an
+    * approving member (the ReviewGate.stageGate rule, J4 + A4/A5).
+    * `approvers`: (pr, approving users), one entry per touched PR;
+    * `required`: one (pr, team) set per stage, in [[Stages]] order;
+    * `membership`: (team, user). Returns (pr, one verdict per stage)
+    * in the order of `approvers`.
     *
-    * One pass for all three stages: the required tables are unioned
-    * with a `stage` tag, left-joined onto the touched PRs (which
-    * restricts them to this batch), left-joined once to
-    * ReviewGate.approvedTeams and grouped by `pr`; each stage is
-    * `every` over its own rows.
-    *
-    * A touched PR with ZERO required teams for a stage passes that
-    * stage vacuously — the reference's `results.every(Boolean)` over
-    * an empty team list is `true` (pr-review-flow.yml:190-211), e.g. a
+    * A PR with ZERO required teams for a stage passes that stage
+    * vacuously — the reference's `results.every(Boolean)` over an
+    * empty team list is `true` (pr-review-flow.yml:190-211), e.g. a
     * docs-only PR whose files match no CODEFACILITATORS pattern needs
-    * no facilitator review. Such a PR has no rows for that stage, so
-    * its `every` aggregates only nulls and reads null, hence the
-    * `true` fill. */
+    * no facilitator review. */
+  private def verdicts(approvers: Seq[(Long, Seq[String])], required: Seq[Seq[(Long, String)]],
+                       membership: Seq[(String, String)]): Seq[(Long, Seq[Boolean])] = {
+    val teamsOf = membership.groupMap(_._2)(_._1)
+    val requiredOf = required.map(_.groupMap(_._1)(_._2))
+    approvers.map { case (pr, users) =>
+      val approved = users.flatMap(teamsOf.getOrElse(_, Nil)).toSet
+      pr -> requiredOf.map(_.getOrElse(pr, Nil).forall(approved))
+    }
+  }
+
+  /** K4/K5 deltas of [[verdicts]] on the driver, the
+    * ReviewGate.labelOps and ReviewGate.reviewerRequests rules. The
+    * `<stage>-approved` labels a PR should carry are diffed against
+    * `current` (pr, label): a managed label in `current` that no
+    * verdict asks for is removed, so `current` must hold the verdicts'
+    * PRs only, or untouched PRs would be wiped. A PR whose codeowners
+    * stage passed requests `facilitators` until that stage passes,
+    * then `tech-team` until tech does. Returns the (pr, op, label)
+    * label deltas and the (pr, target) requests. */
+  private[graft] def deltas(verdicts: Seq[(Long, Seq[Boolean])], current: Seq[(Long, String)])
+      : (Seq[(Long, String, String)], Seq[(Long, String)]) = {
+    val desired = verdicts.flatMap { case (pr, ok) =>
+      StageLabels.zip(ok).collect { case (label, true) => (pr, label) }
+    }.toSet
+    val managed = current.filter(c => StageLabels.contains(c._2)).toSet
+    val labels = (desired -- managed).toSeq.map { case (pr, l) => (pr, "add", l) } ++
+      (managed -- desired).toSeq.map { case (pr, l) => (pr, "remove", l) }
+    val requests = verdicts.collect {
+      case (pr, Seq(true, false, _)) => (pr, "facilitators")
+      case (pr, Seq(true, true, false)) => (pr, "tech-team")
+    }
+    (labels, requests)
+  }
+
+  /** [[verdicts]] of the touched PRs, reading only their rows of each
+    * side: every required side is restricted to the PRs and membership
+    * to their approvers before it is collected. A side that is a local
+    * relation folds into one (ConvertToLocalRelation) and costs no
+    * job; a file-backed side costs one small job. */
+  private def gate(approvers: Seq[(Long, Seq[String])], required: Seq[DataFrame],
+                   membership: DataFrame): Seq[(Long, Seq[Boolean])] = {
+    import membership.sparkSession.implicits._
+    val prs = approvers.map(_._1)
+    val users = approvers.flatMap(_._2).distinct
+    verdicts(approvers,
+      required.map(_.select(col("pr"), col("team")).filter(col("pr").isin(prs: _*))
+        .as[(Long, String)].collect().toSeq),
+      membership.select(col("team"), col("user")).filter(col("user").isin(users: _*))
+        .as[(String, String)].collect().toSeq)
+  }
+
+  /** Per-batch 3-stage status: [[verdicts]] of the PRs in `updates`
+    * (pr, approvers), as a local DataFrame (pr, codeowners_approved,
+    * facilitators_approved, tech_approved), one row per touched PR.
+    * `required*`: (pr, team); `membership`: (team, user). `updates` is
+    * collected, then evaluated by the same driver gate [[run]] applies
+    * to each micro-batch. */
   def fullStatus(updates: DataFrame, requiredCodeowners: DataFrame,
                  requiredFacilitators: DataFrame, requiredTech: DataFrame,
                  membership: DataFrame): DataFrame = {
-    val required = Stages.zip(Seq(requiredCodeowners, requiredFacilitators, requiredTech))
-      .map { case (stage, req) => req.select(col("pr"), col("team"), lit(stage).as("stage")) }
-      .reduce(_ unionByName _)
-    val approvedTeams = ReviewGate.approvedTeams(
-      updates.select(col("pr"), explode(col("approvers")).as("user")), membership)
-    val stageCols = Stages.map(s =>
-      every(when(col("stage") === s, coalesce(col("ok"), lit(false)))).as(s"${s}_approved"))
-    updates.select(col("pr"))
-      .join(required, Seq("pr"), "left")
-      .join(approvedTeams, Seq("pr", "team"), "left")
-      .groupBy(col("pr"))
-      .agg(stageCols.head, stageCols.tail: _*)
-      .na.fill(true)
+    import updates.sparkSession.implicits._
+    val approvers = updates.select(col("pr"), col("approvers")).as[(Long, Seq[String])].collect().toSeq
+    gate(approvers, Seq(requiredCodeowners, requiredFacilitators, requiredTech), membership)
+      .map { case (pr, ok) => (pr, ok(0), ok(1), ok(2)) }
+      .toDF("pr" +: Stages.map(s => s"${s}_approved"): _*)
   }
 
   /** K4/K5 side-effect target standing in for the GitHub label /
@@ -145,52 +187,39 @@ object ReviewStateMachine {
   }
 
   /** End-to-end pipeline (E3): events → stateful dedup/gate →
-    * foreachBatch label sink. Each micro-batch recomputes stage status
-    * for the touched PRs only, diffs it against the store's current
-    * labels for those PRs (ReviewGate.labelOps emits only deltas) and
-    * applies the label and reviewer-request deltas — O(changed PRs)
-    * per batch, the reference's own API-call granularity.
+    * foreachBatch label sink. Each micro-batch evaluates the gate for
+    * the touched PRs only, diffs it against the store's current
+    * labels for those PRs and applies the label and reviewer-request
+    * deltas — O(changed PRs) per batch, the reference's own API-call
+    * granularity.
     *
     * The batch is collected once, first thing: every action on a
     * `foreachBatch` frame re-executes the plan behind it, the
     * `flatMapGroupsWithState` operator included, so a second action
     * would reload and re-commit the state store for the same batch.
     * The collected rows (at most one [[ApproverUpdate]] per touched
-    * PR) become a local relation that everything downstream reads;
-    * the status is likewise collected once into a local relation, so
-    * the label diff and the reviewer requests read the same rows, and
-    * both deltas come back in one tagged `collect`. */
+    * PR) are already on the driver, so the whole gate runs there:
+    * the sides are restricted to the batch and collected, then
+    * [[verdicts]] and [[deltas]] are plain Scala. With local-relation
+    * sides a batch is one Spark job, the batch's own. */
   def run(events: Dataset[ReviewEvent],
           requiredCodeowners: DataFrame, requiredFacilitators: DataFrame,
           requiredTech: DataFrame, membership: DataFrame,
           store: LabelStore, checkpointDir: String,
-          requests: LabelStore = new LabelStore): StreamingQuery = {
-    val spark = events.sparkSession
-    import spark.implicits._
+          requests: LabelStore = new LabelStore): StreamingQuery =
     approverUpdates(events).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[ApproverUpdate], _: Long) =>
         val rows = batch.collect()
         if (rows.nonEmpty) {
-          val gate = fullStatus(rows.toSeq.toDF(), requiredCodeowners,
-            requiredFacilitators, requiredTech, membership)
-          val status = spark.createDataFrame(gate.collect().toSeq.asJava, gate.schema)
-          // diff only the touched PRs: labelOps treats absence from
-          // `desired` as "remove", so the current-label side must be
-          // scoped to this batch's PRs or untouched PRs would be wiped.
-          val current = store.of(rows.map(_.pr)).toDF("pr", "label")
-          val labelDeltas = ReviewGate.labelOps(status, current)
-            .select(lit(true).as("is_label"), col("pr"), col("op"), col("label").as("value"))
-          // K5: reviewer-request fan-out for PRs entering a stage
-          // (idempotent add-only target set)
-          val requestDeltas = ReviewGate.reviewerRequests(status)
-            .select(lit(false).as("is_label"), col("pr"), lit("add").as("op"), col("target").as("value"))
-          labelDeltas.unionByName(requestDeltas).collect()
-            .sortBy(r => (r.getLong(1), r.getString(2), r.getString(3)))
-            .foreach { r => (if (r.getBoolean(0)) store else requests)(r.getLong(1), r.getString(2), r.getString(3)) }
+          val status = gate(rows.toSeq.map(u => (u.pr, u.approvers)),
+            Seq(requiredCodeowners, requiredFacilitators, requiredTech), membership)
+          val (labelDeltas, requestDeltas) = deltas(status, store.of(rows.map(_.pr)))
+          (labelDeltas.map(_ -> store) ++ requestDeltas.map { case (pr, t) => (pr, "add", t) -> requests })
+            .sortBy(_._1)
+            .foreach { case ((pr, op, value), target) => target(pr, op, value) }
         }
       }
       .start()
-  }
 }

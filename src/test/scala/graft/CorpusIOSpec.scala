@@ -92,6 +92,100 @@ class CorpusIOSpec extends SparkSpec {
     assert(Files.readString(Paths.get(s"$out/flattened_dependencies.json")) == flatGolden)
   }
 
+  // ---- golden E2E over a synthetic tree in the reference's shape ----
+  // Written here so the E2E golden always runs. Call sites worked out
+  // by hand from the same three rules as the real-tree golden below:
+  //  - catalog: the `_f_` files directly under
+  //    deployer/patch/DWH/kimball — product_of, and channel_of with a
+  //    three-part version;
+  //  - consumers: `kimball.<name>(` in the four search dirs, any case,
+  //    blanks allowed before the paren, a file's own definition
+  //    skipped. product_of calls channel_of, so it is a consumer
+  //    FUNCTION of channel_of. The `_v_` view and the `_f_` file one
+  //    directory down are not catalog functions, so they are consumer
+  //    FILES;
+  //  - decoys: a caller outside the search dirs, a `.md` caller, an
+  //    unknown function, and a non-UTF-8 caller, which the side
+  //    channel reports and the scan skips.
+  // One-hop flattening gives channel_of product_of's files too.
+
+  private val kimballDir = "deployer/patch/DWH/kimball"
+  private val productOf = s"$kimballDir/r_2.000100_f_product_of.sql"
+  private val channelOf = s"$kimballDir/r_5.001.002_f_channel_of.sql"
+  private val salesView = s"$kimballDir/r_4.002.010_v_sales_report.sql"
+  private val legacy = s"$kimballDir/old/r_1.0_f_legacy.sql"
+  private val orders = "superset/datasets/kimball/kimball.orders.sql"
+  private val loads = "replicator/source/load_channels.sql"
+  private val dimChannel = "superset_objects/datasets/DIM_CHANNEL.sql"
+  private val revenue = "superset_objects/datasets/REVENUE.sql"
+  private val brokenBytes = "SELECT KIMBALL.PRODUCT_OF(x) -- ".getBytes("UTF-8") ++ Array(0xC3.toByte, 0x28.toByte)
+
+  private def referenceShapedTree(): Path = {
+    val root = Files.createTempDirectory("corpus-refshape")
+    write(root, productOf,
+      "CREATE OR REPLACE FUNCTION ${kimball}KIMBALL.PRODUCT_OF(c VARCHAR) AS\n" +
+        "  CASE WHEN KIMBALL.CHANNEL_OF(c) = 'paid' THEN 'ads' ELSE 'organic' END;\n")
+    write(root, channelOf,
+      "CREATE OR REPLACE FUNCTION KIMBALL.CHANNEL_OF(c VARCHAR) AS lower(c);\n")
+    write(root, salesView, "CREATE VIEW sales AS SELECT kimball.product_of (utm) FROM t;\n")
+    write(root, legacy, "SELECT kimball.channel_of(c) FROM old_t;\n")
+    write(root, orders, "SELECT ${ENV_PREFIX}KIMBALL.PRODUCT_OF(UTM_CAMPAIGN) FROM orders;\n")
+    write(root, loads, "INSERT INTO ch SELECT kimball.channel_of(src), kimball.unknown_fn(src) FROM raw;\n")
+    write(root, dimChannel, "SELECT KIMBALL.channel_of(c) AS channel FROM dim;\n")
+    write(root, revenue, "SELECT kimball.product_of(c), sum(v) FROM rev GROUP BY 1;\n")
+    write(root, "analytics/adhoc.sql", "SELECT kimball.product_of(c), kimball.channel_of(c);\n")
+    write(root, "superset_objects/datasets/README.md", "Uses kimball.channel_of(c).\n")
+    Files.createDirectories(root.resolve("superset/datasets/kimball"))
+    Files.write(root.resolve("superset/datasets/kimball/broken.sql"), brokenBytes)
+    root
+  }
+
+  private def jsonList(xs: Seq[String]): String =
+    if (xs.isEmpty) "[]" else xs.map(x => s"""        "$x"""").mkString("[\n", ",\n", "\n      ]")
+
+  private val shapedRawGolden = Seq(
+    s"""  "channel_of": {
+       |    "type": "function",
+       |    "path": "$channelOf",
+       |    "used_in": {
+       |      "files": ${jsonList(Seq(legacy, loads, dimChannel))},
+       |      "functions": ${jsonList(Seq("product_of"))}
+       |    }
+       |  }""".stripMargin,
+    s"""  "product_of": {
+       |    "type": "function",
+       |    "path": "$productOf",
+       |    "used_in": {
+       |      "files": ${jsonList(Seq(salesView, orders, revenue))},
+       |      "functions": []
+       |    }
+       |  }""".stripMargin).mkString("{\n", ",\n", "\n}")
+
+  private val shapedFlatGolden = Seq(
+    s"""  "channel_of": {
+       |    "type": "function",
+       |    "path": "$channelOf",
+       |    "used_in": {
+       |      "files": ${jsonList(Seq(legacy, salesView, loads, orders, dimChannel, revenue))}
+       |    }
+       |  }""".stripMargin,
+    s"""  "product_of": {
+       |    "type": "function",
+       |    "path": "$productOf",
+       |    "used_in": {
+       |      "files": ${jsonList(Seq(salesView, orders, revenue))}
+       |    }
+       |  }""".stripMargin).mkString("{\n", ",\n", "\n}")
+
+  test("golden E2E: scanAndSave over a synthetic reference-shaped tree matches hand-worked artifacts") {
+    val out = Files.createTempDirectory("shapeddeps").toString
+    val corrupt = CorpusIO.scanAndSave(spark, referenceShapedTree().toString, out)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(corrupt.toSeq == Seq(("superset/datasets/kimball/broken.sql", brokenBytes.length.toLong)))
+    assert(Files.readString(Paths.get(s"$out/raw_dependencies.json")) == shapedRawGolden)
+    assert(Files.readString(Paths.get(s"$out/flattened_dependencies.json")) == shapedFlatGolden)
+  }
+
   // ---- golden E2E over the REAL reference tree (/root/reference) ----
   // Derived by hand from the reference's own semantics
   // (scan_dependencies.py:32-34 filename rule, :71-76 search dirs,

@@ -134,6 +134,43 @@ class ReviewStateMachineSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a review micro-batch runs one Spark job: the gate runs on the driver") {
+    // the batch's own collect is the only job, from the first batch
+    // on: the local-relation requirement and membership sides fold
+    // into local relations when restricted to the batch, and the
+    // verdicts and deltas are plain Scala — no status plan, no delta
+    // union, no second collect
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val reqCode = Seq((1L, "team_a"), (2L, "team_a"), (2L, "team_b")).toDF("pr", "team")
+    val reqFac = Seq((1L, "team_f")).toDF("pr", "team")
+    val reqTech = Seq((1L, "team_t"), (2L, "team_t"), (3L, "team_t")).toDF("pr", "team")
+    val membership = Seq(("team_a", "alice"), ("team_b", "bob"),
+      ("team_f", "frank"), ("team_t", "tina")).toDF("team", "user")
+    val store = new ReviewStateMachine.LabelStore
+    val requests = new ReviewStateMachine.LabelStore
+    val batches = Seq(
+      Seq(ReviewEvent(1, "alice", "APPROVED", 1), ReviewEvent(2, "bob", "APPROVED", 2)),
+      Seq(ReviewEvent(2, "alice", "APPROVED", 3), ReviewEvent(3, "tina", "APPROVED", 4)),
+      Seq(ReviewEvent(1, "frank", "APPROVED", 5), ReviewEvent(2, "alice", "CHANGES_REQUESTED", 6)))
+    val perBatch = jobsPerBatch {
+      val events = MemoryStream[ReviewEvent]
+      val q = ReviewStateMachine.run(events.toDS(), reqCode, reqFac, reqTech, membership, store,
+        java.nio.file.Files.createTempDirectory("rsm-jobs").toString, requests)
+      try batches.foreach { b => events.addData(b); q.processAllAvailable() } finally q.stop()
+      q.id.toString
+    }
+    assert(perBatch.size == batches.size, s"jobs by micro-batch: $perBatch")
+    assert(perBatch.values.forall(_ == 1), s"jobs by micro-batch (want exactly 1 each): $perBatch")
+    // the gate still ran: PR 1 passed codeowners and facilitators, PR 2
+    // lost codeowners to alice's rollback, PR 3 needs tech only
+    assert(store.current == Set((1L, "codeowners-approved"), (1L, "facilitators-approved"),
+      (2L, "facilitators-approved"), (3L, "codeowners-approved"), (3L, "facilitators-approved"),
+      (3L, "tech-approved")))
+    assert(requests.current == Set((1L, "facilitators"), (1L, "tech-team"), (2L, "tech-team")))
+  }
+
   test("labelOps application is idempotent (remove tolerated if absent)") {
     val store = new ReviewStateMachine.LabelStore
     store(1, "add", "x"); store(1, "add", "x")

@@ -134,12 +134,12 @@ class StorageSpec extends SparkSpec {
     val want = served.collect().map(_.toString).toSeq
     assert(want.size == 5)
 
-    // behavioral: corrupt a cell the serve's own probed set (derived
-    // through the SAME probeCellsRelation definition) excludes — the
-    // serve never lists it and still returns identical rows, while an
-    // unpruned full scan fails on the bad footer
-    val probed = graft.ops.Pq.probeCellsRelation(one, cents, 2)
-      .select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
+    // behavioral: corrupt a cell the serve's own probed set excludes —
+    // derived through Sq.probeRows, the probe ranking ivfPqServe itself
+    // runs — so the serve never lists it and still returns identical
+    // rows, while an unpruned full scan fails on the bad footer
+    val probed = graft.ops.Sq.probeRows(one, cents.sortBy(_.j), 2)
+      .map(_.getAs[Long]("cell")).toSet
     assert(probed.size == 2)
     val unprobed = cents.map(_.j).filterNot(probed.contains).head
     corruptPartition(root, s"cell=$unprobed")
@@ -158,9 +158,9 @@ class StorageSpec extends SparkSpec {
     // its probed-cell set as a static filter on the codes scan, so the
     // production partitioned-by-cell deployment reads nprobe/nCells of
     // the FILES through the serve path — plan assert AND behavioral
-    // corruption proof. The probed set is derived through the SAME
-    // probeCellsRelation definition q79 uses, so the two routed
-    // compressions cannot drift on what "probed" means.
+    // corruption proof. The probed set is derived through Sq.probeRows,
+    // the probe ranking both routed serves (q79 and q82) run, so the
+    // spec and the serves cannot drift on what "probed" means.
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(dir).isDirectory, "testdata not present")
     val (cents, mins, maxs) = graft.ops.Sq.trainIvfSq8(spark, dir)
@@ -178,8 +178,8 @@ class StorageSpec extends SparkSpec {
     val want = served.collect().map(_.toString).toSeq
     assert(want.size == 5)
 
-    val probed = graft.ops.Pq.probeCellsRelation(one, cents, 2)
-      .select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
+    val probed = graft.ops.Sq.probeRows(one, cents.sortBy(_.j), 2)
+      .map(_.getAs[Long]("cell")).toSet
     assert(probed.size == 2)
     val unprobed = cents.map(_.j).filterNot(probed.contains).head
     corruptPartition(root, s"cell=$unprobed")
@@ -223,8 +223,8 @@ class StorageSpec extends SparkSpec {
     val want = served.collect().map(_.toString).toSeq
     assert(want.size == 5)
 
-    val probed = graft.ops.Pq.probeCellsRelation(one, cents, 2)
-      .select(col("cell")).distinct().collect().map(_.getLong(0)).toSet
+    val probed = graft.ops.Sq.probeRows(one, cents.sortBy(_.j), 2)
+      .map(_.getAs[Long]("cell")).toSet
     assert(probed.size == 2)
     val unprobed = cents.map(_.j).filterNot(probed.contains).head
     corruptPartition(pqRoot, s"cell=$unprobed")

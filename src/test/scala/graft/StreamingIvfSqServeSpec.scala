@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
 
 import graft.ops.{Caches, Embeddings, Sq}
 import graft.stream.StreamingIvfSqServe
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -80,35 +78,6 @@ class StreamingIvfSqServeSpec extends SparkSpec with VectorServeFixtures {
     Caches.releaseAll(spark)
     assertRestartMatchesBatch(batch, probeVectors())(
       StreamingIvfSqServe.run(spark, _, SfDir, qArtifact, bArtifact, _, k = 5, excludeSelf = true)(_))
-  }
-
-  /** Spark jobs started per micro-batch of the streaming query
-    * `queryId`, read from the job properties every micro-batch job
-    * carries. `run` does the work; a marker job afterwards, whose end
-    * the listener must see, drains the listener bus. */
-  private def jobsPerBatch(run: => String): Map[String, Int] = {
-    val sc = spark.sparkContext
-    val started = mutable.ArrayBuffer.empty[(String, String)]
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      private var marker = -1
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        if (p != null && p.getProperty("graft.marker") != null) marker = e.jobId
-        else if (p != null) started.synchronized {
-          started += ((p.getProperty("sql.streaming.queryId"), p.getProperty("streaming.sql.batchId")))
-        }
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (e.jobId == marker) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val queryId = run
-      sc.setLocalProperty("graft.marker", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.marker", null)
-      assert(drained.await(60, TimeUnit.SECONDS), "the listener bus did not drain")
-      started.synchronized(started.filter(_._1 == queryId).groupBy(_._2).map { case (b, js) => b -> js.size })
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a serve micro-batch runs at most 6 jobs and never decodes the codes") {
