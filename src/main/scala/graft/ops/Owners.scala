@@ -151,7 +151,7 @@ object Owners {
     * E2-GENERATED artifact ([[graft.io.CorpusIO.generateFacilitators]])
     * — this composition is the E1→E2→E3 hand-off. Feed the results to
     * [[graft.stream.ReviewStateMachine.run]] (or `fullStatus`), which
-    * restricts each to a batch's PRs on the driver. Pass `prs` to gate
+    * plans each once and restricts it to a batch's PRs on the driver. Pass `prs` to gate
     * zero-file PRs (see [[requiredTeams]]). */
   def stageRequirements(prFiles: DataFrame, codeowners: DataFrame,
                         codefacilitators: DataFrame, codetechteam: DataFrame,

@@ -133,21 +133,34 @@ object ReviewStateMachine {
     (labels, requests)
   }
 
-  /** [[verdicts]] of the touched PRs, reading only their rows of each
-    * side: every required side is restricted to the PRs and membership
-    * to their approvers before it is collected. A side that is a local
-    * relation folds into one (ConvertToLocalRelation) and costs no
-    * job; a file-backed side costs one small job. */
-  private def gate(approvers: Seq[(Long, Seq[String])], required: Seq[DataFrame],
-                   membership: DataFrame): Seq[(Long, Seq[Boolean])] = {
+  /** The gate's inputs as typed Datasets, built once per [[run]] (or
+    * [[fullStatus]] call) and executed once per batch: the three
+    * required sides (pr, team) in [[Stages]] order and membership
+    * (team, user). Building a restricted query per batch re-derived
+    * each side's encoder and re-ran analysis, optimization and
+    * planning four times a batch, 50-120 ms of driver time that moved
+    * from batch to batch; a Dataset keeps its plan, so a batch only
+    * runs it. A local-relation side plans to a local scan and costs
+    * no job; a file-backed side costs one small job, and a side whose
+    * plan shuffles reads its first batch's shuffle output from then
+    * on, as repeated actions on one Dataset do. */
+  private def sides(required: Seq[DataFrame], membership: DataFrame)
+      : (Seq[Dataset[(Long, String)]], Dataset[(String, String)]) = {
     import membership.sparkSession.implicits._
-    val prs = approvers.map(_._1)
-    val users = approvers.flatMap(_._2).distinct
-    verdicts(approvers,
-      required.map(_.select(col("pr"), col("team")).filter(col("pr").isin(prs: _*))
-        .as[(Long, String)].collect().toSeq),
-      membership.select(col("team"), col("user")).filter(col("user").isin(users: _*))
-        .as[(String, String)].collect().toSeq)
+    (required.map(_.select(col("pr"), col("team")).as[(Long, String)]),
+      membership.select(col("team"), col("user")).as[(String, String)])
+  }
+
+  /** [[verdicts]] of the touched PRs: each side of [[sides]] is
+    * collected and restricted on the driver to the PRs' rows and, for
+    * membership, to their approvers' rows. */
+  private def gate(approvers: Seq[(Long, Seq[String])],
+                   sides: (Seq[Dataset[(Long, String)]], Dataset[(String, String)]))
+      : Seq[(Long, Seq[Boolean])] = {
+    val prs = approvers.map(_._1).toSet
+    val users = approvers.flatMap(_._2).toSet
+    verdicts(approvers, sides._1.map(_.collect().toSeq.filter(r => prs(r._1))),
+      sides._2.collect().toSeq.filter(m => users(m._2)))
   }
 
   /** Per-batch 3-stage status: [[verdicts]] of the PRs in `updates`
@@ -161,7 +174,7 @@ object ReviewStateMachine {
                  membership: DataFrame): DataFrame = {
     import updates.sparkSession.implicits._
     val approvers = updates.select(col("pr"), col("approvers")).as[(Long, Seq[String])].collect().toSeq
-    gate(approvers, Seq(requiredCodeowners, requiredFacilitators, requiredTech), membership)
+    gate(approvers, sides(Seq(requiredCodeowners, requiredFacilitators, requiredTech), membership))
       .map { case (pr, ok) => (pr, ok(0), ok(1), ok(2)) }
       .toDF("pr" +: Stages.map(s => s"${s}_approved"): _*)
   }
@@ -199,22 +212,23 @@ object ReviewStateMachine {
     * would reload and re-commit the state store for the same batch.
     * The collected rows (at most one [[ApproverUpdate]] per touched
     * PR) are already on the driver, so the whole gate runs there:
-    * the sides are restricted to the batch and collected, then
-    * [[verdicts]] and [[deltas]] are plain Scala. With local-relation
-    * sides a batch is one Spark job, the batch's own. */
+    * the [[sides]], planned once when the query starts, are collected
+    * and restricted to the batch, then [[verdicts]] and [[deltas]] are
+    * plain Scala. With local-relation sides a batch is one Spark job,
+    * the batch's own. */
   def run(events: Dataset[ReviewEvent],
           requiredCodeowners: DataFrame, requiredFacilitators: DataFrame,
           requiredTech: DataFrame, membership: DataFrame,
           store: LabelStore, checkpointDir: String,
-          requests: LabelStore = new LabelStore): StreamingQuery =
+          requests: LabelStore = new LabelStore): StreamingQuery = {
+    val gateSides = sides(Seq(requiredCodeowners, requiredFacilitators, requiredTech), membership)
     approverUpdates(events).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[ApproverUpdate], _: Long) =>
         val rows = batch.collect()
         if (rows.nonEmpty) {
-          val status = gate(rows.toSeq.map(u => (u.pr, u.approvers)),
-            Seq(requiredCodeowners, requiredFacilitators, requiredTech), membership)
+          val status = gate(rows.toSeq.map(u => (u.pr, u.approvers)), gateSides)
           val (labelDeltas, requestDeltas) = deltas(status, store.of(rows.map(_.pr)))
           (labelDeltas.map(_ -> store) ++ requestDeltas.map { case (pr, t) => (pr, "add", t) -> requests })
             .sortBy(_._1)
@@ -222,4 +236,5 @@ object ReviewStateMachine {
         }
       }
       .start()
+  }
 }

@@ -136,8 +136,9 @@ class ReviewStateMachineSpec extends SparkSpec {
 
   test("a review micro-batch runs one Spark job: the gate runs on the driver") {
     // the batch's own collect is the only job, from the first batch
-    // on: the local-relation requirement and membership sides fold
-    // into local relations when restricted to the batch, and the
+    // on: the local-relation requirement and membership sides plan to
+    // local scans, collected without a job and restricted to the
+    // batch on the driver, and the
     // verdicts and deltas are plain Scala — no status plan, no delta
     // union, no second collect
     val s = spark
