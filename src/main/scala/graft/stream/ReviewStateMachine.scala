@@ -136,11 +136,11 @@ object ReviewStateMachine {
   /** The gate's inputs as typed Datasets, built once per [[run]] (or
     * [[fullStatus]] call) and executed once per batch: the three
     * required sides (pr, team) in [[Stages]] order and membership
-    * (team, user). Building a restricted query per batch re-derived
-    * each side's encoder and re-ran analysis, optimization and
-    * planning four times a batch, 50-120 ms of driver time that moved
-    * from batch to batch; a Dataset keeps its plan, so a batch only
-    * runs it. A local-relation side plans to a local scan and costs
+    * (team, user). A restricted query built per batch would derive
+    * each side's encoder and run analysis, optimization and planning
+    * four times a batch, 50-120 ms of driver time that varies from
+    * batch to batch; a Dataset keeps its plan, so a batch only runs
+    * it. A local-relation side plans to a local scan and costs
     * no job; a file-backed side costs one small job, and a side whose
     * plan shuffles reads its first batch's shuffle output from then
     * on, as repeated actions on one Dataset do. */
