@@ -72,7 +72,7 @@ NOTES = {
 # Load-bearing specs beyond the oracle, curated.
 SPECS = {
     "q16": "GlobProperties", "q17": "ReviewGateSpec", "q21": "LlmOpsSpec",
-    "q28": "MultimodalSpec (real JDK decoders)", "q30": "EventWindowsSpec",
+    "q28": "MultimodalSpec (hash-derived dimensions twin)", "q30": "EventWindowsSpec",
     "q42": "LlmOpsSpec", "q47": "EventWindowsSpec",
     "q65": "RelationalOpsSpec band doc", "q68": "EmbeddingsSpec",
     "q84": "routed-plan pin", "q86": "PlanAuditSpec no-BNLJ",

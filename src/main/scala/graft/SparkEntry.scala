@@ -92,8 +92,8 @@ object SparkEntry {
     "q62_label_centroids"   -> Embeddings.labelCentroids _,
     "q63_engaged_purchasers" -> Relational.engagedPurchasers _,
     "q64_event_navigation"  -> Temporal.eventNavigation _,
-    // q65 grades accuracy-band BOOLEANS vs in-query exact twins
-    // (VERDICT r12 #1): the sketch VALUES stay un-oracled (engine-
+    // q65 grades accuracy-band BOOLEANS vs in-query exact twins:
+    // the sketch VALUES stay un-oracled (engine-
     // specific internals), but the bands are engine-invariant, so the
     // row is hash-oracle-able — DuckDB replays with its own sketches.
     "q65_approx_profile"    -> Relational.approxProfile _,
@@ -115,7 +115,7 @@ object SparkEntry {
     "q81_sq8_topk"          -> ((s, d) => Sq.sq8TopK(s, d)),
     "q82_ivfsq8_topk"       -> ((s, d) => Sq.ivfSq8TopK(s, d)),
     "q83_pq_refine"         -> ((s, d) => Pq.pqRefineTopK(s, d)),
-    // the ROUTED serve on the graded surface (VERDICT r10 #6): train
+    // the ROUTED serve on the graded surface: train
     // the pinned quantizer, then serve through the TWO-LEVEL probe
     // path (nSuper = superFor(nCells) = 4 groups at the oracle scale,
     // so the grouped kernel really executes) at a SATURATING
@@ -192,7 +192,7 @@ object SparkEntry {
     * (q33's LSH buckets, q68's IVF cells): a drifted threshold or
     * formula on the Spark side ([[graft.ops.Embeddings]] scorePairs)
     * must fail BOTH consumers. The threshold is the single-sourced
-    * [[graft.ops.Embeddings.OracleThreshold]] (ADVICE r6). */
+    * [[graft.ops.Embeddings.OracleThreshold]]. */
   private def VecCosineGE(x: String, y: String): String =
     s"""CAST(list_sum(list_transform(generate_series(1,64), i -> $x.qv[i]*$y.qv[i])) AS DOUBLE)
                  / sqrt(CAST($x.nrm AS DOUBLE)*CAST($y.nrm AS DOUBLE)) >= ${Embeddings.OracleThreshold}"""
@@ -227,7 +227,7 @@ object SparkEntry {
     * pinned [[graft.ops.Embeddings.OracleCells]] for q31/q68, the
     * corpus-derived [[graft.ops.Embeddings.cellsFor]] replay for q70 —
     * and the two unrolled Lloyd's rounds are `OracleIters`, pinned by
-    * the require below (ADVICE r6 — a parameter change on the Scala
+    * the require below (a parameter change on the Scala
     * side now fails here rather than silently de-certifying). */
   private def ivfCtes(cellsSql: String, trainWhere: String = ""): String = {
     require(Embeddings.OracleIters == 2,
@@ -540,7 +540,7 @@ object SparkEntry {
 
   /** q80's instantiation: the q77 trajectory with the codebook size
     * derived from the corpus — the q70/q34 oracle-parametric pattern
-    * applied to the ADC family (VERDICT r9 #1). */
+    * applied to the ADC family. */
   private val PqCtesScaled: String =
     s"""q AS (
            SELECT vec_id, list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qv
@@ -1975,7 +1975,7 @@ object SparkEntry {
            SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY est, neighbor_id) AS rn
            FROM rex) t
          WHERE rn <= 5 ORDER BY q_id, rank""",
-    // q83's two-stage refine at PRODUCTION SIZING (VERDICT r11 #1):
+    // q83's two-stage refine at PRODUCTION SIZING:
     // codebooks sized by kFor (the q80 scaled CTEs) and the stage-1
     // candidate budget by rFor — BOTH derived from count(*) via the
     // same integer rules as the Scala side, so the gate is

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * bigram counts. The DataFrame formulation explodes ~n_tokens rows
   * per document through two shuffles (groupBy (doc, bigram) then
   * groupBy doc) — row amplification through an exchange, the same
-  * shape q26's round-2 version paid for. This expression keeps the
+  * shape an explode-based q26 pays for. This expression keeps the
   * whole count map row-local: zero shuffle, zero interpreted lambdas,
   * one static call per row from generated code (the
   * [[SimHash60]]/[[TextStats]]/[[WinnowMinima]] pattern).

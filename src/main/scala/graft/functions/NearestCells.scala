@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * to tens of cells but grows the PLAN linearly with the quantizer:
   * at the 625 cells a 20k-vector corpus trains under the pinned
   * `targetCell`, analysis/codegen of the ~650-subtree expression
-  * dominated q70/q76 wall-clock (≈25-36 s at sf1, bench r9) and the
+  * dominated q70/q76 wall-clock (≈25-36 s at sf1) and the
   * generated method blows past JIT limits, so rows were evaluated by
   * INTERPRETED expression trees — per row, per centroid.
   *
@@ -112,7 +112,7 @@ case class ProbeCells(qv: Expression, nrm: Expression, table: CellTable, nprobe:
   * tables — [[NearestCells]]' third sibling: for a (16-dim slice,
   * norm) row, the K-element array of floor(dist·scale) BIGINTs, one
   * per sub-centroid in code order. Replaces the K-literal-subtree
-  * array the PQ family launched with (ops/Pq.scala r9) for the same
+  * array the PQ family launched with (ops/Pq.scala) for the same
   * reason [[NearestCells]] replaced the IVF literals: at the
   * production K = 256 the literal form is M·K = 1,024 plan subtrees —
   * the exact analysis/codegen pathology measured at ~25-36 s for 625
@@ -184,7 +184,7 @@ final class CellTable(val dim: Int,
   // assign's first-minimum-wins) are only (dist, id)-lexicographic if
   // the flat layout arrives id-sorted — enforce it at the seam so a
   // future unsorted caller fails loudly instead of returning wrong
-  // tie-breaks (ADVICE r9). Two-level layouts are group-concatenated
+  // tie-breaks. Two-level layouts are group-concatenated
   // by construction and tie-break inside the chosen group only.
   require(groupStart.nonEmpty ||
     cellJ.indices.drop(1).forall(i => cellJ(i - 1) < cellJ(i)),

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * formulation tokenized with `filter(split(text,' '), len>0)` and
   * paid THREE interpreted higher-order lambdas per row (`aggregate`
   * for summed token length, `filter` twice) — the last interpretation
-  * tax in the text family (VERDICT r4). This stays inside whole-stage
+  * tax in the text family. This stays inside whole-stage
   * codegen: one byte scan, one hash set, one static call per row.
   *
   * Token semantics are bit-identical to the replaced plan: tokens are

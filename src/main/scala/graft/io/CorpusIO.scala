@@ -173,20 +173,12 @@ object CorpusIO {
     * hand-off the reference does with workflow artifacts,
     * pr-review-flow.yml:33-58). Returns the corrupt-file side channel
     * so callers can surface skipped files. */
-  def scanAndSave(spark: SparkSession, root: String, outDir: String,
-                  transitive: Boolean = false): DataFrame = {
+  def scanAndSave(spark: SparkSession, root: String, outDir: String): DataFrame = {
     val c = corpus(spark, root).persist() // feeds catalog + call-site scans
     val raw = DepGraph.rawDependencies(c)
     val flat = DepGraph.flattenedDependencies(raw)
     writeFile(s"$outDir/raw_dependencies.json", rawDepsJson(raw))
     writeFile(s"$outDir/flattened_dependencies.json", flatDepsJson(flat))
-    // flagged EXTENSION artifact, same record shape: full closure via
-    // DepGraph.transitiveDependencies (the reference's recursion helper
-    // is never self-called — scan_dependencies.py:164-171 — so one-hop
-    // stays the conformance default and the default output set)
-    if (transitive)
-      writeFile(s"$outDir/flattened_dependencies_transitive.json",
-        flatDepsJson(DepGraph.transitiveDependencies(raw)))
     corrupt(spark, root)
   }
 

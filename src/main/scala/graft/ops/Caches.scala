@@ -18,10 +18,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cannot unpersist those registered by a different SparkSession
   * running concurrently in the same JVM. A long-lived session that
   * runs many queries therefore holds at most one query's caches at a
-  * time instead of accumulating all of them (VERDICT r3 hygiene
-  * item). The one sanctioned exception is a persist whose lifetime is
-  * a single method call and whose release sits in that method's
-  * `finally` (LlmOps.connectedComponents' edge/pair tables) — a
+  * time instead of accumulating all of them. The one sanctioned
+  * exception is a persist whose lifetime is a single method call and
+  * whose release sits in that method's `finally`
+  * (LlmOps.connectedComponents' edge/pair tables) — a
   * registry entry would outlive it, not protect it.
   *
   * Lifetime caveat: entries hold strong references keyed by session —
@@ -60,8 +60,8 @@ object Caches {
   /** Free the executor blocks behind a MATERIALIZED localCheckpoint.
     * `Dataset.unpersist` cannot: localCheckpoint persists at the RDD
     * level, below the SQL cache manager, so superseded per-round
-    * checkpoints in driver-loop iterations (bpeTrain's vocab,
-    * connectedComponents' labels) otherwise stay pinned until driver
+    * checkpoints in driver-loop iterations (connectedComponents'
+    * labels) otherwise stay pinned until driver
     * GC happens to run the ContextCleaner — corpus-sized storage ×
     * rounds on a long-lived session. Call ONLY on a checkpoint no
     * plan will read again: the blocks ARE the data (lineage is

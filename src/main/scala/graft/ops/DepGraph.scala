@@ -106,129 +106,4 @@ object DepGraph {
           coalesce(col("indirect_files"), array().cast(ArrayType(StringType))))))
           .as("used_in_files"))
   }
-
-  /** Transitive closure (extension — the evident intent of the
-    * reference's unused recursion helper, scan_dependencies.py:164-171).
-    * Driver-side fixpoint, POINTER-DOUBLING form: the reachability
-    * relation squares each round (reach' = reach ∪ reach∘reach), so a
-    * graph of diameter D converges in ⌈log₂ D⌉ + 1 rounds — the
-    * round-9 one-hop-per-round form was LINEAR in D (a 1,000-deep
-    * chain needed 1,000 rounds; VERDICT r9 #8's depth fixture caught
-    * it), and its per-round carried file-set rows grew with the
-    * closure while this iterates on lean (function, user) id pairs,
-    * joining the file sets exactly once at the end. Closure size is
-    * the standard doubling trade (O(Σ reachable pairs), same
-    * information the old growing sets carried).
-    *
-    * Each round is `localCheckpoint`ed: without lineage truncation the
-    * plan — and Catalyst's carried sizeInBytes statistics, whose
-    * BigInt bit-length doubles per un-truncated join round and
-    * eventually dominates DRIVER time (the r10 depth fixture measured
-    * exactly that) — grows per round. Convergence = the closure row
-    * count stops growing (monotone, bounded by V², so even cyclic
-    * graphs converge). Throws on non-convergence within `maxIters` —
-    * a truncated closure looks exactly like a converged one to
-    * callers, so silence is not an option.
-    *
-    * TWO budgets, both fail-loud (VERDICT r10 #7): `maxIters` bounds
-    * ROUNDS (diameter <= 2^maxIters), and `maxPairs` bounds the
-    * closure's ROW COUNT -- the doubling trade is O(sum of reachable
-    * pairs), so a wide-fan-out graph (every function reaching most
-    * others) can blow up pair space in few rounds while staying well
-    * inside the round budget. The count is already taken each round
-    * for the convergence probe, so the guard is free; the default
-    * (10^8 pairs, a few GB of (function, user) strings) is far past
-    * any real catalog and exists to turn a pathological input into an
-    * actionable error instead of an executor OOM. */
-  def transitiveDependencies(raw: DataFrame, maxIters: Int = 50,
-                             maxPairs: Long = DefaultMaxPairs): DataFrame =
-    transitiveDependenciesWithRounds(raw, maxIters, maxPairs)._1
-
-  /** Default [[transitiveDependencies]] closure-size budget. */
-  val DefaultMaxPairs: Long = 100000000L
-
-  /** [[transitiveDependencies]] plus the number of fixpoint rounds it
-    * took — exposed so DepGraphSpec can certify the path-doubling
-    * convergence rate at depth (⌈log₂ depth⌉ + 1 rounds, not depth
-    * rounds). */
-  private[graft] def transitiveDependenciesWithRounds(raw: DataFrame,
-                                                      maxIters: Int = 50,
-                                                      maxPairs: Long = DefaultMaxPairs): (DataFrame, Int) = {
-    // direct edges: G uses F (F -> G); the closure must give F every
-    // file of every TRANSITIVE user G. distinct() at the SEED: the
-    // convergence probe compares ROW COUNTS, and the loop body
-    // deduplicates — a caller-supplied raw with duplicate
-    // used_in_functions entries would otherwise start the count
-    // duplicate-inflated and can fake a fixpoint on the first round
-    // (review r10).
-    val edges = raw
-      .select(col("function"), explode(col("used_in_functions")).as("g"))
-      .distinct()
-    var reach = edges.localCheckpoint(eager = false)
-    var prevCk: Option[DataFrame] = Some(reach)
-    var lastCount = reach.count()
-    var converged = false
-    var i = 0
-    val spark = raw.sparkSession
-    while (!converged && i < maxIters) {
-      // square the relation: F ->> G, G ->> H  ⇒  F ->> H; the
-      // distinct caps cyclic graphs and makes the count monotone
-      val ck = reach.as("a")
-        .join(reach.as("b"), col("a.g") === col("b.function"))
-        .select(col("a.function"), col("b.g").as("g"))
-        .union(reach)
-        .distinct()
-        .localCheckpoint(eager = false) // truncate RDD lineage
-      val n = ck.count() // one action: materializes the checkpoint + convergence probe
-      if (n > maxPairs) {
-        // free BOTH live checkpoint block sets before throwing: the
-        // budget's message invites the caller to catch and fall back
-        // to flattenedDependencies in the same session, and two
-        // budget-scale block sets pinned in executor storage would
-        // risk exactly the OOM the budget exists to prevent
-        prevCk.foreach(Caches.freeLocalCheckpoint)
-        Caches.freeLocalCheckpoint(ck)
-        throw new IllegalStateException(
-          s"transitiveDependencies closure reached $n pairs (budget $maxPairs) after ${i + 1} " +
-            "rounds -- the graph's reachability relation is too dense for the pointer-doubling " +
-            "trade (O(sum of reachable pairs) rows); raise maxPairs or use flattenedDependencies " +
-            "(one-hop) for this input")
-      }
-      // the superseded round's checkpoint blocks are dead the moment
-      // the next round is materialized — free them now instead of
-      // waiting on ContextCleaner GC (the Caches.freeLocalCheckpoint
-      // convention of the sibling fixpoints; ~log₂ D closure-sized
-      // block sets would otherwise pin executor storage)
-      prevCk.foreach(Caches.freeLocalCheckpoint)
-      prevCk = Some(ck)
-      converged = n == lastCount
-      lastCount = n
-      // re-wrap over the CHECKPOINTED rows: localCheckpoint truncates
-      // the plan but CARRIES the origin's Catalyst sizeInBytes into
-      // the new leaf, and join stats multiply — bit-length doubles per
-      // round (the r10 depth fixture measured the pre-fix linear form
-      // hanging the DRIVER in BigInt multiplication). A fresh
-      // createDataFrame leaf restores default constant-size stats.
-      reach = spark.createDataFrame(ck.rdd, ck.schema)
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"transitiveDependencies did not converge in $maxIters iterations — " +
-          "function-graph diameter exceeds 2^maxIters (or the closure is still " +
-          "growing); raise maxIters")
-    // ONE file-set assembly over the converged closure: own files ∪
-    // every transitive user's files — the same tail shape as the
-    // one-hop flatten, but against reach instead of direct edges
-    val own = raw.select(col("function"), col("path"), col("used_in_files"))
-    (own.as("f")
-      .join(reach, Seq("function"), "left")
-      .join(own.select(col("function").as("g"), col("used_in_files").as("g_files")),
-        Seq("g"), "left")
-      .groupBy(col("function"), col("path"))
-      .agg(array_sort(array_distinct(concat(
-        first(col("used_in_files")),
-        coalesce(flatten(collect_list(col("g_files"))), array().cast(ArrayType(StringType)))
-      ))).as("used_in_files")), i)
-  }
 }

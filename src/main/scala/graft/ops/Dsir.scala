@@ -46,7 +46,7 @@ object Dsir {
     * the corpus never shuffles to form its features. A zero-token
     * document yields no rows. */
   private def featureRows(docs0: DataFrame, nBuckets: Int): DataFrame = {
-    // fanned out (round 15): tokenize + per-n-gram md5 hashing is the
+    // fanned out: tokenize + per-n-gram md5 hashing is the
     // dominant cost of both model fits and the scoring pass, and ran
     // serialized on the one-row-group scan — q73 measured 1.89 →
     // ~1.2 s at sf0.1

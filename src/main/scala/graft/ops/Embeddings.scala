@@ -38,8 +38,8 @@ object Embeddings {
     * size it with [[planesFor]] instead. */
   val Planes = 4
 
-  /** Oracle-pinned configuration of the vector-dedup/quantizer family
-    * (ADVICE r6): the q29/q33/q68 cosine threshold and the q31/q68 IVF
+  /** Oracle-pinned configuration of the vector-dedup/quantizer family:
+    * the q29/q33/q68 cosine threshold and the q31/q68 IVF
     * training shape. These are the DEFAULT parameter values below AND
     * the values interpolated into the DuckDB replay SQL
     * ([[graft.SparkEntry]] `VecCosineGE`/`IvfCtes`) — one definition,
@@ -92,7 +92,7 @@ object Embeddings {
     * 10-cell config costs 90.4 s and `cellsFor`-scale cells (100)
     * cost 20.0 s — the dial that restores the linear trend.
     *
-    * Design bound (round 9): assignment is the zero-shuffle
+    * Design bound: assignment is the zero-shuffle
     * [[nearestCell]] form over a REFERENCE-DATA centroid table
     * ([[graft.functions.NearestCells]] — O(1) plan size at any cell
     * count; the earlier per-centroid plan literals paid ~30 s of
@@ -182,7 +182,7 @@ object Embeddings {
     if (bands == 1) {
       // single band: score inside the bucket join, one pass
       val vecs = Caches.persist(quantized(spark, dir).withColumn("bucket", bucketCol(planes)))
-      // probe-side fan-out (round 16): the within-bucket pair
+      // probe-side fan-out: the within-bucket pair
       // expansion + scoring otherwise runs on the single cached
       // partition — the q20-family finding applied to the vector
       // modality; cache layout untouched, no-op on ≥ cores splits
@@ -284,7 +284,7 @@ object Embeddings {
 
   /** Nearest-centroid id: argmin of the scaled distances; ties break
     * to the smallest centroid id (centroids arrive sorted by id and
-    * the fused loop keeps the FIRST minimum). Since round 9 this is
+    * the fused loop keeps the FIRST minimum). This is
     * the [[graft.functions.NearestCells]] reference-data expression
     * rather than an nCells-subtree literal plan: bit-identical
     * arithmetic (NearestCellsProperties + the q31/q68/q70 oracles),
@@ -325,7 +325,7 @@ object Embeddings {
     *  - seeds are STRIDED over the (grid(0), j) ordering — nSuper
     *    evenly-spaced ranks including both endpoints — so near-
     *    duplicate seeds can't collapse the grouping the way a
-    *    take-first seed could (ADVICE r8);
+    *    take-first seed could;
     *  - [[SuperIters]] assignment passes over the nCells grids
     *    (exact-integer L², ties to the smallest group), group means
     *    re-derived from exact member sums via [[meanGrid]] between
@@ -390,7 +390,7 @@ object Embeddings {
     * group's (the recall trade every coarse-probe IVF makes).
     * `nSuper = 1` and `nSuper ≥ nCells` degenerate to the exact
     * [[nearestCell]] bit-for-bit (spec-pinned). ON the graded
-    * surface since round 9: q76 gates the full two-level trajectory
+    * surface: q76 gates the full two-level trajectory
     * (training + final assignment) at [[superFor]] sizing, while
     * q68/q70 keep replaying EXACT assignment — the q27-LSH-vs-q45-
     * brute relationship, for assignment. */
@@ -592,7 +592,7 @@ object Embeddings {
     probeCells(col("qv"), col("nrm"), cellTable(cents), nprobe)
 
   /** Two-level [[probeCellsCol]] — the SERVING counterpart of
-    * [[nearestCellTwoLevel]] (VERDICT r9 #3): exact probing costs
+    * [[nearestCellTwoLevel]]: exact probing costs
     * nCells distance evals PER PROBE, so past O(10³) cells a serving
     * query stream pays per batch what assignment used to pay per
     * corpus row. This routes each probe to its `nSuperProbe` nearest
@@ -682,7 +682,7 @@ object Embeddings {
     val qsPlan = q.select(col("q_id"), col("qv").as("q_v"),
       col("nrm").as("q_n"),
       explode(probeCol).as("cell"))
-    // ONE evaluation of the batch's probe ranking (review r10): the
+    // ONE evaluation of the batch's probe ranking: the
     // probe relation is broadcast-sized by contract, so collect it
     // once and serve from a local relation — deriving the probed-cell
     // filter from a separate action would re-run the O(nCells)-per-row
@@ -706,12 +706,12 @@ object Embeddings {
     * contract with three DuckDB oracles and must never diverge
     * between variants.
     *
-    * The prune (round 15, VERDICT r14 #1): the final window must
+    * The prune: the final window must
     * exchange by q_id and SORT each query's full candidate list —
     * for q45's definitional all-pairs stream that sort buffers
     * |corpus|·|queries|/parts rows per task (~25M rows/task at the
-    * sf10 federation; the one-in-three r14 decade OOM was exactly
-    * this WindowGroupLimit stage). [[partitionTopK]] streams each
+    * sf10 federation, where this WindowGroupLimit stage ran out of
+    * memory in one decade run of three). [[partitionTopK]] streams each
     * scan partition through a bounded per-query heap FIRST, so the
     * window's input collapses to ≤ parts·|queries|·k rows and its
     * sort state is trivially bounded at ANY corpus size. Keeping a
@@ -914,7 +914,7 @@ object Embeddings {
     // sides of the within-cell self-join
     val cells = Caches.persist(
       vecs.withColumn("cell", nearestCellTwoLevel(cents, nSuper)))
-    // probe-side fan-out (round 16): the within-cell pair expansion
+    // probe-side fan-out: the within-cell pair expansion
     // — the q20-family single-task finding, same rationale as
     // cosineNearDupPairsRaw; cache layout untouched
     val a = Tables.fanOutBy(cells, col("vec_id"))

@@ -57,7 +57,7 @@ object LlmOps {
     * all seven n-gram-family queries before any real work started
     * (ShingleSetProperties pins bit-identical semantics). */
   def shingles(docs: DataFrame): DataFrame = {
-    // NOT fanned out (round 15, tried and reverted): Tables.fanOut
+    // NOT fanned out (tried and reverted): Tables.fanOut
     // here parallelizes the serial shingle cache BUILD (a first-run /
     // build-time cost) and took q20's steady 2.38 → ~1.8 s, but the
     // resulting 32-partition cache made every steady-state cache scan
@@ -101,11 +101,11 @@ object LlmOps {
     * multiple consumers (sizes + join sides), and without the caches
     * every consumer rebuilds the scan→explode→distinct subtree and
     * the hot-list broadcast anti-join (3 duplicated subtrees in the
-    * physical plan — the round-2 bench defect). One definition keeps
+    * physical plan). One definition keeps
     * the cap semantics identical across the family and its oracles:
     * 3-gram shingles, dropping those in more than 50 docs. */
   private def cappedShingles(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // NOT pre-partitioned by shingle (round 15, tried and reverted):
+    // NOT pre-partitioned by shingle (tried and reverted):
     // declaring the cache hash-partitioned on the shingle should let
     // the df-cap aggregate and the candidate self-join skip their
     // exchanges (guide §2.4), but under AQE the InMemoryRelation's
@@ -125,7 +125,7 @@ object LlmOps {
   private[graft] def jaccardPairsRaw(spark: SparkSession, dir: String,
                                      threshold: Double): DataFrame = {
     val (sh, sizes) = cappedShingles(spark, dir)
-    // Probe-side fan-out (round 16, guide §2.5 input skew): on the
+    // Probe-side fan-out (input skew): on the
     // single-split driver layout the cached shingle relation has ONE
     // partition, the self-join plans as a broadcast hash join, and the
     // ENTIRE quadratic candidate expansion + (d1,d2) partial
@@ -133,7 +133,7 @@ object LlmOps {
     // single-threaded (shW = 1.13M pair rows) under every steady run
     // of q20/q32/q35/q42/q44/q97. Hash-repartitioning the PROBE side
     // by doc_id parallelizes the expansion without touching the cache
-    // layout (the round-15 build-side fan-out regressed the small
+    // layout (a build-side fan-out regressed the small
     // shingle consumers ~3× via a 32-partition cache — reverted; this
     // leaves q38/q50/q75 plans byte-identical) and without the
     // round-robin local sort. No-op on any ≥ cores-split layout.
@@ -212,9 +212,8 @@ object LlmOps {
     * bounded by the component DIAMETER, not the corpus size. Near-dup
     * clusters are dense and shallow (a duplicated doc links to most of
     * its copies directly), so a handful of rounds converge even on a
-    * 100 TB corpus; the same `localCheckpoint` discipline as
-    * [[DepGraph.transitiveDependencies]] keeps plan depth O(1) per
-    * round. Non-convergence within `maxIters` throws — a truncated
+    * 100 TB corpus; a `localCheckpoint` per round keeps plan depth
+    * O(1) per round. Non-convergence within `maxIters` throws — a truncated
     * labeling is indistinguishable from a converged one downstream.
     *
     * Input: (d1, d2) pairs. Output: (doc_id, cluster_id) for every
@@ -257,7 +256,7 @@ object LlmOps {
     // are pure scheduling floor (BENCH_r04: q33 spent 11-20 s resolving
     // 34 pairs). ~1M edge rows per partition, capped at the session
     // setting so a 100 TB edge stream still fans out fully.
-    // The ONE sizing job also counts null endpoints (ADVICE r14): a
+    // The ONE sizing job also counts null endpoints: a
     // null edge would crash the fast path's non-nullable tuple collect,
     // so inputs that ACTUALLY carry nulls route to the distributed
     // fixpoint (which treats them as it always has) instead of adding
@@ -285,7 +284,7 @@ object LlmOps {
             org.apache.spark.sql.types.LongType, nullable = false)))
         val slices = math.max(1, math.min(
           spark.sparkContext.defaultParallelism, labeled.length / 100000 + 1))
-        // one Row array wrapped in place (ADVICE r14) — no second
+        // one Row array wrapped in place — no second
         // full driver copy of the labeling on the way out
         val rows = new Array[org.apache.spark.sql.Row](labeled.length)
         var ri = 0
@@ -310,13 +309,13 @@ object LlmOps {
     // sized explicitly, and adaptive execution materializes every tiny
     // round stage-by-stage with a replan between stages — measured
     // ~0.5-0.8 s of pure driver overhead per round on a ≤2,000-row
-    // label table (the residual q33 cost after the r5 one-job fix).
+    // label table (the residual q33 cost of a one-job round).
     // Both settings live on a CLONED session (`newSession()` shares
     // the SparkContext and block manager but isolates SQLConf), so a
     // query compiled concurrently on the caller's session can never
-    // see the loop's tiny partition count or disabled AQE (ADVICE r5 —
-    // the previous set/restore of the caller's conf was a documented
-    // single-writer constraint, not an enforced one). The edge stream
+    // see the loop's tiny partition count or disabled AQE (setting and
+    // restoring the caller's conf would be a documented single-writer
+    // constraint, not an enforced one). The edge stream
     // crosses into the clone via its materialized RDD (`p` is
     // persisted and counted above, so the upstream candidate
     // generation never re-runs), and the fixpoint result crosses back
@@ -534,7 +533,7 @@ object LlmOps {
     * cluster to one row before the exchange, and NO sort-window state
     * ever materializes (the previous row_number window buffered whole
     * clusters per task; at the sf10 federation's 1M docs that state
-    * was what forced the 64 GB driver heap — VERDICT r11 #2). Both
+    * was what forced the 64 GB driver heap). Both
     * enrichment joins have a component-sized small side that AQE
     * broadcasts. */
   def clusterKeepBest(spark: SparkSession, dir: String,
@@ -581,7 +580,7 @@ object LlmOps {
     * so candidate generation is linear in the corpus even where the
     * full self-join would be quadratic. The benchmark subset is
     * additionally CAPPED at doc_id < benchMod·1024 (the q71 probe-cap
-    * pattern, round 9): without it the `% benchMod` convention grows
+    * pattern): without it the `% benchMod` convention grows
     * the benchmark side ∝ corpus, self-violating the "benchmark is
     * eval-set-sized" premise the linearity argument rests on (the
     * 3.42× decade ratio bench/SCALING_r08.md measured). ≤1,024 bench
@@ -803,7 +802,7 @@ object LlmOps {
   def lshCandidatePairs(spark: SparkSession, dir: String): DataFrame = {
     // persist: sig feeds the band explode (self-joined as x AND y) plus
     // the two signature re-joins — uncached, the shingles→16-way-md5
-    // agg subtree would execute ~5× (the round-2 bench's 109 s defect).
+    // agg subtree would execute ~5× (109 s at sf0.1).
     // One materialization, four cheap cache scans.
     val sig = Caches.persist(minhashSignatures(spark, dir))
     val bandKey = (b: Int) =>
@@ -880,7 +879,7 @@ object LlmOps {
     * blocking, and LlmOpsSpec measures the miss against the
     * unblocked truth.
     *
-    * `midBlock` (VERDICT r12 #6) adds the THIRD pass — the middle
+    * `midBlock` adds the THIRD pass — the middle
     * [[FuzzyBlockLen]]-gram of the key (chars 19-22 of 40) — which
     * rescues exactly the documented miss class: a pair edited at
     * BOTH ends whose middle survives. Cost is one more shuffle of

@@ -119,7 +119,7 @@ object Mmr {
     * query — fewer when a query has fewer candidates (the selection
     * never invents candidates stage 1 didn't produce).
     *
-    * Execution shape (round 14): ONE shuffle. The candidates join
+    * Execution shape: ONE shuffle. The candidates join
     * back to the exact grid broadcast-style and rel = dist(q, d) is
     * computed by the codegen vec_dot BEFORE the shuffle; then a
     * single groupByKey(q_id) collects each query's ≤ r candidates
@@ -130,12 +130,12 @@ object Mmr {
     * top-list contract at ANY corpus size, and the per-group work is
     * O(k·r·dim) — microseconds against the shuffle it replaced.
     *
-    * Why imperative-in-group instead of k joined rounds (the pre-r14
-    * shape): greedy MMR is inherently sequential in k, so a dataflow
-    * formulation costs k cluster-wide barrier rounds (join + window +
-    * checkpoint each) over a candidate relation that already fits in
-    * one group buffer. On a 1000-executor cluster the k rounds are
-    * k× the scheduling floor and k× the shuffle of the SAME rows;
+    * Why imperative-in-group instead of k joined rounds: greedy MMR
+    * is inherently sequential in k, so a dataflow formulation costs
+    * k cluster-wide barrier rounds (join + window + checkpoint each)
+    * over a candidate relation that already fits in one group
+    * buffer. On a 1000-executor cluster the k rounds are k× the
+    * scheduling floor and k× the shuffle of the SAME rows;
     * the grouped form is one exchange keyed by q_id, embarrassingly
     * parallel across queries, and replays the identical exact-integer
     * trajectory (MmrSpec pins it against a plain-Scala model; the q92
@@ -152,7 +152,7 @@ object Mmr {
     * vectors here; the batch q92 derives the relation from the corpus
     * because its probes ARE corpus rows).
     *
-    * CONTRACT (`boundedProbes`, VERDICT r14 #5): the default plan
+    * CONTRACT (`boundedProbes`): the default plan
     * force-broadcasts BOTH `cands` and `queries` — correct for every
     * in-repo caller because stage-1 serves cap the candidate list at
     * [[graft.ops.Pq.ProbeCap]] rows (≤ 1,024 probes × r per batch at
@@ -200,7 +200,7 @@ object Mmr {
             if (!taken(i)) {
               if (best < 0) best = i
               else {
-                // round 1 objective = rel; later rounds rel − min-div
+                // the first pick's objective = rel; later picks rel − min-div
                 val oi = if (r == 1) cs(i).rel else cs(i).rel - div(i)
                 val ob = if (r == 1) cs(best).rel else cs(best).rel - div(best)
                 if (oi < ob ||

@@ -95,7 +95,7 @@ object Owners {
     * `prFiles`: (pr, file) — file paths repo-relative POSIX, the form
     * the GitHub API returns and [[graft.io.CorpusIO.corpus]] emits.
     *
-    * Bare-`*` conformance (closes ADVICE r5 / VERDICT r6 #2): the
+    * Bare-`*` conformance: the
     * reference's `pattern === '*'` branch (yml:141) adds the bare-`*`
     * owners UNCONDITIONALLY — even to a PR whose file list is empty.
     * A zero-file PR has no rows in a (pr, file) relation, so the `*`

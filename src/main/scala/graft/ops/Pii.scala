@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * re-masks to itself, because no token re-triggers any detector).
   * Counts are taken BEFORE masking, each class independently on the
   * RAW text — so on overlapping-class text the counts and the masked
-  * spans can diverge (ADVICE r12): in `a@b.co10.0.0.1` the email
+  * spans can diverge: in `a@b.co10.0.0.1` the email
   * match consumes `a@b.co10.0.0.1`'s head and no standalone IP exists
   * in the raw text (`\b` sits mid-digits), yet after the email
   * substitution the chain masks `<EMAIL>` + an IP-shaped remainder —
@@ -115,7 +115,7 @@ object Pii {
         .otherwise(lit(""))).as("text"))
 
   /** q99 — the gated composition: plant, then redact. The scan is
-    * fanned out ([[Tables.fanOut]], round 15): the redaction regexes
+    * fanned out ([[Tables.fanOut]]): the redaction regexes
     * are the whole cost of this zero-shuffle query and ran serialized
     * on the one-row-group input — measured 1.03 → 0.57 s at sf0.1. */
   def piiRedact(spark: SparkSession, dir: String): DataFrame =

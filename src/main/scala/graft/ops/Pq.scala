@@ -37,7 +37,7 @@ import graft.ops.Embeddings.Centroid
   * Plan shape at 100 TB: encoding is a scan-riding projection — one
   * fused reference-data argmin per subspace
   * ([[graft.functions.NearestCells]] over a per-subspace code table:
-  * O(1) plan size at any K, all codegen, no shuffle; the r9
+  * O(1) plan size at any K, all codegen, no shuffle; the
   * K-literal-subtree form is retained only as PqSpec's bit-identity
   * reference). The serve is the q45 broadcast-cross-join shape — the
   * fixed probe batch (carrying its 4 lookup arrays) broadcasts onto
@@ -82,7 +82,7 @@ object Pq {
   def kFor(n: Long): Int = {
     require(n > 0, "need a positive corpus size")
     var p = 4
-    while (p < 8 && (TrainPerCode.toLong << (p + 1)) <= n) p += 1
+    while ((1 << p) < KMax && (TrainPerCode.toLong << (p + 1)) <= n) p += 1
     1 << p
   }
 
@@ -142,11 +142,11 @@ object Pq {
 
   /** Nearest sub-centroid CODE (0-based position in `cents`, which
     * arrive sorted by j) for the row's subspace slice; ties to the
-    * smallest code. Since round 10 a [[graft.functions.NearestCells]]
+    * smallest code. A [[graft.functions.NearestCells]]
     * reference-data expression over the per-subspace table rather
     * than K literal distance subtrees: at the production K = 256 the
     * literal form is M·K = 1,024 plan subtrees — the exact pathology
-    * NearestCells killed for IVF in round 9 (~25-36 s of
+    * NearestCells removed for IVF (~25-36 s of
     * analysis/codegen at 625 cells) — while this is O(1) plan size at
     * any K. Bit-identical arithmetic (PqSpec pins equality against
     * [[nearestSubCodeLiteral]]; the q77/q79/q80 oracles replay the
@@ -162,7 +162,7 @@ object Pq {
   private def quantizedSubDist(cents: Seq[Centroid]): Column =
     adcSubDists(col("__pq_sl"), col("__pq_nrm"), subTable(cents), DistScale)
 
-  /** The r9 K-literal-subtree form of [[nearestSubCode]] — retained
+  /** The K-literal-subtree form of [[nearestSubCode]] — retained
     * (test-only) as the independent formulation PqSpec pins the fused
     * expression against bit-for-bit. */
   private[graft] def nearestSubCodeLiteral(cents: Seq[Centroid]): Column = {
@@ -178,7 +178,7 @@ object Pq {
     array_position(distArr, array_min(distArr)).cast("int") - 1
   }
 
-  /** The r9 K-literal-subtree form of [[quantizedSubDist]] —
+  /** The K-literal-subtree form of [[quantizedSubDist]] —
     * retained (test-only) for the same PqSpec bit-identity pin. */
   private[graft] def quantizedSubDistLiteral(cents: Seq[Centroid]): Column =
     array(cents.map { c =>
@@ -333,13 +333,13 @@ object Pq {
                               iters: Int = Embeddings.OracleIters,
                               nCodes: Int = K): DataFrame = {
     val books = trainCodebooks(vecs, iters, nCodes)
-    // Production-K encode fan-out (round 16, guide §2.5): the serve's
+    // Production-K encode fan-out: the serve's
     // encode rides the codes scan, and per-row cost is M fused argmin
     // loops ∝ nCodes — at the kFor-derived K = 128-256 (q80) that
     // stage measured 1.2 s on ONE task over the single-split layout
     // (Probe's stage table, st2142). Fan the encode input out only past the
     // pinned K (q77/q83/q91 stay byte-identical — their encode is
-    // 8-16× cheaper and the extra exchange was the measured r15 loss
+    // 8-16× cheaper and the extra exchange measured as a loss
     // on small serves); size-aware width, no-op on ≥ cores splits.
     val codes = encode(if (nCodes > K) Tables.fanOut(vecs) else vecs, books)
     adcServe(codes, books, cappedProbes(vecs, queryMod), k, excludeSelf = true)
@@ -427,7 +427,7 @@ object Pq {
     * `planesFor` (non-vacuous at the oracle SF: 500 vectors derive
     * K = 32 ≠ the pinned 16). Practical only because the codebook
     * expressions are fused reference-data forms — at the K = 256 this
-    * rule reaches by sf1, the r9 literal form would be 1,024 plan
+    * rule reaches by sf1, the literal form would be 1,024 plan
     * subtrees. */
   def pqTopKScaled(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.embeddings(spark, dir).count()
@@ -449,7 +449,7 @@ object Pq {
   val RMax = 128
 
   /** Refine-budget-vs-N rule — [[kFor]]'s counterpart for the
-    * two-stage serves (VERDICT r11 #1): r = max{2^p : p ∈ [5, 7],
+    * two-stage serves: r = max{2^p : p ∈ [5, 7],
     * RefinePerCand·2^p ≤ n}, FLOORED at [[RefineR]] — exact-integer
     * (shift-compares only, no log2 doubles), replayed verbatim by the
     * q98 oracle's scalar subquery. Doubles with the corpus until the
@@ -458,12 +458,12 @@ object Pq {
     * measured clustered-geometry remedy regime. The floor keeps the
     * sizing-rule dominance honest on tiny corpora too: below
     * RefinePerCand·32 = 128 vectors the rule yields exactly the
-    * pinned q83 budget, never LESS (review r12 — the raw 2^4 = 16
+    * pinned q83 budget, never LESS (the raw 2^4 = 16
     * fallback undercut the q98 ≥ q83 invariant on n < 128). */
   def rFor(n: Long): Int = {
     require(n > 0, "need a positive corpus size")
     var p = 4
-    while (p < 7 && (RefinePerCand.toLong << (p + 1)) <= n) p += 1
+    while ((1 << p) < RMax && (RefinePerCand.toLong << (p + 1)) <= n) p += 1
     math.max(RefineR, 1 << p)
   }
 
@@ -631,8 +631,8 @@ object Pq {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
     val cents = Embeddings.trainQuantizer(spark, dir).sortBy(_.j)
     // ONE cached residual relation feeds both codebook training and
-    // encoding (review r9: trainIvfPq + ivfPqCodes each persisted
-    // their own copy, re-running the full-corpus assignment pass)
+    // encoding (a copy per step would re-run the full-corpus
+    // assignment pass)
     val residuals = Caches.persist(residualsOf(spark, dir, cents))
     val books = trainCodebooks(residuals)
     val codes = encode(residuals, books, keep = Seq("cell"))
@@ -682,7 +682,7 @@ object Pq {
     * representation a serving deployment persists (partitioned by
     * cell at scale, so probed cells prune at listing time). The
     * residual relation is NOT cached here: this builder scans it
-    * exactly once — callers cache the CODES they build (review r11);
+    * exactly once — callers cache the CODES they build;
     * the training paths own their residual cache where codebook
     * training really makes multiple passes. */
   def ivfPqCodes(spark: SparkSession, dir: String,
@@ -727,7 +727,7 @@ object Pq {
     // the partitioned-by-cell production layout the probed cells
     // prune at LISTING time through the serve path itself
     // (StorageSpec proves it end-to-end), not only when DPP happens
-    // to fire — VERDICT r9 #2. Semantically a no-op: the cell
+    // to fire. Semantically a no-op: the cell
     // equi-join below keeps exactly these cells' rows anyway.
     val probedCells = probeRows.map(_.getAs[Long]("cell")).distinct.toSeq
     val ptabs = (0 until M).foldLeft(

@@ -195,7 +195,7 @@ object Relational {
     * extraction (DIM_MFO_FD_WEB_CHANNEL.sql:5 `TRY_CAST(UTM_CONTENT
     * AS NUMBER(38,0))`; events.props hosts the dynamic field). */
   def tryCastProps(spark: SparkSession, dir: String): DataFrame = {
-    // fanned out (round 15): the per-row JSON parse is the whole cost
+    // fanned out: the per-row JSON parse is the whole cost
     // and ran serialized on the one-row-group events scan — measured
     // 1.43 → 0.78 s at sf0.1
     val ev = Tables.fanOut(Tables.events(spark, dir))
@@ -439,7 +439,7 @@ object Relational {
     lengths.join(vocab, Seq("source")).orderBy(col("source"))
   }
 
-  /** The GRADED q65 (VERDICT r12 #1): the sketch estimates reduced to
+  /** The GRADED q65: the sketch estimates reduced to
     * deterministic accuracy-band booleans against the exact twins
     * computed in the same query —
     * `|approx_vocab − exact_vocab| ≤ 0.10·exact` (the HLL runs at

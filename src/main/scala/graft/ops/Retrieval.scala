@@ -58,7 +58,7 @@ object Retrieval {
       .select(col("doc_id"), col("tc.dl").as("dl"), explode(col("tc.pairs")).as("p"))
       .select(col("p.term").as("term"), col("doc_id"), col("dl"),
         col("p.tf").cast("long").as("tf")))
-    // corpus stats WITHOUT a second tokenization pass (round 9):
+    // corpus stats WITHOUT a second tokenization pass:
     // Σdl folds off the cached tf relation's per-doc (doc_id, dl)
     // rows — zero-term docs have no tf rows but contribute 0 to the
     // sum, so only the COUNT must come from the corpus, and count(*)
@@ -66,7 +66,7 @@ object Retrieval {
     // avgdl = Σdl/N as ONE IEEE division of exact integers — the
     // same value avg(size(tokens)) produced, without re-reading and
     // re-splitting every text at build time (at 100 TB the build is
-    // the corpus-sized cost; paying it twice was the r8 finding).
+    // the corpus-sized cost, and must not be paid twice).
     // Semantics pin: a NULL-text doc now counts in the denominator
     // with dl = 0 (it used to vanish from the null-skipping avg) —
     // "null tokenizes to no tokens", the engine's q23/q25 rule; the
@@ -78,10 +78,10 @@ object Retrieval {
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .select(col("term"),
         log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5)).as("idf"))
-    // DOC-CLUSTERED postings layout (round 16, guide §2.3 "aggregate
-    // before you shuffle"). Round 15 tried DECLARING the cache
-    // hash-partitioned to delete the serve exchange (§2.4) — AQE can't
-    // see InMemoryRelation partitioning, exchange stayed, reverted.
+    // DOC-CLUSTERED postings layout ("aggregate before you
+    // shuffle"). DECLARING the cache hash-partitioned to delete the
+    // serve exchange does not work: AQE can't see InMemoryRelation
+    // partitioning, so the exchange stays.
     // This is the weaker but REAL win the layout still owns: the
     // serve's (query_id, doc_id) roll-up keeps its exchange, but its
     // map-side PARTIAL aggregation collapses fully only when all of a
@@ -165,9 +165,9 @@ object Retrieval {
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/meta.parquet")
   }
 
-  /** Publish the index as a VERSIONED artifact under `root` (VERDICT
-    * r11 #4 — the [[Storage.publishArtifact]] lifecycle applied to the
-    * lexical index): the [[bm25Save]] layout is staged invisibly and
+  /** Publish the index as a VERSIONED artifact under `root` (the
+    * [[Storage.publishArtifact]] lifecycle applied to the lexical
+    * index): the [[bm25Save]] layout is staged invisibly and
     * swapped in as the next `v<n>` atomically, so a REBUILD — the step
     * the q95 frozen-stats ingest defers until drift demands it — lands
     * under live serving jobs without ever exposing a half-written

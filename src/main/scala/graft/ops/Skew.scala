@@ -31,7 +31,7 @@ object Skew {
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** q69 — the salted join on the GRADED surface (VERDICT r6 #4): a
+  /** q69 — the salted join on the GRADED surface: a
     * deliberately skewed fact key (every even user collapses to key 0,
     * so one hot key holds ~half the events — the #1 failure mode of
     * any shuffle join at 100 TB) joined to the customer dim through

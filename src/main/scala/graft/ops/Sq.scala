@@ -80,7 +80,7 @@ object Sq {
     * drifted past, saturation IS the staleness semantics (the FAISS
     * SQ8 encode behavior): drifted values code to the nearest grid
     * edge instead of emitting out-of-range bytes that silently break
-    * the byte-code invariant (ADVICE r10). Inside the clamp, `div` is
+    * the byte-code invariant. Inside the clamp, `div` is
     * the INTEGRAL division operator; operands are non-negative on the
     * covered grid, so Spark's truncating `div` and DuckDB's flooring
     * `//` coincide — and off-grid (stale bounds) the clamp itself
@@ -361,7 +361,7 @@ object Sq {
     * residual byte codes — persist partitioned by cell at scale so
     * probed cells prune at listing time. The residual relation is NOT
     * cached here: this builder scans it exactly once (the caller
-    * caches the CODES, not their input — review r11); the train path
+    * caches the CODES, not their input); the train path
     * ([[trainIvfSq8]]/[[ivfSq8TopK]]) owns its own residual cache
     * where two passes genuinely read it. */
   def ivfSq8Codes(spark: SparkSession, dir: String,
@@ -375,7 +375,7 @@ object Sq {
     * own [[Pq.residualsOf]]; calling them side by side at serve
     * startup pays the dominant build cost (the full-corpus
     * [[Embeddings.serveIndex]] assignment pass + mean-grid join)
-    * twice (review r11). Callers persist the returned TIERS; the
+    * twice. Callers persist the returned TIERS; the
     * residual cache behind them is registered with [[Caches]] and
     * falls to the session's releaseAll. */
   def buildRefineTiers(spark: SparkSession, dir: String,
@@ -579,7 +579,7 @@ object Sq {
     * retrains, so delta vectors land in the nearest FROZEN cell and
     * their residuals may fall OUTSIDE the frozen per-dim bounds — the
     * [[encode]] clamp saturates them to the grid edge, which is the
-    * documented staleness semantics (ADVICE r10) now exercised on the
+    * documented staleness semantics, exercised on the
     * graded surface under genuine drift (SqSpec asserts the fixture
     * actually saturates codes, so the gate is non-vacuous).
     *
@@ -687,7 +687,7 @@ object Sq {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
     val cents = Embeddings.trainQuantizer(spark, dir).sortBy(_.j)
     // ONE cached residual relation feeds codebook training, PQ
-    // encoding, bounds, and SQ8 encoding (the q79 review-r9 rationale)
+    // encoding, bounds, and SQ8 encoding (the q79 rationale)
     val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
     val books = Pq.trainCodebooks(residuals)
     val pqCodes = Pq.encode(residuals, books, keep = Seq("cell"))

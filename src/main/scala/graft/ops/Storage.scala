@@ -3,72 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Storage-layout operators — the two Spark-native layouts that turn
-  * "read 100 TB" into "read the slice you need":
-  *
-  *  - PARTITIONED writes (`partitionBy`): one directory per partition
-  *    value; a filter on the partition column becomes a
-  *    `PartitionFilters` entry on the scan and non-matching
-  *    directories are never listed, let alone read. The right layout
-  *    for low-cardinality pruning keys (source, date, lang).
-  *  - BUCKETED tables (`bucketBy` + `sortBy`): rows pre-shuffled into
-  *    a fixed number of hash buckets per table at WRITE time; a join
-  *    or aggregation on the bucket key then needs NO exchange at read
-  *    time — the shuffle is paid once, at ingest, instead of on every
-  *    query. The right layout for high-cardinality join keys
-  *    (doc_id, user_id) under repeated joins.
-  *
-  * Both are plain `DataFrameWriter` surfaces; these helpers pin the
-  * layout contract (mode, format, metastore naming) in ONE place and
-  * [[StorageSpec]] asserts the plans actually deliver the promise:
-  * pruned `PartitionFilters` on the partitioned scan, zero
-  * `Exchange` in the bucketed join. Bucketed tables go through the
-  * session catalog (`saveAsTable` — bucket metadata lives in the
-  * metastore; a path-only parquet write silently loses it).
+/** Versioned parquet snapshots on a plain filesystem (no table format
+  * in this stack): upsert, compaction and opaque-artifact publication
+  * share one `v<n>/` + `_SUCCESS` protocol, so a reader never sees a
+  * half-written version and a concurrent scan of an older version is
+  * never disturbed.
   */
 object Storage {
-
-  /** Write `df` partitioned by `cols` (directory-per-value layout).
-    * Readers filtering on `cols` prune at the file listing. */
-  def writePartitioned(df: DataFrame, path: String, cols: String*): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(cols: _*).parquet(path)
-
-  /** Read a partitioned dataset back. Spark discovers the partition
-    * columns from the directory names. */
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Write `df` as a bucketed + bucket-sorted catalog table: `n`
-    * hash buckets on `key`, each bucket file sorted by `key`. A
-    * subsequent equi-join or groupBy on `key` between tables
-    * bucketed the same way plans with NO shuffle exchange (and the
-    * sort often collapses into a merge join's requirement). */
-  def writeBucketed(df: DataFrame, table: String, key: String, n: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(n, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
-
-  /** Inner equi-join of two same-bucketed catalog tables on `key` —
-    * the co-located join: with matching bucket counts both sides read
-    * pre-shuffled, so the plan contains no Exchange for the join.
-    * The MERGE hint pins a sort-merge join: the operator this layout
-    * exists for is big ⋈ big (where broadcast is impossible and SMJ is
-    * what the planner picks anyway); without the hint a small-table
-    * demo broadcasts and the planner marks the scans `Bucketed: false
-    * (disabled by query planner)` — bucketing only pays through SMJ /
-    * shuffled-hash. (Bucketing itself requires
-    * `spark.sql.sources.bucketing.enabled`, on by default; mismatched
-    * bucket counts shuffle the smaller-bucketed side.) */
-  def bucketedJoin(spark: SparkSession, left: String, right: String,
-                   key: String): DataFrame =
-    spark.table(left).hint("merge").join(spark.table(right), Seq(key))
-
-  /** The partition-pruning read path: filter on the partition column
-    * pushed at listing time. Exposed as a helper so the spec and
-    * callers share one definition. */
-  def prunedRead(spark: SparkSession, path: String,
-                 partCol: String, value: String): DataFrame =
-    readPartitioned(spark, path).filter(col(partCol) === value)
 
   /** VERSIONED UPSERT — the corpus-refresh operator a nightly crawl
     * needs on plain parquet (no table format in this stack): merge
@@ -162,7 +103,7 @@ object Storage {
     * check aborts the common case without paying the rename; the
     * pinned target closes the check→rename window itself, so "a
     * rewrite can only publish directly on top of its own source"
-    * holds by construction, not by timing (ADVICE r10). Merging
+    * holds by construction, not by timing. Merging
     * publishers (upsert) leave it None and retry through the next
     * free slot; their write-skew semantics are documented at
     * [[upsertSnapshot]].
@@ -189,7 +130,7 @@ object Storage {
       // bare shared name would verify as "some publisher's dir is at
       // the target" and a loser whose staging was swallowed into the
       // winner's dir would wrongly report the WINNER's version as its
-      // own publish (review r11).
+      // own publish.
       val tokenName = s"_publisher-${work.getName.stripPrefix(".staging-")}"
       fs.create(new org.apache.hadoop.fs.Path(work, tokenName)).close()
       /** Claim `next` for `work`: occupied target → false (no rename
@@ -362,7 +303,7 @@ object Storage {
     * (the lexical side routes through [[graft.ops.Retrieval
     * .bm25Publish]]).
     *
-    * Marker guarantee (ADVICE r11): commit visibility rides the
+    * Marker guarantee: commit visibility rides the
     * top-level `_SUCCESS` marker, and an artifact writer — unlike the
     * data-snapshot writers, whose single parquet write emits one —
     * may write NESTED layouts (bm25Save: postings.parquet/ +
@@ -393,7 +334,7 @@ object Storage {
     * [[resolveArtifact]] result): the rename target is v(source+1)
     * and the publish ABORTS (returns None, staging removed) when any
     * other publish landed first — the rewrite-publisher guard
-    * ([[stageAndPublish]]'s abortIfSupersededFrom, ADVICE r11) applied
+    * ([[stageAndPublish]]'s abortIfSupersededFrom) applied
     * to retrains, closing the ordering inversion two racing retrains
     * would otherwise produce: an aborted retrain re-resolves, retrains
     * on the newer artifact (or decides the winner's is fresh enough),
@@ -441,7 +382,7 @@ object Storage {
     * state in which a v-named marker-less directory is a legitimate
     * pending publish — and removing one also un-wedges a compaction
     * whose pinned v(source+1) slot such debris would otherwise
-    * occupy forever (review r11). Out-of-protocol writers must not
+    * occupy forever. Out-of-protocol writers must not
     * hand-create `v<n>` names; that is the protocol's namespace.
     *
     * Concurrency contract, spec-proven (StorageSpec):

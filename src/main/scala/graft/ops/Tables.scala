@@ -30,8 +30,8 @@ object Tables {
     * unchanged. Row-preserving — no query result changes.
     *
     * OPT-IN per call site, deliberately NOT applied inside [[load]]:
-    * a round-15 experiment that fanned out every ≥256 KB table scan
-    * made the whole bench WORSE (82 → 126 s, 61 guard trips) — each
+    * fanning out every ≥256 KB table scan made the whole bench WORSE
+    * (82 → 126 s, 61 guard trips) — each
     * repartition is an AQE stage barrier costing ~100-300 ms of
     * scheduling at bench SF, which swamps the win everywhere the
     * serialized map work isn't itself ≫ that (the PQ serves, which
@@ -48,13 +48,13 @@ object Tables {
     * CPU-heavy per-row work (regex passes, JSON parsing, feature
     * hashing) at single-digit MB/s/core, so 64 KB of input is tens of
     * milliseconds of compute — under that, task scheduling dominates
-    * and extra width is pure overhead (round-15 scaling block: all
-    * four fanned queries ran FASTER at 8 cores than at
-    * defaultParallelism = 32 on the sf0.1 inputs, i.e. unconditional
-    * cores-width over-partitions small inputs; VERDICT r15 #7). */
+    * and extra width is pure overhead (all four fanned queries ran
+    * FASTER at 8 cores than at defaultParallelism = 32 on the sf0.1
+    * inputs, i.e. unconditional cores-width over-partitions small
+    * inputs). */
   val FanOutBytesPerTask: Long = 64L << 10
 
-  /** Size-aware fan-out width (VERDICT r15 #7): wide enough to use the
+  /** Size-aware fan-out width: wide enough to use the
     * cores, never wider than the input justifies —
     * min(defaultParallelism, ceil(inputBytes / 64 KB)). Input bytes
     * come from the optimizer's plan statistics (for the scan-rooted
@@ -69,7 +69,7 @@ object Tables {
   }
 
   /** Physical partition count WITHOUT the `df.rdd` deserialized-RDD
-    * conversion the round-15 version paid (VERDICT r15 #4): `toRdd`
+    * conversion: `toRdd`
     * is the internal-row RDD the physical plan already owns. Building
     * it is not free: under AQE a cache-rooted child (an
     * InMemoryRelation whose own plan holds an exchange) can run its
@@ -80,7 +80,7 @@ object Tables {
 
   /** [[fanOut]] with HASH partitioning on `key` instead of round-robin
     * — for fanning out the probe side of a candidate-expansion
-    * SELF-join (the q20-family shape, round 16): keyless
+    * SELF-join (the q20-family shape): keyless
     * `repartition(n)` pays a local sort of its input
     * (`sortBeforeRepartition`, kept on for retry determinism) which on
     * a single-partition cache is one more serialized pass over the
@@ -99,7 +99,7 @@ object Tables {
     * planner shuffle-joins and the join's own exchange already fans
     * the expansion out — there an extra probe repartition is a pure
     * full-relation shuffle tax (measured +5-9 s per shingle-family
-    * query at sf10, round-16 campaign c2). Also no-ops when the input
+    * query at sf10). Also no-ops when the input
     * already has ≥ cores partitions. */
   def fanOutBy(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
@@ -167,7 +167,7 @@ object Tables {
         // a THIRD physical encoding (string/int32/date/...) from a
         // future testdata generation must fail at load, not silently
         // cast through TimestampType — the exact drift class this
-        // adapter exists to surface (ADVICE r8). Known encodings are
+        // adapter exists to surface. Known encodings are
         // handled above; anything else needs a reviewed adapter.
         throw new IllegalStateException(
           s"events.ts has unrecognized physical type $other — " +

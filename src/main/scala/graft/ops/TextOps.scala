@@ -18,8 +18,6 @@ import graft.functions.{bigramStats, charPairs, nfc, simhash60, winnowMinima}
   */
 object TextOps {
 
-  val SimhashBits = 60
-
   /** q22 — 60-bit SimHash over whitespace tokens weighted by count.
     * Bit b of the fingerprint is 1 iff the sum over token OCCURRENCES
     * of (+1 if the token hash has bit b set, else −1) is > 0 —
@@ -29,7 +27,7 @@ object TextOps {
     * ZERO-SHUFFLE, ZERO-INTERPRETATION plan: the whole sketch runs in
     * the custom codegen expression [[graft.functions.SimHash60]] —
     * one md5 digest + primitive counter array per row, one static
-    * call from generated code. The round-2 version shuffled 1.5M
+    * call from generated code. An explode-based version shuffled 1.5M
     * exploded token rows twice; an intermediate version avoided the
     * shuffle but paid 60 interpreted `aggregate` lambdas per row
     * (docs with no tokens drop out, matching the exploded
@@ -54,13 +52,13 @@ object TextOps {
     * codegen expression [[graft.functions.TextStats]] (one byte scan
     * per row); the previous formulation paid three interpreted
     * higher-order lambdas per row (`aggregate` + 2× `filter`) — the
-    * last interpretation tax in the text family (VERDICT r4). The
+    * last interpretation tax in the text family. The
     * four struct fields are one shared subexpression (Catalyst CSE
     * evaluates text_stats once per row). */
   def textStats(spark: SparkSession, dir: String): DataFrame = {
-    // fanned out (round 16, the r15 q26/q99 pattern at the remaining
-    // single-split text kernels — VERDICT r15 #7): the per-row byte
-    // scan serialized on one task; size-aware width, no-op at scale
+    // fanned out (the q26/q99 pattern at the single-split text
+    // kernels): the per-row byte scan serialized on one task;
+    // size-aware width, no-op at scale
     Tables.fanOut(Tables.documents(spark, dir))
       .withColumn("st", graft.functions.textStats(col("text")))
       .select(
@@ -88,7 +86,7 @@ object TextOps {
     * Plan: scan → per-row scores → explode(4) → window rank → count:
     * one shuffle by doc, one by (lang, pred). */
   def langId(spark: SparkSession, dir: String): DataFrame = {
-    // fanned out (round 16): four marker-array scans per row over a
+    // fanned out: four marker-array scans per row over a
     // single-split scan — the q23 rationale
     val docs = Tables.fanOut(Tables.documents(spark, dir))
       .withColumn("ws", filter(split(col("text"), " "), x => length(x) > 0))
@@ -116,7 +114,7 @@ object TextOps {
   /** q25 — token counting: whitespace tokens vs BPE-ish regex tokens
     * per doc. No shuffle; linear in the scan. */
   def tokenCounts(spark: SparkSession, dir: String): DataFrame =
-    // fanned out (round 16): the regex_extract_all pass is the
+    // fanned out: the regex_extract_all pass is the
     // heaviest per-row text kernel — the q23 rationale
     Tables.fanOut(Tables.documents(spark, dir))
       .select(
@@ -259,14 +257,14 @@ object TextOps {
     * ZERO-SHUFFLE, ZERO-INTERPRETATION plan: the per-row k-gram
     * hashing + window minima run inside the custom codegen expression
     * [[graft.functions.WinnowMinima]] (one static call per row from
-    * generated code). The round-2 version exploded ~n_chars rows per
+    * generated code). An explode-based version sends ~n_chars rows per
     * doc through a window shuffle — a row amplification through the
     * exchange that is the real bottleneck on a 1000-executor cluster;
     * an intermediate higher-order-function version avoided the shuffle
     * but paid ~1.7× interpreted-lambda CPU. This keeps both wins. */
   def winnowFingerprint(spark: SparkSession, dir: String): DataFrame = {
     val k = 8
-    // fanned out (round 15): the per-char winnowing pass is the whole
+    // fanned out: the per-char winnowing pass is the whole
     // cost and ran serialized on the one-row-group scan — measured
     // 1.41 → 0.58 s at sf0.1
     Tables.fanOut(Tables.documents(spark, dir))
@@ -305,138 +303,6 @@ object TextOps {
         row_number().over(Window.orderBy(col("n").desc, col("pair"))).cast("long"))
       .select(col("rank"), col("pair"), col("n"), col("df"))
       .orderBy(col("rank"))
-  }
-
-  /** Iterative BPE tokenizer TRAINING — the loop whose single step
-    * q61 profiles (Sennrich et al. 2016). Returns the learned merge
-    * list in order: `(rank, left, right, pair_count)`.
-    *
-    * The scalable shape: the corpus is scanned ONCE into a (word,
-    * count) VOCABULARY table — after that, every merge round runs on
-    * the vocab relation, never the corpus, which is how BPE training
-    * stays tractable at 100 TB (the vocab is heavy-tailed and orders
-    * of magnitude smaller than the corpus; it still lives in a
-    * Dataset, so a billion-type vocabulary distributes fine). Each
-    * round is: weighted adjacent-pair count over the current
-    * segmentations (one vocab-sized shuffle, map-side partial) →
-    * argmax collected to the driver (count DESC, then (left, right)
-    * in CODE-POINT order — Spark's binary UTF-8 string ordering,
-    * which equals code-point order; note java.lang.String's UTF-16
-    * comparison differs for supplementary-plane symbols, so any
-    * driver-side reimplementation must compare code points — the
-    * deterministic tie-break both the spec's brute force and any
-    * re-run reproduce) → row-local merge rewrite
-    * of the segmentations (narrow, no shuffle). Lineage is truncated
-    * with localCheckpoint every few rounds, the [[graft.ops.LlmOps
-    * .connectedComponents]] pattern for driver-loop iteration.
-    *
-    * Symbols are CODE POINTS (surrogate-safe, matching `char_pairs` /
-    * q61 semantics); words are whitespace tokens (the project-wide
-    * tokenization rule). `minPairCount` stops training when the best
-    * pair drops below it (vocabulary saturated). */
-  def bpeTrain(spark: SparkSession, dir: String, nMerges: Int,
-               minPairCount: Long = 2L): Seq[(Int, String, String, Long)] = {
-    import spark.implicits._
-    val checkpointEvery = 8
-    // ONE corpus pass: whitespace words with frequencies, then each
-    // word as its code-point symbol sequence
-    var vocab = Tables.documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      .as[(String, Long)]
-      .map { case (w, c) =>
-        val cps = w.codePoints().toArray
-        (cps.indices.map(i => new String(cps, i, 1)), c)
-      }
-      .toDF("syms", "cnt")
-      .as[(Seq[String], Long)]
-      .localCheckpoint()
-    // each new checkpoint supersedes the previous one — free its
-    // blocks explicitly (the [[Caches.freeLocalCheckpoint]] rule:
-    // ~nMerges/8 vocab-sized block sets would otherwise pile up on
-    // the executors until driver GC)
-    var lastCkpt = vocab
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var rank = 0
-    var saturated = false
-    try {
-      while (rank < nMerges && !saturated) {
-        // weighted pair counts over the CURRENT segmentation; argmax
-        // with the pinned tie-break, one row to the driver
-        val best = vocab.flatMap { case (syms, c) =>
-          (0 until syms.length - 1).map(i => ((syms(i), syms(i + 1)), c))
-        }.groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-          .map { case ((l, r), n) => (l, r, n) }
-          .toDF("l", "r", "n")
-          .orderBy(col("n").desc, col("l"), col("r")).limit(1)
-          .as[(String, String, Long)].collect().headOption
-        best match {
-          case Some((l, r, n)) if n >= minPairCount =>
-            merges += ((rank, l, r, n))
-            val merged = l + r
-            // row-local merge: replace every (l, r) adjacency left-to-
-            // right (the standard greedy single-pass application)
-            vocab = vocab.map { case (syms, c) =>
-              (mergeOnce(syms, l, r, merged), c)
-            }
-            rank += 1
-            if (rank % checkpointEvery == 0) {
-              vocab = vocab.localCheckpoint() // eager: materializes from lastCkpt's blocks
-              Caches.freeLocalCheckpoint(lastCkpt)
-              lastCkpt = vocab
-            }
-          case _ => saturated = true
-        }
-      }
-    } finally {
-      // the merge list is driver-side — the current checkpoint's
-      // blocks have no further reader, on success OR a thrown round
-      Caches.freeLocalCheckpoint(lastCkpt)
-    }
-    merges.result()
-  }
-
-  /** One left-to-right greedy merge pass: every (l, r) adjacency in
-    * `syms` becomes `merged`. Shared by training and encoding so the
-    * two sides cannot drift. */
-  private def mergeOnce(syms: Seq[String], l: String, r: String,
-                        merged: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-        out += merged; i += 2
-      } else { out += syms(i); i += 1 }
-    }
-    out.result()
-  }
-
-  /** BPE ENCODING — apply a [[bpeTrain]] merge list to the corpus:
-    * (doc_id, tokens array<string>, n_tokens). Entirely row-local
-    * (the merge table broadcasts as a closure constant; each word
-    * re-applies the merges in RANK ORDER, the rule that makes
-    * encoding deterministic and training-consistent), so the encode
-    * pass rides the scan at any corpus size — the same
-    * zero-shuffle shape as the other per-row text kernels. */
-  def bpeEncode(spark: SparkSession, dir: String,
-                merges: Seq[(Int, String, String, Long)]): DataFrame = {
-    import spark.implicits._
-    val ranked = merges.sortBy(_._1).map { case (_, l, r, _) => (l, r) }
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .as[(Long, Seq[String])]
-      .map { case (id, words) =>
-        val tokens = words.filter(_.nonEmpty).flatMap { w =>
-          val cps = w.codePoints().toArray
-          var syms: Seq[String] = cps.indices.map(i => new String(cps, i, 1))
-          ranked.foreach { case (l, r) => syms = mergeOnce(syms, l, r, l + r) }
-          syms
-        }
-        (id, tokens, tokens.length.toLong)
-      }
-      .toDF("doc_id", "tokens", "n_tokens")
-      .orderBy(col("doc_id"))
   }
 
   /** Add-k-smoothed bigram language model over a `documents`-shaped

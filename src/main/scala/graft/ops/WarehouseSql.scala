@@ -96,7 +96,7 @@ object WarehouseSql {
     * `DECIMAL(` (same precision/scale text). String literals,
     * double-quoted identifiers and comments pass through byte-for-byte
     * — a literal containing `KIMBALL.F(x)` or a commented-out
-    * `NUMBER(38,0)` is data, not call grammar (ADVICE r5). */
+    * `NUMBER(38,0)` is data, not call grammar. */
   def rewriteCalls(sql: String): String = {
     def rewriteCode(s: String): String = {
       // quoteReplacement: '$' is legal in the identifier class and must

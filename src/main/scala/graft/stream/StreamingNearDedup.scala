@@ -105,7 +105,7 @@ object StreamingNearDedup {
     * mid-scan on, and a new version becomes visible atomically when
     * its marker lands — a half-written rebuild (no marker yet) is
     * invisible. This is the vanilla-parquet answer to the
-    * rebuild/scan race (ADVICE r5): an in-place `overwrite` of a
+    * rebuild/scan race: an in-place `overwrite` of a
     * plain dir can fail a concurrent batch with missing part files or
     * feed it a partial index.
     *

@@ -12,7 +12,7 @@ case class MediaEvent(ts: java.sql.Timestamp, media_id: Long,
 
 /** Streaming PIXEL-level near-deduplication — the firehose twin of
   * [[graft.ops.Multimodal.phashNearDup]], completing the stateful-shape
-  * family (VERDICT r14 #4): a multimodal training-data intake must
+  * family: a multimodal training-data intake must
   * reject re-encodes/brightness-shifts of images already in the corpus
   * at ingest time, exactly like [[StreamingNearDedup]] does for text.
   *

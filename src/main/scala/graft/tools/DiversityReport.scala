@@ -33,8 +33,7 @@ import graft.BenchFormat.num
 object DiversityReport {
 
   /** ONE definition of the driver-side label map ([[report]] and
-    * [[coverageVsR]] both read it — review r12: the two copies
-    * invited drift). */
+    * [[coverageVsR]] both read it; two copies would drift). */
   private def labelsOf(spark: SparkSession, dir: String): Map[Long, Long] =
     graft.ops.Tables.embeddings(spark, dir)
       .select("vec_id", "label").collect()
@@ -79,7 +78,7 @@ object DiversityReport {
       f""""plain_min_spread":$ps%.3g,"mmr_min_spread":$ms%.3g}"""
   }
 
-  /** Coverage-vs-r sweep (VERDICT r11 #7): q92 documents "raise r when
+  /** Coverage-vs-r sweep: q92 documents "raise r when
     * the corpus is duplicate-heavy" as the coverage dial — this
     * measures it: MMR cluster coverage of the top-5 at candidate
     * budgets r ∈ `rs`, same probe set and serve per point, so the
@@ -102,7 +101,7 @@ object DiversityReport {
       .mkString(s"""{"dir":${graft.BenchFormat.jstr(dir)},"mmr_coverage_vs_r":{""", ",", "}}")
   }
 
-  /** Triplet yield-vs-margin table (VERDICT r11 #7): q96 documents the
+  /** Triplet yield-vs-margin table: q96 documents the
     * margin as the band dial — this measures it on a real geometry:
     * per margin, the mined triplet count and how many anchors (of the
     * probe set) yield at least one triplet. Yield is MONOTONE

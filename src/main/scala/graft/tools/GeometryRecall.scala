@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Recall-vs-geometry report for the whole ANN family (VERDICT r10
-  * #3's second half): run every approximate top-k the surface serves
+/** Recall-vs-geometry report for the whole ANN family: run every
+  * approximate top-k the surface serves
   * — LSH (q27), IVF (q31), PQ (q77/q80), IVFADC (q79), SQ8 (q81),
   * IVF+SQ8 (q82), ADC+refine (q83), refine at production sizing
   * (q98: kFor-K codebooks + rFor-r budget — the clustered-geometry

@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Recall-consequence reports for the two-level IVF routing (VERDICT
-  * r8 #6 / r9 #3): what the approximate router does to the DECISION
+/** Recall-consequence reports for the two-level IVF routing: what the
+  * approximate router does to the DECISION
   * surfaces a production owner acts on.
   *
   *  - assignment mode (default): run the semantic-dedup drop-list with
@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   *  - serve mode: run the q31-family serve with EXACT probing
   *    (`Embeddings.ivfTopKServe`) and with two-level-routed probing
   *    (`Embeddings.ivfTopKServeRouted`) and report per-probe top-k
-  *    agreement — the flip-the-switch number for routed SERVING
-  *    (VERDICT r9 #3's recall row).
+  *    agreement — the flip-the-switch number for routed SERVING.
   *
   * Both reports aggregate through JOINS (full-outer + counts), never
-  * a corpus-sized driver collect (VERDICT r9 #7) — the tool itself
+  * a corpus-sized driver collect — the tool itself
   * scales past diagnostic sizes.
   *
   * `runMain graft.tools.RecallReport <sfDir> [targetCell]` — assignment
@@ -76,7 +75,7 @@ object RecallReport {
     require(r.getLong(1) == 0L,
       "exact and two-level drop-lists cover different vec_id sets")
     val n = r.getLong(0)
-    // 0/0 would print NaN — invalid JSON (review r10); an empty corpus
+    // 0/0 would print NaN — invalid JSON; an empty corpus
     // is a broken input, not a degenerate report
     require(n > 0, s"no vectors under $dir — nothing to report on")
     val (dropE, dropT, inter, agree) = (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
@@ -117,7 +116,7 @@ object RecallReport {
       .collect()(0)
     graft.ops.Caches.releaseAll(spark)
     val (pairs, hit, rankAgree) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    // 0/0 would print NaN — invalid JSON (review r10): an empty exact
+    // 0/0 would print NaN — invalid JSON: an empty exact
     // top-k means the probe set itself is empty, a broken input
     require(pairs > 0, s"exact serve returned no pairs under $dir — no probes survive the cap")
     import graft.BenchFormat.num

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-decade generator for EMPIRICAL scaling runs (VERDICT r6 #1):
+/** Scale-decade generator for EMPIRICAL scaling runs:
   * `runMain graft.tools.ScaleUp <srcSfDir> <dstDir> <factor>` writes a
   * `factor`×-sized federation of the source tables, so the bench can
   * measure per-query time at 10× and catch any accidentally

@@ -270,10 +270,10 @@ class CorpusIOSpec extends SparkSpec {
       "unscanned/elsewhere.sql"))
   }
 
-  test("transitive artifact mode: 3-deep chain closes fully, one-hop default untouched") {
+  test("scanAndSave on a 3-deep chain: one-hop only, deep_base gets no files") {
     // deep_base ← deep_middle ← deep_top ← view: one-hop gives
     // deep_base NO files (its only caller, deep_middle, has none of
-    // its own), the closure carries the view down all three hops
+    // its own); the reference never closes the chain transitively
     val root = Files.createTempDirectory("corpus-deep")
     write(root, "deployer/patch/DWH/kimball/r_2.1_f_deep_base.sql",
       "CREATE OR REPLACE FUNCTION KIMBALL.DEEP_BASE(x VARCHAR) AS 1;")
@@ -284,13 +284,10 @@ class CorpusIOSpec extends SparkSpec {
     write(root, "superset_objects/datasets/view_deep.sql",
       "SELECT KIMBALL.deep_top(c) FROM t;")
 
-    val defaultOut = Files.createTempDirectory("deps-deep-default").toString
-    CorpusIO.scanAndSave(spark, root.toString, defaultOut)
-    assert(!Files.exists(Paths.get(s"$defaultOut/flattened_dependencies_transitive.json")),
-      "default mode must not write the transitive artifact")
-
     val out = Files.createTempDirectory("deps-deep").toString
-    CorpusIO.scanAndSave(spark, root.toString, out, transitive = true)
+    CorpusIO.scanAndSave(spark, root.toString, out)
+    val written = Files.list(Paths.get(out)).toArray.map(_.toString.split('/').last).toSet
+    assert(written == Set("raw_dependencies.json", "flattened_dependencies.json"))
     val viewFiles =
       """[
         |        "superset_objects/datasets/view_deep.sql"
@@ -307,13 +304,7 @@ class CorpusIOSpec extends SparkSpec {
       entry("deep_base", "1", "[]"),
       entry("deep_middle", "2", viewFiles),
       entry("deep_top", "3", viewFiles)).mkString("{\n", ",\n", "\n}")
-    val transitiveGolden = Seq(
-      entry("deep_base", "1", viewFiles),
-      entry("deep_middle", "2", viewFiles),
-      entry("deep_top", "3", viewFiles)).mkString("{\n", ",\n", "\n}")
     assert(Files.readString(Paths.get(s"$out/flattened_dependencies.json")) == oneHopGolden)
-    assert(Files.readString(
-      Paths.get(s"$out/flattened_dependencies_transitive.json")) == transitiveGolden)
   }
 
   test("readFlattenedJson round-trips the K1 artifact (S4)") {

@@ -73,9 +73,6 @@ class DepGraphSpec extends SparkSpec {
     assert(flat("c") === Seq("replicator/source/view.sql"))
     assert(flat("b") === Seq("replicator/source/view.sql")) // one hop via c
     assert(flat("a") === Seq())                             // two hops away: NOT reached
-    // extension mode: full transitive closure reaches a
-    val trans = flatMapOf(DepGraph.transitiveDependencies(DepGraph.rawDependencies(c)))
-    assert(trans("a") === Seq("replicator/source/view.sql"))
   }
 
   test("scanner quirks: digits rejected in names, mixed case resolves, self-def skipped") {
@@ -101,128 +98,6 @@ class DepGraphSpec extends SparkSpec {
     val raw = rawMap(DepGraph.rawDependencies(c))
     assert(!raw.contains("foo"))
     assert(raw("tri")._1 === Seq("replicator/source/v.sql"))
-  }
-
-  test("transitiveDependencies throws instead of returning a truncated closure") {
-    val c = corpus(
-      "deployer/patch/DWH/kimball/r_1.1_f_a.sql" -> "def a",
-      "deployer/patch/DWH/kimball/r_1.2_f_b.sql" -> "SELECT KIMBALL.a(1);",
-      "deployer/patch/DWH/kimball/r_1.3_f_c.sql" -> "SELECT KIMBALL.b(1);",
-      "replicator/source/view.sql" -> "SELECT KIMBALL.c(1);")
-    val raw = DepGraph.rawDependencies(c)
-    intercept[IllegalStateException] {
-      DepGraph.transitiveDependencies(raw, maxIters = 1)
-    }
-  }
-
-  test("transitive fixpoint at federation depth: 1k-chain + fan-out converges in log rounds, O(1) plan") {
-    // VERDICT r9 #8: the flagged transitive mode was golden-tested on
-    // a 3-deep chain only. This certifies the fixpoint's SHAPE at
-    // depth/width: a 1,000-deep chain (f0 ← f1 ← … ← f999, each f(i+1)
-    // directly using f(i)) plus a 200-leaf fan-out on the chain head —
-    // the convergence must be PATH-DOUBLING (≈ ⌈log₂ 1000⌉ + 2 rounds,
-    // not 1000), the localCheckpoint hygiene must keep the final plan
-    // O(1)-deep, and the closure must be exactly right at both ends.
-    val s = spark
-    import s.implicits._
-    val depth = 1000
-    val fanout = 200
-    def fn(i: Int) = f"f$i%04d"
-    def file(i: Int) = f"dir/own_$i%04d.sql"
-    // chain rows: f(i) is used by f(i+1); fan-out rows: leaf L uses f0
-    val chain = (0 until depth).map { i =>
-      (fn(i), f"def_$i%04d.sql", Seq(file(i)),
-        if (i + 1 < depth) Seq(fn(i + 1)) else Seq.empty[String])
-    }
-    val leaves = (0 until fanout).map { l =>
-      (f"leaf$l%03d", f"leafdef_$l%03d.sql", Seq(f"dir/leaf_$l%03d.sql"), Seq.empty[String])
-    }
-    // f0 is used by every leaf → files(f0) absorbs every leaf file too
-    val raw = (chain.updated(0, (fn(0), chain.head._2, chain.head._3,
-        chain.head._4 ++ leaves.map(_._1))) ++ leaves)
-      .toDF("function", "path", "used_in_files", "used_in_functions")
-    val (result, rounds) = DepGraph.transitiveDependenciesWithRounds(raw, maxIters = 50)
-    // log-round convergence: doubling coverage needs ⌈log₂ depth⌉ + a
-    // no-change confirmation round — LINEAR propagation would need
-    // ~1000 rounds and fail this hard
-    assert(rounds <= 14, s"fixpoint took $rounds rounds — propagation is not path-doubling")
-    val got = result.collect()
-      .map(r => r.getString(0) -> r.getSeq[String](2)).toMap
-    // chain head: own file + every downstream chain file + every leaf file
-    val wantHead = ((0 until depth).map(file) ++
-      (0 until fanout).map(l => f"dir/leaf_$l%03d.sql")).sorted
-    assert(got(fn(0)) == wantHead)
-    // chain tail: nothing uses f999's files beyond itself
-    assert(got(fn(depth - 1)) == Seq(file(depth - 1)))
-    // middle: exactly its suffix of the chain (no leaf contamination)
-    assert(got(fn(500)) == (500 until depth).map(file).sorted)
-    // bounded storage: lineage truncation held — the returned plan is
-    // one fixed-size assembly over a CHECKPOINTED closure (depth-
-    // independent), not ~11 nested self-join rounds; and the carried
-    // Catalyst stats stayed sane (the pre-fix linear form hung the
-    // driver in BigInt sizeInBytes multiplication at depth ~25)
-    val planLines = result.queryExecution.logical.treeString.linesIterator.size
-    assert(planLines <= 30,
-      s"final plan is $planLines lines — localCheckpoint hygiene broke at depth")
-    assert(result.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength <= 512,
-      "carried sizeInBytes stats exploded — lineage truncation is not resetting them")
-    // and the non-convergence guard fires at depth when under-budgeted
-    intercept[IllegalStateException] {
-      DepGraph.transitiveDependencies(raw, maxIters = 5)
-    }
-  }
-
-  test("transitive closure pair budget: wide fan-out trips maxPairs with an actionable error") {
-    // VERDICT r10 #7: the round guard bounds DIAMETER, but the
-    // doubling trade's real cost is O(Σ reachable pairs) — a
-    // wide-fan-out bipartite-ish graph (every source reaching every
-    // sink through a 2-level funnel) reaches quadratic pair space in
-    // ~2 rounds while staying far inside any round budget. The budget
-    // must fail LOUD (a truncated closure is indistinguishable from a
-    // converged one), and the same input must pass under a budget
-    // that fits its true closure size.
-    val s = spark
-    import s.implicits._
-    val n = 60
-    // sources s_i -> hub -> sinks t_j: closure = n·(n+1) + (n+1)
-    // pairs (every source reaches hub + all sinks)
-    val raw = (
-      (0 until n).map(i => (f"src_$i%02d", f"fs_$i%02d.sql", Seq(f"own_s$i%02d.sql"), Seq("hub"))) ++
-      Seq(("hub", "fhub.sql", Seq("own_hub.sql"), (0 until n).map(j => f"snk_$j%02d"))) ++
-      (0 until n).map(j => (f"snk_$j%02d", f"ft_$j%02d.sql", Seq(f"own_t$j%02d.sql"), Seq.empty[String]))
-    ).toDF("function", "path", "used_in_files", "used_in_functions")
-    val ex = intercept[IllegalStateException] {
-      DepGraph.transitiveDependencies(raw, maxPairs = 500)
-    }
-    assert(ex.getMessage.contains("pairs") && ex.getMessage.contains("maxPairs"),
-      s"pair-budget error must be actionable, got: ${ex.getMessage}")
-    // generous budget: converges and the head really reaches all sinks
-    val got = DepGraph.transitiveDependencies(raw, maxPairs = 100000).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](2)).toMap
-    assert(got("src_00") == (Seq("own_s00.sql", "own_hub.sql") ++
-      (0 until n).map(j => f"own_t$j%02d.sql")).sorted)
-  }
-
-  test("transitive closure survives duplicate edges in caller-supplied raw input") {
-    // review r10 finding: the convergence probe compares ROW COUNTS,
-    // so duplicate (function, user) edges in a caller-built raw DF
-    // could start the count inflated and fake a first-round fixpoint
-    // (3 dup edges + 2 chain edges = 5 rows; the true round-1 closure
-    // also has 5 DISTINCT rows). The seed distinct() makes the counts
-    // compare like-for-like — the closure must still reach a→d.
-    val s = spark
-    import s.implicits._
-    val raw = Seq(
-      ("a", "fa.sql", Seq("own_a.sql"), Seq("b", "b", "b")), // duplicated edge a→b
-      ("b", "fb.sql", Seq("own_b.sql"), Seq("c")),
-      ("c", "fc.sql", Seq("own_c.sql"), Seq("d")),
-      ("d", "fd.sql", Seq("own_d.sql"), Seq.empty[String])
-    ).toDF("function", "path", "used_in_files", "used_in_functions")
-    val got = DepGraph.transitiveDependencies(raw).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](2)).toMap
-    assert(got("a") == Seq("own_a.sql", "own_b.sql", "own_c.sql", "own_d.sql"),
-      s"closure truncated: ${got("a")}")
-    assert(got("d") == Seq("own_d.sql"))
   }
 
   test("corpus outside the four search dirs is not scanned") {

@@ -121,19 +121,182 @@ class DriverContractSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("session builder outside GraftSession:\n", "\n", ""))
   }
 
-  /** `file:line: text` of every `src/main/scala` line matching
-    * `pattern`, skipping the `allowed` files (paths relative to the
-    * tree, which must contain them all). */
-  private def mainSourceHits(pattern: scala.util.matching.Regex, allowed: Set[String]): List[String] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = java.nio.file.Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).map(p => root.relativize(p).toString -> p).toList
-    assert(allowed.subsetOf(files.map(_._1).toSet), s"scanned the wrong tree: $root")
-    files.filterNot(f => allowed(f._1)).flatMap { case (rel, p) =>
-      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+  /** `file:line: text` of every `src/main/scala` line of `view(source)`
+    * matching `pattern`, skipping the `allowed` files (paths relative
+    * to the tree, which must contain them all). */
+  private def mainSourceHits(pattern: scala.util.matching.Regex, allowed: Set[String],
+                             view: String => String = identity): List[String] = {
+    val files = sources(Seq("src/main/scala")).map { case (p, src) => p.stripPrefix("src/main/scala/") -> src }
+    assert(allowed.subsetOf(files.map(_._1).toSet), "scanned the wrong tree: src/main/scala")
+    files.filterNot(f => allowed(f._1)).flatMap { case (rel, src) =>
+      view(src).linesIterator.zipWithIndex.collect {
         case (line, i) if pattern.findFirstIn(line).isDefined => s"$rel:${i + 1}: ${line.trim}"
       }
+    }
+  }
+
+  test("no round or review citations in src/main comments") {
+    // a comment gives the reason for the code as it stands; which
+    // round or review asked for it is history, kept in git and
+    // CHANGES.md
+    val cite = """\b[Rr]ound[- ]?\d+\b|\br\d{1,2}\b|\bVERDICT\b|\bADVICE\b""".r
+    val offenders = mainSourceHits(cite, Set.empty, split(_).comments)
+    assert(offenders.isEmpty, offenders.mkString("history citation in a comment:\n", "\n", ""))
+  }
+
+  /** Public `src/main` names with no use outside `src/test`, kept on
+    * purpose: each names the README serving-kernel row it loads or
+    * serves, the production path it is the reference for, or the
+    * paper entry point it implements. */
+  private val SpecsOnlyKeep: Map[String, String] = Map(
+    "scanAndSave" -> "paper entry point: E1 dependency scan writing the raw and flattened artifacts",
+    "generateFacilitators" -> "paper entry point: E2 CODEFACILITATORS generation",
+    "substituteTemplates" -> "paper entry point: F12 deploy-time ${VAR} substitution on corpus text",
+    "prepare" -> "paper entry point: runs the reference's warehouse SQL fragments (WarehouseSqlSpec)",
+    "globToRegex" -> "reference for Owners.globToRegexCol, the glob dialect the owners join runs (GlobProperties)",
+    "stageGate" -> "reference for ReviewStateMachine's driver gate (ReviewDriverGateProperties)",
+    "stagedLabelOps" -> "reference for ReviewStateMachine's label deltas (ReviewDriverGateProperties)",
+    "reviewerRequests" -> "reference for ReviewStateMachine's reviewer requests (ReviewDriverGateProperties)",
+    "lshBuckets" -> "reference for the q27/q29 LSH bucket key that planesFor sizes (EmbeddingsSpec)",
+    "assignCells" -> "reference for q68's exact and q76's two-level cell assignment (EmbeddingsSpec)",
+    "serveQueryBatch" -> "README serving kernel: ANN (q31)",
+    "bm25Publish" -> "README serving kernel: BM25 (q71), publishes what bm25Resolve loads",
+    "bm25Resolve" -> "README serving kernel: BM25 (q71) loader",
+    "dsirSave" -> "README serving kernel: DSIR (q73), writes what dsirLoad reads",
+    "dsirLoad" -> "README serving kernel: DSIR (q73) loader",
+    "dsirLogWeights" -> "README serving kernel: DSIR (q73)",
+    "lmSave" -> "README serving kernel: LM perplexity (q72), writes what lmLoad reads",
+    "lmLoad" -> "README serving kernel: LM perplexity (q72) loader",
+    "saveCodebooks" -> "README serving kernel: PQ ADC (q77), writes what loadCodebooks reads",
+    "loadCodebooks" -> "README serving kernel: PQ ADC (q77) loader",
+    "buildCodes" -> "README serving kernel: PQ ADC (q77) loader",
+    "trainIvfPq" -> "README serving kernel: IVFADC (q79), trains the quantizer and codebooks it loads",
+    "ivfPqCodes" -> "README serving kernel: IVFADC (q79) loader",
+    "buildRefineTiers" -> "README serving kernel: refine (q85) loader",
+    "hybridServe" -> "README serving kernel: hybrid (q88)",
+    "mmrServe" -> "README serving kernel: MMR (q92)",
+    "trainFrozenIvfSq8" -> "README serving kernel: vector ingest (q87), trains the frozen quantizer and bounds",
+    "ivfSq8EncodeBatch" -> "README serving kernel: vector ingest (q87)",
+    "compactSnapshot" -> "README serving kernel: vector ingest (q87), compacts its upsertSnapshot sink",
+    "publishArtifactSuperseding" -> "README serving kernel: artifact retrains that the serving loaders resolve",
+    "nearDupMatchesRefreshing" -> "README serving kernel: near-dup intake",
+    "simhashIndex" -> "README streaming entry point: StreamingNearDedup.simhashIndex",
+    "nearDupMatches" -> "README streaming entry points: the StreamingNearDedup and StreamingPhashDedup matchers",
+    "phashIndex" -> "README streaming entry point: StreamingPhashDedup.phashIndex",
+    "phashNearDup" -> "README streaming entry point: batch twin of StreamingPhashDedup.phashIndex",
+    "ingestStream" -> "README streaming entry point: StreamingIngest.ingestStream",
+    "redactPii" -> "README streaming entry point: batch form of StreamingIngest.ingestStream's redaction",
+    "clickViewConversions" -> "README streaming entry point: IntervalJoin.clickViewConversions",
+    "windowedTypeCounts" -> "README streaming entry point: EventWindows.windowedTypeCounts",
+    "sessionStatsStreaming" -> "README streaming entry point: EventWindows.sessionStatsStreaming")
+
+  test("every public src/main name has a use outside src/test, or a reasoned keep-list entry") {
+    // code in src/main and perfbench/src counts as a use; comments do
+    // not. A name only specs reach is code kept alive by its own tests.
+    val scanned = sources(Seq("src/main/scala", "perfbench/src")).map { case (rel, src) => rel -> split(src) }
+    val uses = scanned.flatMap(s => Ident.findAllIn(s._2.code)).groupMapReduce(identity)(_ => 1)(_ + _)
+    val defs = scanned.flatMap(s => s._2.skeleton.linesIterator.flatMap(DefRe.findPrefixMatchOf(_)).map(_.group(3)))
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val publicNames = scanned.filter(_._1.startsWith("src/main")).flatMap { case (rel, s) =>
+      members(s.skeleton).collect { case (line, mods, name)
+          if !mods.contains("private") && !mods.contains("protected") && !mods.contains("override") &&
+            !Set("apply", "unapply", "main")(name) => (rel, line, name) }
+    }
+    val unused = publicNames.filter { case (_, _, n) => uses.getOrElse(n, 0) <= defs.getOrElse(n, 0) }
+    val offenders = unused.filterNot(u => SpecsOnlyKeep.contains(u._3))
+    assert(offenders.isEmpty, offenders.map { case (rel, line, n) => s"$rel:$line: $n" }
+      .mkString("public names only specs reach (delete, or keep-list with a reason):\n", "\n", ""))
+    val stale = SpecsOnlyKeep.keySet -- unused.map(_._3)
+    assert(stale.isEmpty, s"stale keep-list entries (now used, or gone): ${stale.toSeq.sorted}")
+  }
+
+  private val Ident = """[A-Za-z_][A-Za-z0-9_]*""".r
+  private val DefRe = ("""^\s*((?:(?:override|final|implicit|lazy|sealed|abstract|case|""" +
+    """private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)(def|val|var)\s+([A-Za-z_][A-Za-z0-9_]*)""").r
+  private val TemplateHead = """\b(object|class|trait)\b[^=]*$""".r
+
+  /** (line, modifiers, name) of every `def`/`val`/`var` whose innermost
+    * enclosing brace block is an object, class or trait body, in a
+    * [[Scanned.skeleton]]. */
+  private def members(skeleton: String): Seq[(Int, String, String)] = {
+    var stack = List.empty[Boolean]
+    val head = new StringBuilder
+    skeleton.linesIterator.zipWithIndex.toList.flatMap { case (text, i) =>
+      val found = if (stack.headOption.contains(true))
+        DefRe.findPrefixMatchOf(text).map(m => (i + 1, m.group(1), m.group(3))).toList
+      else Nil
+      text.foreach {
+        case '{' =>
+          val h = head.toString
+          stack = (TemplateHead.findFirstIn(h).isDefined && !h.contains("new ")) :: stack
+          head.clear()
+        case '}' => stack = stack.drop(1); head.clear()
+        case c => head.append(c)
+      }
+      head.append(' ')
+      found
+    }
+  }
+
+  /** Scala source split three ways, each keeping every newline so line
+    * numbers agree: `code` without comments, `comments` alone, and
+    * `skeleton`, the code with string and char literal contents
+    * blanked (so its braces are the real ones). */
+  private case class Scanned(code: String, comments: String, skeleton: String)
+
+  private def split(src: String): Scanned = {
+    val code, comments, skeleton = new StringBuilder
+    val n = src.length
+    var i = 0
+    def newlines(s: String) = "\n" * s.count(_ == '\n')
+    def take(j: Int, kind: Char): Unit = {
+      val s = src.substring(i, j)
+      kind match {
+        case 'c' => code.append(s); comments.append(newlines(s)); skeleton.append(s)
+        case 'l' => code.append(s); comments.append(newlines(s)); skeleton.append(s.map(c => if (c == '\n') c else ' '))
+        case _ => comments.append(s); code.append(newlines(s)); skeleton.append(newlines(s))
+      }
+      i = j
+    }
+    while (i < n) {
+      if (src.startsWith("\"\"\"", i)) {
+        var j = src.indexOf("\"\"\"", i + 3)
+        j = if (j < 0) n else j + 3
+        while (j < n && src.charAt(j) == '"') j += 1
+        take(j, 'l')
+      } else if (src.charAt(i) == '"') {
+        var j = i + 1
+        while (j < n && src.charAt(j) != '"' && src.charAt(j) != '\n') j += (if (src.charAt(j) == '\\') 2 else 1)
+        take(math.min(n, j + 1), 'l')
+      } else if (src.startsWith("//", i)) {
+        val e = src.indexOf('\n', i)
+        take(if (e < 0) n else e, '/')
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (j < n && depth > 0) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        take(math.min(n, j), '/')
+      } else if (src.charAt(i) == '\'' && i + 2 < n && src.charAt(i + 2) == '\'') {
+        take(i + 3, 'l')
+      } else if (src.charAt(i) == '\'' && i + 3 < n && src.charAt(i + 1) == '\\' && src.charAt(i + 3) == '\'') {
+        take(i + 4, 'l')
+      } else take(i + 1, 'c')
+    }
+    Scanned(code.toString, comments.toString, skeleton.toString)
+  }
+
+  /** (path relative to the repo, text) of every `.scala` file under `roots`. */
+  private def sources(roots: Seq[String]): List[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    roots.toList.flatMap { r =>
+      val root = java.nio.file.Paths.get(r)
+      assert(java.nio.file.Files.isDirectory(root), s"missing source tree: $root")
+      java.nio.file.Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sorted
+        .map(p => p.toString -> java.nio.file.Files.readString(p))
     }
   }
 

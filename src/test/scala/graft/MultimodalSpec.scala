@@ -3,389 +3,11 @@ package graft
 import graft.ops.{MediaRecord, Multimodal}
 import org.apache.spark.sql.functions._
 
-/** Multimodal plumbing: binary payload schema, batch-shaped decode
-  * (results independent of batch/partition boundaries), deterministic
-  * stub features, frame-sampling shape. */
+/** Multimodal operators: pixel-level perceptual hashes and their banded
+  * near-dup pairs, and the q28 metadata projection's hash-derived
+  * dimensions. */
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
-
-  private val records = Seq(
-    MediaRecord(0L, "image", "a tiny image payload".getBytes("UTF-8")),
-    MediaRecord(1L, "audio", "pcm-ish bytes here".getBytes("UTF-8")),
-    MediaRecord(2L, "video", ("frame" * 20).getBytes("UTF-8")),
-    MediaRecord(3L, "video", ("other-video-bytes" * 3).getBytes("UTF-8")))
-
-  test("extractFeatures: deterministic, batch-size invariant, kind-aware frames") {
-    val ds = records.toDS()
-    val a = Multimodal.extractFeatures(ds, batchSize = 1).collect().sortBy(_.media_id)
-    val b = Multimodal.extractFeatures(ds.repartition(3), batchSize = 64)
-      .collect().sortBy(_.media_id)
-    assert(a.length == 4)
-    // identical regardless of batching/partitioning
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.media_id == y.media_id && x.width == y.width &&
-        x.height == y.height && x.n_frames == y.n_frames &&
-        x.feature.toSeq == y.feature.toSeq)
-    }
-    val byId = a.map(f => f.media_id -> f).toMap
-    assert(byId(1L).n_frames == 0)                   // audio
-    assert(byId(0L).n_frames == 1)                   // image
-    assert(byId(2L).n_frames >= 1)                   // video
-    assert(a.forall(_.feature.length == 8))
-    assert(a.forall(f => f.feature.forall(v => v >= -1f && v <= 1f)))
-    assert(byId(0L).n_bytes == 20L)
-  }
-
-  /** Encode a solid-color image of the given size to real codec bytes. */
-  private def imageBytes(w: Int, h: Int, rgb: Int, format: String): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb)
-    val out = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, format, out), s"no $format writer")
-    out.toByteArray
-  }
-
-  test("ImageIODecoder decodes real PNG/BMP bytes: dimensions and features from pixels") {
-    val white = imageBytes(8, 6, 0xffffff, "png")
-    val black = imageBytes(5, 3, 0x000000, "bmp")
-    val ds = Seq(
-      MediaRecord(0L, "image", white),
-      MediaRecord(1L, "image", black),
-      MediaRecord(2L, "image", "not an image at all".getBytes("UTF-8")), // undecodable
-      MediaRecord(3L, "audio", "pcm-ish bytes".getBytes("UTF-8"))        // non-image kind
-    ).toDS()
-    val got = Multimodal.extractFeatures(ds, Multimodal.ImageIODecoder, batchSize = 2)
-      .collect().map(f => f.media_id -> f).toMap
-    // real raster dimensions, not hash-derived ones
-    assert(got(0L).width == 8 && got(0L).height == 6 && got(0L).n_frames == 1)
-    assert(got(1L).width == 5 && got(1L).height == 3)
-    // mean luminance per grid cell: white ≈ 1 (0.299+0.587+0.114 = 1±ulp), black = 0
-    assert(got(0L).feature.length == 8 && got(0L).feature.forall(v => (v - 1f).abs < 1e-3f))
-    assert(got(1L).feature.forall(_ == 0f))
-    // fallback paths reproduce the stub exactly
-    val stub = Multimodal.StubDecoder.decodeBatch(Seq(
-      MediaRecord(2L, "image", "not an image at all".getBytes("UTF-8")),
-      MediaRecord(3L, "audio", "pcm-ish bytes".getBytes("UTF-8"))))
-      .map(f => f.media_id -> f).toMap
-    Seq(2L, 3L).foreach { id =>
-      assert(got(id).width == stub(id).width && got(id).height == stub(id).height &&
-        got(id).feature.toSeq == stub(id).feature.toSeq)
-    }
-  }
-
-  /** Synthesize a real RIFF/WAVE payload: 16-bit signed PCM at
-    * `rate` Hz, `channels` channels, constant amplitude `amp`. */
-  private def wavBytes(rate: Float, channels: Int, nFrames: Int, amp: Short): Array[Byte] = {
-    import javax.sound.sampled._
-    val fmt = new AudioFormat(rate, 16, channels, true, false)
-    val pcm = new Array[Byte](nFrames * channels * 2)
-    var i = 0
-    while (i < pcm.length / 2) {
-      pcm(2 * i) = (amp & 0xff).toByte
-      pcm(2 * i + 1) = ((amp >> 8) & 0xff).toByte
-      i += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(
-      new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt, nFrames.toLong),
-      AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
-  }
-
-  test("AudioDecoder decodes real WAV bytes: header metadata and PCM RMS features") {
-    val loud = wavBytes(8000f, 1, 400, 16384)  // half full-scale
-    val quiet = wavBytes(44100f, 2, 100, 0)    // silence, stereo
-    val ds = Seq(
-      MediaRecord(0L, "audio", loud),
-      MediaRecord(1L, "audio", quiet),
-      MediaRecord(2L, "audio", "not audio".getBytes("UTF-8")), // undecodable
-      MediaRecord(3L, "image", loud)                           // non-audio kind
-    ).toDS()
-    val got = Multimodal.extractFeatures(ds, Multimodal.AudioDecoder, batchSize = 2)
-      .collect().map(f => f.media_id -> f).toMap
-    // real header values: width = sample rate, height = channels,
-    // n_frames = audio frame count
-    assert(got(0L).width == 8000 && got(0L).height == 1 && got(0L).n_frames == 400)
-    assert(got(1L).width == 44100 && got(1L).height == 2 && got(1L).n_frames == 100)
-    // RMS from the actual samples: constant half-scale ≈ 0.5, silence = 0
-    assert(got(0L).feature.length == 8 && got(0L).feature.forall(v => (v - 0.5f).abs < 0.01f))
-    assert(got(1L).feature.forall(_ == 0f))
-    // fallback paths reproduce the stub exactly
-    val stub = Multimodal.StubDecoder.decodeBatch(Seq(
-      MediaRecord(2L, "audio", "not audio".getBytes("UTF-8")),
-      MediaRecord(3L, "image", loud))).map(f => f.media_id -> f).toMap
-    Seq(2L, 3L).foreach { id =>
-      assert(got(id).width == stub(id).width && got(id).height == stub(id).height &&
-        got(id).feature.toSeq == stub(id).feature.toSeq)
-    }
-    // the composite routes every kind to its real decoder
-    val viaJdk = Multimodal.JdkDecoder.decodeBatch(Seq(
-      MediaRecord(0L, "audio", loud),
-      MediaRecord(4L, "image", imageBytes(4, 4, 0xffffff, "png")),
-      MediaRecord(5L, "video", loud)))
-    assert(viaJdk(0).width == 8000 && viaJdk(1).width == 4)
-    val stubVideo = Multimodal.StubDecoder.decodeBatch(
-      Seq(MediaRecord(5L, "video", loud))).head
-    assert(viaJdk(2).width == stubVideo.width && viaJdk(2).height == stubVideo.height &&
-      viaJdk(2).n_frames == stubVideo.n_frames &&
-      viaJdk(2).feature.toSeq == stubVideo.feature.toSeq)
-  }
-
-  // --- minimal RIFF/AVI writer for the MJPEG video fixture ---
-  private def le32(v: Int): Array[Byte] =
-    Array((v & 255).toByte, ((v >> 8) & 255).toByte,
-      ((v >> 16) & 255).toByte, ((v >>> 24) & 255).toByte)
-  private def riffChunk(id: String, data: Array[Byte]): Array[Byte] =
-    id.getBytes("US-ASCII") ++ le32(data.length) ++ data ++
-      (if (data.length % 2 == 1) Array(0.toByte) else Array.empty[Byte])
-  private def riffList(typ: String, children: Array[Byte]): Array[Byte] =
-    riffChunk("LIST", typ.getBytes("US-ASCII") ++ children)
-
-  /** A standard minimal MJPEG AVI: avih main header (width/height/
-    * totalFrames) + movi LIST of '00dc' JPEG frame chunks. */
-  private def aviBytes(frames: Seq[Array[Byte]], w: Int, h: Int,
-                       totalFrames: Int): Array[Byte] = {
-    val avih = new Array[Byte](56)
-    System.arraycopy(le32(totalFrames), 0, avih, 16, 4)
-    System.arraycopy(le32(1), 0, avih, 24, 4) // dwStreams
-    System.arraycopy(le32(w), 0, avih, 32, 4)
-    System.arraycopy(le32(h), 0, avih, 36, 4)
-    val hdrl = riffList("hdrl", riffChunk("avih", avih))
-    val movi = riffList("movi", frames.flatMap(f => riffChunk("00dc", f)).toArray)
-    val payload = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
-    "RIFF".getBytes("US-ASCII") ++ le32(payload.length) ++ payload
-  }
-
-  test("VideoDecoder decodes real MJPEG/AVI bytes: header metadata and frame features") {
-    val white = imageBytes(8, 6, 0xffffff, "jpg")
-    val black = imageBytes(8, 6, 0x000000, "jpg")
-    // header declares 320x240 — decoded values must come from the
-    // container header, not the frame raster (proves the parse)
-    val avi = aviBytes(Seq(white, black, white), 320, 240, 3)
-    // valid container whose frames ImageIO can't decode (h264 stand-in)
-    val aviBadFrames = aviBytes(Seq("not-jpeg-payload".getBytes("US-ASCII")), 64, 48, 99)
-    val ds = Seq(
-      MediaRecord(0L, "video", avi),
-      MediaRecord(1L, "video", aviBadFrames),
-      MediaRecord(2L, "video", "not a riff container".getBytes("UTF-8")), // unparseable
-      MediaRecord(3L, "image", avi)                                        // non-video kind
-    ).toDS()
-    val got = Multimodal.extractFeatures(ds, Multimodal.VideoDecoder, batchSize = 2)
-      .collect().map(f => f.media_id -> f).toMap
-    assert(got(0L).width == 320 && got(0L).height == 240 && got(0L).n_frames == 3)
-    // temporal mean of real per-frame luminance grids: (1 + 0 + 1)/3
-    assert(got(0L).feature.length == 8 &&
-      got(0L).feature.forall(v => (v - 2f / 3f).abs < 0.05f))
-    // parseable header, undecodable frames: real metadata, zero features
-    assert(got(1L).width == 64 && got(1L).height == 48 && got(1L).n_frames == 99)
-    assert(got(1L).feature.forall(_ == 0f))
-    // fallback paths reproduce the stub exactly
-    val stub = Multimodal.StubDecoder.decodeBatch(Seq(
-      MediaRecord(2L, "video", "not a riff container".getBytes("UTF-8")),
-      MediaRecord(3L, "image", avi))).map(f => f.media_id -> f).toMap
-    Seq(2L, 3L).foreach { id =>
-      assert(got(id).width == stub(id).width && got(id).height == stub(id).height &&
-        got(id).feature.toSeq == stub(id).feature.toSeq)
-    }
-    // the composite now routes video to the real decoder
-    val viaJdk = Multimodal.JdkDecoder.decodeBatch(Seq(MediaRecord(0L, "video", avi))).head
-    assert(viaJdk.width == 320 && viaJdk.n_frames == 3)
-  }
-
-  // --- uncompressed 24-bit DIB AVI fixture (VERDICT r6 #5) ---
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 255).toByte, ((v >> 8) & 255).toByte)
-
-  /** Raw bottom-up BGR raster rows padded to 4 bytes — the exact
-    * layout a biCompression=0 strf declares. `rowColors(y)` is the
-    * TOP-DOWN color of row y, so the builder itself exercises the
-    * bottom-up inversion. */
-  private def dibFrame(w: Int, h: Int, rowColors: Int => Int): Array[Byte] = {
-    val stride = ((w * 3 + 3) / 4) * 4
-    val out = new Array[Byte](stride * h)
-    for (y <- 0 until h; x <- 0 until w) {
-      val c = rowColors(y)
-      val p = (h - 1 - y) * stride + x * 3
-      out(p) = (c & 255).toByte           // B
-      out(p + 1) = ((c >> 8) & 255).toByte  // G
-      out(p + 2) = ((c >> 16) & 255).toByte // R
-    }
-    out
-  }
-
-  /** Minimal uncompressed-DIB AVI: avih + strl(strh 'vids', strf
-    * BITMAPINFOHEADER with biBitCount=24, biCompression=0) + movi of
-    * '00db' raw rasters. `strfDims` lets the stream raster geometry
-    * differ from the avih display dims (and go negative = top-down),
-    * as real files do. */
-  private def dibAviBytes(frames: Seq[Array[Byte]], w: Int, h: Int,
-                          totalFrames: Int,
-                          strfDims: Option[(Int, Int)] = None): Array[Byte] = {
-    val (sw, sh) = strfDims.getOrElse((w, h))
-    val avih = new Array[Byte](56)
-    System.arraycopy(le32(totalFrames), 0, avih, 16, 4)
-    System.arraycopy(le32(1), 0, avih, 24, 4)
-    System.arraycopy(le32(w), 0, avih, 32, 4)
-    System.arraycopy(le32(h), 0, avih, 36, 4)
-    val strh = new Array[Byte](56)
-    System.arraycopy("vids".getBytes("US-ASCII"), 0, strh, 0, 4)
-    val strf = new Array[Byte](40)
-    System.arraycopy(le32(40), 0, strf, 0, 4) // biSize
-    System.arraycopy(le32(sw), 0, strf, 4, 4)
-    System.arraycopy(le32(sh), 0, strf, 8, 4)
-    System.arraycopy(le16(1), 0, strf, 12, 2)  // biPlanes
-    System.arraycopy(le16(24), 0, strf, 14, 2) // biBitCount
-    System.arraycopy(le32(0), 0, strf, 16, 4)  // biCompression = BI_RGB
-    val hdrl = riffList("hdrl", riffChunk("avih", avih) ++
-      riffList("strl", riffChunk("strh", strh) ++ riffChunk("strf", strf)))
-    val movi = riffList("movi", frames.flatMap(f => riffChunk("00db", f)).toArray)
-    val payload = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
-    "RIFF".getBytes("US-ASCII") ++ le32(payload.length) ++ payload
-  }
-
-  test("VideoDecoder decodes uncompressed DIB/AVI: real pixels, BGR and bottom-up order") {
-    val w = 8; val h = 6
-    // frame 1: top half white, bottom half black — if the decoder got
-    // the bottom-up inversion wrong the grid halves flip; frame 2:
-    // pure red — if it read RGB instead of BGR this scores 0.114
-    // (blue) instead of 0.299
-    val halves = dibFrame(w, h, y => if (y < h / 2) 0xffffff else 0x000000)
-    val red = dibFrame(w, h, _ => 0xff0000)
-    val avi = dibAviBytes(Seq(halves, red), w, h, 2)
-    val got = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(0L, "video", avi))).head
-    assert(got.width == w && got.height == h && got.n_frames == 2)
-    // temporal mean over both frames: top-half grid cells (1 + 0.299)/2,
-    // bottom-half cells (0 + 0.299)/2
-    val top = (1.0f + 0.299f) / 2
-    val bottom = 0.299f / 2
-    assert(got.feature.take(4).forall(v => (v - top).abs < 0.01f),
-      s"top grid cells ${got.feature.take(4).toSeq} != $top")
-    assert(got.feature.drop(4).forall(v => (v - bottom).abs < 0.01f),
-      s"bottom grid cells ${got.feature.drop(4).toSeq} != $bottom")
-    // raster geometry comes from strf, not avih: display dims say
-    // 320x240 but the stream (and frames) are 8x6 — decode must
-    // follow the stream header while metadata reports avih
-    val mismatched = dibAviBytes(Seq(halves), 320, 240, 1, strfDims = Some((w, h)))
-    val gotMm = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(4L, "video", mismatched))).head
-    assert(gotMm.width == 320 && gotMm.height == 240)
-    assert((gotMm.feature.take(4).head - 1.0f).abs < 0.01f,
-      "frames must decode against the strf raster geometry")
-    // negative strf height = TOP-DOWN rows: the white half stays top
-    val topDownFrame = {
-      val stride = ((w * 3 + 3) / 4) * 4
-      val out = new Array[Byte](stride * h)
-      for (y <- 0 until h; x <- 0 until w; if y < h / 2) {
-        val p = y * stride + x * 3 // row y stored at offset y: top-down
-        out(p) = -1; out(p + 1) = -1; out(p + 2) = -1
-      }
-      out
-    }
-    val td = dibAviBytes(Seq(topDownFrame), w, h, 1, strfDims = Some((w, -h)))
-    val gotTd = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(5L, "video", td))).head
-    assert(gotTd.feature.take(4).forall(v => (v - 1.0f).abs < 0.01f) &&
-      gotTd.feature.drop(4).forall(_ == 0f),
-      "negative biHeight must decode top-down")
-    // a truncated raster is corrupt → metadata real, features zero
-    val short = dibAviBytes(Seq(halves.take(10)), w, h, 1)
-    val gotShort = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(1L, "video", short))).head
-    assert(gotShort.width == w && gotShort.feature.forall(_ == 0f))
-    // an AUDIO-first AVI whose WAVEFORMATEX bytes happen to look like
-    // 24bpp/BI_RGB must NOT be misread as a video pixel format: the
-    // strf is paired with its preceding strh fccType
-    val audStrh = new Array[Byte](56)
-    System.arraycopy("auds".getBytes("US-ASCII"), 0, audStrh, 0, 4)
-    val audStrf = new Array[Byte](40)
-    System.arraycopy(le16(24), 0, audStrf, 14, 2) // fake biBitCount
-    val avihBytes = new Array[Byte](56)
-    System.arraycopy(le32(1), 0, avihBytes, 16, 4)
-    System.arraycopy(le32(w), 0, avihBytes, 32, 4)
-    System.arraycopy(le32(h), 0, avihBytes, 36, 4)
-    val audFirst = {
-      val hdrl = riffList("hdrl", riffChunk("avih", avihBytes) ++
-        riffList("strl", riffChunk("strh", audStrh) ++ riffChunk("strf", audStrf)))
-      val movi = riffList("movi", riffChunk("00db", halves))
-      val payload = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
-      "RIFF".getBytes("US-ASCII") ++ le32(payload.length) ++ payload
-    }
-    val gotAud = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(2L, "video", audFirst))).head
-    assert(gotAud.width == w && gotAud.feature.forall(_ == 0f),
-      "audio-stream strf must not enable DIB decode")
-  }
-
-  // --- YUV4MPEG2 fixture (round 7: second real video container) ---
-
-  /** Minimal Y4M stream: `YUV4MPEG2 W<w> H<h> F25:1 Ip A1:1 C<colour>\n`
-    * then per frame `FRAME<params>\n` + the Y plane + neutral (0x80)
-    * chroma planes at the colourspace's sizes. */
-  private def y4mBytes(lumaFrames: Seq[Array[Byte]], w: Int, h: Int,
-                       colour: String = "420jpeg",
-                       frameParams: String = ""): Array[Byte] = {
-    val chromaLen = colour match {
-      case c if c.startsWith("420")  => 2 * ((w / 2) * (h / 2))
-      case "444alpha"                => 3 * w * h
-      case c if c.startsWith("444")  => 2 * w * h
-      case _                         => 0 // mono and unknown tags
-    }
-    val header = s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 C$colour\n".getBytes("US-ASCII")
-    val chroma = Array.fill(chromaLen)(0x80.toByte)
-    header ++ lumaFrames.toArray.flatMap(y =>
-      s"FRAME$frameParams\n".getBytes("US-ASCII") ++ y ++ chroma)
-  }
-
-  test("VideoDecoder decodes Y4M: luma planes are the features, frames walk the stream") {
-    val w = 8; val h = 6
-    // frame 1: top half 255, bottom 0 — pins row order; frame 2: flat
-    // 51 (= 0.2 after /255, exact because the BT.601 weights sum to 1)
-    val topWhite = Array.tabulate(w * h)(i => if (i / w < h / 2) 0xff.toByte else 0x00.toByte)
-    val flat51 = Array.fill(w * h)(51.toByte)
-    val y4m = y4mBytes(Seq(topWhite, flat51), w, h)
-    val got = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(0L, "video", y4m))).head
-    assert(got.width == w && got.height == h && got.n_frames == 2)
-    val top = (1.0f + 0.2f) / 2
-    val bottom = 0.2f / 2
-    assert(got.feature.take(4).forall(v => (v - top).abs < 0.01f),
-      s"top grid cells ${got.feature.take(4).toSeq} != $top")
-    assert(got.feature.drop(4).forall(v => (v - bottom).abs < 0.01f),
-      s"bottom grid cells ${got.feature.drop(4).toSeq} != $bottom")
-    // per-frame params after FRAME are skipped to the newline
-    val withParams = y4mBytes(Seq(flat51), w, h, frameParams = " Xtest")
-    val gotP = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(1L, "video", withParams))).head
-    assert(gotP.n_frames == 1 && gotP.feature.forall(v => (v - 0.2f).abs < 0.01f))
-    // mono colourspace: no chroma planes between frames
-    val mono = y4mBytes(Seq(topWhite, flat51), w, h, colour = "mono")
-    val gotM = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(2L, "video", mono))).head
-    assert(gotM.n_frames == 2 && (gotM.feature.head - top).abs < 0.01f)
-    // a truncated tail keeps the frames parsed before it (same
-    // contract as the RIFF walk): cutting into frame 2 leaves frame 1
-    val truncated = y4m.dropRight(20)
-    val gotT = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(3L, "video", truncated))).head
-    assert(gotT.width == w && gotT.n_frames == 1)
-    assert(gotT.feature.take(4).forall(v => (v - 1.0f).abs < 0.01f) &&
-      gotT.feature.drop(4).forall(_ == 0f))
-    // 444alpha carries a third non-luma plane — both frames must
-    // still frame correctly (a 2-plane guess would land mid-alpha
-    // and silently stop at n_frames=1)
-    val alpha = y4mBytes(Seq(topWhite, flat51), w, h, colour = "444alpha")
-    val gotA = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(5L, "video", alpha))).head
-    assert(gotA.n_frames == 2 && (gotA.feature.head - top).abs < 0.01f)
-    // unknown subsampling tag → not decodable → stub fallback exactly;
-    // odd dimensions under chroma subsampling are rejected the same
-    // way rather than guessed at
-    val unknown = y4mBytes(Seq(flat51), w, h, colour = "410")
-    val odd = y4mBytes(Seq(Array.fill(7 * h)(51.toByte)), 7, h)
-    // high-bit-depth tags (2-byte samples) must NOT match their 8-bit
-    // prefix ("420p10" as "420" would mis-frame the whole walk)
-    val tenBit = y4mBytes(Seq(flat51), w, h, colour = "420p10")
-    for ((id, bad) <- Seq((4L, unknown), (6L, odd), (7L, tenBit))) {
-      val gotU = Multimodal.VideoDecoder.decodeBatch(Seq(MediaRecord(id, "video", bad))).head
-      val stubU = Multimodal.StubDecoder.decodeBatch(Seq(MediaRecord(id, "video", bad))).head
-      assert(gotU.width == stubU.width && gotU.feature.toSeq == stubU.feature.toSeq)
-    }
-    // the composite routes Y4M video through the real decoder
-    val viaJdk = Multimodal.JdkDecoder.decodeBatch(Seq(MediaRecord(0L, "video", y4m))).head
-    assert(viaJdk.width == w && viaJdk.n_frames == 2 &&
-      viaJdk.feature.toSeq == got.feature.toSeq)
-  }
 
   /** Patterned real-codec image: per-pixel luminance from `f` (equal
     * RGB channels), encoded with an actual ImageIO writer. */
@@ -490,45 +112,6 @@ class MultimodalSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("curateMedia: exact_dup beats image_near_dup beats kept; non-images pass vacuously") {
-    val (w, h) = (72, 64)
-    val png = patternBytes(w, h, "png")(wave(w, h))
-    val jpg = patternBytes(w, h, "jpg")(wave(w, h))
-    val other = patternBytes(w, h, "png")((x, y) => 220 - wave(w, h)(x, y))
-    val ds = Seq(
-      MediaRecord(0L, "image", png),
-      MediaRecord(1L, "image", jpg),                             // near-dup of 0 → dropped
-      MediaRecord(2L, "image", other),                           // far → kept
-      MediaRecord(3L, "audio", "some audio bytes".getBytes("UTF-8")), // no hash → vacuous pass
-      MediaRecord(4L, "image", "junk bytes".getBytes("UTF-8")),  // undecodable → vacuous pass
-      MediaRecord(5L, "image", png)                              // byte-identical to 0 → exact_dup
-    ).toDS()
-    val rows = Multimodal.curateMedia(ds, maxHamming = 6).collect()
-    graft.ops.Caches.releaseAll(spark)
-    // ordered output, one verdict per asset
-    assert(rows.map(_.getLong(0)).toSeq == (0L to 5L))
-    val got = rows.map(r => r.getLong(0) -> ((r.getBoolean(1), r.getString(2)))).toMap
-    assert(got == Map(
-      0L -> ((true, "kept")),             // min of both its groups
-      1L -> ((false, "image_near_dup")),  // phash cluster {0,1,5}, 0 survives
-      2L -> ((true, "kept")),
-      3L -> ((true, "kept")),
-      4L -> ((true, "kept")),
-      5L -> ((false, "exact_dup"))))      // also a near-dup; exact wins by precedence
-  }
-
-  test("frameSample explodes video payloads into fixed-size windows only") {
-    val media = records.toDS().toDF()
-    val frames = Multimodal.frameSample(media, frameBytes = 16, stride = 4).collect()
-    assert(frames.nonEmpty)
-    // only video rows sampled
-    assert(frames.map(_.getLong(0)).toSet == Set(2L, 3L))
-    // every frame is exactly frameBytes long
-    assert(frames.forall(_.getAs[Array[Byte]]("frame").length == 16))
-    // stride positions: media 2 has 100 bytes → (100-16)/4 + 1 = 22 frames
-    assert(frames.count(_.getLong(0) == 2L) == 22)
-  }
-
   test("mediaMeta matches the stub decoder's dimensions (expression twin)") {
     val dir = java.nio.file.Files.createTempDirectory("mm").toString
     Seq((0L, "abc"), (1L, "defg"), (2L, "hijkl"))
@@ -538,14 +121,22 @@ class MultimodalSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val meta = Multimodal.mediaMeta(spark, dir).collect()
       .map(r => r.getLong(0) -> r).toMap
-    val decoded = Multimodal.StubDecoder.decodeBatch(
-      Multimodal.mediaTable(spark, dir).as[MediaRecord].collect().toSeq)
-      .map(f => f.media_id -> f).toMap
+    // the stub decoder's dimensions, worked on the driver: a 60-bit
+    // hash from the first 15 hex digits of the payload's md5
+    def stub(m: MediaRecord): (Long, Long, Long, Long) = {
+      val md5 = java.security.MessageDigest.getInstance("MD5").digest(m.content)
+      val h = java.lang.Long.parseLong(md5.map("%02x".format(_)).mkString.take(15), 16)
+      val frames = m.kind match { case "video" => 1 + h % 240; case "audio" => 0L; case _ => 1L }
+      (m.content.length.toLong, 160 + (h % 16) * 16, 120 + ((h / 16) % 16) * 16, frames)
+    }
+    val decoded = Multimodal.mediaTable(spark, dir).as[MediaRecord].collect()
+      .map(m => m.media_id -> stub(m)).toMap
     (0L to 2L).foreach { id =>
-      assert(meta(id).getLong(4) == decoded(id).width.toLong, s"width of $id")
-      assert(meta(id).getLong(5) == decoded(id).height.toLong, s"height of $id")
-      assert(meta(id).getLong(6) == decoded(id).n_frames.toLong, s"frames of $id")
-      assert(meta(id).getLong(2) == decoded(id).n_bytes, s"bytes of $id")
+      val (nBytes, width, height, frames) = decoded(id)
+      assert(meta(id).getLong(4) == width, s"width of $id")
+      assert(meta(id).getLong(5) == height, s"height of $id")
+      assert(meta(id).getLong(6) == frames, s"frames of $id")
+      assert(meta(id).getLong(2) == nBytes, s"bytes of $id")
     }
   }
 }

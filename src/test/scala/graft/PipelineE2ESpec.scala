@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.ops.{LlmOps, Sampling, Storage, Tables}
+import graft.ops.{LlmOps, Sampling, Tables}
 
 /** The "user could switch" story executed end-to-end THROUGH DISK:
   * curate → filter survivors → deterministic split → sequence packing
@@ -39,8 +39,8 @@ class PipelineE2ESpec extends SparkSpec {
 
     // 4. partitioned export of the packed table joined back to its split
     val `export` = packed.join(split.select("doc_id", "split", "source"), Seq("doc_id"))
-    Storage.writePartitioned(`export`, s"$out/packed", "split", "source")
-    val back = Storage.readPartitioned(spark, s"$out/packed")
+    `export`.write.mode("overwrite").partitionBy("split", "source").parquet(s"$out/packed")
+    val back = spark.read.parquet(s"$out/packed")
 
     // round-trip: identical row set (partition columns read back as strings)
     val sentCols = `export`.columns.sorted.toIndexedSeq

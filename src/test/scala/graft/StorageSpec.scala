@@ -3,41 +3,12 @@ package graft
 import graft.ops.Storage
 import org.apache.spark.sql.functions._
 
-/** The storage layouts must DELIVER their plan promises, not just
-  * write files: partition pruning visible as `PartitionFilters` with
-  * non-matching directories never read, and the bucketed join planning
-  * with zero Exchange. */
+/** The serve paths must DELIVER their pruning promise over a
+  * `partitionBy` layout, not just write files: the probed-cell filter
+  * visible as `PartitionFilters` and non-matching directories never
+  * read. The versioned snapshot protocol must publish atomically and
+  * survive racing writers. */
 class StorageSpec extends SparkSpec {
-
-  test("partitionBy layout: filter on the partition column prunes at the scan") {
-    val s = spark
-    import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graftpart").toString + "/docs"
-    val df = Seq(
-      (1L, "srcA", 10L), (2L, "srcA", 20L), (3L, "srcB", 30L), (4L, "srcC", 40L)
-    ).toDF("doc_id", "source", "n_chars")
-    Storage.writePartitioned(df, root, "source")
-
-    val pruned = Storage.prunedRead(spark, root, "source", "srcB")
-    assert(pruned.collect().map(_.getLong(0)).toSeq == Seq(3L))
-
-    // the filter landed in PartitionFilters (listing-time pruning) —
-    // the equality is evaluated against directory names, not rows
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(source") &&
-      scan.contains("= srcB)"), scan)
-
-    // behavioral proof the non-matching directories are never READ:
-    // replace srcC's data file with garbage — the pruned read still
-    // succeeds (it never opens the file), while an unpruned full scan
-    // fails on the bad footer
-    corruptPartition(root, "source=srcC")
-    assert(Storage.prunedRead(spark, root, "source", "srcB")
-      .collect().map(_.getLong(0)).toSeq == Seq(3L))
-    intercept[Exception] {
-      Storage.readPartitioned(spark, root).agg(sum(col("n_chars"))).collect()
-    }
-  }
 
   /** Shared corruption step of the pruning proofs: make `dirName`
     * under `root` unreadable (garbage parquet), so any scan that
@@ -63,10 +34,10 @@ class StorageSpec extends SparkSpec {
     val (cents, books) = graft.ops.Pq.trainIvfPq(spark, dir)
     val codes = graft.ops.Pq.ivfPqCodes(spark, dir, cents, books)
     val root = java.nio.file.Files.createTempDirectory("ivfpqcodes").toString + "/codes"
-    Storage.writePartitioned(codes, root, "cell")
+    codes.write.mode("overwrite").partitionBy("cell").parquet(root)
 
     val probed = cents.map(_.j).take(2)
-    val full = Storage.readPartitioned(spark, root)
+    val full = spark.read.parquet(root)
     val pruned = full.filter(col("cell").isin(probed: _*))
     // the cell predicate must land INSIDE the PartitionFilters
     // brackets (a bare "PartitionFilters:" prints on every
@@ -99,11 +70,11 @@ class StorageSpec extends SparkSpec {
     // pruned read still succeeds, the full scan fails
     val other = cents.map(_.j).filterNot(probed.contains).head
     corruptPartition(root, s"cell=$other")
-    assert(Storage.readPartitioned(spark, root)
+    assert(spark.read.parquet(root)
       .filter(col("cell").isin(probed: _*))
       .collect().map(_.toString).sorted.toSeq == wantRows)
     intercept[Exception] {
-      Storage.readPartitioned(spark, root).agg(sum(col("c0"))).collect()
+      spark.read.parquet(root).agg(sum(col("c0"))).collect()
     }
     graft.ops.Caches.releaseAll(spark)
   }
@@ -119,8 +90,8 @@ class StorageSpec extends SparkSpec {
     val (cents, books) = graft.ops.Pq.trainIvfPq(spark, dir)
     val codes = graft.ops.Pq.ivfPqCodes(spark, dir, cents, books)
     val root = java.nio.file.Files.createTempDirectory("ivfpqserve").toString + "/codes"
-    Storage.writePartitioned(codes, root, "cell")
-    val full = Storage.readPartitioned(spark, root)
+    codes.write.mode("overwrite").partitionBy("cell").parquet(root)
+    val full = spark.read.parquet(root)
 
     // ONE external query → nprobe=2 of the 10 cells probed, 8 not
     val one = graft.ops.Embeddings.quantized(spark, dir)
@@ -143,12 +114,12 @@ class StorageSpec extends SparkSpec {
     assert(probed.size == 2)
     val unprobed = cents.map(_.j).filterNot(probed.contains).head
     corruptPartition(root, s"cell=$unprobed")
-    val again = graft.ops.Pq.ivfPqServe(Storage.readPartitioned(spark, root),
+    val again = graft.ops.Pq.ivfPqServe(spark.read.parquet(root),
       cents, books, one, k = 5, nprobe = 2)
     assert(again.collect().map(_.toString).toSeq == want,
       "serve result changed across the corruption — it must never read unprobed cells")
     intercept[Exception] {
-      Storage.readPartitioned(spark, root).agg(sum(col("c0"))).collect()
+      spark.read.parquet(root).agg(sum(col("c0"))).collect()
     }
     graft.ops.Caches.releaseAll(spark)
   }
@@ -166,8 +137,8 @@ class StorageSpec extends SparkSpec {
     val (cents, mins, maxs) = graft.ops.Sq.trainIvfSq8(spark, dir)
     val codes = graft.ops.Sq.ivfSq8Codes(spark, dir, cents, mins, maxs)
     val root = java.nio.file.Files.createTempDirectory("ivfsqserve").toString + "/codes"
-    Storage.writePartitioned(codes, root, "cell")
-    val full = Storage.readPartitioned(spark, root)
+    codes.write.mode("overwrite").partitionBy("cell").parquet(root)
+    val full = spark.read.parquet(root)
 
     val one = graft.ops.Embeddings.quantized(spark, dir)
       .filter(col("vec_id") === 0L)
@@ -183,12 +154,12 @@ class StorageSpec extends SparkSpec {
     assert(probed.size == 2)
     val unprobed = cents.map(_.j).filterNot(probed.contains).head
     corruptPartition(root, s"cell=$unprobed")
-    val again = graft.ops.Sq.ivfSq8Serve(Storage.readPartitioned(spark, root),
+    val again = graft.ops.Sq.ivfSq8Serve(spark.read.parquet(root),
       cents, mins, maxs, one, k = 5, nprobe = 2)
     assert(again.collect().map(_.toString).toSeq == want,
       "serve result changed across the corruption — it must never read unprobed cells")
     intercept[Exception] {
-      Storage.readPartitioned(spark, root).agg(sum(size(col("codes")))).collect()
+      spark.read.parquet(root).agg(sum(size(col("codes")))).collect()
     }
     graft.ops.Caches.releaseAll(spark)
   }
@@ -207,14 +178,16 @@ class StorageSpec extends SparkSpec {
       "the pinned coarse trajectory must be deterministic across the two train entries")
     val pqRoot = java.nio.file.Files.createTempDirectory("refsrvA").toString + "/pq"
     val sqRoot = java.nio.file.Files.createTempDirectory("refsrvB").toString + "/sq"
-    Storage.writePartitioned(graft.ops.Pq.ivfPqCodes(spark, dir, cents, books), pqRoot, "cell")
-    Storage.writePartitioned(graft.ops.Sq.ivfSq8Codes(spark, dir, cents, mins, maxs), sqRoot, "cell")
+    graft.ops.Pq.ivfPqCodes(spark, dir, cents, books)
+      .write.mode("overwrite").partitionBy("cell").parquet(pqRoot)
+    graft.ops.Sq.ivfSq8Codes(spark, dir, cents, mins, maxs)
+      .write.mode("overwrite").partitionBy("cell").parquet(sqRoot)
 
     val one = graft.ops.Embeddings.quantized(spark, dir)
       .filter(col("vec_id") === 0L)
       .select(col("vec_id").as("q_id"), col("qv"))
     def serve() = graft.ops.Sq.ivfPqSq8RefineServe(
-      Storage.readPartitioned(spark, pqRoot), Storage.readPartitioned(spark, sqRoot),
+      spark.read.parquet(pqRoot), spark.read.parquet(sqRoot),
       cents, books, mins, maxs, one, k = 5, nprobe = 2)
     val served = serve()
     // BOTH scans carry the probed-cell predicate in PartitionFilters
@@ -232,10 +205,10 @@ class StorageSpec extends SparkSpec {
     assert(serve().collect().map(_.toString).toSeq == want,
       "refine serve changed across the corruption — it must never read unprobed cells in either tier")
     intercept[Exception] {
-      Storage.readPartitioned(spark, pqRoot).agg(sum(col("c0"))).collect()
+      spark.read.parquet(pqRoot).agg(sum(col("c0"))).collect()
     }
     intercept[Exception] {
-      Storage.readPartitioned(spark, sqRoot).agg(sum(size(col("codes")))).collect()
+      spark.read.parquet(sqRoot).agg(sum(size(col("codes")))).collect()
     }
     graft.ops.Caches.releaseAll(spark)
   }
@@ -289,8 +262,8 @@ class StorageSpec extends SparkSpec {
     val cents = graft.ops.Embeddings.trainQuantizer(spark, dir).sortBy(_.j)
     val index = graft.ops.Embeddings.serveIndex(spark, dir, cents)
     val root = java.nio.file.Files.createTempDirectory("annindex").toString + "/index"
-    Storage.writePartitioned(index, root, "cell")
-    val full = Storage.readPartitioned(spark, root)
+    index.write.mode("overwrite").partitionBy("cell").parquet(root)
+    val full = spark.read.parquet(root)
 
     val one = spark.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") === 0L)
@@ -318,47 +291,13 @@ class StorageSpec extends SparkSpec {
     val unprobed = cents.map(_.j).filterNot(probed.contains).head
     corruptPartition(root, s"cell=$unprobed")
     val again = graft.ops.Embeddings.serveQueryBatch(
-      Storage.readPartitioned(spark, root), cents, one, k = 5, nprobe = 2)
+      spark.read.parquet(root), cents, one, k = 5, nprobe = 2)
     assert(again.collect().map(_.toString).toSeq == want,
       "serve result changed across the corruption — it must never read unprobed cells")
     intercept[Exception] {
-      Storage.readPartitioned(spark, root).agg(sum(col("c_n"))).collect()
+      spark.read.parquet(root).agg(sum(col("c_n"))).collect()
     }
     graft.ops.Caches.releaseAll(spark)
-  }
-
-  test("bucketed tables: equi-join on the bucket key plans ZERO exchanges") {
-    val s = spark
-    import s.implicits._
-    // bucketed catalog tables need a metastore-backed NAME (bucket
-    // metadata lives in the catalog, not the files); they land in the
-    // session's default warehouse dir and are dropped in the finally
-    val docs = (1L to 100L).map(i => (i, s"text $i")).toDF("doc_id", "text")
-    val scores = (1L to 100L).map(i => (i, i * 2.0)).toDF("doc_id", "score")
-    try {
-      Storage.writeBucketed(docs, "graft_docs_b", "doc_id", 4)
-      Storage.writeBucketed(scores, "graft_scores_b", "doc_id", 4)
-
-      val joined = Storage.bucketedJoin(spark, "graft_docs_b", "graft_scores_b", "doc_id")
-      assert(joined.count() == 100L)
-
-      val plan = joined.queryExecution.executedPlan.toString
-      // the co-location promise: no shuffle anywhere in the join plan
-      assert(!plan.contains("Exchange"), plan)
-      // and it is a real join of two bucketed scans, not a collapsed
-      // local relation
-      assert(plan.contains("Bucketed: true"), plan)
-
-      // negative control: the same join over plain (unbucketed) data
-      // DOES shuffle — certifying the assertion above can fail
-      val plainPlan = docs.join(scores, Seq("doc_id"))
-        .queryExecution.executedPlan.toString
-      assert(plainPlan.contains("Exchange") || plainPlan.contains("Broadcast"),
-        plainPlan)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_docs_b")
-      spark.sql("DROP TABLE IF EXISTS graft_scores_b")
-    }
   }
 
   test("upsertSnapshot: versioned copy-on-write merge with atomic publish") {

@@ -3,21 +3,25 @@ package graft
 import graft.ops.{Udfs, WarehouseSql}
 import org.apache.spark.sql.functions._
 
-/** Verbatim execution of the reference's warehouse SQL fragments:
-  * the real .sql texts (read from the reference tree at test time,
-  * byte-for-byte) run through `${VAR}` substitution + the
-  * call-grammar rewrite and then `spark.sql`, asserted row-equal to
-  * the codegen Column twins on the same input. The fragments are
-  * stored as FRAGMENTS in the reference (a WHERE clause, a SELECT
-  * line with a trailing comma, a CASE arm), so each is completed with
-  * the minimal harness text around the untouched fragment. */
+/** Verbatim execution of warehouse SQL fragments: `${VAR}`
+  * substitution + the call-grammar rewrite, then `spark.sql`. The
+  * reference stores its SQL as FRAGMENTS (a WHERE clause, a SELECT
+  * line with a trailing comma, a 7-arg call continuing a select list,
+  * a templated CASE arm), so each is completed with the minimal
+  * harness text around the untouched fragment.
+  *
+  * Each golden runs a hand-written fragment of the same shape, whose
+  * rows over [[utmRows]] are worked out by hand below, and, when the
+  * reference tree is present, the real .sql text (read byte-for-byte
+  * at test time) asserted row-equal to the codegen Column twins. */
 class WarehouseSqlSpec extends SparkSpec {
   import spark.implicits._
 
   private val refRoot = "/root/reference"
+  /** The reference's fragment at `rel`, when the tree is present. */
   private def refSql(rel: String): Option[String] = {
     val p = java.nio.file.Paths.get(refRoot, rel)
-    if (java.nio.file.Files.isReadable(p))
+    if (refTreeAvailable && java.nio.file.Files.isReadable(p))
       Some(new String(java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8))
     else None
   }
@@ -78,61 +82,86 @@ class WarehouseSqlSpec extends SparkSpec {
       "SELECT 'it\\'s KIMBALL.F(x)' , kimball_g(y)")
   }
 
-  test("CPA-WEB-COSTS.sql WHERE fragment runs verbatim and matches the Column twin") {
-    val frag = refSql("superset_objects/datasets/CPA-WEB-COSTS.sql")
-    assume(refTreeAvailable && frag.isDefined, "reference tree not present (or skipped via GRAFT_SKIP_REF_GOLDEN)")
+  // Hand-worked products of utmRows' campaigns (Udfs.productOfCampaign:
+  // insurance/strah first, then micro/mfo/loan, else Прочее)
+  private val Micro = "Микрокредиты"
+  private val Insurance = "Страхование имущества"
+  private val Other = "Прочее"
+
+  test("WHERE fragment runs verbatim: hand-written twin, and CPA-WEB-COSTS.sql vs the Column twin") {
     val df = utmRows()
-    val sql = "SELECT UTM_CAMPAIGN FROM utm_rows\n" +
-      WarehouseSql.prepare(spark, frag.get)
-    val got = spark.sql(sql).as[String].collect().toSet
-    val want = df.filter(Udfs.utmCampaignToProduct(col("UTM_CAMPAIGN")) === "Микрокредиты")
-      .select(col("UTM_CAMPAIGN")).as[String].collect().toSet
-    assert(got == want && got.nonEmpty)
+    def run(frag: String) = spark.sql("SELECT UTM_CAMPAIGN FROM utm_rows\n" +
+      WarehouseSql.prepare(spark, frag)).as[String].collect().toSet
+    // a 3-part qualified call in the predicate, a comment line after it
+    val synthetic = "WHERE DWH.KIMBALL.UTM_CAMPAIGN_TO_PRODUCT(UTM_CAMPAIGN) = '" + Insurance + "'\n" +
+      "-- KIMBALL.UTM_CAMPAIGN_TO_PRODUCT( stays a comment\n"
+    assert(run(synthetic) == Set("gg_insurance_home", "strah_retarget"))
+    refSql("superset_objects/datasets/CPA-WEB-COSTS.sql").foreach { frag =>
+      val want = df.filter(Udfs.utmCampaignToProduct(col("UTM_CAMPAIGN")) === Micro)
+        .select(col("UTM_CAMPAIGN")).as[String].collect().toSet
+      assert(run(frag) == want && want.nonEmpty)
+    }
   }
 
-  test("kimball.msb-web-fb_req.sql SELECT fragment runs verbatim and matches") {
-    val frag = refSql("superset/datasets/kimball/kimball.msb-web-fb_req.sql")
-    assume(refTreeAvailable && frag.isDefined, "reference tree not present (or skipped via GRAFT_SKIP_REF_GOLDEN)")
+  test("SELECT fragment with a trailing comma runs verbatim: hand-written twin, and kimball.msb-web-fb_req.sql") {
     val df = utmRows()
     // the fragment IS the select-list head (trailing comma included);
     // complete with one more column + FROM
-    val sql = WarehouseSql.prepare(spark, frag.get) + " UTM_SOURCE FROM utm_rows"
-    val got = spark.sql(sql).select(col("CAMPAIGN"))
-      .as[String].collect().toSeq.sorted
-    val want = df.select(Udfs.utmCampaignToProduct(col("UTM_CAMPAIGN")))
-      .as[String].collect().toSeq.sorted
-    assert(got == want)
+    def run(frag: String) = spark.sql(WarehouseSql.prepare(spark, frag) + " UTM_SOURCE FROM utm_rows")
+    val synthetic = "SELECT UTM_CAMPAIGN, KIMBALL.UTM_CAMPAIGN_TO_PRODUCT(UTM_CAMPAIGN) AS CAMPAIGN,"
+    val got = run(synthetic).select(col("UTM_CAMPAIGN"), col("CAMPAIGN")).as[(String, String)].collect().toMap
+    assert(got == Map("fb_micro_loans" -> Micro, "gg_insurance_home" -> Insurance,
+      "strah_retarget" -> Insurance, "mfo_aug" -> Micro, "organic_generic" -> Other,
+      (null: String) -> Other))
+    refSql("superset/datasets/kimball/kimball.msb-web-fb_req.sql").foreach { frag =>
+      val want = df.select(Udfs.utmCampaignToProduct(col("UTM_CAMPAIGN")))
+        .as[String].collect().toSeq.sorted
+      assert(run(frag).select(col("CAMPAIGN")).as[String].collect().toSeq.sorted == want)
+    }
   }
 
-  test("DIM_MFO_FD_WEB_CHANNEL.sql 7-arg call fragment runs verbatim and matches") {
-    val frag = refSql("superset_objects/datasets/DIM_MFO_FD_WEB_CHANNEL.sql")
-    assume(refTreeAvailable && frag.isDefined, "reference tree not present (or skipped via GRAFT_SKIP_REF_GOLDEN)")
+  test("7-arg call fragment runs verbatim: hand-written twin, and DIM_MFO_FD_WEB_CHANNEL.sql") {
     val df = utmRows()
-    // fragment begins with a leading comma (select-list continuation)
-    val sql = "SELECT UTM_SOURCE\n" + WarehouseSql.prepare(spark, frag.get) +
-      " AS channel FROM utm_rows"
-    val got = spark.sql(sql).select(col("channel")).as[String].collect().toSeq
-    val want = df.select(Udfs.utmToFinancialChannel(
-      col("UTM_SOURCE"), col("UTM_MEDIUM"), col("UTM_CAMPAIGN"),
-      expr("TRY_CAST(UTM_CONTENT AS DECIMAL(38,0))"),
-      lit(null), lit(null), lit("Микрокредиты")).as("channel"))
-      .as[String].collect().toSeq
-    assert(got == want)
-    assert(got.contains("Платный/Микрокредиты"))
+    // the fragment begins with a leading comma (select-list continuation)
+    def run(frag: String) = spark.sql("SELECT UTM_CAMPAIGN\n" + WarehouseSql.prepare(spark, frag) +
+      " AS channel FROM utm_rows")
+    val synthetic = ", ${ENV_PREFIX}DWH.KIMBALL.UTM_TO_FINANCIAL_CHANNEL(UTM_SOURCE, UTM_MEDIUM,\n" +
+      "    UTM_CAMPAIGN, TRY_CAST(UTM_CONTENT AS NUMBER(38,0)), NULL, NULL, '" + Micro + "')"
+    val got = run(synthetic).as[(String, String)].collect().toMap
+    // paid media (cpc/cpm/paid) win over an organic source; email is neither
+    assert(got == Map("fb_micro_loans" -> s"Платный/$Micro", "gg_insurance_home" -> s"Платный/$Micro",
+      "strah_retarget" -> s"Органика/$Micro", "mfo_aug" -> Micro,
+      "organic_generic" -> s"Платный/$Micro", (null: String) -> Micro))
+    refSql("superset_objects/datasets/DIM_MFO_FD_WEB_CHANNEL.sql").foreach { frag =>
+      val want = df.select(Udfs.utmToFinancialChannel(
+        col("UTM_SOURCE"), col("UTM_MEDIUM"), col("UTM_CAMPAIGN"),
+        expr("TRY_CAST(UTM_CONTENT AS DECIMAL(38,0))"),
+        lit(null), lit(null), lit(Micro)).as("channel"))
+        .as[String].collect().toSeq
+      val real = run(frag).select(col("channel")).as[String].collect().toSeq
+      assert(real == want)
+      assert(real.contains(s"Платный/$Micro"))
+    }
   }
 
-  test("templated hot-view CASE arm (${ENV_PREFIX}DWH.KIMBALL...) runs verbatim and matches") {
-    val frag = refSql(
-      "deployer/patch/DWH/kimball/r_4.001.045_v_marketing_paid_traffic_report_hot_view.sql")
-    assume(refTreeAvailable && frag.isDefined, "reference tree not present (or skipped via GRAFT_SKIP_REF_GOLDEN)")
+  test("templated CASE arm runs verbatim: hand-written twin, and the hot-view fragment") {
     val df = utmRows()
-    val sql = "SELECT CASE\n" + WarehouseSql.prepare(spark, frag.get) +
-      " ELSE 'Прочее' END AS segment FROM utm_rows"
-    val got = spark.sql(sql).select(col("segment")).as[String].collect().toSeq
-    val want = df.select(
-      when(Udfs.utmCampaignToProduct(col("UTM_CAMPAIGN")) === "Страхование имущества", "ИФЛ")
-        .otherwise("Прочее").as("segment")).as[String].collect().toSeq
-    assert(got == want)
-    assert(got.contains("ИФЛ"))
+    def run(frag: String) = spark.sql("SELECT UTM_CAMPAIGN, CASE\n" + WarehouseSql.prepare(spark, frag) +
+      " ELSE '" + Other + "' END AS segment FROM utm_rows")
+    // both deploy templates resolve before the call rewrite
+    val synthetic = "WHEN ${ENV_PREFIX}DWH.${kimball}.UTM_CAMPAIGN_TO_PRODUCT(UTM_CAMPAIGN) = '" +
+      Micro + "' THEN 'МФО'"
+    val got = run(synthetic).as[(String, String)].collect().toMap
+    assert(got == Map("fb_micro_loans" -> "МФО", "gg_insurance_home" -> Other,
+      "strah_retarget" -> Other, "mfo_aug" -> "МФО", "organic_generic" -> Other,
+      (null: String) -> Other))
+    refSql("deployer/patch/DWH/kimball/r_4.001.045_v_marketing_paid_traffic_report_hot_view.sql").foreach { frag =>
+      val want = df.select(
+        when(Udfs.utmCampaignToProduct(col("UTM_CAMPAIGN")) === Insurance, "ИФЛ")
+          .otherwise(Other).as("segment")).as[String].collect().toSeq
+      val real = run(frag).select(col("segment")).as[String].collect().toSeq
+      assert(real == want)
+      assert(real.contains("ИФЛ"))
+    }
   }
 }
