@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.immutable.HashSet
+
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -591,6 +594,25 @@ object Embeddings {
   private[ops] def probeCellsCol(cents: Seq[Centroid], nprobe: Int): Column =
     probeCells(col("qv"), col("nrm"), cellTable(cents), nprobe)
 
+  /** The static probed-cell filter every routed serve puts on its
+    * index scan: `cell INSET cells`, so on a partitioned-by-cell
+    * layout the unprobed cells prune at listing time. It is an
+    * `InSet` over a `HashSet` rather than `isin`, because generated
+    * code inlines an `isin` list as literals and reads an `InSet` of
+    * longs as a reference object cast to the set's class: every batch
+    * of a serve loop, whatever cells it probes and in whatever order,
+    * reuses the classes the first batch compiled. An `InSet` skips
+    * type coercion, so the cast meets a cell column read back as int
+    * from partition discovery; on a bigint column it folds away. */
+  private[ops] def probedCellFilter(cells: Iterable[Long]): Column =
+    GraftColumns.column(
+      InSet(GraftColumns.expression(col("cell").cast("long")), probedCellSet(cells)))
+
+  /** The set a [[probedCellFilter]] reads: always a `HashSet`, because
+    * Scala's immutable sets of up to four elements are four other
+    * classes, and the generated code casts to the set's class. */
+  private[ops] def probedCellSet(cells: Iterable[Long]): Set[Any] = HashSet.from[Any](cells)
+
   /** Two-level [[probeCellsCol]] — the SERVING counterpart of
     * [[nearestCellTwoLevel]]: exact probing costs
     * nCells distance evals PER PROBE, so past O(10³) cells a serving
@@ -690,8 +712,7 @@ object Embeddings {
     val qsRows = qsPlan.collect()
     val qs = queries.sparkSession.createDataFrame(
       java.util.Arrays.asList(qsRows: _*), qsPlan.schema)
-    val probedCells = qsRows.map(_.getAs[Long]("cell")).distinct.toSeq
-    scoreTopK(index.filter(col("cell").isin(probedCells: _*))
+    scoreTopK(index.filter(probedCellFilter(qsRows.map(_.getAs[Long]("cell"))))
       .join(broadcast(qs), Seq("cell")), k, excludeSelf)
   }
 

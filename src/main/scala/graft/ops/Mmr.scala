@@ -78,8 +78,7 @@ object Mmr {
   def mmrServe(tier: DataFrame, exact: DataFrame, cents: Seq[Embeddings.Centroid],
                queries: DataFrame, excludeSelf: Boolean = false): DataFrame = {
     val probes = Pq.quantizeQueries(queries)
-    val cands = Sq.ivfSq8ServeDecoded(tier, cents, probes,
-        k = Pq.RefineR, nprobe = 2, excludeSelf = excludeSelf)
+    val cands = Sq.ivfSq8Server(tier, cents, Pq.RefineR, 2, excludeSelf)(probes)
       .select(col("q_id"), col("neighbor_id"))
     mmrSelectWith(probes.select(col("q_id"), col("qv").as("q_v")), exact, cands, k = 5)
   }

@@ -271,7 +271,9 @@ object Pq {
     * self-filter, the exact-integer estimate sum of M lookups, and
     * the per-probe (est ASC, neighbor_id ASC) top-k. One definition —
     * the tie-break is a bit-exact contract with the q77/q79 oracles
-    * and must never diverge between variants. */
+    * and must never diverge between variants. Like [[Sq]]'s `sqTail`
+    * it leaves the rows in no global order; `rank` carries each
+    * query's order. */
   private def adcTail(joined: DataFrame, k: Int, excludeSelf: Boolean): DataFrame = {
     val est = (0 until M).map(m =>
       element_at(col(s"t$m"), col(s"c$m") + 1)).reduce(_ + _)
@@ -285,8 +287,16 @@ object Pq {
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"), col("est"))
-      .orderBy(col("q_id"), col("rank"))
   }
+
+  /** A graded top-k query's output order, (q_id, rank). The serve
+    * kernels ([[adcServe]], [[ivfPqServe]], the [[Sq]] serves) leave
+    * their rows in no global order, so a serve batch pays no
+    * range-partition sample and sort; a graded query sorts once here,
+    * so its rows and their order are the same under any shuffle
+    * partitioning (PartitionInvarianceSpec). */
+  private[ops] def inRankOrder(ranked: DataFrame): DataFrame =
+    ranked.orderBy(col("q_id"), col("rank"))
 
   /** The ADC serve: `codes` (vec_id, c0..c3 — the compressed corpus)
     * × broadcast probe batch (`probes` carries q_id + exact qv),
@@ -342,7 +352,7 @@ object Pq {
     // 8-16× cheaper and the extra exchange measured as a loss
     // on small serves); size-aware width, no-op on ≥ cores splits.
     val codes = encode(if (nCodes > K) Tables.fanOut(vecs) else vecs, books)
-    adcServe(codes, books, cappedProbes(vecs, queryMod), k, excludeSelf = true)
+    inRankOrder(adcServe(codes, books, cappedProbes(vecs, queryMod), k, excludeSelf = true))
   }
 
   /** q91 — VARIANCE-BALANCED SUBSPACE ASSIGNMENT (the OPQ idea in
@@ -636,7 +646,8 @@ object Pq {
     val residuals = Caches.persist(residualsOf(spark, dir, cents))
     val books = trainCodebooks(residuals)
     val codes = encode(residuals, books, keep = Seq("cell"))
-    ivfPqServe(codes, cents, books, cappedProbes(vecs, queryMod), k, nprobe, excludeSelf = true)
+    inRankOrder(ivfPqServe(codes, cents, books, cappedProbes(vecs, queryMod), k, nprobe,
+      excludeSelf = true))
   }
 
   /** The q79 BUILD stage alone: the coarse quantizer's pinned
@@ -723,20 +734,17 @@ object Pq {
   private[graft] def ivfPqServeFrom(codes: DataFrame, books: Seq[Seq[Centroid]],
                                     probeRows: Array[org.apache.spark.sql.Row],
                                     k: Int, excludeSelf: Boolean): DataFrame = {
-    // The probed-cell set rides the codes scan as a STATIC filter: on
-    // the partitioned-by-cell production layout the probed cells
-    // prune at LISTING time through the serve path itself
-    // (StorageSpec proves it end-to-end), not only when DPP happens
-    // to fire. Semantically a no-op: the cell
-    // equi-join below keeps exactly these cells' rows anyway.
-    val probedCells = probeRows.map(_.getAs[Long]("cell")).distinct.toSeq
     val ptabs = (0 until M).foldLeft(
       Sq.probeSide(codes.sparkSession, probeRows)
         .select(col("q_id"), col("cell"), col("q_v").as("qv"))) { (df, m) =>
         withSlice(df, m)(d => d.withColumn(s"t$m", quantizedSubDist(books(m))))
       }
       .select(col("q_id") +: col("cell") +: (0 until M).map(m => col(s"t$m")): _*)
-    adcTail(codes.filter(col("cell").isin(probedCells: _*))
+    // the probed-cell set rides the codes scan as a static filter, so
+    // a partitioned-by-cell layout prunes at listing time through the
+    // serve path itself (StorageSpec), not only when DPP fires; the
+    // cell equi-join below keeps exactly these cells' rows anyway
+    adcTail(codes.filter(Embeddings.probedCellFilter(probeRows.map(_.getAs[Long]("cell"))))
       .join(broadcast(ptabs), Seq("cell")), k, excludeSelf)
   }
 

@@ -368,9 +368,8 @@ object Retrieval {
     val perList = 10
     val lex = bm25TopK(ix, queries.select(col("query_id"), col("query")), perList, excludeSelf)
       .select(col("query_id"), col("rank"), col("doc_id"))
-    val sem = Sq.ivfSq8ServeDecoded(tier, cents,
-        Pq.quantizeQueries(queries.select(col("query_id").as("q_id"), col("embedding"))),
-        k = perList, nprobe = 2, excludeSelf = excludeSelf)
+    val sem = Sq.ivfSq8Server(tier, cents, perList, 2, excludeSelf)(
+        Pq.quantizeQueries(queries.select(col("query_id").as("q_id"), col("embedding"))))
       .select(col("q_id").as("query_id"), col("rank"), col("neighbor_id").as("doc_id"))
     rrfFuse(lex, sem, k = 10)
   }

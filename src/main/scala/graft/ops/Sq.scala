@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, GraftPlans, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, InSet}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -180,9 +181,17 @@ object Sq {
     * persists this instead of the codes, so its batches never re-run
     * the decode, an interpreted `transform` that falls back from
     * codegen; the cache holds one bigint per row more than the codes
-    * relation. [[ivfSq8ServeDecoded]] serves it. */
+    * relation. [[ivfSq8Server]] serves it. */
   def decodedTier(codes: DataFrame, mins: Seq[Long], maxs: Seq[Long]): DataFrame =
     decoded(codes, mins, maxs, keep = Seq("cell"))
+
+  /** The exact-integer SQ8 estimate on candidate pairs —
+    * est = q_n − 2·⟨q_v, rv⟩ + r_n = Σ(qres_d − r_d)² — ONE
+    * definition for the ranked serves ([[sqTail]]) and the radius
+    * serve ([[ivfSq8RangeServe]]), so the estimate can never drift
+    * between the top-k and range contracts. */
+  private def withEst(pairs: DataFrame): DataFrame =
+    pairs.withColumn("est", col("q_n") - lit(2L) * vecDot(col("q_v"), col("rv")) + col("r_n"))
 
   /** The ONE ranking tail of every SQ8 serve ([[Pq.adcTail]]'s
     * counterpart): `pairs` carries (q_id, neighbor_id, q_v, q_n, rv,
@@ -193,15 +202,12 @@ object Sq {
     * norms precomputed per side — and the per-probe (est ASC,
     * neighbor_id ASC) top-k. One definition: the estimate and
     * tie-break are a bit-exact contract with the q81/q82/q85 oracles
-    * and must never diverge between variants. */
-  /** The exact-integer SQ8 estimate on candidate pairs —
-    * est = q_n − 2·⟨q_v, rv⟩ + r_n = Σ(qres_d − r_d)² — ONE
-    * definition for the ranked serves ([[sqTail]]) and the radius
-    * serve ([[ivfSq8RangeServe]]), so the estimate can never drift
-    * between the top-k and range contracts. */
-  private def withEst(pairs: DataFrame): DataFrame =
-    pairs.withColumn("est", col("q_n") - lit(2L) * vecDot(col("q_v"), col("rv")) + col("r_n"))
-
+    * and must never diverge between variants.
+    *
+    * The rows come out in no global order: `rank` carries each
+    * query's order, and a global sort would cost a serve batch a
+    * range-partition sample job and a shuffle for batch × k rows. The
+    * graded queries order their output with [[Pq.inRankOrder]]. */
   private def sqTail(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("est"), col("neighbor_id"))
     withEst(pairs)
@@ -209,7 +215,6 @@ object Sq {
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"), col("est"))
-      .orderBy(col("q_id"), col("rank"))
   }
 
   /** q81 — SQ8 top-k: for every probe (vec_id % queryMod = 0, capped
@@ -222,8 +227,8 @@ object Sq {
               k: Int = 5, queryMod: Int = 50): DataFrame = {
     val vecs = Caches.persist(Embeddings.quantized(spark, dir))
     val (mins, maxs) = gridBounds(vecs)
-    sq8Serve(encode(vecs, mins, maxs), mins, maxs, Pq.cappedProbes(vecs, queryMod), k,
-      excludeSelf = true)
+    Pq.inRankOrder(sq8Serve(encode(vecs, mins, maxs), mins, maxs,
+      Pq.cappedProbes(vecs, queryMod), k, excludeSelf = true))
   }
 
   /** The SQ8 serve: decode rides the codes scan (row-local), the
@@ -271,8 +276,8 @@ object Sq {
   def ivfSq8TopK(spark: SparkSession, dir: String,
                  k: Int = 5, queryMod: Int = 50, nprobe: Int = 2): DataFrame = {
     val (vecs, cents, mins, maxs, codes) = routedIndex(spark, dir)
-    ivfSq8Serve(codes, cents, mins, maxs, Pq.cappedProbes(vecs, queryMod), k, nprobe,
-      excludeSelf = true)
+    Pq.inRankOrder(ivfSq8Serve(codes, cents, mins, maxs, Pq.cappedProbes(vecs, queryMod), k,
+      nprobe, excludeSelf = true))
   }
 
   /** The q82 build every routed SQ8 query shares: the cached quantized
@@ -394,35 +399,55 @@ object Sq {
     * decoded `codes` with the probed-cell set riding the codes scan as
     * a static filter (it pushes below the decode). `queries` carries
     * (q_id, qv) on the corpus integer grid ([[Pq.quantizeQueries]] for
-    * external embeddings). The same kernel as [[ivfSq8ServeDecoded]]
+    * external embeddings). The same kernel as [[ivfSq8Server]]
     * over [[decodedTier]]`(codes)`, so batch q82 and the streaming
     * seam agree by identity. */
   def ivfSq8Serve(codes: DataFrame, cents: Seq[Embeddings.Centroid],
                   mins: Seq[Long], maxs: Seq[Long],
                   queries: DataFrame, k: Int = 5, nprobe: Int = 2,
                   excludeSelf: Boolean = false): DataFrame =
-    ivfSq8ServeDecoded(decodedTier(codes, mins, maxs), cents, queries, k, nprobe, excludeSelf)
+    ivfSq8Server(decodedTier(codes, mins, maxs), cents, k, nprobe, excludeSelf)(queries)
 
-  /** [[ivfSq8Serve]] over an already-decoded tier ([[decodedTier]]). */
-  def ivfSq8ServeDecoded(tier: DataFrame, cents: Seq[Embeddings.Centroid],
-                         queries: DataFrame, k: Int = 5, nprobe: Int = 2,
-                         excludeSelf: Boolean = false): DataFrame =
-    sqTail(ivfSq8Pairs(tier, cents, queries, nprobe, excludeSelf), k)
+  /** [[ivfSq8Serve]] over an already-decoded tier ([[decodedTier]]),
+    * planned once: the returned function serves one batch of queries
+    * per call. A serve loop calls this once and the function per
+    * micro-batch, so a batch pays for its probe ranking and the
+    * query's execution, not for building the plan. */
+  def ivfSq8Server(tier: DataFrame, cents: Seq[Embeddings.Centroid], k: Int, nprobe: Int,
+                   excludeSelf: Boolean): DataFrame => DataFrame =
+    ivfSq8Prepared(tier, cents, nprobe, excludeSelf)(sqTail(_, k))
 
-  /** The candidate-pair half of every routed SQ8 serve: ONE driver-side
+  /** The candidate-pair half of every routed SQ8 serve, with `tail`
+    * over it: [[ivfSq8Server]] ranks the pairs to top-k,
+    * [[ivfSq8RangeServe]] keeps every pair within a radius. The plan
+    * is built and analysed once, over an empty probe relation and a
+    * placeholder probed-cell set. Per batch, ONE driver-side
     * evaluation of the probe ranking ([[probeRows]]) yields both the
-    * probed-cell static filter and the broadcast query side, which
-    * meets the decoded `tier` in the cell equi-join.
-    * [[ivfSq8ServeDecoded]] ranks these pairs to top-k;
-    * [[ivfSq8RangeServe]] keeps every pair within a radius. */
-  private def ivfSq8Pairs(tier: DataFrame, cents: Seq[Embeddings.Centroid],
-                          queries: DataFrame, nprobe: Int,
-                          excludeSelf: Boolean): DataFrame = {
-    val rows = probeRows(queries, cents.sortBy(_.j), nprobe)
-    val probedCells = rows.map(_.getLong(3)).distinct.toSeq
-    val pairs = tier.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probeSide(queries.sparkSession, rows)), Seq("cell"))
-    if (excludeSelf) pairs.filter(col("neighbor_id") =!= col("q_id")) else pairs
+    * broadcast probe rows, which meet the decoded `tier` in the cell
+    * equi-join, and the probed-cell static filter; both are swapped
+    * into the analysed plan in place of the placeholders. */
+  private def ivfSq8Prepared(tier: DataFrame, cents: Seq[Embeddings.Centroid], nprobe: Int,
+                             excludeSelf: Boolean)
+                            (tail: DataFrame => DataFrame): DataFrame => DataFrame = {
+    val spark = tier.sparkSession
+    val sorted = cents.sortBy(_.j)
+    val slot = probeSide(spark, Array.empty)
+    val slotOutput = slot.queryExecution.analyzed.collectLeaves().head.output
+    val slotFilter = Embeddings.probedCellFilter(Seq(-1L))
+    val slotCells = GraftColumns.expression(slotFilter) match { case i: InSet => i.hset }
+    val pairs = tier.filter(slotFilter).join(broadcast(slot), Seq("cell"))
+    val plan = tail(if (excludeSelf) pairs.filter(col("neighbor_id") =!= col("q_id")) else pairs)
+      .queryExecution.analyzed
+    queries => {
+      val rows = probeRows(queries, sorted, nprobe)
+      val probe = LocalRelation.fromExternalRows(slotOutput, rows.toSeq)
+      val cells = Embeddings.probedCellSet(rows.map(_.getLong(3)))
+      GraftPlans.dataFrame(spark, plan.transformUp {
+        case l: LocalRelation if l.output == slotOutput => probe
+      }.transformAllExpressions {
+        case i: InSet if i.hset eq slotCells => i.copy(hset = cells)
+      })
+    }
   }
 
   /** q89 — RANGE SEARCH (the FAISS `range_search` API shape, the
@@ -459,7 +484,7 @@ object Sq {
       excludeSelf = true)
   }
 
-  /** The radius serve behind [[ivfSq8RangeSearch]]: [[ivfSq8Pairs]]
+  /** The radius serve behind [[ivfSq8RangeSearch]]: [[ivfSq8Prepared]]
     * + `est ≤ tau`. ONE definition with the top-k serve's pair
     * generation and estimate, so range and top-k can never disagree
     * about what "distance" means. */
@@ -468,10 +493,11 @@ object Sq {
                        queries: DataFrame, tau: Long,
                        excludeSelf: Boolean = false): DataFrame = {
     require(tau >= 0, "radius must be non-negative")
-    withEst(ivfSq8Pairs(decodedTier(codes, mins, maxs), cents, queries, 2, excludeSelf))
-      .filter(col("est") <= tau)
-      .select(col("q_id"), col("neighbor_id"), col("est"))
-      .orderBy(col("q_id"), col("est"), col("neighbor_id"))
+    ivfSq8Prepared(decodedTier(codes, mins, maxs), cents, 2, excludeSelf)(pairs =>
+      withEst(pairs)
+        .filter(col("est") <= tau)
+        .select(col("q_id"), col("neighbor_id"), col("est"))
+        .orderBy(col("q_id"), col("est"), col("neighbor_id")))(queries)
   }
 
   /** q90 — TOMBSTONE DELETE through the index lifecycle (the FAISS
@@ -519,8 +545,8 @@ object Sq {
         .withColumn("__deleted", lit(true)),
       "vec_id", deleteCol = Some("__deleted"))
     Storage.vacuumSnapshots(spark, root, keepLast = 1)
-    ivfSq8Serve(Storage.readSnapshot(spark, root), cents, mins, maxs,
-      Pq.cappedProbes(vecs, 50), 5, 2, excludeSelf = true)
+    Pq.inRankOrder(ivfSq8Serve(Storage.readSnapshot(spark, root), cents, mins, maxs,
+      Pq.cappedProbes(vecs, 50), 5, 2, excludeSelf = true))
   }
 
   /** q86 — FILTERED IVF+SQ8 top-k (the FAISS `IDSelector` / filtered-
@@ -552,8 +578,8 @@ object Sq {
                          k: Int = 5, queryMod: Int = 50): DataFrame = {
     val (vecs, cents, mins, maxs, codes) = routedIndex(spark, dir)
     val labeled = codes.join(vecs.select(col("vec_id"), col("label")), "vec_id")
-    ivfSq8Serve(labeled.filter(col("label") % 2 === 0), cents, mins, maxs,
-      Pq.cappedProbes(vecs, queryMod), k, 2, excludeSelf = true)
+    Pq.inRankOrder(ivfSq8Serve(labeled.filter(col("label") % 2 === 0), cents, mins, maxs,
+      Pq.cappedProbes(vecs, queryMod), k, 2, excludeSelf = true))
   }
 
   /** The q86 payload-attached tier: the routed SQ8 codes relation
@@ -603,8 +629,8 @@ object Sq {
     // base-only bounds pass and the encode pass — cached once
     val residuals = Caches.persist(Pq.residualsOf(spark, dir, cents))
     val (mins, maxs) = gridBounds(residuals.filter(isBase))
-    ivfSq8Serve(encode(residuals, mins, maxs, keep = Seq("cell")), cents, mins, maxs,
-      Pq.cappedProbes(vecs, 50), 5, 2, excludeSelf = true)
+    Pq.inRankOrder(ivfSq8Serve(encode(residuals, mins, maxs, keep = Seq("cell")),
+      cents, mins, maxs, Pq.cappedProbes(vecs, 50), 5, 2, excludeSelf = true))
   }
 
   /** The q87 base tranche: every vector but the delta `vec_id % 5 = 4`. */
@@ -693,8 +719,8 @@ object Sq {
     val pqCodes = Pq.encode(residuals, books, keep = Seq("cell"))
     val (mins, maxs) = gridBounds(residuals)
     val sqCodes = encode(residuals, mins, maxs, keep = Seq("cell"))
-    ivfPqSq8RefineServe(pqCodes, sqCodes, cents, books, mins, maxs,
-      Pq.cappedProbes(vecs, queryMod), k, Pq.RefineR, 2, excludeSelf = true)
+    Pq.inRankOrder(ivfPqSq8RefineServe(pqCodes, sqCodes, cents, books, mins, maxs,
+      Pq.cappedProbes(vecs, queryMod), k, Pq.RefineR, 2, excludeSelf = true))
   }
 
   /** The two-stage serve behind [[ivfPqSq8RefineTopK]]. ONE
@@ -714,14 +740,14 @@ object Sq {
                           excludeSelf: Boolean = false): DataFrame = {
     require(r >= k, s"refine candidate budget r=$r must cover k=$k")
     val rows = probeRows(queries, cents.sortBy(_.j), nprobe)
-    val probedCells = rows.map(_.getLong(3)).distinct.toSeq
     // stage 1: routed ADC candidate generation — q79's serve at k = r
     val cands = Pq.ivfPqServeFrom(pqCodes, books, rows, r, excludeSelf)
       .select(col("q_id"), col("neighbor_id"))
     // stage 2: each probe's residual against each PROBED cell (the
     // q82 probe side) meets the candidates' SQ8 reconstructions
     // through candidate-sized equi-joins
-    val nb = decodedTier(sqCodes, mins, maxs).filter(col("cell").isin(probedCells: _*))
+    val nb = decodedTier(sqCodes, mins, maxs)
+      .filter(Embeddings.probedCellFilter(rows.map(_.getLong(3))))
     sqTail(nb.join(broadcast(cands), Seq("neighbor_id"))
       .join(broadcast(probeSide(queries.sparkSession, rows)), Seq("q_id", "cell")), k)
   }

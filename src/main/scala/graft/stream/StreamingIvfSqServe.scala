@@ -21,10 +21,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * [[ServeLoop.run]] directly.
   *
   * At 100 TB the tier never moves: each micro-batch broadcasts probe
-  * rows that equi-join only their nprobe cells' rows (persisted
-  * partitioned by cell, the probed cells prune at listing time —
-  * StorageSpec proves it for the codes through the same kernel). If the
-  * corpus drifts past the bounds artifact, encoding saturates at the
+  * rows that equi-join only their nprobe cells' rows. The loop
+  * persists the decoded tier at the session's default cache level, in
+  * the codes' row order, not partitioned or clustered by cell, so a
+  * batch scans the whole cached tier: the probed-cell `InSet` filter
+  * has no cached-batch statistics predicate, and an unclustered batch
+  * holds rows of most cells anyway. The cell equi-join keeps the
+  * probed cells' rows. Codes stored partitioned by cell prune at
+  * listing time through the same kernel (StorageSpec). If the corpus
+  * drifts past the bounds artifact, encoding saturates at the
   * grid edge ([[graft.ops.Sq.encode]]): the byte codes stay valid and
   * recall degrades at the drifted edges, the signal to re-learn the
   * bounds. */
@@ -54,8 +59,7 @@ object StreamingIvfSqServe {
     val tier = if (selector.isDefined) Sq.ivfSq8CodesWithLabel(spark, corpusDir, cents, mins, maxs)
                else Sq.ivfSq8Codes(spark, corpusDir, cents, mins, maxs)
     val decoded = Caches.persist(Sq.decodedTier(selector.map(tier.filter).getOrElse(tier), mins, maxs))
-    ServeLoop.run(queries, checkpointDir)(batch =>
-      Sq.ivfSq8ServeDecoded(decoded, cents, Pq.quantizeQueries(batch), k, nprobe, excludeSelf)
-    )(onBatch)
+    val serve = Sq.ivfSq8Server(decoded, cents, k, nprobe, excludeSelf)
+    ServeLoop.run(queries, checkpointDir)(batch => serve(Pq.quantizeQueries(batch)))(onBatch)
   }
 }

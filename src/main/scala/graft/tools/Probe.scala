@@ -7,8 +7,10 @@ import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
 
 import graft.{Bench, GraftSession, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -29,6 +31,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - the `InMemoryTableScan` and parquet scan counts of run 2's
   *    plan: a cache scan above a table means run 2 read run 1's cache,
   *    a parquet scan means it rebuilt;
+  *  - the generated classes run 2 compiled and the milliseconds spent
+  *    compiling them: run 2 repeats run 1's plans, so a nonzero count
+  *    names a plan whose generated code changes from run to run (a
+  *    literal that moves, say) and that recompiles on every call;
   *  - with `planDir`, run 2's AQE-final executed plan as
   *    `<query>.txt`, the plan that ran rather than a pre-execution
   *    explain.
@@ -40,10 +46,12 @@ object Probe {
   /** One query's probe: `stages` holds run 2's per-stage JSON rows,
     * slowest first, and `plan` its formatted AQE-final plan. */
   final case class Report(query: String, run1: Double, run2: Double, stages: Seq[String],
-                          cacheScans: Int, parquetScans: Int, plan: String) {
+                          cacheScans: Int, parquetScans: Int, compiles: Long, compileMs: Double,
+                          plan: String) {
     def lines: Seq[String] =
       f"[probe] $query run1=$run1%.3f run2=$run2%.3f min=${math.min(run1, run2)}%.3f" +:
         s"[probe] $query run2 plan: InMemoryTableScan=$cacheScans parquetScan=$parquetScans" +:
+        f"[probe] $query run2 codegen: compiles=$compiles compile_ms=$compileMs%.1f" +:
         stages.map(j => s"[probe] $query $j")
   }
 
@@ -65,9 +73,13 @@ object Probe {
   /** Probe `name` at `sfDir` on a warmed `spark`, writing the plan
     * under `planDir` when given; the query's caches are released
     * after. */
-  def probe(spark: SparkSession, name: String, sfDir: String, planDir: Option[String]): Report = {
-    val fn = SparkEntry.queries(name)
-    val run1 = Bench.timed(fn(spark, sfDir))
+  def probe(spark: SparkSession, name: String, sfDir: String, planDir: Option[String]): Report =
+    probeRuns(spark, name, planDir)(SparkEntry.queries(name)(spark, sfDir))
+
+  /** [[probe]] over the plan `query` builds, once per run. */
+  private[graft] def probeRuns(spark: SparkSession, name: String, planDir: Option[String])
+                              (query: => DataFrame): Report = {
+    val run1 = Bench.timed(query)
     val stages = new ConcurrentLinkedQueue[(Long, String)]()
     val drained = new CountDownLatch(1)
     val marker = "graft.probe.marker"
@@ -102,12 +114,16 @@ object Probe {
     val sc = spark.sparkContext
     sc.addSparkListener(onStages)
     spark.listenerManager.register(onQueries)
-    val run2 = try {
-      val sec = Bench.timed(fn(spark, sfDir))
+    // (classes compiled, compile ns) so far in this JVM
+    def codegen = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val (compiles0, compileNs0) = codegen
+    val (run2, compiles, compileNs) = try {
+      val sec = Bench.timed(query)
+      val (compiles1, compileNs1) = codegen
       sc.setLocalProperty(marker, "1")
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
       require(drained.await(60, TimeUnit.SECONDS), "the listener bus did not drain")
-      sec
+      (sec, compiles1 - compiles0, compileNs1 - compileNs0)
     } finally {
       spark.listenerManager.unregister(onQueries)
       sc.removeSparkListener(onStages)
@@ -121,6 +137,7 @@ object Probe {
     }
     Report(name, run1, run2, stages.asScala.toSeq.sortBy(-_._1).map(_._2),
       Aqe.collect(qe.executedPlan) { case s: InMemoryTableScanExec => s }.size,
-      Aqe.collect(qe.executedPlan) { case s: FileSourceScanExec => s }.size, plan)
+      Aqe.collect(qe.executedPlan) { case s: FileSourceScanExec => s }.size,
+      compiles, compileNs / 1e6, plan)
   }
 }

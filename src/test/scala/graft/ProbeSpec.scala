@@ -26,5 +26,23 @@ class ProbeSpec extends SparkSpec with VectorServeFixtures {
     val written = Paths.get(planDir, "q02_ship_priority.txt")
     assert(Files.exists(written), s"no plan at $written")
     assert(Files.readString(written).contains("isFinalPlan=true"), Files.readString(written))
+
+    // run 2 repeats run 1's plan, so it reuses every class run 1 compiled
+    val codegen = """run2 codegen: compiles=(\d+) compile_ms=([0-9.]+)""".r
+      .findFirstMatchIn(r.lines.mkString("\n")).map(m => (m.group(1).toLong, m.group(2).toDouble))
+    assert(codegen.contains((0L, 0.0)), r.lines.mkString("\n"))
+  }
+
+  test("a plan whose generated code changes on every run shows up as run-2 compiles") {
+    val s = spark
+    import s.implicits._
+    // a literal that moves from run to run is inlined into the generated code
+    val runs = new java.util.concurrent.atomic.AtomicLong()
+    val r = Probe.probeRuns(spark, "moving_literal", None) {
+      spark.range(1000).filter($"id" % 7L === runs.incrementAndGet()).select(($"id" * 3L).as("x"))
+    }
+    assert(runs.get == 2)
+    assert(r.compiles > 0 && r.compileMs > 0, r.lines.mkString("\n"))
+    assert(r.lines.exists(_.contains(s"run2 codegen: compiles=${r.compiles} ")), r.lines.mkString("\n"))
   }
 }

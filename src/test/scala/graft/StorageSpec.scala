@@ -241,10 +241,10 @@ class StorageSpec extends SparkSpec {
     val served = graft.ops.Sq.ivfSq8Serve(
         Storage.readSnapshot(spark, root), cents, mins, maxs,
         probes, k = 5, nprobe = 2, excludeSelf = true)
-      .collect().map(_.toString).toSeq
+      .collect().map(_.toString).sorted.toSeq
     graft.ops.Caches.releaseAll(spark)
     val direct = graft.ops.Sq.ivfSq8FrozenIngestTopK(spark, dir)
-      .collect().map(_.toString).toSeq
+      .collect().map(_.toString).sorted.toSeq
     graft.ops.Caches.releaseAll(spark)
     assert(served == direct,
       "snapshot-refreshed serve diverged from the one-pass frozen-ingest encode")

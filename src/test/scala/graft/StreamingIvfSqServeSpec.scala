@@ -4,8 +4,9 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import graft.ops.{Caches, Embeddings, Sq}
+import graft.ops.{Caches, Embeddings, Pq, Sq}
 import graft.stream.StreamingIvfSqServe
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -80,17 +81,30 @@ class StreamingIvfSqServeSpec extends SparkSpec with VectorServeFixtures {
       StreamingIvfSqServe.run(spark, _, SfDir, qArtifact, bArtifact, _, k = 5, excludeSelf = true)(_))
   }
 
-  test("a serve micro-batch runs at most 6 jobs and never decodes the codes") {
+  test("serve batches: at most 4 jobs, no compile after batch 1, no decode") {
     // the decoded tier is persisted once per loop and the probe ranking
     // runs on the driver, so a batch's plan reads the cached (rv, r_n)
-    // tier directly: no `transform` over `codes` above the cache scan
+    // tier directly: no `transform` over `codes` above the cache scan.
+    // The tail has no global sort (no sample or range-shuffle job),
+    // and the probed-cell filter is read from a set object, so a batch
+    // whose probed cells first appear in a new order, or are other
+    // cells, generates the same code as the batches before it.
     assumeTestdata()
     val s = spark
     import s.implicits._
-    val (_, _, _, qArtifact, bArtifact) = artifacts("ivfsq-jobs")
+    val (cents, _, _, qArtifact, bArtifact) = artifacts("ivfsq-jobs")
     val plans = mutable.ArrayBuffer.empty[SparkPlan]
     val queries = probeVectors()
-    val batches = queries.grouped((queries.length + 2) / 3).toSeq
+    // five batches, three of them past batch 1; the last probes a
+    // different cell set, not only the same cells in a new order
+    val batches = Seq(queries, queries.reverse, queries.drop(3) ++ queries.take(3),
+      queries.reverse.drop(5) ++ queries.reverse.take(5), queries.take(2))
+    val cellOrders = batches.map(b => Sq.probeRows(Pq.quantizeQueries(b.toDF("q_id", "embedding")),
+      cents.sortBy(_.j), 2).map(_.getLong(3)).distinct.toSeq)
+    assert(cellOrders.distinct.size == batches.size && cellOrders.last.toSet != cellOrders.head.toSet,
+      s"fixture vacuous: batches share a probed-cell order or set: $cellOrders")
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiles = mutable.ArrayBuffer.empty[Long]
     val perBatch = jobsPerBatch {
       val input = MemoryStream[(Long, Seq[Float])](implicitly[Encoder[(Long, Seq[Float])]], spark.sqlContext)
       val q = StreamingIvfSqServe.run(spark, input.toDF().toDF("q_id", "embedding"), SfDir,
@@ -98,14 +112,22 @@ class StreamingIvfSqServeSpec extends SparkSpec with VectorServeFixtures {
         assert(ranked.collect().nonEmpty)
         plans += ranked.queryExecution.executedPlan
       }
-      try batches.foreach { b => input.addData(b); q.processAllAvailable() } finally q.stop()
+      try batches.foreach { b =>
+        val before = compiled
+        input.addData(b)
+        q.processAllAvailable()
+        compiles += compiled - before
+      } finally q.stop()
       q.id.toString
     }
     Caches.releaseAll(spark)
-    assert(batches.size == 3 && perBatch.size == 3, s"jobs by micro-batch: $perBatch")
+    info(s"jobs by micro-batch: $perBatch; classes compiled by micro-batch: $compiles")
+    assert(perBatch.size == batches.size, s"jobs by micro-batch: $perBatch")
     // batch 0 also fills the cache; the later ones are the steady state
-    assert(perBatch.filter(_._1 != "0").values.forall(_ <= 6),
-      s"jobs by micro-batch (want at most 6 after batch 0): $perBatch")
+    assert(perBatch.filter(_._1 != "0").values.forall(_ <= 4),
+      s"jobs by micro-batch (want at most 4 after batch 0): $perBatch")
+    assert(compiles.size == batches.size && compiles.drop(2).forall(_ == 0),
+      s"generated classes compiled by micro-batch (want none after batch 1): $compiles")
     assert(plans.size == batches.size)
     plans.foreach(assertServesDecodedTier)
   }

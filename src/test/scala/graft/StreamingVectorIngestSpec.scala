@@ -84,10 +84,10 @@ class StreamingVectorIngestSpec extends SparkSpec with VectorServeFixtures {
       .select(col("vec_id").as("q_id"), col("qv"))
     val served = Sq.ivfSq8Serve(Storage.readSnapshot(spark, root),
         cents, mins, maxs, probes, k = 5, nprobe = 2, excludeSelf = true)
-      .collect().map(_.toString).toSeq
+      .collect().map(_.toString).sorted.toSeq
     graft.ops.Caches.releaseAll(spark)
     val direct = Sq.ivfSq8FrozenIngestTopK(spark, SfDir)
-      .collect().map(_.toString).toSeq
+      .collect().map(_.toString).sorted.toSeq
     graft.ops.Caches.releaseAll(spark)
     assert(served == direct,
       "stream-ingested snapshot serve diverged from q87's one-pass encode")
@@ -160,10 +160,10 @@ class StreamingVectorIngestSpec extends SparkSpec with VectorServeFixtures {
       .select(col("vec_id").as("q_id"), col("qv"))
     val served = Sq.ivfSq8Serve(Storage.readSnapshot(spark, root),
         cents, mins, maxs, probes, k = 5, nprobe = 2, excludeSelf = true)
-      .collect().map(_.toString).toSeq
+      .collect().map(_.toString).sorted.toSeq
     graft.ops.Caches.releaseAll(spark)
     val direct = Sq.ivfSq8FrozenIngestTopK(spark, SfDir)
-      .collect().map(_.toString).toSeq
+      .collect().map(_.toString).sorted.toSeq
     graft.ops.Caches.releaseAll(spark)
     assert(served == direct,
       "restarted ingest chain diverged from q87's one-pass encode")
